@@ -1,6 +1,8 @@
 #!/bin/bash
-# Full local replica of the driver's round gates:
+# Full local replica of the round gates:
 # compile → tests → verify+oracle at sf0.001 and sf0.01 → bench at sf0.1.
+# Every main runs on graft.Session: local[SPARK_GRAFT_CPUS or host cores],
+# AQE on, so the bench below times the config that ships.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 sbt -batch compile
@@ -10,7 +12,6 @@ for sf in sf0.001 sf0.01; do
   SPARK_GRAFT_CPUS=16 dev/run_main.sh graft.Verify /root/testdata/$sf "$out" 2>/dev/null
   python3 dev/check_oracles.py /root/testdata/$sf "$out"
 done
-SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 SPARK_DRIVER_MEM=48g \
-  dev/run_main.sh graft.Bench 2>/dev/null | tail -1
+dev/run_main.sh graft.Bench 2>/dev/null | tail -1   # sf0.1, the shipped session
 dev/run_main.sh graft.Smoke 2>/dev/null | grep smoke
 echo "FULL CHECK PASSED"

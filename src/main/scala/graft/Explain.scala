@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print formatted physical plans for selected gate queries —
   * used to eyeball broadcast placement, pushed filters, scan pruning, and
   * whole-stage-codegen spans (the 100 TB checklist in the builder brief).
@@ -13,17 +11,7 @@ object Explain {
     val names = if (args.length > 1) args.tail.toSeq else Seq(
       "q_c3_fact_build", "q_j2_star_agg", "q_s3_scan_projection", "q_j3_join_residual",
       "q_x_range_join", "q_x_text_search")
-    // Honor the bench's core/shuffle envs so plan dumps reflect the same
-    // width regime the bench measures (measured-width devices branch on
-    // the session shuffle width).
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.extensions.GraftExtensions).master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n======== $n ========")

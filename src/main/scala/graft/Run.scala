@@ -1,7 +1,6 @@
 package graft
 
 import java.sql.Date
-import org.apache.spark.sql.SparkSession
 import graft.catalog.Catalog
 import graft.run.{PipelineRunner, RunConfig}
 
@@ -22,14 +21,7 @@ object Run {
     require(args.length >= 3, "usage: graft.Run <warehouseDir> <tableName> <csvPath> [runDate]")
     val Seq(warehouse, table, csv) = args.take(3).toSeq
     val runDate = if (args.length > 3) Date.valueOf(args(3)) else new Date(System.currentTimeMillis())
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.extensions.GraftExtensions)
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session()
     spark.sparkContext.setLogLevel("WARN")
     try {
       val catalog = new Catalog(spark, warehouse)

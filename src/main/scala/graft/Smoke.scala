@@ -1,15 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver-style smoke: SparkEntry.entry on sf0.001 must return rows > 0. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.extensions.GraftExtensions).master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session()
     spark.sparkContext.setLogLevel("ERROR")
     val df = SparkEntry.entry(spark)
     val n = df.count()

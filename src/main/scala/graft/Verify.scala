@@ -37,20 +37,7 @@ object Verify {
     val sfDir = args(0)
     val outDir = args(1)
     val only: Set[String] = args.drop(2).toSet // optional query-name filter (dev)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER=local-cluster[2,8,8192] runs the same gate with
-    // separate executor JVMs (real serialization + no shared driver state) —
-    // the CI proof that nothing silently relies on local-mode's single JVM.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.extensions.GraftExtensions)
-      .master(master)
-      .config("spark.executor.extraClassPath",
-        new java.io.File("target/scala-2.13/classes").getAbsolutePath)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]

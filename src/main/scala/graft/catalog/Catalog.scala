@@ -121,14 +121,19 @@ final class Catalog(spark: SparkSession, rootDir: String, keepVersions: Int = 2)
     val a = readVersion(name, from)
     val b = readVersion(name, to)
     val cols = b.columns.toSeq
-    b.withColumn("__w", lit(1L))
-      .unionByName(a.withColumn("__w", lit(-1L)))
+    // helper columns must not shadow a data column (names resolve
+    // case-insensitively), or the row identity silently loses that column
+    def unused(base: String): String =
+      Iterator.iterate(base)(_ + "_").find(n => !cols.exists(_.equalsIgnoreCase(n))).get
+    val (w, n, copy) = (unused("__w"), unused("__n"), unused("__copy"))
+    b.withColumn(w, lit(1L))
+      .unionByName(a.withColumn(w, lit(-1L)))
       .groupBy(cols.map(col): _*)
-      .agg(sum(col("__w")).as("__n"))
-      .filter(col("__n") =!= 0L)
+      .agg(sum(col(w)).as(n))
+      .filter(col(n) =!= 0L)
       .withColumn("change",
-        when(col("__n") > 0, lit("added")).otherwise(lit("removed")))
-      .withColumn("__copy", explode(sequence(lit(1L), abs(col("__n")))))
+        when(col(n) > 0, lit("added")).otherwise(lit("removed")))
+      .withColumn(copy, explode(sequence(lit(1L), abs(col(n)))))
       .select(cols.map(col) :+ col("change"): _*)
   }
 

@@ -61,8 +61,8 @@ object RewriteDotProduct extends Rule[LogicalPlan] {
 }
 
 /** Session extensions: SQL-surface the custom expression (`dot_long`) and
-  * install [[RewriteDotProduct]]. Activate with
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
+  * install [[RewriteDotProduct]]. [[graft.Session]] installs them; any
+  * other session activates them with
   * `spark.sql.extensions=graft.extensions.GraftExtensions`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {

@@ -21,9 +21,6 @@ object Hashing {
   def hash64Expr(e: String): String =
     s"CAST(conv(substring(md5($e), 1, 15), 16, 10) AS BIGINT)"
 
-  def hash64Seeded(seed: Int, c: Column): Column =
-    hash64(concat(lit(s"$seed:"), c))
-
   /** Thread-local digest: MessageDigest is not thread-safe and getInstance
     * is not free — reused per row by executor-side hashing (the SimHash
     * expression and the streaming span inventory hash per token/window). */

@@ -112,6 +112,8 @@ object KMeans {
     if (d == null) BigInt(0) else BigInt(d.toBigInteger)
   }
 
+  private val U = 1L << 40
+
   /** kmeans‖ initialization (Bahmani et al. 2012), DETERMINISTIC: better
     * seeds for larger k than the plain hash-ranked pick, with the same
     * bit-reproducibility contract.
@@ -132,18 +134,6 @@ object KMeans {
     * the same contract style as [[graft.operators.Anomaly]] documents.
     * Keeps the invariant that matters at 100 TB: assignment stays a pure
     * map; the only extra cost is `rounds` corpus passes at init time. */
-  def seedsParallel(emb: DataFrame, k: Int, rounds: Int = 2,
-      oversampleFactor: Int = 2, idCol: String = "vec_id",
-      embCol: String = "embedding"): Model = {
-    val prepared = emb.filter(col(embCol).isNotNull)
-      .select(col(idCol).as("vec_id"), VectorSearch.quantize(embCol).as("q"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try seedsParallelPrepared(prepared, k, rounds, oversampleFactor)
-    finally prepared.unpersist()
-  }
-
-  private val U = 1L << 40
-
   private def seedsParallelPrepared(prepared: DataFrame, k: Int, rounds: Int,
       oversampleFactor: Int): Model = {
     val l = math.max(k * oversampleFactor, k)

@@ -127,16 +127,14 @@ object EventQueries {
         //    ((hour, type) groups — thousands at any corpus size, the
         //    map-side partial agg still runs at input parallelism), so
         //    session-width state partitions buy nothing and cost one state
-        //    store commit per partition per micro-batch; override for a
-        //    genuinely hot key space via spark.graft.stream.statePartitions
+        //    store commit per partition per micro-batch, so cap them at 8
         //    (measured at local[32] sf0.1: 4.4 s at 32, 2.8 s at 8).
         //  - the trailing no-data micro-batch only advances the watermark,
         //    which complete mode ignores — skip its planning round.
         val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
         val prevNoData =
           s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-        val stateParts = s.conf.get("spark.graft.stream.statePartitions",
-          math.min(8, s.sessionState.conf.numShufflePartitions).toString)
+        val stateParts = math.min(8, s.sessionState.conf.numShufflePartitions).toString
         val q = try {
           s.conf.set("spark.sql.shuffle.partitions", stateParts)
           s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")

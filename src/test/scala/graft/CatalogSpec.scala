@@ -423,6 +423,16 @@ class CatalogSpec extends SparkSpec {
     intercept[IllegalArgumentException](cat.diffVersions("t", 0, 4).collect())
   }
 
+  test("diffVersions: data columns named like its helper columns keep their identity") {
+    val cat = freshCatalog()
+    cat.write("t", Seq((1L, 10L, 5L), (2L, 20L, 6L)).toDF("id", "__w", "__n"))
+    cat.write("t", Seq((1L, 10L, 5L), (2L, 21L, 6L), (3L, 30L, 7L)).toDF("id", "__w", "__n"))
+    val got = rows(cat.diffVersions("t", 0, 1).orderBy("change", "id"))
+    // row 2 changed only in __w: it must diff as one removed + one added copy
+    assert(got == Seq(Seq(2L, 21L, 6L, "added"), Seq(3L, 30L, 7L, "added"),
+      Seq(2L, 20L, 6L, "removed")))
+  }
+
   test("missing table read fails clearly") {
     val cat = freshCatalog()
     val e = intercept[IllegalArgumentException](cat.read("ghost"))

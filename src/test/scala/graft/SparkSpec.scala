@@ -3,17 +3,11 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all suites (one per JVM, forked by sbt). */
+/** Shared SparkSession for all suites (one per JVM, forked by sbt): the
+  * same [[Session]] every main ships. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .withExtensions(new graft.extensions.GraftExtensions)
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Session()
     s.sparkContext.setLogLevel("ERROR")
     s
   }
