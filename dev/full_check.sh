@@ -9,7 +9,7 @@ sbt -batch compile
 sbt -batch test
 for sf in sf0.001 sf0.01; do
   out=$(mktemp -d)
-  SPARK_GRAFT_CPUS=16 dev/run_main.sh graft.Verify /root/testdata/$sf "$out" 2>/dev/null
+  dev/run_main.sh graft.Verify /root/testdata/$sf "$out" 2>/dev/null
   python3 dev/check_oracles.py /root/testdata/$sf "$out"
 done
 dev/run_main.sh graft.Bench 2>/dev/null | tail -1   # sf0.1, the shipped session

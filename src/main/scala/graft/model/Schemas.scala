@@ -29,7 +29,6 @@ final case class TableSpec(
 ) {
   def schema: StructType = StructType(columns.map(_.field))
   def columnNames: Seq[String] = columns.map(_.name)
-  def notNullColumns: Seq[String] = columns.filter(_.notNull).map(_.name)
   /** (column, VARCHAR width) pairs that carry a declared max length. */
   def lengthColumns: Seq[(String, Int)] =
     columns.collect { case c if c.maxLength.isDefined => c.name -> c.maxLength.get }
@@ -60,7 +59,6 @@ object Schemas {
   /** Sentinel "open row" high date used by the reference for current SCD2
     * versions (dynamic_upsert.py:131,138; populate_fact.py:124). */
   val HighDate: java.sql.Date = java.sql.Date.valueOf("9999-12-31")
-  val HighDateLit: String = "9999-12-31"
 
   // ---- Reference source tables (SURVEY.md §1.4; dynamic_upsert.py:9-15) ----
   private val S = StringType

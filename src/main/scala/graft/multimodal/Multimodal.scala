@@ -1,6 +1,6 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -31,14 +31,6 @@ import org.apache.spark.sql.types._
   * as payload sizes are bounded.
   */
 object Multimodal {
-
-  /** media(media_id, kind, payload, width, height, duration_ms) */
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("kind", StringType, nullable = false),       // image | audio | video
-    StructField("payload", BinaryType, nullable = false),    // opaque encoded bytes
-    StructField("width", IntegerType), StructField("height", IntegerType),
-    StructField("duration_ms", IntegerType)))
 
   val featureDim = 8
 

@@ -277,15 +277,8 @@ object GraphRank {
         (col("n_ab").cast("double") / col("n_ante").cast("double")).as("confidence"),
         ((col("n_ab") * col("n_groups")).cast("double") /
           (col("n_ante") * col("n_cons")).cast("double")).as("lift"))
-    // top-k as TakeOrderedAndProject (per-partition partial top-k, no
-    // single-partition sort of the pair-cardinality rules frame); the rank
-    // window then runs over k rows only
-    rules.orderBy(col("lift").desc, col("confidence").desc,
-        col("antecedent"), col("consequent")).limit(k)
-      .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window.orderBy(
-          col("lift").desc, col("confidence").desc,
-          col("antecedent"), col("consequent"))).cast("long"))
+    TopK.perGroup(rules, Nil, Seq(col("lift").desc, col("confidence").desc,
+        col("antecedent"), col("consequent")), k)
       .select(col("antecedent"), col("consequent"), col("n_ab"),
         col("support"), col("confidence"), col("lift"), col("rank"))
   }

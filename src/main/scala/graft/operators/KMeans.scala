@@ -398,14 +398,11 @@ object KMeans {
   def clusterBalancedSelect(emb: DataFrame, model: Model, quota: Int,
       idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
     require(quota > 0)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("cluster")).orderBy(col("d2"), col("vec_id"))
-    emb.filter(col(embCol).isNotNull)
-      .select(col(idCol).as("vec_id"), VectorSearch.quantize(embCol).as("q"))
-      .select(col("vec_id"), clusterExpr(model).as("cluster"),
-        (DotProductLong(col("q"), col("q")) + negScoreMin(model)).as("d2"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= quota)
+    TopK.perGroup(emb.filter(col(embCol).isNotNull)
+        .select(col(idCol).as("vec_id"), VectorSearch.quantize(embCol).as("q"))
+        .select(col("vec_id"), clusterExpr(model).as("cluster"),
+          (DotProductLong(col("q"), col("q")) + negScoreMin(model)).as("d2")),
+      Seq(col("cluster")), Seq(col("d2"), col("vec_id")), quota)
   }
 
   /** IVF ANN with the fitted model as the coarse quantizer — the production

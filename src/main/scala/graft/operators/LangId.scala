@@ -61,7 +61,7 @@ object LangId {
     *
     * Majority = (count desc, lang) argmax — deterministic. Shape: one
     * map-side segment explode + per-segment scoring (no shuffle), then one
-    * (doc, lang) aggregate + one doc-keyed window + one doc aggregate —
+    * (doc, lang) aggregate + one doc aggregate that also takes the argmax —
     * word-count shaped, segment-volume bounded. */
   def codeSwitchCensus(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", splitPattern: String = "[.!?]+ *"): DataFrame = {
@@ -71,15 +71,12 @@ object LangId {
     val votes = predict(segs, "seg")
       .groupBy(col("doc_id"), col("pred_lang"))
       .agg(count(lit(1)).as("n_segs"))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("doc_id"))
-      .orderBy(col("n_segs").desc, col("pred_lang"))
     votes
-      .withColumn("__rk", row_number().over(w))
       .groupBy(col("doc_id"))
       .agg(sum(col("n_segs")).as("n_segments"),
         count(lit(1)).cast("long").as("n_langs"),
-        max(when(col("__rk") === 1, col("pred_lang"))).as("majority_lang"),
-        max(when(col("__rk") === 1, col("n_segs"))).as("__mn"))
+        min_by(col("pred_lang"), struct(-col("n_segs"), col("pred_lang"))).as("majority_lang"),
+        max(col("n_segs")).as("__mn"))
       .select(col("doc_id"), col("n_segments"), col("n_langs"), col("majority_lang"),
         (col("__mn").cast("double") / col("n_segments").cast("double"))
           .as("majority_frac"),

@@ -1,8 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.functions.Text
 import CacheGuard.PersistTrackedOps
 
@@ -157,11 +156,8 @@ object NaiveBayes {
   def marginBinsFromScores(scoreFrame: DataFrame, gold: DataFrame,
       binMicro: Long = 200000L, maxBin: Long = 10L): DataFrame = {
     require(binMicro > 0 && maxBin >= 0)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("doc_id").orderBy(col("score_micro").desc, col("label"))
-    val top2 = scoreFrame
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= 2)
+    val top2 = TopK.perGroup(scoreFrame, Seq(col("doc_id")),
+        Seq(col("score_micro").desc, col("label")), 2, "rk")
       .groupBy("doc_id")
       .agg(max(when(col("rk") === 1, col("score_micro"))).as("s1"),
         max(when(col("rk") === 1, col("label"))).as("pred"),

@@ -1,8 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.functions.Text
 import CacheGuard.PersistTrackedOps
 
@@ -273,17 +272,15 @@ object NgramLm {
       val s = c1.select(col("tok").as(name), col("c").as(as))
       if (vocabFits) broadcast(s) else s
     }
-    counts
-      .filter(col("w2").isNotNull && col("n_pair") >= minCount)
-      .join(side("w1", "c1"), Seq("w1"))
-      .join(side("w2", "c2"), Seq("w2"))
-      .withColumn("pmi_micro", round(log(
-          (col("n_pair").cast("double") * nTok * nTok) /
-          (lit(nBig.toDouble) * col("c1") * col("c2"))) * MicroScale, 0)
-        .cast("long"))
-      .withColumn("rank", row_number().over(
-        Window.orderBy(col("pmi_micro").desc, col("w1"), col("w2"))).cast("long"))
-      .filter(col("rank") <= k)
+    TopK.perGroup(counts
+        .filter(col("w2").isNotNull && col("n_pair") >= minCount)
+        .join(side("w1", "c1"), Seq("w1"))
+        .join(side("w2", "c2"), Seq("w2"))
+        .withColumn("pmi_micro", round(log(
+            (col("n_pair").cast("double") * nTok * nTok) /
+            (lit(nBig.toDouble) * col("c1") * col("c2"))) * MicroScale, 0)
+          .cast("long")),
+      Nil, Seq(col("pmi_micro").desc, col("w1"), col("w2")), k)
       .select(col("w1"), col("w2"), col("n_pair"), col("pmi_micro"), col("rank"))
   }
 

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.expressions.DotProductLong
 
@@ -181,15 +180,8 @@ object ProductQuantizer {
     val qs = broadcast(emb.filter(col(embCol).isNotNull).filter(queryPred)
       .select(col(idCol).as("qid"), VectorSearch.quantize(embCol).as("qv"))
       .withColumn("qn", DotProductLong(col("qv"), col("qv"))))
-    qs.join(codes, col("qid") =!= col("nid"))
-      .withColumn("dp", adcDotSum(model))
-      .withColumn("rn2", adcNormSum(model))
-      .withColumn("sim", col("dp").cast("double") /
-        sqrt(col("qn").cast("double") * col("rn2").cast("double")))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("nid"))).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("nid"), col("sim"), col("rank"))
+    VectorSearch.rerank(qs.join(codes, col("qid") =!= col("nid"))
+      .withColumn("rn2", adcNormSum(model)), k, dp = adcDotSum(model), norm = "rn2")
   }
 
   /** IVF-PQ (the billion-scale composite index): a coarse k-means quantizer
@@ -229,15 +221,8 @@ object ProductQuantizer {
         explode(transform(slice(sort_array(entries), 1, nProbe),
           s => s.getField("cid"))))
       .select(col("vec_id").as("qid"), col("q").as("qv"), col("qn"), col("bucket")))
-    qs.join(codes, Seq("bucket")).filter(col("qid") =!= col("nid"))
-      .withColumn("dp", adcDotSum(model))
-      .withColumn("rn2", adcNormSum(model))
-      .withColumn("sim", col("dp").cast("double") /
-        sqrt(col("qn").cast("double") * col("rn2").cast("double")))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("nid"))).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("nid"), col("sim"), col("rank"))
+    VectorSearch.rerank(qs.join(codes, Seq("bucket")).filter(col("qid") =!= col("nid"))
+      .withColumn("rn2", adcNormSum(model)), k, dp = adcDotSum(model), norm = "rn2")
   }
 
   /** Quantized residual of each vector against its coarse centroid —
@@ -316,17 +301,11 @@ object ProductQuantizer {
       DotProductLong(element_at(slices, col("bucket")),
         element_at(book, col("codes").getItem(j)))
     }.reduce(_ + _)
-    qs.join(codes, Seq("bucket")).filter(col("qid") =!= col("nid"))
-      .withColumn("dp",
-        DotProductLong(col("qv"), element_at(cents, col("bucket"))) + adcDotSum(model))
-      .withColumn("rn2",
-        element_at(centNorms, col("bucket")) + lit(2L) * crossSum + adcNormSum(model))
-      .withColumn("sim", col("dp").cast("double") /
-        sqrt(col("qn").cast("double") * col("rn2").cast("double")))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("nid"))).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("nid"), col("sim"), col("rank"))
+    VectorSearch.rerank(qs.join(codes, Seq("bucket")).filter(col("qid") =!= col("nid"))
+        .withColumn("rn2",
+          element_at(centNorms, col("bucket")) + lit(2L) * crossSum + adcNormSum(model)),
+      k, dp = DotProductLong(col("qv"), element_at(cents, col("bucket"))) + adcDotSum(model),
+      norm = "rn2")
   }
 
   /** Two-stage search (the production serving shape): a cheap PQ-ADC
@@ -345,16 +324,11 @@ object ProductQuantizer {
       adcTopK(emb, model, queryPred, shortlist, encoded, idCol, embCol)
         .select(col("qid"), col("nid")))
     val e = VectorSearch.prepared(emb, idCol, embCol)
-    sl.join(e.select(col("vec_id").as("qid"), col("q").as("qv"), col("nn").as("qn")),
-        Seq("qid"))
-      .join(e.select(col("vec_id").as("nid"), col("q").as("cv"), col("nn").as("cn")),
-        Seq("nid"))
-      .withColumn("dp", VectorSearch.dot("qv", "cv"))
-      .withColumn("sim", VectorSearch.cosine("dp", "qn", "cn"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("nid"))).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("nid"), col("sim"), col("rank"))
+    VectorSearch.rerank(
+      sl.join(e.select(col("vec_id").as("qid"), col("q").as("qv"), col("nn").as("qn")),
+          Seq("qid"))
+        .join(e.select(col("vec_id").as("nid"), col("q").as("cv"), col("nn").as("cn")),
+          Seq("nid")), k)
   }
 
   /** The model in persistable long-row form: (subspace, cluster, pos,

@@ -171,17 +171,6 @@ object Sampling {
       Hashing.hash64(concat(col(keyCol).cast("string"), lit("|fold"))) % k)
   }
 
-  /** Top-`k` rows per group by (scoreCol desc, keyCol) — the quota/mixing
-    * step of a training-data pipeline (e.g. best N documents per language or
-    * per source). One shuffle on the group key; Spark's WindowGroupLimit
-    * turns the rank filter into a per-partition top-k before the merge, so
-    * no group ever materializes fully. */
-  def quotaPerGroup(df: DataFrame, groupCol: String, scoreCol: String, k: Int,
-      keyCol: String): DataFrame = {
-    val w = Window.partitionBy(col(groupCol)).orderBy(col(scoreCol).desc, col(keyCol))
-    df.withColumn("rank", row_number().over(w).cast("long")).filter(col("rank") <= k)
-  }
-
   /** Per-group TOKEN-budget quota — the unit real mixing recipes are
     * written in ("20B tokens of web, 5B of code"), where a doc-count quota
     * silently skews toward short documents. Docs are taken in identity-hash

@@ -137,9 +137,7 @@ object Skew {
     * e^−depth; boundMult=3 ≫ the e ≈ 2.72 of the textbook bound). Output:
     * (rank, skey, true_n, cms_n, no_underestimate, within_bound) — a
     * drifting sketch implementation flips a hashed boolean.
-    * Shape: two key-cardinality aggregates + a depth·topN-row probe join;
-    * the topN cut is TakeOrderedAndProject (per-partition partial top-k,
-    * no global sort). */
+    * Shape: two key-cardinality aggregates + a depth·topN-row probe join. */
   def cmsContract(df: DataFrame, key: String, depth: Int = 4,
       widthBits: Int = 10, boundMult: Int = 3, topN: Int = 20): DataFrame = {
     val width = 1L << widthBits
@@ -151,10 +149,7 @@ object Skew {
     // the total would scan the input a third time
     val tru = it.groupBy("k").agg(count(lit(1)).as("n"))
       .persistTracked()
-    val top = tru.orderBy(col("n").desc, col("k")).limit(topN)
-      .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .orderBy(col("n").desc, col("k"))).cast("long"))
+    val top = TopK.perGroup(tru, Nil, Seq(col("n").desc, col("k")), topN)
       .localCheckpoint() // topN rows, eager — cuts the sort lineage for both consumers
     val est = cmsBuckets(top.select(col("k")), depth, width)
       .join(sk, Seq("s", "b"))

@@ -852,14 +852,10 @@ object TextDedup {
 
   def dedupParagraphs(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val paras = docs.select(col(idCol).as("doc_id"),
         posexplode(split(col(textCol), "\n")).as(Seq("idx", "para")))
-    val firstOcc = Window.partitionBy(lower(trim(col("para"))))
-      .orderBy(col("doc_id"), col("idx"))
-    val rebuilt = paras
-      .withColumn("__rn", row_number().over(firstOcc))
-      .filter(col("__rn") === 1)
+    val rebuilt = TopK.perGroup(paras, Seq(lower(trim(col("para")))),
+        Seq(col("doc_id"), col("idx")), 1, "__rn")
       .groupBy(col("doc_id"))
       .agg(
         array_join(

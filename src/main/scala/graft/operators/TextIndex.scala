@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import CacheGuard.PersistTrackedOps
 
@@ -79,9 +79,9 @@ object TextIndex {
     * ordering's gain). `ranked` carries (nid, rank 1..); `gold` carries
     * (nid, rel ≥ 0, integer grades). DCG = Σ rel·w(rank) with the
     * driver-baked micro weights (exact integer sum); IDCG takes the top-k
-    * gold grades by (rel desc, nid) — a distributed TakeOrdered, never a
-    * full sort; NDCG is ONE IEEE division. NULL when IDCG = 0 (no
-    * relevant documents — the metric is undefined, not 0). One row out. */
+    * gold grades by (rel desc, nid); NDCG is ONE IEEE division. NULL when
+    * IDCG = 0 (no relevant documents — the metric is undefined, not 0).
+    * One row out. */
   def ndcgAtK(ranked: DataFrame, gold: DataFrame, k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
     val w = typedlit(dcgWeightsMicro(k).toMap)
@@ -89,12 +89,9 @@ object TextIndex {
       .join(gold, Seq("nid"), "left")
       .agg(coalesce(sum(coalesce(col("rel"), lit(0L)) *
         element_at(w, col("rank").cast("int"))), lit(0L)).as("dcg_micro"))
-    val idcg = gold.filter(col("rel") > 0)
-      .orderBy(col("rel").desc, col("nid")).limit(k)
-      .withColumn("irank", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .orderBy(col("rel").desc, col("nid"))).cast("int"))
-      .agg(coalesce(sum(col("rel") * element_at(w, col("irank"))), lit(0L))
+    val idcg = TopK.perGroup(gold.filter(col("rel") > 0), Nil,
+        Seq(col("rel").desc, col("nid")), k, "irank")
+      .agg(coalesce(sum(col("rel") * element_at(w, col("irank").cast("int"))), lit(0L))
         .as("idcg_micro"))
     dcg.crossJoin(broadcast(idcg))
       .select(col("dcg_micro"), col("idcg_micro"),
@@ -186,10 +183,7 @@ object TextIndex {
         round(log(col("n_docs").cast("double") / col("df").cast("double")) * 1000000L, 0)
           .cast("long"))
       .withColumn("score_micro", col("tf") * col("idf_micro"))
-    scored.withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("doc_id"))
-          .orderBy(col("score_micro").desc, col("term"))).cast("long"))
-      .filter(col("rank") <= k)
+    TopK.perGroup(scored, Seq(col("doc_id")), Seq(col("score_micro").desc, col("term")), k)
       .select(col("doc_id"), col("term"), col("tf"), col("df"),
         col("idf_micro"), col("score_micro"), col("rank"))
   }
@@ -221,27 +215,19 @@ object TextIndex {
     * Output: doc_id, n_terms (distinct query terms matched), score, rank. */
   def searchWeighted(post: DataFrame, queryTerms: Seq[String], k: Int,
       weightScale: Long = 1000000L): DataFrame =
-    weightedScores(post, queryTerms, weightScale)
-      .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .orderBy(col("score").desc, col("doc_id"))).cast("long"))
-      .filter(col("rank") <= k)
+    TopK.perGroup(weightedScores(post, queryTerms, weightScale), Nil,
+      Seq(col("score").desc, col("doc_id")), k)
 
   /** [[searchWeighted]] ranked WITHIN each document group (language,
     * source, ...): the quota-mixing form of retrieval — "best k hits per
     * language", not k global hits that one dominant group monopolizes.
     * `groups` maps doc_id → `groupCol`; docs without a group row drop out
-    * (inner join). One group-key window after the same single-pass scoring;
-    * WindowGroupLimit keeps every partition at k rows pre-merge. */
+    * (inner join). One group-key window after the same single-pass scoring. */
   def searchWeightedPerGroup(post: DataFrame, groups: DataFrame, groupCol: String,
       queryTerms: Seq[String], kPerGroup: Int,
       weightScale: Long = 1000000L): DataFrame =
-    weightedScores(post, queryTerms, weightScale)
-      .join(groups, "doc_id")
-      .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col(groupCol))
-          .orderBy(col("score").desc, col("doc_id"))).cast("long"))
-      .filter(col("rank") <= kPerGroup)
+    TopK.perGroup(weightedScores(post, queryTerms, weightScale).join(groups, "doc_id"),
+      Seq(col(groupCol)), Seq(col("score").desc, col("doc_id")), kPerGroup)
 
   /** (doc_id, n_terms, score) for the query — shared by the global and
     * per-group rankers. */
@@ -287,14 +273,11 @@ object TextIndex {
       .select(col("doc_id"), col("score"))
     val e = emb.filter(col(embCol).isNotNull)
       .select(col(idCol).as("doc_id"), VectorSearch.quantize(embCol).as("cv"))
-    broadcast(cands).join(e, Seq("doc_id"))
-      .withColumn("cn", VectorSearch.dot("cv", "cv"))
-      .withColumn("dp", graft.expressions.DotProductLong(col("cv"), typedlit(qq.toSeq)))
-      .withColumn("sim", expr(s"CAST(dp AS DOUBLE) / sqrt(CAST(cn AS DOUBLE) * CAST($qn AS DOUBLE))"))
-      .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .orderBy(col("sim").desc, col("doc_id"))).cast("long"))
-      .filter(col("rank") <= k)
+    TopK.perGroup(broadcast(cands).join(e, Seq("doc_id"))
+        .withColumn("cn", VectorSearch.dot("cv", "cv"))
+        .withColumn("dp", graft.expressions.DotProductLong(col("cv"), typedlit(qq.toSeq)))
+        .withColumn("sim", expr(s"CAST(dp AS DOUBLE) / sqrt(CAST(cn AS DOUBLE) * CAST($qn AS DOUBLE))")),
+        Nil, Seq(col("sim").desc, col("doc_id")), k)
       .select(col("doc_id"), col("score"), col("sim"), col("rank"))
   }
 
@@ -305,12 +288,11 @@ object TextIndex {
     * calibration between the two systems (ranks only).
     *
     * Scale shape: the lexical side touches only the query terms' postings;
-    * the vector side is one broadcast-query corpus scan reduced by
-    * TakeOrdered (per-partition top-recallK + driver merge — no global
-    * sort, no single-partition shuffle); the fusion join runs on two
-    * ≤recallK-row frames. Determinism: integer-quantized cosine ranks,
-    * IEEE 1/(K+r) terms summed pairwise (commutative in IEEE), ties to
-    * the smaller doc id — cross-engine exact (gate q_x_search_rrf). */
+    * the vector side is one corpus scan reduced to its top recallK; the
+    * fusion join runs on two ≤recallK-row frames. Determinism:
+    * integer-quantized cosine ranks, IEEE 1/(K+r) terms summed pairwise
+    * (commutative in IEEE), ties to the smaller doc id — cross-engine exact
+    * (gate q_x_search_rrf). */
   def searchRrf(post: DataFrame, emb: DataFrame, queryTerms: Seq[String],
       queryVec: Seq[Float], recallK: Int, k: Int, rrfK: Int = 60,
       idCol: String = "vec_id", embCol: String = "embedding",
@@ -320,32 +302,25 @@ object TextIndex {
     val qq = queryVec.map(x => BigDecimal(x.toDouble * VectorSearch.Scale)
       .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong).toArray
     val qn = qq.map(x => x * x).sum
-    val topVec = emb.filter(col(embCol).isNotNull)
-      .select(col(idCol).as("doc_id"), VectorSearch.quantize(embCol).as("cv"))
-      .withColumn("cn", VectorSearch.dot("cv", "cv"))
-      .withColumn("dp", graft.expressions.DotProductLong(col("cv"), typedlit(qq.toSeq)))
-      .withColumn("sim", expr(s"CAST(dp AS DOUBLE) / sqrt(CAST(cn AS DOUBLE) * CAST($qn AS DOUBLE))"))
-      .orderBy(col("sim").desc, col("doc_id")).limit(recallK) // TakeOrdered
-    val vec = topVec.withColumn("rank_vec", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .orderBy(col("sim").desc, col("doc_id"))).cast("long"))
+    val vec = TopK.perGroup(emb.filter(col(embCol).isNotNull)
+        .select(col(idCol).as("doc_id"), VectorSearch.quantize(embCol).as("cv"))
+        .withColumn("cn", VectorSearch.dot("cv", "cv"))
+        .withColumn("dp", graft.expressions.DotProductLong(col("cv"), typedlit(qq.toSeq)))
+        .withColumn("sim", expr(s"CAST(dp AS DOUBLE) / sqrt(CAST(cn AS DOUBLE) * CAST($qn AS DOUBLE))")),
+        Nil, Seq(col("sim").desc, col("doc_id")), recallK, "rank_vec")
       .select(col("doc_id"), col("rank_vec"))
-    lex.join(vec, Seq("doc_id"), "full_outer")
-      .withColumn("rrf",
-        coalesce(lit(1.0) / (lit(rrfK) + col("rank_lex")), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(rrfK) + col("rank_vec")), lit(0.0)))
-      .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .orderBy(col("rrf").desc, col("doc_id"))).cast("long"))
-      .filter(col("rank") <= k)
+    TopK.perGroup(lex.join(vec, Seq("doc_id"), "full_outer")
+        .withColumn("rrf",
+          coalesce(lit(1.0) / (lit(rrfK) + col("rank_lex")), lit(0.0)) +
+            coalesce(lit(1.0) / (lit(rrfK) + col("rank_vec")), lit(0.0))),
+        Nil, Seq(col("rrf").desc, col("doc_id")), k)
       .select(col("doc_id"), col("rank_lex"), col("rank_vec"), col("rrf"), col("rank"))
   }
 
   /** Okapi BM25 top-`k`: idf(t) = ln(1 + (N - df + 0.5)/(df + 0.5)),
     * tfNorm = tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl)). One filtered
     * postings scan + two broadcast-sized joins (term stats, doc lengths) +
-    * one hash-agg. The global top-k window is fine at any corpus size:
-    * WindowGroupLimit caps every partition at k rows before the merge. */
+    * one hash-agg + a global [[TopK]]. */
   def searchBM25(post: DataFrame, queryTerms: Seq[String], k: Int,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     // lens is referenced twice (the (N, avgdl) stats probe here and the
@@ -374,15 +349,12 @@ object TextIndex {
     val idf = log(lit(1.0) + (lit(n.toDouble) - col("df") + 0.5) / (col("df") + 0.5))
     val tfNorm = (col("tf") * (k1 + 1)) /
       (col("tf") + lit(k1) * (lit(1 - b) + lit(b) * col("dl") / avgdl))
-    matched
-      .join(dfs, "term")
-      .join(lens, "doc_id")
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_terms"), sum(idf * tfNorm).as("score"))
-      .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .orderBy(col("score").desc, col("doc_id"))).cast("long"))
-      .filter(col("rank") <= k)
+    TopK.perGroup(matched
+        .join(dfs, "term")
+        .join(lens, "doc_id")
+        .groupBy("doc_id")
+        .agg(count(lit(1)).as("n_terms"), sum(idf * tfNorm).as("score")),
+      Nil, Seq(col("score").desc, col("doc_id")), k)
   }
 
   /** [[searchBM25]] with the per-(term,doc) contribution QUANTIZED to an
@@ -420,15 +392,12 @@ object TextIndex {
     val idf = log(lit(1.0) + (lit(n.toDouble) - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
     val tfNorm = (col("tf") * lit(k1 + 1)) /
       (col("tf") + lit(k1) * (lit(1 - b) + lit(b) * col("dl") / lit(avgdl)))
-    matched
-      .join(dfs, "term")
-      .join(lens, "doc_id")
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_terms"),
-        sum(round(idf * tfNorm * lit(1000000.0), 0).cast("long")).as("score_micro"))
-      .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .orderBy(col("score_micro").desc, col("doc_id"))).cast("long"))
-      .filter(col("rank") <= k)
+    TopK.perGroup(matched
+        .join(dfs, "term")
+        .join(lens, "doc_id")
+        .groupBy("doc_id")
+        .agg(count(lit(1)).as("n_terms"),
+          sum(round(idf * tfNorm * lit(1000000.0), 0).cast("long")).as("score_micro")),
+      Nil, Seq(col("score_micro").desc, col("doc_id")), k)
   }
 }

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Hashing
 import CacheGuard.PersistTrackedOps
@@ -50,6 +49,18 @@ object VectorSearch {
     emb.select(col(idCol).as("vec_id"), quantize(embCol).as("q"))
       .withColumn("nn", dot("q", "q"))
 
+  /** The ladder's exact re-rank stage, shared by every search path from
+    * brute force through IVF-PQ: `sim` = cosine(dp, qn, `norm`) over
+    * candidate rows carrying qid, nid, qn and `norm`, then top-`k` per
+    * query by (sim desc, nid). `dp` defaults to the exact integer dot of
+    * the full vectors qv/cv; the PQ probes pass their ADC dot and
+    * reconstruction norm instead. Output: (qid, nid, `keep`…, sim, rank). */
+  private[operators] def rerank(cand: DataFrame, k: Int, dp: Column = dot("qv", "cv"),
+      norm: String = "cn", keep: Seq[String] = Nil): DataFrame =
+    TopK.perGroup(cand.withColumn("dp", dp).withColumn("sim", cosine("dp", "qn", norm)),
+        Seq(col("qid")), Seq(col("sim").desc, col("nid")), k)
+      .select((Seq("qid", "nid") ++ keep ++ Seq("sim", "rank")).map(col): _*)
+
   /** Exact top-k cosine neighbors for each query row (self excluded).
     * The corpus side is [[spread]] because the O(|Q|·N) dot loop runs in
     * ITS partitioning (broadcast join; see spread's doc). */
@@ -57,14 +68,8 @@ object VectorSearch {
     val e = prepared(emb)
     val qs = broadcast(e.filter(queryPred)
       .select(col("vec_id").as("qid"), col("q").as("qv"), col("nn").as("qn")))
-    qs.join(spread(e.select(col("vec_id").as("nid"), col("q").as("cv"), col("nn").as("cn"))),
-        col("qid") =!= col("nid"))
-      .withColumn("dp", dot("qv", "cv"))
-      .withColumn("sim", cosine("dp", "qn", "cn"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("nid"))).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("nid"), col("sim"), col("rank"))
+    rerank(qs.join(spread(e.select(col("vec_id").as("nid"), col("q").as("cv"), col("nn").as("cn"))),
+      col("qid") =!= col("nid")), k)
   }
 
   /** Matryoshka (prefix-dimension) two-stage search: stage 1 ranks by
@@ -93,16 +98,8 @@ object VectorSearch {
         col("qid") =!= col("nid"))
       .withColumn("pdp", dot("qpv", "cpv"))
       .withColumn("psim", cosine("pdp", "qpn", "cpn"))
-      .withColumn("prank", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("psim").desc, col("nid"))).cast("long"))
-      .filter(col("prank") <= shortlist)
-    cand
-      .withColumn("dp", dot("qv", "cv"))
-      .withColumn("sim", cosine("dp", "qn", "cn"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("nid"))).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("nid"), col("sim"), col("rank"))
+    rerank(TopK.perGroup(cand, Seq(col("qid")), Seq(col("psim").desc, col("nid")),
+      shortlist, "prank"), k)
   }
 
   /** 1-bit-per-dimension SIGN signature, packed into ceil(dim/32) BIGINT
@@ -142,18 +139,11 @@ object VectorSearch {
     val qs = broadcast(sig.filter(queryPred)
       .select(col("vec_id").as("qid"), col("sig").as("qsig"),
         col("q").as("qv"), col("nn").as("qn")))
-    qs.join(spread(sig.select(col("vec_id").as("nid"), col("sig").as("csig"),
+    val cand = qs.join(spread(sig.select(col("vec_id").as("nid"), col("sig").as("csig"),
         col("q").as("cv"), col("nn").as("cn"))), col("qid") =!= col("nid"))
       .withColumn("hamming", hammingDistance("qsig", "csig"))
-      .withColumn("hrank", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("hamming"), col("nid"))))
-      .filter(col("hrank") <= shortlist)
-      .withColumn("dp", dot("qv", "cv"))
-      .withColumn("sim", cosine("dp", "qn", "cn"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("nid"))).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("nid"), col("hamming"), col("sim"), col("rank"))
+    rerank(TopK.perGroup(cand, Seq(col("qid")), Seq(col("hamming"), col("nid")),
+      shortlist, "hrank"), k, keep = Seq("hamming"))
   }
 
   /** Maximal-marginal-relevance re-ranking (Carbonell & Goldstein 1998) —
@@ -176,14 +166,9 @@ object VectorSearch {
     val e = prepared(emb)
     val qs = broadcast(e.filter(queryPred)
       .select(col("vec_id").as("qid"), col("q").as("qv"), col("nn").as("qn")))
-    val cands = qs
+    val cands = rerank(qs
       .join(e.select(col("vec_id").as("nid"), col("q").as("cv"), col("nn").as("cn")),
-        col("qid") =!= col("nid"))
-      .withColumn("dp", dot("qv", "cv"))
-      .withColumn("sim", cosine("dp", "qn", "cn"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("nid"))))
-      .filter(col("rnk") <= n)
+        col("qid") =!= col("nid")), n, keep = Seq("cv", "cn"))
       .select(col("qid"), col("nid"), col("sim"), col("cv"), col("cn"))
       .persist() // reused k times; Q·n rows
     // Pairwise sims among each query's candidates: Q·n(n−1) rows, bounded.
@@ -197,10 +182,7 @@ object VectorSearch {
       .select(col("qid"), col("a_nid"), col("b_nid"), col("psim"))
       .persist()
     val slim = cands.select(col("qid"), col("nid"), col("sim"))
-    var picked = slim
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("nid"))))
-      .filter(col("rn") === 1)
+    var picked = TopK.perGroup(slim, Seq(col("qid")), Seq(col("sim").desc, col("nid")), 1)
       .select(col("qid"), col("nid"), lit(1L).as("pick"), col("sim"))
     for (i <- 2 to k) {
       val sel = broadcast(picked.select(col("qid").as("s_qid"), col("nid").as("s_nid")))
@@ -209,16 +191,14 @@ object VectorSearch {
         .join(sel, pair("qid") === sel("s_qid") && pair("b_nid") === sel("s_nid"))
         .groupBy(col("qid"), col("a_nid"))
         .agg(max(col("psim")).as("max_sel_sim"))
-      val next = slim
-        .join(sel, slim("qid") === sel("s_qid") && slim("nid") === sel("s_nid"),
-          "left_anti")
-        .join(red, slim("qid") === red("qid") && slim("nid") === red("a_nid"))
-        .drop(red("qid")).drop("a_nid")
-        .withColumn("mmr",
-          lit(lambda) * col("sim") - lit(1.0 - lambda) * col("max_sel_sim"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy(col("qid")).orderBy(col("mmr").desc, col("nid"))))
-        .filter(col("rn") === 1)
+      val next = TopK.perGroup(slim
+          .join(sel, slim("qid") === sel("s_qid") && slim("nid") === sel("s_nid"),
+            "left_anti")
+          .join(red, slim("qid") === red("qid") && slim("nid") === red("a_nid"))
+          .drop(red("qid")).drop("a_nid")
+          .withColumn("mmr",
+            lit(lambda) * col("sim") - lit(1.0 - lambda) * col("max_sel_sim")),
+          Seq(col("qid")), Seq(col("mmr").desc, col("nid")), 1)
         .select(col("qid"), col("nid"), lit(i.toLong).as("pick"), col("sim"))
       // Q·k rows total: localCheckpoint keeps the loop's lineage flat so
       // round i doesn't re-run rounds 1..i−1's joins.
@@ -277,15 +257,9 @@ object VectorSearch {
     val qs = broadcast(e.filter(queryPred)
       .select(col("vec_id").as("qid"), quantize("embedding").as("qv"))
       .withColumn("qn", dot("qv", "qv")))
-    qs.join(spread(prep.filter(col("__cand"))
+    rerank(qs.join(spread(prep.filter(col("__cand"))
         .select(col("vec_id").as("nid"), col("q").as("cv"), col("nn").as("cn"))),
-        col("qid") =!= col("nid"))
-      .withColumn("dp", dot("qv", "cv"))
-      .withColumn("sim", cosine("dp", "qn", "cn"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("nid"))).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("nid"), col("sim"), col("rank"))
+      col("qid") =!= col("nid")), k)
   }
 
   /** Contrastive training triples — the embedding-model training-data op:
@@ -311,12 +285,11 @@ object VectorSearch {
       .withColumn("sim", cosine("dp", "qn", "cn"))
       .select(col("qid"), col("nid"), col("sim"))
       .persistTracked()
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("nid"))
-    val pos = pairs.filter(col("sim") >= posThr)
-      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+    def best(band: Column) =
+      TopK.perGroup(pairs.filter(band), Seq(col("qid")), Seq(col("sim").desc, col("nid")), 1)
+    val pos = best(col("sim") >= posThr)
       .select(col("qid"), col("nid").as("pos_id"), col("sim").as("pos_sim"))
-    val neg = pairs.filter(col("sim") < negThr)
-      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+    val neg = best(col("sim") < negThr)
       .select(col("qid"), col("nid").as("neg_id"), col("sim").as("neg_sim"))
     pos.join(neg, Seq("qid"))
   }
@@ -396,17 +369,11 @@ object VectorSearch {
     * learned centroids as the coarse quantizer instead of hyperplane
     * signs). `qs`/`cands` carry (vec_id, q, nn, bucket). */
   private[operators] def rankInBucket(qs: DataFrame, cands: DataFrame, k: Int): DataFrame =
-    qs.select(col("vec_id").as("qid"), col("q").as("qv"), col("nn").as("qn"), col("bucket"))
+    rerank(qs.select(col("vec_id").as("qid"), col("q").as("qv"), col("nn").as("qn"), col("bucket"))
       .join(cands.select(
         col("vec_id").as("nid"), col("q").as("cv"), col("nn").as("cn"), col("bucket")),
         Seq("bucket"))
-      .filter(col("qid") =!= col("nid"))
-      .withColumn("dp", dot("qv", "cv"))
-      .withColumn("sim", cosine("dp", "qn", "cn"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("nid"))).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("nid"), col("sim"), col("rank"))
+      .filter(col("qid") =!= col("nid")), k)
 
   /** Johnson-Lindenstrauss random projection to `outDim` components —
     * the pre-ANN compression step (shrink 100 TB of wide embeddings before
@@ -566,8 +533,7 @@ object VectorSearch {
     * compare, no division — bit-identical cross-engine).
     *
     * Fixture-scale form is the exact cross join + per-source top-2 (the
-    * [[q_x_embed_topk]] shape, WindowGroupLimit keeps partial top-k before
-    * the exchange); at corpus scale route BOTH sides through the same IVF
+    * [[q_x_embed_topk]] shape); at corpus scale route BOTH sides through the same IVF
     * coarse buckets first ([[lshBuckets]] / KMeans coarse centroids) so
     * candidate volume tracks match density — the margin arithmetic is
     * unchanged. Output: one row per source vector with its best target,
@@ -612,8 +578,7 @@ object VectorSearch {
     * candidate bucket emits no row — at corpus scale that IS the intent
     * (nothing close enough to mine). 100 TB posture: each side shuffles
     * once on `bucket`; the per-source top-2 window rides the join's
-    * partitioning with WindowGroupLimit keeping partial top-2 ahead of the
-    * exchange; skewed buckets split under AQE. */
+    * partitioning; skewed buckets split under AQE. */
   def mineBitextIvf(src: DataFrame, tgt: DataFrame,
       marginFpMin: Long = 1050000L, numPlanes: Int = 4, dim: Int = -1,
       idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
@@ -632,12 +597,8 @@ object VectorSearch {
 
   /** Shared tail of the bitext miners: per-source top-2 over candidate
     * (src_id, tgt_id, dot) rows, then the fixed-point margin verdict. */
-  private def marginTop2(pairs: DataFrame, marginFpMin: Long): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("src_id")).orderBy(col("dot").desc, col("tgt_id"))
-    pairs
-      .withColumn("__rk", row_number().over(w))
-      .filter(col("__rk") <= 2)
+  private def marginTop2(pairs: DataFrame, marginFpMin: Long): DataFrame =
+    TopK.perGroup(pairs, Seq(col("src_id")), Seq(col("dot").desc, col("tgt_id")), 2, "__rk")
       .groupBy(col("src_id"))
       .agg(max(when(col("__rk") === 1, col("tgt_id"))).as("tgt_id"),
         max(when(col("__rk") === 1, col("dot"))).as("s1"),
@@ -646,7 +607,6 @@ object VectorSearch {
         (col("s1") > 0 && (coalesce(col("s2"), lit(0L)) <= 0 ||
           col("s1") * lit(1000000L) >= lit(marginFpMin) * col("s2")))
           .as("accepted"))
-  }
 
   /** One-row hygiene census of an embedding column — the ingest gate a
     * vector pipeline runs before indexing a new batch (a single bad

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import graft.operators.TopK
 import Q._
 
 /** Model-based corpus curation gates — the statistical tier that runs after
@@ -420,15 +421,8 @@ object CurationQueries {
     // Top-100 by (count, center, context) keeps the gate output bounded.
     QueryDef("q_x_skipgrams",
       (s, d) => {
-        // rank-filter form: Spark's WindowGroupLimit rewrites the
-        // row_number <= k filter into a per-partition top-k before the
-        // single-partition merge (measured faster than an explicit
-        // orderBy+limit+re-rank, which pays an extra sort exchange)
-        val w = org.apache.spark.sql.expressions.Window
-          .orderBy(col("n_pairs").desc, col("center"), col("context"))
-        graft.operators.NgramLm.skipGramPairs(docs(s, d), window = 2)
-          .withColumn("rank", row_number().over(w).cast("long"))
-          .filter(col("rank") <= 100)
+        TopK.perGroup(graft.operators.NgramLm.skipGramPairs(docs(s, d), window = 2),
+          Nil, Seq(col("n_pairs").desc, col("center"), col("context")), 100)
       },
       Some(s"""WITH tk AS (SELECT $tokensSql AS toks FROM documents),
                p AS (SELECT unnest(flatten(list_transform(

@@ -778,15 +778,18 @@ object ParityQueries {
                     WHERE o.o_totalprice > 450000)
                   WHERE rk <= 2""")
       },
-      Some(s"""SELECT o_orderkey, l.l_linenumber,
-               ${centsSql("l.l_extendedprice")} AS price_cents
-               FROM orders,
-               LATERAL (SELECT l_linenumber, l_extendedprice
-                        FROM lineitem
-                        WHERE l_orderkey = o_orderkey
-                        ORDER BY l_extendedprice DESC, l_linenumber
-                        LIMIT 2) AS l
-               WHERE o_totalprice > 450000""")),
+      Some(lateralTopnSql("orders", "lineitem"))),
+
+    // The same LATERAL text run through Spark itself, so the correlated
+    // LATERAL + LIMIT decorrelation path stays under the gate beside
+    // q_x_lateral_topn's join-first rewrite. Shares that gate's oracle.
+    QueryDef("q_x_lateral_sql",
+      (s, d) => {
+        t(s, d, "orders").createOrReplaceTempView("graft_orders")
+        t(s, d, "lineitem").createOrReplaceTempView("graft_lineitem")
+        s.sql(lateralTopnSql("graft_orders", "graft_lineitem"))
+      },
+      Some(lateralTopnSql("orders", "lineitem"))),
 
     // Collect + sort: per-group ordered array aggregation (sorting makes the
     // nondeterministic collect order irrelevant on both engines). The gate
@@ -1879,6 +1882,19 @@ object ParityQueries {
              (SELECT count(*) FROM ($factOracle)) AS fact_rows,
              (SELECT CAST(sum(CAST(round(totalprice * 100, 0) AS BIGINT)) AS BIGINT)
               FROM ($factOracle)) AS rev_cents"""))
+
+  /** Top-2 priciest lineitems of each high-value order as a correlated
+    * LATERAL + LIMIT over the named orders/lineitem relations. */
+  private def lateralTopnSql(orders: String, lineitem: String): String =
+    s"""SELECT o_orderkey, l.l_linenumber,
+               ${centsSql("l.l_extendedprice")} AS price_cents
+               FROM $orders,
+               LATERAL (SELECT l_linenumber, l_extendedprice
+                        FROM $lineitem
+                        WHERE l_orderkey = o_orderkey
+                        ORDER BY l_extendedprice DESC, l_linenumber
+                        LIMIT 2) AS l
+               WHERE o_totalprice > 450000"""
 
   /** TPC-H→reference column mapping for the fact build (FIXTURES.md §B):
     * orders(o_orderkey,o_custkey,o_orderdate) is Orders; lineitem is

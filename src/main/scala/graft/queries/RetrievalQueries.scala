@@ -326,8 +326,8 @@ object RetrievalQueries {
     // Reciprocal-rank fusion of the lexical and vector top-50 lists
     // (Σ 1/(60+rank) — no score calibration, ranks only): the OTHER
     // standard hybrid shape next to recall-then-rerank. Lexical side
-    // touches only the query terms' postings; vector side is one
-    // broadcast-query TakeOrdered scan; fusion joins two ≤50-row frames.
+    // touches only the query terms' postings; vector side is one corpus
+    // scan cut to its top 50; fusion joins two ≤50-row frames.
     QueryDef("q_x_search_rrf",
       (s, d) => {
         val emb = t(s, d, "embeddings")

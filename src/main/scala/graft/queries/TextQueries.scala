@@ -1,7 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.operators.TopK
 import Q._
 
 /** Text-analysis + document-dedup operators over the `documents` table —
@@ -382,16 +382,13 @@ object TextQueries {
       }),
 
     // Corpus vocabulary: global token frequencies, deterministic top-20
-    // (explode → hash agg → top-k; one shuffle at any scale, WindowGroupLimit
-    // prunes the sort).
+    // (explode → hash agg → top-k; one shuffle at any scale).
     QueryDef("q_x_vocab_topk",
       (s, d) => {
         val counts = t(s, d, "documents")
           .select(explode(tokens(col("text"))).as("tok"))
           .groupBy(col("tok")).agg(count(lit(1)).as("n"))
-        counts.withColumn("rank", row_number().over(
-            org.apache.spark.sql.expressions.Window.orderBy(col("n").desc, col("tok"))).cast("long"))
-          .filter(col("rank") <= 20)
+        TopK.perGroup(counts, Nil, Seq(col("n").desc, col("tok")), 20)
           .select(col("tok"), col("n"), col("rank"))
       },
       Some(s"""SELECT tok, n, rank FROM (
@@ -1677,13 +1674,13 @@ object TextQueries {
 
     // Data mixing: top-20 documents per language by letter-density score —
     // the per-source quota step of a training-data pipeline. One group-key
-    // shuffle; WindowGroupLimit keeps it per-partition top-k.
+    // shuffle.
     QueryDef("q_x_mix_quota",
       (s, d) => {
         val scored = t(s, d, "documents").select(col("doc_id"), col("lang"),
           (graft.functions.Text.letterCount(col("text")) /
             length(col("text")).cast("double")).as("score"))
-        graft.operators.Sampling.quotaPerGroup(scored, "lang", "score", 20, "doc_id")
+        TopK.perGroup(scored, Seq(col("lang")), Seq(col("score").desc, col("doc_id")), 20)
       },
       Some("""SELECT doc_id, lang, score, rank FROM (
               SELECT doc_id, lang, score,
@@ -2391,13 +2388,10 @@ object TextQueries {
         val withRare = t(s, d, "documents").select(col("doc_id"),
           concat(col("text"), lit(" rare_"), col("doc_id"),
             lit(" rare_"), col("doc_id")).as("text"))
-        val vocab = withRare
+        val vocab = TopK.perGroup(withRare
           .select(explode(tokens(col("text"))).as("tok"))
-          .groupBy(col("tok")).agg(count(lit(1)).as("n"))
-          .withColumn("rank", row_number().over(
-            org.apache.spark.sql.expressions.Window
-              .orderBy(col("n").desc, col("tok"))).cast("long"))
-          .filter(col("rank") <= 100)
+          .groupBy(col("tok")).agg(count(lit(1)).as("n")),
+          Nil, Seq(col("n").desc, col("tok")), 100)
         graft.operators.QualityFilter.oovRate(withRare, vocab)
       },
       Some(s"""WITH docs AS (SELECT doc_id,

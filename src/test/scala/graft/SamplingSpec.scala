@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Sampling
+import graft.operators.{Sampling, TopK}
 
 /** Training-data selection: deterministic sampling, quota mixing, redaction. */
 class SamplingSpec extends SparkSpec {
@@ -37,19 +37,38 @@ class SamplingSpec extends SparkSpec {
     assert(a.size > 50 && a.size < 200) // ~100 expected of 1000
   }
 
-  test("quotaPerGroup: top-k per group, deterministic tie-break on key") {
+  test("TopK.perGroup: top-k per group, deterministic tie-break on key") {
     val df = Seq(("en", 1L, 0.5), ("en", 2L, 0.9), ("en", 3L, 0.9), ("fr", 4L, 0.1))
       .toDF("lang", "doc_id", "score")
-    val got = rows(Sampling.quotaPerGroup(df, "lang", "score", 2, "doc_id")
-      .orderBy("lang", "rank").select("lang", "doc_id", "rank"))
-    // tie at 0.9 resolves to the smaller doc_id first
-    assert(got == Seq(Seq("en", 2L, 1L), Seq("en", 3L, 2L), Seq("fr", 4L, 1L)))
+    val top = TopK.perGroup(df, Seq(col("lang")), Seq(col("score").desc, col("doc_id")), 2)
+    assert(top.schema("rank").dataType == org.apache.spark.sql.types.LongType)
+    // tie at 0.9 resolves to the smaller doc_id first; fr's one row is
+    // fewer than k, so the whole group survives
+    assert(rows(top.orderBy("lang", "rank").select("lang", "doc_id", "rank")) ==
+      Seq(Seq("en", 2L, 1L), Seq("en", 3L, 2L), Seq("fr", 4L, 1L)))
+    // k = 1 is keep-first: the tie's smaller key wins, one row per group
+    val first = TopK.perGroup(df, Seq(col("lang")),
+      Seq(col("score").desc, col("doc_id")), 1, "rn")
+    assert(rows(first.orderBy("lang").select("lang", "doc_id", "rn")) ==
+      Seq(Seq("en", 2L, 1L), Seq("fr", 4L, 1L)))
+    // k larger than every group keeps every row, ranked
+    assert(rows(TopK.perGroup(df, Seq(col("lang")),
+      Seq(col("score").desc, col("doc_id")), 10).orderBy("lang", "rank")
+      .select("doc_id")) == Seq(Seq(2L), Seq(3L), Seq(1L), Seq(4L)))
+    // empty keys: one global ranking across the groups
+    assert(rows(TopK.perGroup(df, Nil, Seq(col("score").desc, col("doc_id")), 3)
+      .orderBy("rank").select("doc_id", "rank")) ==
+      Seq(Seq(2L, 1L), Seq(3L, 2L), Seq(1L, 3L)))
   }
 
-  test("quotaPerGroup plans a partial WindowGroupLimit (per-partition top-k)") {
+  test("TopK.perGroup plans a per-partition top-k, keyed and global") {
     val df = spark.range(100).select((col("id") % 5).as("g"), col("id").as("s"), col("id").as("k"))
-    val plan = Sampling.quotaPerGroup(df, "g", "s", 3, "k").queryExecution.executedPlan.toString
-    assert(plan.contains("WindowGroupLimit"), "rank filter must prune before the shuffle merge")
+    def plan(keys: Seq[org.apache.spark.sql.Column]) =
+      TopK.perGroup(df, keys, Seq(col("s").desc, col("k")), 3).queryExecution.executedPlan.toString
+    // keyed: a partial WindowGroupLimit prunes before the group-key exchange
+    assert(plan(Seq(col("g"))).contains("WindowGroupLimit"))
+    // global: the same rank filter becomes a per-partition top-k + merge
+    assert(plan(Nil).contains("TakeOrderedAndProject"))
   }
 
   test("tokenBudgetPerGroup: kept totals fit the budget, nested under budget growth, deterministic") {
