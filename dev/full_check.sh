@@ -9,8 +9,12 @@ sbt -batch compile
 sbt -batch test
 for sf in sf0.001 sf0.01; do
   out=$(mktemp -d)
-  dev/run_main.sh graft.Verify /root/testdata/$sf "$out" 2>/dev/null
+  log=$(mktemp --suffix=.verify-stderr.log)
+  dev/run_main.sh graft.Verify /root/testdata/$sf "$out" 2>"$log"
   python3 dev/check_oracles.py /root/testdata/$sf "$out"
+  # warning counts: repeated persists, single-partition windows
+  echo "$sf warnings: already-cached $(grep -c 'Asked to cache already cached data' "$log" || true)," \
+    "no-partition-windows $(grep -c 'No Partition Defined' "$log" || true) (log: $log)"
 done
 dev/run_main.sh graft.Bench 2>/dev/null | tail -1   # sf0.1, the shipped session
 dev/run_main.sh graft.Smoke 2>/dev/null | grep smoke

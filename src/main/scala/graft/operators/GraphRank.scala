@@ -33,12 +33,12 @@ object GraphRank {
 
   final val Scale = 1000000000L // 1e9 fixed-point
 
-  /** Measured-width target for the iterative-loop exchanges (see
-    * [[connectedComponents]]): one reduce partition per ~20k edge rows,
-    * capped at the session shuffle width. 20k × ~16 B/row ≈ the point
-    * where a partition's work first exceeds its task-scheduling cost on
-    * gate-scale graphs (measured on the ER pair graph). */
-  final val TargetRowsPerPartition = 20000L
+  /** Measured-width target for [[kCore]]'s per-round exchanges: one
+    * reduce partition per ~20k edge rows, capped at the session shuffle
+    * width. 20k × ~16 B/row ≈ the point where a partition's work first
+    * exceeds its task-scheduling cost on gate-scale graphs (measured on
+    * the ER pair graph). */
+  private final val TargetRowsPerPartition = 20000L
 
   private def sessionWidth(df: DataFrame): Int =
     math.max(1, df.sparkSession.sessionState.conf.numShufflePartitions)
@@ -93,8 +93,6 @@ object GraphRank {
     // q_x_pagerank 1.20 s (this shape) vs 2.82 s (measured-width shape),
     // hits 3.18 vs 6.95 — the probe pass costs more than a narrow width
     // ever saves, and at scale AQE coalesces the loop exchanges anyway.
-    // CC/LPA/kCore keep their measured widths: their counts ride existing
-    // convergence probes, so the width is free there.
     val e = edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst")).repartition(col("src"))
       .persistTracked()
@@ -283,14 +281,6 @@ object GraphRank {
         col("support"), col("confidence"), col("lift"), col("rank"))
   }
 
-  /** Exact triangle count over an ordered edge list (a < b on every row) —
-    * the clustering-coefficient numerator, and the classic test that a
-    * relational engine can do graph analytics without an adjacency-matrix
-    * blowup. Shape: two equi-joins on node keys (edges⋈edges forming open
-    * wedges, then one membership probe closing them) + one count — no
-    * node-cardinality collect, no cross join; wedge volume is Σ deg(b)²
-    * over middle nodes, the standard bound. Returns one row
-    * (n_nodes, n_edges, n_triangles). */
   /** Synchronous label-propagation communities (LPA): labels start as node
     * ids; each round EVERY node simultaneously adopts the most frequent
     * label among its neighbors, ties broken by smallest label — fully
@@ -303,9 +293,11 @@ object GraphRank {
     *
     * Per round: one edge⋈label equi-join (label side is node-sized) + a
     * (node, label)-keyed count + a node-keyed struct-min argmax — O(E)
-    * per round with localCheckpoint truncating lineage, the same
-    * silhouette as connected components / k-core. Input: one-directional
-    * undirected edges (a < b); output (node, community). */
+    * per round, the rounds chained lazily. The expanded edge set is laid
+    * out once on the join key (the [[pageRank]] static layout); every
+    * other exchange runs at the session width and AQE coalesces it, so
+    * construction runs no job. Input: one-directional undirected edges
+    * (a < b); output (node, community). */
   def labelPropagation(edges: DataFrame, rounds: Int): DataFrame = {
     // static-edge layout, same device as pageRank: persist (NOT
     // localCheckpoint — it drops the partitioning metadata) the expanded
@@ -315,33 +307,14 @@ object GraphRank {
     // the rank/label side, zero on the O(E) side).
     val u0 = edges.select(col("a").cast("long").as("src"), col("b").cast("long").as("dst"))
       .union(edges.select(col("b").cast("long").as("src"), col("a").cast("long").as("dst")))
-      .persistTracked()
-    // measured iteration width (the connectedComponents device); rp is a
-    // no-op at saturation so the scale path keeps its partial aggregates
-    val maxW = sessionWidth(edges)
-    val w = widthFor(u0.count(), maxW)
-    def lay(df: DataFrame, c: Column): DataFrame = // static layout (see pageRank)
-      if (w >= maxW) df.repartition(c) else df.repartition(w, c)
-    def rp(df: DataFrame, c: Column): DataFrame = // no-op at saturation
-      if (w >= maxW) df else df.repartition(w, c)
-    val und = lay(u0, col("src")).persistTracked()
-    // eagerly materialize the laid-out frame (cheap: re-reads u0's cached
-    // blocks through one exchange) so the scan cache can be released
-    // in-function instead of doubling the edge-sized footprint until
-    // CacheGuard.releaseAll — mirrors the pageRank/hits path
-    und.count()
-    u0.unpersist(false)
+    val und = u0.repartition(col("src")).persistTracked()
     var labels = und.select(col("src").as("n")).distinct()
       .select(col("n"), col("n").as("community"))
     (1 to rounds).foreach { r =>
       // shuffle_hash: hash-build the node-sized label side against und's
       // static layout instead of sort-merging the edge stream every round.
-      // One rp(dst) covers BOTH aggregates: hash(dst, w) satisfies the
-      // (dst, community) clustering, and the argmax groupBy(n=dst) reuses
-      // the same partitioning — zero extra exchanges per round.
-      val counts = rp(und.join(
-          labels.withColumnRenamed("n", "src").hint("shuffle_hash"), Seq("src")),
-          col("dst"))
+      val counts = und.join(
+          labels.withColumnRenamed("n", "src").hint("shuffle_hash"), Seq("src"))
         .groupBy(col("dst").as("n"), col("community"))
         .agg(count(lit(1)).as("c"))
       labels = counts
@@ -391,13 +364,13 @@ object GraphRank {
     * decreasing — total O(E log) with the constant dominated by level 1;
     * every step is an equi-join or keyed aggregate (AQE broadcasts the
     * node-sized label maps at gate scale, shuffles them at cluster
-    * scale); per level exactly TWO eager jobs (the propagate chain and
+    * scale, and coalesces the session-width exchanges of the small late
+    * levels); per level exactly TWO eager jobs (the propagate chain and
     * the contraction), each localCheckpointed so the lazy level plans
     * never nest. No driver data-state: the only actions are the 1-row
     * emptiness probes. Input: one-directional undirected edges (a < b);
     * output (node, component) with component = min node id reached. */
-  def connectedComponents(edges: DataFrame, rounds: Int,
-      numPartitions: Int = 0): DataFrame = {
+  def connectedComponents(edges: DataFrame, rounds: Int): DataFrame = {
     // Each propagate references the label frame ONCE (the min-merge is
     // folded into the edge set as self-loops; self-loop DUPLICATES are
     // harmless under min, which saves the distinct's shuffle), so the
@@ -409,45 +382,11 @@ object GraphRank {
     // per LAZY round doubles the logical plan every round — 2^rounds
     // lineage copies of the leaf (measured 137 s → ~5 s on the ER
     // composite at sf0.01).
-    //
-    // Exchange width: the loop runs ~6 exchanges per level, and each
-    // session-width exchange on a SMALL edge set is pure task scheduling —
-    // measured 3.5 s at 32 partitions vs 1.5 s at 8 for a 13.5k-edge ER
-    // pair graph. `numPartitions` > 0 pins a caller-measured width (the
-    // er_resolve path, which already counted its persisted pairs);
-    // 0 (default) derives the width PER LEVEL from a measured edge count:
-    // the input count rides the persist this function pays anyway, and the
-    // per-level count IS the convergence probe (a contracted edge set is
-    // converged exactly when count == 0, so the old isEmpty probe becomes
-    // the width measurement for free). The contracted set shrinks
-    // geometrically, so late levels drop to a handful of partitions
-    // instead of idling a full session-width task wave 6× per level;
-    // at scale the ratio rows/TargetRowsPerPartition exceeds the session
-    // cap and the width saturates at the configured shuffle partitions —
-    // scale-adaptive in both directions (guide §2: derive partitioning
-    // from input size, don't tune a constant for either local or cluster).
-    // Labels are partition-order-free (min-label), so output is identical
-    // at any width.
-    val maxWidth = sessionWidth(edges)
-    var width = numPartitions
-    // Saturated width = session width: skip the explicit repartition so
-    // the aggregates keep their map-side partial phase (an exchange whose
-    // distribution already satisfies the groupBy suppresses the partial
-    // combine and would move edge-sized rows where node-sized suffice —
-    // the 100 TB path must not pay for the gate-scale fix).
-    def rp(df: DataFrame, cols: Column*): DataFrame =
-      if (width <= 0 || width >= maxWidth) df
-      else if (cols.isEmpty) df.repartition(width)
-      else df.repartition(width, cols: _*)
     val PropagatesPerLevel = 3
-    var e = rp(edges.select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
-      .filter(col("a") =!= col("b")))
+    var e = edges.select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
+      .filter(col("a") =!= col("b"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val inputE = e
-    // measured input width (one count on the frame this function just
-    // persisted — the level-1 propagate re-reads the cached blocks)
-    if (numPartitions <= 0) width = widthFor(e.count(), maxWidth)
-    val resolveWidth = width // node-scale, for the resolve joins below
     var maps = List.empty[DataFrame] // deepest level first
     var lvl = 0
     var done = false
@@ -456,11 +395,10 @@ object GraphRank {
         .union(e.select(col("b").as("src"), col("a").as("dst")))
       val withSelf = und.union(und.select(col("src"), col("src").as("dst")))
       // propagate #1, label-join-free: component = min over neighbors+self
-      var l = rp(withSelf, col("dst")).groupBy(col("dst").as("n"))
+      var l = withSelf.groupBy(col("dst").as("n"))
         .agg(min(col("src")).as("component"))
       for (_ <- 2 to PropagatesPerLevel)
-        l = rp(rp(withSelf, col("src")).join(l.withColumnRenamed("n", "src"), Seq("src")),
-            col("dst"))
+        l = withSelf.join(l.withColumnRenamed("n", "src"), Seq("src"))
           .groupBy(col("dst").as("n"))
           .agg(min(col("component")).as("component"))
       // LAZY checkpoints: the level map and the contracted edge set cache
@@ -470,20 +408,15 @@ object GraphRank {
       // whole operator on gate-scale graphs).
       val lc = l.localCheckpoint(eager = false)
       maps ::= lc
-      val contracted = rp(rp(e, col("a"))
-        .join(lc.select(col("n").as("a"), col("component").as("la")), Seq("a"))
+      e = e.join(lc.select(col("n").as("a"), col("component").as("la")), Seq("a"))
         .join(lc.select(col("n").as("b"), col("component").as("lb")), Seq("b"))
         .select(least(col("la"), col("lb")).as("a"),
           greatest(col("la"), col("lb")).as("b"))
-        .filter(col("a") =!= col("b")), col("a"), col("b"))
+        .filter(col("a") =!= col("b"))
         .distinct()
         .localCheckpoint(eager = false)
-      e = contracted
-      // convergence probe doubles as the next level's width measurement
-      // (count materializes the lazy checkpoint, as the old isEmpty did)
-      val cnt = e.count()
-      done = cnt == 0L
-      if (numPartitions <= 0 && !done) width = widthFor(cnt, maxWidth)
+      // convergence probe (count materializes the lazy checkpoint)
+      done = e.count() == 0L
       lvl += 1
     }
     inputE.unpersist(false)
@@ -496,13 +429,8 @@ object GraphRank {
           .withColumn("n", lit(0L)).withColumn("component", lit(0L))
           .limit(0)
       case m0 :: rest =>
-        // resolve at the INPUT-scale width: `out` starts node-sized (the
-        // level-1 map), so the last contracted level's near-1 width would
-        // squeeze it through too few partitions
-        width = resolveWidth
         rest.foldLeft(m0) { (out, m) =>
-          rp(out, col("component"))
-            .join(m.select(col("n").as("component"), col("component").as("root")),
+          out.join(m.select(col("n").as("component"), col("component").as("root")),
               Seq("component"), "left")
             .select(col("n"), coalesce(col("root"), col("component")).as("component"))
         }
@@ -646,8 +574,8 @@ object GraphRank {
     var done = false
     var r = 0
     // per-round exchange width from the surviving-edge count the
-    // convergence test measures anyway (the connectedComponents device);
-    // rp is a no-op at saturation, keeping scale-path partial aggregates
+    // convergence test measures anyway; rp is a no-op at saturation,
+    // keeping scale-path partial aggregates
     val maxW = sessionWidth(edges)
     while (r < rounds && !done) {
       val wr = widthFor(prevCount, maxW)
@@ -750,23 +678,27 @@ object GraphRank {
         coalesce(col("auth"), lit(0L)).as("auth_fp"))
   }
 
+  /** Exact triangle count over an ordered edge list (a < b on every row) —
+    * the clustering-coefficient numerator, and the classic test that a
+    * relational engine can do graph analytics without an adjacency-matrix
+    * blowup. Shape: two equi-joins on node keys (edges⋈edges forming open
+    * wedges, then one membership probe closing them) + one count — no
+    * node-cardinality collect, no cross join; wedge volume is Σ deg(b)²
+    * over middle nodes, the standard bound. Neither join carries a hint:
+    * AQE broadcasts the edge side when its measured stage fits
+    * autoBroadcastJoinThreshold, so the wedge stream never shuffles at
+    * gate scale, and keeps key-partitioned shuffles for web-scale graphs.
+    * Construction runs no job. Returns one row
+    * (n_nodes, n_edges, n_triangles). */
   def triangleStats(edges: DataFrame): DataFrame = {
     // the edge list feeds five subtrees (both wedge sides, the closing
     // probe, the node census, the edge count) — persist it once;
     // released via CacheGuard.releaseAll (edge-sized, spills)
     val e = edges.select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
       .persistTracked()
-    // the wedge frame is the big side (Σ deg(b)² rows): when a measured
-    // count says the EDGE list fits in a broadcast, hint both the wedge
-    // build and the closing probe so the wedge stream never shuffles —
-    // one scan of e, two map-side hash joins. Past the cutoff (web-scale
-    // graphs) both fall back to key-partitioned shuffles, which is the
-    // correct cluster shape there.
-    val nEdges = e.count()
-    def maybeBcast(df: DataFrame) = if (nEdges <= 2000000L) broadcast(df) else df
-    val wedges = e.as("e1").join(maybeBcast(e.as("e2")), col("e1.b") === col("e2.a"))
+    val wedges = e.as("e1").join(e.as("e2"), col("e1.b") === col("e2.a"))
       .select(col("e1.a").as("wa"), col("e1.b").as("wb"), col("e2.b").as("wc"))
-    val tris = wedges.join(maybeBcast(e.as("e3")),
+    val tris = wedges.join(e.as("e3"),
       col("wa") === col("e3.a") && col("wc") === col("e3.b"))
     val nodes = e.select(col("a").as("n")).union(e.select(col("b").as("n"))).distinct()
     nodes.agg(count(lit(1)).as("n_nodes"))

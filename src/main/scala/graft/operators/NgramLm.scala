@@ -237,10 +237,10 @@ object NgramLm {
     * (pair-vocab-sized, persisted) frame by w1 reconstructs exact unigram
     * occurrence counts. The totals Nt/Nb are 1-row sums over that same
     * persisted frame (Nt = Nb + #docs, since each doc contributes one
-    * sentinel). The two vocab-sized unigram join sides broadcast when a
-    * measured vocab count says they fit (the
-    * [[graft.operators.Trend.spearman]] device); past the cutoff they
-    * fall back to token-keyed shuffles. The returned plan's cached input
+    * sentinel). The two vocab-sized unigram join sides carry no hint:
+    * AQE broadcasts them when their measured stages fit
+    * autoBroadcastJoinThreshold and keeps token-keyed shuffles for a
+    * web-scale vocabulary. The returned plan's cached input
     * (pair-vocab-sized, not corpus-sized) releases via
     * [[CacheGuard.releaseAll]]. */
   def pmiCollocations(docs: DataFrame, minCount: Long = 5, k: Int = 50,
@@ -259,19 +259,10 @@ object NgramLm {
       .agg(sum(col("n_pair")).as("c")).persistTracked(lvl)
     // totals ride the already-persisted aggregates: one 1-row job each,
     // instead of extra corpus-tokenizing count() jobs
-    val uniTot = c1.agg(coalesce(sum(col("c")), lit(0L)), count(lit(1)),
-      coalesce(sum(length(col("tok"))), lit(0L))).head()
-    val (nTok, nVocab) = (uniTot.getLong(0), uniTot.getLong(1))
-    // byte-aware broadcast gate (tokens are variable-width strings); the
-    // key-bytes measure rides the same 1-row aggregate, no extra job
-    val vocabFits = MeasuredBroadcast.fits(nVocab, uniTot.getLong(2),
-      maxRows = 1000000L)
+    val nTok = c1.agg(coalesce(sum(col("c")), lit(0L))).head().getLong(0)
     val nBig = counts.filter(col("w2").isNotNull)
       .agg(coalesce(sum(col("n_pair")), lit(0L))).head().getLong(0)
-    def side(name: String, as: String) = {
-      val s = c1.select(col("tok").as(name), col("c").as(as))
-      if (vocabFits) broadcast(s) else s
-    }
+    def side(name: String, as: String) = c1.select(col("tok").as(name), col("c").as(as))
     TopK.perGroup(counts
         .filter(col("w2").isNotNull && col("n_pair") >= minCount)
         .join(side("w1", "c1"), Seq("w1"))

@@ -176,15 +176,6 @@ object QualityFilter {
       .withColumn("keep", keepVerdict(metricCol))
   }
 
-  /** Equal-frequency (quantile) binning — the classic numeric-feature
-    * discretization for ML feature engineering and histogram-equalized
-    * monitoring: k−1 EXACT percentile cutoffs (one aggregate, broadcast)
-    * turn the metric into a map-side bin id `1 + |{cuts < value}|`, so a
-    * value at or below the first cutoff lands in bin 1 and ties share a
-    * bin (the scale-safe form — a global ntile would sort the corpus on
-    * one task, and its arbitrary tie-splitting is not reproducible).
-    * NULL metrics bin NULL. Same two-scan silhouette as [[quantileGate]]
-    * at any corpus size. */
   /** Per-group quantile NORMALIZATION: replace a raw score with its exact
     * within-group percentile (fixed-point, (rank−1)·10⁶ div (n−1)) — the
     * calibration step before any cross-source threshold: "top 20% of
@@ -211,62 +202,36 @@ object QualityFilter {
       .drop("__r", "__n")
   }
 
-  /** Equal-frequency binning with DISTRIBUTED cut derivation. The obvious
-    * `percentile(m, array(...))` aggregate merges per-partition value→count
-    * hashmaps on ONE reducer and sorts the full distinct-value set there —
-    * 1.2 s of the gate's 1.4 s at sf1, and an OOM hazard at 100 TB on
-    * high-cardinality metrics. Here the value histogram is a parallel
-    * hash aggregate; ranks come from a cumulative sum over the
-    * value-CARDINALITY-sized frame (the [[winsorize]] silhouette); and the
-    * k−1 interpolated cuts replicate Spark `percentile`'s arithmetic
+  /** Equal-frequency (quantile) binning — the classic numeric-feature
+    * discretization for ML feature engineering and histogram-equalized
+    * monitoring: k−1 EXACT percentile cutoffs (broadcast) turn the metric
+    * into a map-side bin id `1 + |{cuts < value}|`, so a value at or below
+    * the first cutoff lands in bin 1 and ties share a bin (the scale-safe
+    * form — a global ntile would sort the corpus on one task, and its
+    * arbitrary tie-splitting is not reproducible). NULL metrics bin NULL.
+    *
+    * Cut derivation: the value histogram is a parallel hash aggregate
+    * (persisted: the cumulative rank and the total both read it); ranks
+    * come from a cumulative sum over that value-CARDINALITY-sized frame
+    * on one partition (the [[winsorize]] silhouette — the same one-task
+    * sort of the distinct values that `percentile`'s reducer does); and
+    * the k−1 interpolated cuts replicate Spark `percentile`'s arithmetic
     * EXACTLY — position = q·(n−1), cut = (⌈pos⌉−pos)·v[⌊pos⌋] +
-    * (pos−⌊pos⌋)·v[⌈pos⌉], same double expression order — so the result
-    * is bit-identical to the old form (and to DuckDB's quantile_cont on
-    * the gate fixtures, proven by the unchanged oracle). */
-  def equalFrequencyBins(df: DataFrame, metricCol: String, k: Int,
-      singlePartMaxRows: Long = 1000000L): DataFrame = {
+    * (pos−⌊pos⌋)·v[⌈pos⌉], same double expression order — so the bins
+    * equal those of `percentile` (and DuckDB's quantile_cont on the gate
+    * fixtures, proven by the unchanged oracle). Construction runs no job. */
+  def equalFrequencyBins(df: DataFrame, metricCol: String, k: Int): DataFrame = {
     require(k >= 2, s"need at least 2 bins, got $k")
     import org.apache.spark.sql.expressions.Window
     val m = col(metricCol)
     val hist = df.filter(m.isNotNull).groupBy(m.as("__v"))
       .agg(count(lit(1)).as("__c")).persistTracked()
-    // Cumulative rank over the value histogram. A bare global
-    // Window.orderBy would land the WHOLE histogram on one task — on a
-    // continuous metric distinct ≈ rows, the same single-reducer hazard
-    // the distributed cut derivation exists to avoid. Measured gate (one
-    // count that rides the persist materialization — every later step
-    // re-reads the cached blocks): a histogram that comfortably fits one
-    // task's sort keeps the direct single-partition cumsum (the explicit
-    // pmod key is constant-valued but non-foldable, documenting that one
-    // partition is the DESIGN here and silencing WindowExec's
-    // unbounded-frame warning); a bigger one takes the two-level form —
-    // RANGE-partition by value, prefix-sum the session-width-sized
-    // per-partition offsets, window only within each slice (the
-    // Trend.spearman device, generalized to any ordered metric type).
-    // Exact integer cumsum either way — values are bit-identical.
-    val cum =
-      if (hist.count() <= singlePartMaxRows) {
-        hist.withColumn("__cum", sum(col("__c")).over(
-          Window.partitionBy(pmod(col("__c"), lit(1))).orderBy(col("__v"))
-            .rowsBetween(Window.unboundedPreceding, 0)))
-      } else {
-        val width = math.max(1,
-          df.sparkSession.sessionState.conf.numShufflePartitions)
-        val ranged = hist.repartitionByRange(width, col("__v"))
-          .withColumn("__p", spark_partition_id())
-          .persistTracked()
-        val off = broadcast(ranged.groupBy(col("__p"))
-          .agg(sum(col("__c")).as("__pc"))
-          .select(col("__p"), coalesce(sum(col("__pc")).over(
-            Window.partitionBy(pmod(col("__p"), lit(1))).orderBy(col("__p"))
-              .rowsBetween(Window.unboundedPreceding, -1)),
-            lit(0L)).as("__base")))
-        ranged.join(off, Seq("__p"))
-          .withColumn("__cum", col("__base") + sum(col("__c")).over(
-            Window.partitionBy(col("__p")).orderBy(col("__v"))
-              .rowsBetween(Window.unboundedPreceding, 0)))
-          .drop("__p", "__base")
-      }
+    // The explicit pmod key is constant-valued but non-foldable,
+    // documenting that one partition is the DESIGN here and silencing
+    // WindowExec's unbounded-frame warning. Exact integer cumsum.
+    val cum = hist.withColumn("__cum", sum(col("__c")).over(
+      Window.partitionBy(pmod(col("__c"), lit(1))).orderBy(col("__v"))
+        .rowsBetween(Window.unboundedPreceding, 0)))
     val n = hist.agg(coalesce(sum(col("__c")), lit(0L)).as("__n"))
     val qLits = (1 until k).map(i => lit(i.toDouble / k))
     val cutSpec = broadcast(n

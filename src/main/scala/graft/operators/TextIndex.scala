@@ -154,13 +154,13 @@ object TextIndex {
     * top-k ordering (score desc, term) is bit-identical cross-engine.
     * Shape: ONE persisted postings aggregate (it feeds both the scored
     * side and the df aggregate — unpersisted, the corpus tokenizes
-    * twice), a term-keyed df join-back whose vocab-sized build side
-    * broadcasts on a MEASURED count (the Trend.spearman device; past the
-    * cutoff it falls back to the term-keyed shuffle, the web-vocab
-    * shape), a 1-row N broadcast, and a per-DOC window — partitions are
-    * document-sized, never corpus-sized. NOTE the measured probe makes
-    * plan construction eager (two jobs); the returned plan's cached
-    * inputs release via [[CacheGuard.releaseAll]].
+    * twice), a term-keyed df join-back with no hint (AQE broadcasts the
+    * vocab-sized side when its measured stage fits
+    * autoBroadcastJoinThreshold and keeps the term-keyed shuffle for a
+    * web-scale vocabulary), a 1-row N broadcast, and a per-DOC window —
+    * partitions are document-sized, never corpus-sized. Construction
+    * runs no job; the cached postings release via
+    * [[CacheGuard.releaseAll]].
     *
     * `prebuilt`: a postings frame already derived from `docs` (the shared
     * serving index — same slot as ProductQuantizer's `encoded`); when
@@ -169,15 +169,11 @@ object TextIndex {
   def tfIdfTopK(docs: DataFrame, k: Int = 5,
       idCol: String = "doc_id", textCol: String = "text",
       prebuilt: Option[DataFrame] = None): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val post = prebuilt.getOrElse(postings(docs, idCol, textCol).persistTracked(lvl))
-    val dfreq = docFrequencies(post).persistTracked(lvl)
-    // byte-aware gate: terms are variable-width strings, so the old pure
-    // row-count cutoff could hint a multi-hundred-MB broadcast
-    val dfSide = MeasuredBroadcast.stringKeyed(dfreq, "term")
+    val post = prebuilt.getOrElse(postings(docs, idCol, textCol)
+      .persistTracked(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val n = docs.agg(count(lit(1)).as("n_docs"))
     val scored = post
-      .join(dfSide, Seq("term"))
+      .join(docFrequencies(post), Seq("term"))
       .crossJoin(broadcast(n))
       .withColumn("idf_micro",
         round(log(col("n_docs").cast("double") / col("df").cast("double")) * 1000000L, 0)

@@ -276,28 +276,22 @@ object Trend {
     * Scale: per column one distinct-value aggregate + the TWO-LEVEL
     * bucketed prefix sum for below(v) (the [[Eval]] cumBelow device —
     * `shiftright` bucketing is monotone for negatives too, no window is
-    * ever corpus-sized), then value-keyed joins back.
+    * ever corpus-sized), then value-keyed joins back with no hint: the
+    * planner picks broadcast or shuffle per rank map against
+    * autoBroadcastJoinThreshold, and AQE re-checks that choice with the
+    * measured stage sizes.
     *
-    * NOTE this function is EAGER at construction time: the broadcast
-    * cutoff is a MEASURED count, so building the plan runs two Spark jobs
-    * (one per rank map) before returning. The rank-map and base frames
-    * stay persisted because the returned lazy plan reads them; release
-    * via [[CacheGuard.releaseAll]] (or session teardown) — same
-    * cache-lifetime contract as TextDedup's persisted fingerprints. The row-count cutoff is a
-    * deliberate simplification: rank-map rows are two fixed-width longs,
-    * so rows × 16 B tracks bytes within a constant. */
+    * NOTE this function is EAGER at construction time: its one job is
+    * [[correlation]]'s moment aggregate, so the result is a 1-row local
+    * frame. The rank-map inputs and the base frame are persisted because
+    * each is read more than once; release via [[CacheGuard.releaseAll]]
+    * (or session teardown) — same cache-lifetime contract as TextDedup's
+    * persisted fingerprints. */
   def spearman(df: DataFrame, xCol: String, yCol: String,
-      xName: String, yName: String, bucketBits: Int = 20,
-      broadcastMaxRows: Long = 1000000L): DataFrame = {
-    // a rank map is DISTINCT-VALUE-sized; when a measured count says it
-    // fits a broadcast (bounded-domain metrics: cents, scores, counts —
-    // the common Spearman inputs), hint it so the base frame never
-    // shuffles for the join-back. High-cardinality maps fall back to the
-    // plain shuffle join, which is the 100 TB shape anyway. The count is
-    // one action over the persisted per-value frame, the same measured-
-    // probe pattern as RangeJoin.pointInIntervalAuto.
-    val BroadcastMaxRows = broadcastMaxRows
-    def avgRank2(d: DataFrame, c: String, out: String): (DataFrame, Long) = {
+      xName: String, yName: String, bucketBits: Int = 20): DataFrame = {
+    def avgRank2(d: DataFrame, c: String, out: String): DataFrame = {
+      // persisted: the per-value frame feeds both the bucket prefix and
+      // the within-bucket window
       val per = d.groupBy(col(c).as("v")).agg(count(lit(1)).as("c"))
         .withColumn("b", shiftright(col("v"), bucketBits))
         .persistTracked()
@@ -309,10 +303,9 @@ object Trend {
         .select(col("b"), coalesce(sum("bc").over(wb), lit(0L)).as("bb")))
       val ww = Window.partitionBy("b").orderBy("v")
         .rowsBetween(Window.unboundedPreceding, -1)
-      val map = per.join(bp, Seq("b"))
+      per.join(bp, Seq("b"))
         .withColumn("below", col("bb") + coalesce(sum("c").over(ww), lit(0L)))
         .select(col("v").as(c), (lit(2L) * col("below") + col("c") + 1L).as(out))
-      (map, per.count())
     }
     // persisted: the frame feeds both rank derivations AND the final join
     // — unpersisted, the caller's upstream lineage (often a scored/
@@ -321,67 +314,9 @@ object Trend {
     val base = df.select(col(xCol).cast("long").as("x"),
       col(yCol).cast("long").as("y"))
       .persistTracked()
-    val (rx, nx) = avgRank2(base, "x", "rx2")
-    val (ry, ny) = avgRank2(base, "y", "ry2")
-    if (nx <= BroadcastMaxRows && ny <= BroadcastMaxRows) {
-      // both rank maps broadcast: the base frame never shuffles, one
-      // global moment aggregate — measured FASTER than the decomposition
-      // below at gate scale (2.4 vs 3.3 s best-of-3 at local[32] sf0.1;
-      // two broadcast probes beat a 119k-group decimal hash aggregate)
-      val ranked = base.join(broadcast(rx), Seq("x"))
-        .join(broadcast(ry), Seq("y"))
-      correlation(ranked, Seq((col("rx2"), xName, col("ry2"), yName)))
-        .select(col("x_col"), col("y_col"), col("n"), col("r").as("rho"))
-    } else {
-      // A non-broadcastable rank map would force TWO corpus-row shuffle
-      // joins. Moment decomposition instead: only the SMALLER map joins
-      // the rows; the result collapses to the other key's distinct-value
-      // frame (count, Σrank, Σrank² per key — map-side partial
-      // aggregation) BEFORE the second map joins in, so the second join
-      // moves distinct-sized partials, never corpus rows
-      // (Σ f(ra)·g(rb) = Σ_b g(rb)·Σ_{rows@b} f(ra); all moments are
-      // exact decimal integers, so ρ is bit-identical to the joined form
-      // — r is symmetric in (x, y), which is why the swap needs no
-      // tracking in the result).
-      val swapped = nx > ny
-      val (innerMap, innerSmall, innerKey, innerRank) =
-        if (swapped) (ry, ny <= BroadcastMaxRows, "y", "ry2")
-        else (rx, nx <= BroadcastMaxRows, "x", "rx2")
-      val (outerMap, outerKey, outerRank) =
-        if (swapped) (rx, "x", "rx2") else (ry, "y", "ry2")
-      def dec(c: Column): Column = c.cast("decimal(38,0)")
-      val t = base.join(if (innerSmall) broadcast(innerMap) else innerMap,
-          Seq(innerKey))
-        .groupBy(col(outerKey))
-        .agg(count(lit(1)).as("c"), sum(dec(col(innerRank))).as("sa"),
-          sum(dec(col(innerRank)) * dec(col(innerRank))).as("saa"))
-      val mrow = t.join(outerMap, Seq(outerKey))
-        .agg(coalesce(sum(col("c")), lit(0L)).as("n"),
-          sum(col("sa")).as("sa"), sum(col("saa")).as("saa"),
-          sum(dec(col(outerRank)) * dec(col("c"))).as("sb"),
-          sum(dec(col(outerRank)) * dec(col(outerRank)) * dec(col("c"))).as("sbb"),
-          sum(dec(col(outerRank)) * col("sa")).as("sab")).head()
-      // identical driver-side arithmetic to [[correlation]]: exact
-      // BigDecimal moments, float only in the final division
-      val n = mrow.getLong(0)
-      def d(i: Int): BigDecimal = {
-        val v = mrow.getDecimal(i)
-        if (v == null) BigDecimal(0) else BigDecimal(v)
-      }
-      val (sa, saa, sb, sbb, sab) = (d(1), d(2), d(3), d(4), d(5))
-      val num = (BigDecimal(n) * sab - sa * sb).toDouble
-      val da = (BigDecimal(n) * saa - sa * sa).toDouble
-      val db = (BigDecimal(n) * sbb - sb * sb).toDouble
-      val rho: java.lang.Double =
-        if (n == 0 || da == 0.0 || db == 0.0) null
-        else num / math.sqrt(da * db)
-      import org.apache.spark.sql.Row
-      import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
-      df.sparkSession.createDataFrame(
-        java.util.Arrays.asList(Row(xName, yName, n, rho)),
-        StructType(Seq(StructField("x_col", StringType),
-          StructField("y_col", StringType), StructField("n", LongType),
-          StructField("rho", DoubleType))))
-    }
+    val ranked = base.join(avgRank2(base, "x", "rx2"), "x")
+      .join(avgRank2(base, "y", "ry2"), "y")
+    correlation(ranked, Seq((col("rx2"), xName, col("ry2"), yName)))
+      .select(col("x_col"), col("y_col"), col("n"), col("r").as("rho"))
   }
 }

@@ -459,9 +459,6 @@ object GraphQueries {
             t(s, d, "supplier"), "s_suppkey", "s_name")
           .select(col("id1").as("a"), col("id2").as("b"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // CC measures its own per-level exchange width from the persisted
-        // pair count (see connectedComponents' width doc) — the old
-        // caller-side count probe is gone, one fewer job.
         val comp = graft.operators.GraphRank.connectedComponents(pairs, rounds = 8)
         val sizes = comp.groupBy(col("component"))
           .agg(count(lit(1)).as("n_members"))

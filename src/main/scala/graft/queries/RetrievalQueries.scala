@@ -60,7 +60,9 @@ object RetrievalQueries {
     postingsFrames.keySet.removeIf(_._1.sparkContext.isStopped)
     val p = postingsFrames.computeIfAbsent((s, d), _ =>
       graft.operators.TextIndex.postings(t(s, d, "documents"), "doc_id", "text"))
-    p.persist() // idempotent; re-persist because bench clearCache()s
+    // re-persist after Bench's clearCache(); persisting an already cached
+    // plan only logs CacheManager's "already cached" warning
+    if (p.storageLevel == org.apache.spark.storage.StorageLevel.NONE) p.persist()
     p
   }
 

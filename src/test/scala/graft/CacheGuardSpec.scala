@@ -8,7 +8,7 @@ class CacheGuardSpec extends SparkSpec {
   test("releaseAll unpersists operator-internal frames and is idempotent") {
     val docs = Seq((1L, "a b a c"), (2L, "b c d"), (3L, "a d d"))
       .toDF("doc_id", "text")
-    TextIndex.tfIdfTopK(docs).count() // persists postings + dfreq
+    TextIndex.tfIdfTopK(docs).count() // persists postings
     val xy = Seq((1L, 10L), (2L, 30L), (3L, 20L), (4L, 40L)).toDF("x", "y")
     Trend.spearman(xy, "x", "y", "x", "y").count() // persists rank maps + base
     val released = CacheGuard.releaseAll(spark)

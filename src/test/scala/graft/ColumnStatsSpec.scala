@@ -39,19 +39,19 @@ class ColumnStatsSpec extends SparkSpec {
       3L -> ((25L, 51L, 75L)), 4L -> ((25L, 76L, 100L))))
   }
 
-  test("equalFrequencyBins: two-level rank path is bit-identical to the single-partition path") {
-    // force the range-partitioned cumulative (singlePartMaxRows = 0) on a
-    // tied, unordered fixture and compare against the direct window form —
-    // the measured gate must be invisible in the values
+  test("equalFrequencyBins equals Spark percentile cuts") {
+    // tied, unordered fixture; the reference bin is 1 + |{cut < v}| over
+    // percentile(v, array(0.2, 0.4, 0.6, 0.8)) — the arithmetic the
+    // distributed cut derivation replicates
     val df = ((1L to 100L) ++ (40L to 60L) ++ Seq(7L, 7L, 93L)).toDF("v")
       .orderBy(graft.functions.Hashing.hash64(col("v").cast("string")))
-    def m(d: org.apache.spark.sql.DataFrame) =
-      d.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    val small = QualityFilter.equalFrequencyBins(df, "v", 5).select("v", "bin")
-    val big = QualityFilter.equalFrequencyBins(df, "v", 5,
-      singlePartMaxRows = 0L).select("v", "bin")
-    assert(m(big) == m(small))
-    assert(m(big).map(_._2).distinct.sorted == Seq(1L, 2L, 3L, 4L, 5L))
+    val cuts = df.agg(expr("percentile(v, array(0.2, 0.4, 0.6, 0.8))"))
+      .head().getSeq[Double](0)
+    val got = QualityFilter.equalFrequencyBins(df, "v", 5).select("v", "bin")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    val want = df.as[Long].collect().map(v => (v, 1L + cuts.count(_ < v))).sorted.toSeq
+    assert(got == want)
+    assert(got.map(_._2).distinct.sorted == Seq(1L, 2L, 3L, 4L, 5L))
   }
 
   test("winsorize: clamps to exact ceiling-rank order statistics; NULLs pass through") {

@@ -357,16 +357,23 @@ class NgramLmSpec extends SparkSpec {
     assert(w == Map("A" -> 1000000L))
   }
 
-  test("spearman: moment-decomposition path is bit-identical to the broadcast join-back") {
-    // broadcastMaxRows = 0 forces the non-broadcastable scale path (shuffle
-    // join + per-key moment collapse); rho must match the default exactly
+  test("spearman equals an exact reference") {
+    // doubled average ranks (2·below + c + 1), integer moments and
+    // num / sqrt(da·db), computed in plain Scala over the collected rows
     val df = ((1L to 80L).map(i => (i % 7, i * i % 31)) ++
       Seq((3L, 5L), (3L, 5L), (0L, 0L))).toDF("x", "y")
-    val direct = Trend.spearman(df, "x", "y", "x", "y").head
-    val decomp = Trend.spearman(df, "x", "y", "x", "y",
-      broadcastMaxRows = 0L).head
-    assert(decomp.getLong(2) == direct.getLong(2))
-    assert(decomp.getAs[Double]("rho") == direct.getAs[Double]("rho"))
+    val got = Trend.spearman(df, "x", "y", "x", "y").head
+    val xy = df.as[(Long, Long)].collect().toSeq
+    def rank2(vs: Seq[Long]): Seq[BigInt] =
+      vs.map(v => BigInt(2 * vs.count(_ < v) + vs.count(_ == v) + 1))
+    val (a, b) = (rank2(xy.map(_._1)), rank2(xy.map(_._2)))
+    val n = BigInt(xy.size)
+    val (sa, sb) = (a.sum, b.sum)
+    val num = (n * a.zip(b).map { case (p, q) => p * q }.sum - sa * sb).toDouble
+    val da = (n * a.map(v => v * v).sum - sa * sa).toDouble
+    val db = (n * b.map(v => v * v).sum - sb * sb).toDouble
+    assert(got.getLong(2) == xy.size.toLong)
+    assert(got.getAs[Double]("rho") == num / math.sqrt(da * db))
   }
 
   test("spearman: monotone nonlinearity scores 1, reversal -1, degenerate NULL") {
