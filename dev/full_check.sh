@@ -1,6 +1,7 @@
 #!/bin/bash
 # Full local replica of the round gates:
-# compile → tests → verify+oracle at sf0.001 and sf0.01 → bench at sf0.1.
+# compile → tests → verify+oracle at sf0.001 and sf0.01 → bench at sf0.1
+# → smoke → perfbench selftest and one etl_daily run.
 # Every main runs on graft.Session: local[SPARK_GRAFT_CPUS or host cores],
 # AQE on, so the bench below times the config that ships.
 set -euo pipefail
@@ -18,4 +19,10 @@ for sf in sf0.001 sf0.01; do
 done
 dev/run_main.sh graft.Bench 2>/dev/null | tail -1   # sf0.1, the shipped session
 dev/run_main.sh graft.Smoke 2>/dev/null | grep smoke
+# perfbench: the frozen gates exist and keep their fingerprints, and one
+# short etl_daily run checks the catalog it builds over two days (SCD2
+# versions, fact rows, revenue cents, zero unresolved keys); each exits
+# non-zero on a failed check
+python3 perfbench/run.py --mode selftest
+python3 perfbench/run.py --workload etl_daily --seconds 1 --trace 0 | tail -1
 echo "FULL CHECK PASSED"

@@ -3,7 +3,9 @@ package graft.catalog
 import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{abs, col, explode, lit, sequence, sum, when}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 /** Parquet-backed table catalog replacing the reference's Redshift tables.
   *
@@ -13,7 +15,10 @@ import scala.jdk.CollectionConverters._
   * the catalog emulates single-table atomicity with versioned directories plus
   * a `_CURRENT` pointer file (SURVEY.md §7.6):
   *
-  * {{{ root/<table>/v_<n>/part-*.parquet ;  root/<table>/_CURRENT -> "v_<n>" }}}
+  * {{{
+  * root/<table>/v_<n>/part-*.parquet ;  root/<table>/v_<n>/_SCHEMA (schema JSON)
+  * root/<table>/_CURRENT -> "v_<n>"
+  * }}}
   *
   * Writers land a full new version directory first, then flip the pointer with
   * an atomic move — readers either see the old version or the new one, never a
@@ -248,14 +253,23 @@ final class Catalog(spark: SparkSession, rootDir: String, keepVersions: Int = 2)
   /** A version is either self-contained (plain directory scan) or, after a
     * file-level append, a `_MANIFEST` whose chain resolves to table-dir-
     * relative data files that may live in OLDER version directories
-    * (carried forward by pointer, never copied). */
+    * (carried forward by pointer, never copied). A version with a
+    * `_SCHEMA` file is read by that schema, so the read starts no Spark
+    * job; without one (partitioned layouts, whose partition-column types
+    * come from directory values, and older warehouses) Spark infers the
+    * schema from the parquet footers — one job per read. */
   private def readVersionDir(name: String, version: String): DataFrame = {
     val dir = tableDir(name).resolve(version)
+    val schemaFile = dir.resolve(SchemaFile)
+    val reader =
+      if (Files.isRegularFile(schemaFile))
+        spark.read.schema(DataType.fromJson(Files.readString(schemaFile)).asInstanceOf[StructType])
+      else spark.read
     if (Files.isRegularFile(dir.resolve(ManifestFile))) {
       val paths = versionDataFiles(name, version)
         .map(rel => tableDir(name).resolve(rel).toString)
-      spark.read.parquet(paths: _*)
-    } else spark.read.parquet(dir.toString)
+      reader.parquet(paths: _*)
+    } else reader.parquet(dir.toString)
   }
 
   /** Audit surface: one row per retained version — (version, current?,
@@ -301,9 +315,18 @@ final class Catalog(spark: SparkSession, rootDir: String, keepVersions: Int = 2)
   def write(name: String, df: DataFrame, expectedVersion: Long): Unit =
     writeVersion(name, df, Map.empty, expected = Some(expectedVersion))
 
-  /** Version writer: lands the data AND any metadata files in the new
-    * version directory BEFORE the pointer flip, so metadata commits
-    * atomically with the rows it describes. ALLOWLISTED metadata the caller
+  /** [[write]] with a pre-flip check: once the data has landed in the
+    * claimed version directory, `verify` gets that version as a frame
+    * (read by its recorded schema) and may throw to refuse it. It runs
+    * OUTSIDE the commit lock, like the data write; on a throw the writer
+    * deletes its own claim and rethrows, and `_CURRENT` never moves. */
+  def write(name: String, df: DataFrame, verify: DataFrame => Unit): Unit =
+    writeVersion(name, df, Map.empty, verify = Some(verify))
+
+  /** Version writer: lands the data AND any metadata files (the
+    * `_SCHEMA` of a non-partitioned version among them) in the new version
+    * directory BEFORE the pointer flip, so metadata commits atomically with
+    * the rows it describes. ALLOWLISTED metadata the caller
     * does not override is CARRIED FORWARD from the current version —
     * otherwise an intervening write (compact, append) would silently reset
     * the streaming batch-id high-water mark and re-open the replay window.
@@ -315,7 +338,7 @@ final class Catalog(spark: SparkSession, rootDir: String, keepVersions: Int = 2)
   private def writeVersion(name: String, df: DataFrame, meta: Map[String, String],
       inherit: Boolean = true, carryFiles: Boolean = false,
       expected: Option[Long] = None, partitionCols: Seq[String] = Nil,
-      keepFiles: Seq[String] = Nil): Unit = {
+      keepFiles: Seq[String] = Nil, verify: Option[DataFrame => Unit] = None): Unit = {
     // A file-level append's flat manifest cannot reference files nested in
     // partition directories — carrying a partitioned version by pointer
     // would resolve to ZERO files and silently drop the table's data.
@@ -333,7 +356,6 @@ final class Catalog(spark: SparkSession, rootDir: String, keepVersions: Int = 2)
         .flatMap(p => InheritedMeta.map(p.resolve).filter(Files.isRegularFile(_)))
         .map(f => f.getFileName.toString -> Files.readString(f))
         .toMap
-    schemaCache.put(name.toLowerCase, df.schema)
     val cur = currentVersion(name)
     val base = cur.map(_.stripPrefix("v_").toLong)
     expected.foreach { want =>
@@ -361,22 +383,33 @@ final class Catalog(spark: SparkSession, rootDir: String, keepVersions: Int = 2)
           s"catalog: version $next of '$name' was claimed by a concurrent " +
             "writer — re-read and retry")
     }
-    // `append` into the just-claimed empty directory: `overwrite` would
-    // DELETE the claim first, re-opening the race window it exists to close.
-    val writer = if (partitionCols.isEmpty) df.write
-      else df.write.partitionBy(partitionCols: _*)
-    writer.mode("append").parquet(dir.resolve(next).toString)
-    if ((carryFiles && cur.isDefined) || keepFiles.nonEmpty) {
-      val fresh = localDataFiles(dir.resolve(next)).map(p => s"$next/${p.getFileName}")
-      val head = if (carryFiles && cur.isDefined) Seq(s"$PrevMarker${cur.get}") else Nil
-      Files.writeString(dir.resolve(next).resolve(ManifestFile),
-        (head ++ keepFiles ++ fresh).mkString("\n"),
-        StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-    }
-    (inherited ++ meta).foreach { case (file, content) =>
-      Files.writeString(dir.resolve(next).resolve(file), content,
-        StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-    }
+    // From here on the claim is this writer's own: if the data write or
+    // `verify` throws, delete it, so no unflipped version stays listed in
+    // `versions`/`history` or readable through `readVersion`.
+    val claim = dir.resolve(next)
+    try {
+      // `append` into the just-claimed empty directory: `overwrite` would
+      // DELETE the claim first, re-opening the race window it exists to close.
+      val writer = if (partitionCols.isEmpty) df.write
+        else df.write.partitionBy(partitionCols: _*)
+      writer.mode("append").parquet(claim.toString)
+      if ((carryFiles && cur.isDefined) || keepFiles.nonEmpty) {
+        val fresh = localDataFiles(claim).map(p => s"$next/${p.getFileName}")
+        val head = if (carryFiles && cur.isDefined) Seq(s"$PrevMarker${cur.get}") else Nil
+        Files.writeString(claim.resolve(ManifestFile),
+          (head ++ keepFiles ++ fresh).mkString("\n"),
+          StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
+      }
+      // the schema the parquet reader would infer: Spark reads every
+      // parquet column as nullable
+      val schema = if (partitionCols.isEmpty) Map(SchemaFile -> asNullable(df.schema).json)
+        else Map.empty[String, String]
+      (inherited ++ meta ++ schema).foreach { case (file, content) =>
+        Files.writeString(claim.resolve(file), content,
+          StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
+      }
+      verify.foreach(_(readVersionDir(name, next)))
+    } catch { case NonFatal(e) => deleteRecursively(claim); throw e }
     // Pointer-regression guard, INSIDE the commit lock: if another writer
     // committed while this write's (possibly long) Spark job ran, flipping
     // now would silently un-commit their version. The directory claim alone
@@ -393,6 +426,7 @@ final class Catalog(spark: SparkSession, rootDir: String, keepVersions: Int = 2)
             s"${nowCur.getOrElse("<absent>")} while this write ran — commit " +
             "aborted; re-read and retry")
       flipPointer(name, next)
+      schemaCache.put(name.toLowerCase, df.schema)
       // prune INSIDE the lock, against the LIVE pointer: run outside it, a
       // concurrent rollback could flip to an old version between this flip
       // and the prune, and the prune would delete the directory _CURRENT
@@ -536,6 +570,9 @@ final class Catalog(spark: SparkSession, rootDir: String, keepVersions: Int = 2)
   }
 
   private val BatchIdFile = "_BATCH_ID"
+  /** A version's schema as JSON, written by [[writeVersion]] so reads need
+    * no footer-inference job. Not inherited: every version records its own. */
+  private val SchemaFile = "_SCHEMA"
   /** The catalog-owned marker files carried across versions. */
   private val InheritedMeta = Seq(BatchIdFile)
 
@@ -577,17 +614,19 @@ final class Catalog(spark: SparkSession, rootDir: String, keepVersions: Int = 2)
     * single-writer design: schema changes go through THIS instance's
     * write/appendEvolve, which refresh the entry. */
   private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
+    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
 
-  private def tableSchema(name: String): org.apache.spark.sql.types.StructType =
+  private def tableSchema(name: String): StructType =
     schemaCache.computeIfAbsent(name.toLowerCase, _ => read(name).schema)
 
   /** Column-order/type normalization + loud schema check for file-level
     * appends (every file under one manifest must agree by-name). */
   private def alignedForAppend(name: String, df: DataFrame): DataFrame = {
     val existing = tableSchema(name)
-    val have = df.schema.fields.map(f => f.name.toLowerCase -> f.dataType).toMap
-    val want = existing.fields.map(f => f.name.toLowerCase -> f.dataType)
+    // nullability is not part of a file's type: parquet reads every
+    // column, nested ones too, as nullable
+    val have = df.schema.fields.map(f => f.name.toLowerCase -> asNullable(f.dataType)).toMap
+    val want = existing.fields.map(f => f.name.toLowerCase -> asNullable(f.dataType))
     val missing = want.collect { case (n, _) if !have.contains(n) => n }
     val extra = have.keySet -- want.map(_._1).toSet
     val mistyped = want.collect { case (n, t) if have.get(n).exists(_ != t) => s"$n: ${have(n)} != $t" }
@@ -924,6 +963,16 @@ final class Catalog(spark: SparkSession, rootDir: String, keepVersions: Int = 2)
         referenced(p.getFileName.toString))
     expired.foreach(deleteRecursively)
     expired.map(_.getFileName.toString.stripPrefix("v_").toLong)
+  }
+
+  /** `StructType.asNullable`, which Spark keeps package-private. */
+  private def asNullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = asNullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(asNullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(asNullable(m.keyType), asNullable(m.valueType),
+      valueContainsNull = true)
+    case other => other
   }
 
   private def deleteRecursively(p: Path): Unit = {

@@ -1,20 +1,24 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
 import graft.model.TableSpec
 
-/** C1 validation (validate_data.py:40-86): NOT NULL check on every column and
-  * primary-key uniqueness, raising on the first violation.
+/** C1 validation (validate_data.py:40-86): NOT NULL check on every column,
+  * VARCHAR widths and primary-key uniqueness, raising on the first violation.
   *
   * The reference issues N+1 full-table scans — one `SELECT COUNT(*) WHERE col
   * IS NULL` per column (validate_data.py:69-71) plus one `GROUP BY pk HAVING
   * COUNT(*) > 1` (validate_data.py:79-81). At 100 TB that is N+1 reads of the
-  * table; this engine collapses all null counts into ONE aggregate pass
-  * (`count(when(isnull(c),1))` per column in a single `select`), and the
-  * duplicate scan into one hash aggregate, so validation is exactly two jobs
-  * regardless of column count — and the null pass is a single stage with no
-  * shuffle (global aggregate of 32/1000 partial rows).
+  * table; this engine collapses the row count, all null counts and all
+  * over-width counts into ONE aggregate (`count(when(isnull(c),1))` per
+  * column in a single `select`, no shuffle) and the duplicate scan into one
+  * hash aggregate. Where each check runs:
+  *  - [[validate]] (standalone): both aggregates over a cached parse.
+  *  - [[whileWriting]] (the pipeline's load): the null/width/row-count
+  *    aggregate rides the write job as observed metrics, and the duplicate
+  *    check reads the freshly written parquet before the catalog flips its
+  *    pointer — the CSV is parsed once.
   */
 object Validator {
 
@@ -90,30 +94,29 @@ object Validator {
   def duplicateKeys(df: DataFrame, pk: Seq[String]): DataFrame =
     df.groupBy(pk.map(col): _*).count().filter(col("count") > 1)
 
-  /** Full C1 check. Caches the input because it feeds two jobs (SURVEY.md §4).
-    * Set `failFast=true` for the reference's raise-on-violation behavior.
-    *
-    * One aggregate pass carries the row count, every null count, AND every
+  /** The C1 rules over the columns of a frame that `spec` declares. One
+    * aggregate carries the row count, every NOT NULL count AND every
     * VARCHAR over-width count (the width the reference's DDL would have
-    * enforced at COPY time, dynamic_upsert.py:17-26) — validation stays
-    * exactly two jobs no matter how many constraints the spec declares. */
-  def validate(df: DataFrame, spec: TableSpec, failFast: Boolean = false): ValidationResult = {
-    val cached = df.cache()
-    try {
-      val present = cached.columns.map(_.toLowerCase).toSet
-      val checkCols = spec.columnNames.filter(c => present.contains(c.toLowerCase))
-      val lenCols = spec.lengthColumns.filter { case (c, _) => present.contains(c.toLowerCase) }
-      val aggs: Seq[Column] =
-        (count(lit(1)).as("__rows") +:
-          checkCols.map(c => count(when(col(c).isNull, 1)).as(s"__null_$c"))) ++
-          lenCols.map { case (c, n) => count(when(length(col(c)) > n, 1)).as(s"__len_$c") }
-      val row: Row = cached.select(aggs: _*).head()
-      val rowCount = row.getLong(0)
-      val nulls = checkCols.zipWithIndex
-        .map { case (c, i) => c -> row.getLong(i + 1) }.filter(_._2 > 0).toMap
-      val lens = lenCols.zipWithIndex
-        .map { case ((c, _), i) => c -> row.getLong(i + 1 + checkCols.length) }
-        .filter(_._2 > 0).toMap
+    * enforced at COPY time, dynamic_upsert.py:17-26), however many
+    * constraints the spec declares. [[validate]] runs it as its own job;
+    * [[whileWriting]] observes it inside the write job. */
+  private final class Rules(spec: TableSpec, columns: Seq[String]) {
+    private val present = columns.map(_.toLowerCase).toSet
+    private val checkCols = spec.columnNames.filter(c => present(c.toLowerCase))
+    private val lenCols = spec.lengthColumns.filter { case (c, _) => present(c.toLowerCase) }
+
+    val aggs: Seq[Column] =
+      (count(lit(1)).as("__rows") +:
+        checkCols.map(c => count(when(col(c).isNull, 1)).as(s"__null_$c"))) ++
+        lenCols.map { case (c, n) => count(when(length(col(c)) > n, 1)).as(s"__len_$c") }
+
+    /** Decodes the aggregate's values (`metric` looks one up by its
+      * alias), then counts duplicate keys with `dups`. With `failFast` the
+      * first violation raises, in the order nulls, widths, duplicates;
+      * `dups` is not evaluated once nulls or widths failed. */
+    def check(metric: String => Long, dups: => Long, failFast: Boolean): ValidationResult = {
+      val nulls = checkCols.map(c => c -> metric(s"__null_$c")).filter(_._2 > 0).toMap
+      val lens = lenCols.map { case (c, _) => c -> metric(s"__len_$c") }.filter(_._2 > 0).toMap
       if (failFast && nulls.nonEmpty)
         throw new ValidationException(
           s"Not Null constraints violation in table ${spec.name}: " +
@@ -122,13 +125,45 @@ object Validator {
         throw new ValidationException(
           s"Value exceeds declared VARCHAR length in table ${spec.name}: " +
             lens.keys.toSeq.sorted.mkString(", "))
-      val dups =
-        if (spec.primaryKey.nonEmpty) duplicateKeys(cached, spec.primaryKey).count() else 0L
-      if (failFast && dups > 0)
+      val dupCount = if (spec.primaryKey.nonEmpty) dups else 0L
+      if (failFast && dupCount > 0)
         throw new ValidationException(
           s"Duplicate values found in column(s) ${spec.primaryKey.mkString(",")} " +
             s"of table ${spec.name}")
-      ValidationResult(spec.name, rowCount, nulls, dups, lens)
+      ValidationResult(spec.name, metric("__rows"), nulls, dupCount, lens)
+    }
+  }
+
+  /** Standalone C1 check: caches the input, runs the rules aggregate, then
+    * counts duplicate keys over the cache — two actions on one parse. Set
+    * `failFast=true` for the reference's raise-on-violation behavior.
+    * [[graft.run.PipelineRunner.run]] validates with [[whileWriting]]. */
+  def validate(df: DataFrame, spec: TableSpec, failFast: Boolean = false): ValidationResult = {
+    val cached = df.cache()
+    try {
+      val rules = new Rules(spec, cached.columns.toSeq)
+      val row = cached.select(rules.aggs: _*).head()
+      rules.check(row.getAs[Long](_),
+        duplicateKeys(cached, spec.primaryKey).count(), failFast)
     } finally cached.unpersist()
+  }
+
+  /** C1 folded into a catalog write, raising exactly what
+    * `validate(df, spec, failFast = true)` raises, in the same order.
+    * Returns the frame to write, which gathers the rules aggregate with
+    * `Dataset.observe` inside the write job, and the pre-flip check to
+    * pass to `Catalog.write`: it reads the observed metrics, then looks for
+    * duplicate keys in the freshly written version (one aggregate, no
+    * cache; only emptiness is needed, so the count it reports is 0 or 1). */
+  def whileWriting(df: DataFrame, spec: TableSpec): (DataFrame, DataFrame => Unit) = {
+    val rules = new Rules(spec, df.columns.toSeq)
+    val metrics = Observation()
+    (df.observe(metrics, rules.aggs.head, rules.aggs.tail: _*),
+      written => {
+        val observed = metrics.get
+        rules.check(observed(_).asInstanceOf[Long],
+          if (duplicateKeys(written, spec.primaryKey).isEmpty) 0L else 1L,
+          failFast = true): Unit
+      })
   }
 }

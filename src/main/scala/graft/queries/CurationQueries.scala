@@ -32,9 +32,7 @@ object CurationQueries {
     val m = nbModels.computeIfAbsent((s, d), _ =>
       graft.operators.NaiveBayes.train(
         docs(s, d).filter(col("doc_id") % 2 === 0), "lang"))
-    // re-persist on every access: the bench session clearCache()s between
-    // queries, and persist() is idempotent when the frame is still cached
-    m.tokenProbs.persist(); m.labels.persist()
+    Q.cached(m.tokenProbs); Q.cached(m.labels)
     m
   }
 
@@ -49,10 +47,8 @@ object CurationQueries {
   private def nbScores(s: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.sql.DataFrame = {
     nbScoreFrames.keySet.removeIf(_._1.sparkContext.isStopped)
-    val sc = nbScoreFrames.computeIfAbsent((s, d), _ =>
-      graft.operators.NaiveBayes.scores(docs(s, d), nbModel(s, d)))
-    sc.persist() // idempotent; re-persist because bench clearCache()s
-    sc
+    Q.cached(nbScoreFrames.computeIfAbsent((s, d), _ =>
+      graft.operators.NaiveBayes.scores(docs(s, d), nbModel(s, d))))
   }
 
   /** Shared persisted confusion frame (K²-sized) — the confusion and
@@ -63,11 +59,9 @@ object CurationQueries {
   private def nbConfusion(s: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.sql.DataFrame = {
     nbConfusions.keySet.removeIf(_._1.sparkContext.isStopped)
-    val c = nbConfusions.computeIfAbsent((s, d), _ =>
+    Q.cached(nbConfusions.computeIfAbsent((s, d), _ =>
       graft.operators.NaiveBayes.confusionFromScores(nbScores(s, d),
-        docs(s, d).select(col("doc_id"), col("lang").as("gold"))))
-    c.persist()
-    c
+        docs(s, d).select(col("doc_id"), col("lang").as("gold")))))
   }
 
   /** Shared DuckDB CTEs: whitespace tokens and the zipped bigram stream

@@ -26,11 +26,9 @@ object GraphQueries {
   private def coPurchaseEdges(s: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.sql.DataFrame = {
     coEdges.keySet.removeIf(_._1.sparkContext.isStopped)
-    val e = coEdges.computeIfAbsent((s, d), _ =>
+    Q.cached(coEdges.computeIfAbsent((s, d), _ =>
       graft.operators.GraphRank.coOccurrenceEdges(
-        t(s, d, "lineitem"), "l_orderkey", "l_partkey", minShared = 2L))
-    e.persist()
-    e
+        t(s, d, "lineitem"), "l_orderkey", "l_partkey", minShared = 2L)))
   }
 
   /** DuckDB replay of [[graft.operators.GraphRank.kCore]]: `rounds` peel

@@ -73,6 +73,15 @@ object Q {
       _ => java.nio.file.Files.createTempDirectory(prefix).toString)
   }
 
+  /** Persist a shared, cached-per-session frame unless it is still cached:
+    * Bench `clearCache()`s between queries, so each access re-persists,
+    * and persisting an already cached plan only logs CacheManager's
+    * "already cached" warning. Returns `df`. */
+  def cached(df: DataFrame): DataFrame = {
+    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) df.persist()
+    df
+  }
+
   /** Exact integer cents from a 2-decimal double (BASELINE probe: prices are
     * 2-decimal within 1e-9, so round-then-cast is tie-free and identical in
     * both engines; note DuckDB CAST(double AS BIGINT) rounds while Spark

@@ -58,12 +58,8 @@ object RetrievalQueries {
   private def sharedPostings(s: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.sql.DataFrame = {
     postingsFrames.keySet.removeIf(_._1.sparkContext.isStopped)
-    val p = postingsFrames.computeIfAbsent((s, d), _ =>
-      graft.operators.TextIndex.postings(t(s, d, "documents"), "doc_id", "text"))
-    // re-persist after Bench's clearCache(); persisting an already cached
-    // plan only logs CacheManager's "already cached" warning
-    if (p.storageLevel == org.apache.spark.storage.StorageLevel.NONE) p.persist()
-    p
+    Q.cached(postingsFrames.computeIfAbsent((s, d), _ =>
+      graft.operators.TextIndex.postings(t(s, d, "documents"), "doc_id", "text")))
   }
 
   /** Per-(session, sfDir) roots for the stored postings indexes —

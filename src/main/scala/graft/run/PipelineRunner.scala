@@ -1,7 +1,7 @@
 package graft.run
 
 import java.sql.Date
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import graft.catalog.Catalog
 import graft.io.Sources
 import graft.model.Schemas
@@ -38,6 +38,14 @@ final class PipelineRunner(spark: SparkSession, catalog: Catalog,
     appendFact: Boolean = false) {
 
   /** One workflow run for one table: C1 always; then C2 or C3 by dispatch.
+    *
+    * C1 parses the CSV once: the write job into the claimed version
+    * directory also gathers the null, VARCHAR-width and row-count metrics
+    * ([[Validator.whileWriting]]), and the duplicate-key check reads the
+    * written parquet before the pointer flip. `_CURRENT` flips only if
+    * every check is clean; otherwise the claim is deleted and the
+    * [[Validator.ValidationException]] propagates — three Spark jobs.
+    *
     * Every result lands in the catalog (eager parquet writes), so nothing
     * lazy escapes the run — the finally releases whatever operator-internal
     * frames registered with [[graft.operators.CacheGuard]] during the run,
@@ -48,10 +56,9 @@ final class PipelineRunner(spark: SparkSession, catalog: Catalog,
     val spec = Schemas.sourceTables.getOrElse(table,
       throw new IllegalArgumentException(s"Invalid table name: $table"))
 
-    // C1: full-refresh load (TRUNCATE + COPY) + validation.
-    val df = Sources.csv(spark, cfg.csvPath, spec)
-    Validator.validate(df, spec, failFast = true)
-    catalog.write(table, df)
+    // C1: full-refresh load (TRUNCATE + COPY), validated while it writes.
+    val (df, verify) = Validator.whileWriting(Sources.csv(spark, cfg.csvPath, spec), spec)
+    catalog.write(table, df, verify)
 
     table match {
       case t if Schemas.scd2Dims.contains(t) => upsertDim(t, cfg.runDate)
@@ -60,19 +67,18 @@ final class PipelineRunner(spark: SparkSession, catalog: Catalog,
     }
   } finally graft.operators.CacheGuard.releaseAll(spark): Unit
 
-  /** C2 for one dimension-backed source table. */
+  /** C2 for one dimension-backed source table: the SCD2 run against the
+    * current dimension, or — when the dimension does not exist yet —
+    * [[Scd2Upsert.initialLoad]], the rows `run` yields against an empty
+    * dimension (every staged row a version from key 1) without its
+    * close-out join and max-key job. */
   def upsertDim(table: String, runDate: Date): Unit = {
     val spec = Schemas.scd2Dims(table)
     val source = catalog.read(table)
-    val dim =
-      if (catalog.exists(spec.dimName)) catalog.read(spec.dimName)
-      else emptyDim(source, table, runDate)
-    catalog.write(spec.dimName, Scd2Upsert.run(source, dim, spec, runDate))
-  }
-
-  private def emptyDim(source: DataFrame, table: String, runDate: Date): DataFrame = {
-    val spec = Schemas.scd2Dims(table)
-    Scd2Upsert.initialLoad(source, spec, runDate).limit(0)
+    catalog.write(spec.dimName,
+      if (catalog.exists(spec.dimName))
+        Scd2Upsert.run(source, catalog.read(spec.dimName), spec, runDate)
+      else Scd2Upsert.initialLoad(source, spec, runDate))
   }
 
   /** C3: build/refresh fact_orders from ONE pinned snapshot of all six

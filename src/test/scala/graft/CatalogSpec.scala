@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.catalog.Catalog
 
@@ -269,9 +270,50 @@ class CatalogSpec extends SparkSpec {
     // readers still see the last committed version, not a torn state
     assert(cat.currentPath("t").get.endsWith("v_0"))
     assert(cat.read("t").count() == 2)
+    // the failed writer deleted its own claim
+    assert(cat.versions("t") == Seq(0L))
+    assert(!Files.exists(java.nio.file.Paths.get(cat.currentPath("t").get)
+      .getParent.resolve("v_1")))
+    // so did one whose pre-flip check refused the landed data
+    intercept[IllegalStateException](
+      cat.write("t", Seq(7).toDF("v"), (_: DataFrame) => throw new IllegalStateException("no")))
+    assert(cat.versions("t") == Seq(0L) && cat.read("t").count() == 2)
     // and the next successful write recovers cleanly
     cat.write("t", Seq(1, 2, 3).toDF("v"))
     assert(cat.read("t").count() == 3)
+  }
+
+  test("every version records the schema the parquet reader infers") {
+    val cat = new Catalog(spark, Files.createTempDirectory("graft-cat").toString,
+      keepVersions = 10)
+    def rows(ids: Seq[Int]) = ids.toDF("id").select(col("id"),
+      col("id").cast("decimal(12,2)").as("amount"),
+      date_add(lit(java.sql.Date.valueOf("2024-01-01")), col("id")).as("day"),
+      timestamp_seconds(col("id").cast("long") + 1700000000L).as("ts"),
+      array(col("id"), col("id") + 1).as("xs"),
+      struct(col("id").as("a"), col("id").cast("string").as("b")).as("s"))
+    def recorded(): Unit = {
+      val dir = cat.currentPath("t").get
+      assert(Files.isRegularFile(java.nio.file.Paths.get(dir, "_SCHEMA")))
+      assert(cat.read("t").schema == spark.read.parquet(dir).schema, dir)
+    }
+    cat.write("t", rows(1 to 6)); recorded()
+    cat.append("t", rows(7 to 8)); recorded()
+    cat.appendEvolve("t", rows(9 to 9).withColumn("note", lit("n"))); recorded()
+    cat.compact("t", 1); recorded()
+    assert(cat.deleteWhere("t", col("id") === 2) == 1L); recorded()
+    cat.merge("t", rows(Seq(3, 10)).withColumn("note", lit("m")), "id"); recorded()
+    val merged = cat.currentVersionNumber("t").get
+    cat.truncate("t"); recorded()
+    assert(cat.appendStreamBatch("t", rows(11 to 12).withColumn("note", lit("s")), 0L))
+    recorded()
+    cat.rollback("t", merged); recorded()
+    assert(cat.read("t").count() == 9)
+    // a version without the file (older warehouse) is read by inference
+    val dir = java.nio.file.Paths.get(cat.currentPath("t").get)
+    val inferred = cat.read("t").schema
+    Files.delete(dir.resolve("_SCHEMA"))
+    assert(cat.read("t").schema == inferred && cat.read("t").count() == 9)
   }
 
   test("append is file-level: existing data files are referenced, not rewritten") {

@@ -1,39 +1,12 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.TestListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.DataFrame
 import graft.operators.{GraphRank, QualityFilter, TextIndex}
 
 /** Operators that leave their size decisions (broadcast or not, exchange
   * width) to AQE build their plans without starting a Spark job: only an
   * action on the returned frame runs work. */
-class ConstructionJobsSpec extends SparkSpec {
+class ConstructionJobsSpec extends SparkSpec with JobCounting {
   import spark.implicits._
-
-  /** The frame `build` returns and the Spark jobs started while it ran,
-    * counted by job group so no other thread's job is seen. */
-  private def jobsDuring(build: => DataFrame): (DataFrame, Int) = {
-    val sc = spark.sparkContext
-    val group = s"construction-${java.util.UUID.randomUUID}"
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == group) jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "operator construction")
-    try {
-      val df = build
-      TestListenerBus.drain(sc)
-      (df, jobs.get)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
 
   // two triangles (1,2,3) and (3,4,5), a pendant edge, a < b on every row
   private def edges = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L), (3L, 5L),

@@ -51,6 +51,42 @@ class PipelineRunnerSpec extends SparkSpec {
     assert(!cat.exists("dim_customers"))
   }
 
+  test("a failing day-2 load keeps day 1 current, leaves no version, names the columns") {
+    val cat = new Catalog(spark, Files.createTempDirectory("graft-run").toString)
+    val runner = new PipelineRunner(spark, cat)
+    for (t <- Seq("customers", "products", "stores", "orders", "orderdetails"))
+      runner.run(RunConfig(t, fixture(s"$t.csv"), d1))
+    val d2 = Date.valueOf("2024-01-02")
+    val csvDir = Files.createTempDirectory("graft-day2")
+    def csv(name: String, lines: String*): String =
+      Files.writeString(csvDir.resolve(name), lines.mkString("", "\n", "\n")).toString
+    val customerHeader = "CustomerID,FirstName,LastName,Email,Address,City,State,ZipCode"
+    val detailHeader = "OrderID,ProductID,Quantity,UnitPrice"
+    val cases = Seq(
+      ("customers", fixture("customers_nulls.csv"), "Not Null", "email"),
+      ("customers", csv("wide.csv", customerHeader,
+        s"1,${"x" * 51},Lovelace,ada@example.com,1 Analytical Way,London,LN,10001"),
+        "VARCHAR", "firstname"),
+      ("customers", fixture("customers_dupes.csv"), "Duplicate", "customerid"),
+      ("orderdetails", csv("dupes.csv", detailHeader,
+        "1000,10,2,9.99", "1000,11,1,24.50", "1000,10,3,9.99"),
+        "Duplicate", "orderid,productid"))
+    for ((table, path, rule, column) <- cases) {
+      val before = (cat.currentVersionNumber(table), cat.versions(table))
+      val dependent = if (table == "customers") "dim_customers" else "fact_orders"
+      val dependentBefore = cat.currentVersionNumber(dependent)
+      val e = intercept[ValidationException](runner.run(RunConfig(table, path, d2)))
+      assert(e.getMessage.contains(rule), e.getMessage)
+      assert(e.getMessage.contains(column), e.getMessage)
+      assert((cat.currentVersionNumber(table), cat.versions(table)) == before, s"$table: $rule")
+      assert(cat.currentVersionNumber(dependent) == dependentBefore)
+      // a clean rerun commits the next version
+      runner.run(RunConfig(table, fixture(s"$table.csv"), d2))
+      assert(cat.currentVersionNumber(table).get > before._1.get)
+    }
+    assert(cat.read("fact_orders").count() == 6)
+  }
+
   test("second run versions the dimension (SCD2 through the runner)") {
     val cat = new Catalog(spark, Files.createTempDirectory("graft-run").toString)
     val runner = new PipelineRunner(spark, cat)
