@@ -44,11 +44,7 @@ final case class Scd2Spec(
     businessKey: String,        // e.g. "customerid"
     attributes: Seq[String],    // tracked columns besides the business key
     startDateCol: String = "startdate",
-    endDateCol: String = "enddate",
-    // Surrogate keys via the distributed sort+zipWithIndex path instead of a
-    // single-partition window — set for a dimension that is itself huge
-    // (same dense deterministic keys, no one-partition sort bottleneck).
-    scalableKeys: Boolean = false
+    endDateCol: String = "enddate"
 ) {
   def trackedColumns: Seq[String] = businessKey +: attributes
 }

@@ -422,11 +422,6 @@ object QualityFilter {
           col("r_alpha") && col("r_stop"))
       .drop("toks")
 
-  def gopherFilter(docs: DataFrame, t: GopherThresholds = GopherThresholds(),
-      textCol: String = "text"): DataFrame =
-    gopherScored(docs, t, textCol).filter(col("keep"))
-      .drop("r_word_count", "r_mean_len", "r_symbol", "r_alpha", "r_stop", "keep")
-
   /** Per-document out-of-vocabulary rate against a vocabulary table — the
     * tokenizer-coverage audit (a doc whose tokens mostly miss the model's
     * vocabulary trains badly and usually signals wrong language, encoding

@@ -51,23 +51,6 @@ object RangeJoin {
       .drop("__rj_bucket")
   }
 
-  /** [[pointInInterval]] with a MEASURED bucket width: the median interval
-    * span, from one approx-quantile probe over the interval side (typically
-    * the small side; pass a hash-sampled slice for a huge interval table —
-    * spans are distribution-stable under sampling, same policy as
-    * [[Skew.heavyHitters]]). Degenerate all-point intervals (median span 0)
-    * fall back to width 1 — every bucketing is correct, width only moves
-    * cost. */
-  def pointInIntervalAuto(points: DataFrame, pointCol: String,
-      intervals: DataFrame, loCol: String, hiCol: String): DataFrame = {
-    val spans = intervals
-      .filter(col(loCol).isNotNull && col(hiCol).isNotNull && col(loCol) <= col(hiCol))
-      .select((col(hiCol) - col(loCol)).cast("double").as("__span"))
-    val w = spans.stat.approxQuantile("__span", Array(0.5), 0.01).headOption.getOrElse(1.0)
-    pointInInterval(points, pointCol, intervals, loCol, hiCol,
-      bucketWidth = if (w > 0) w else 1.0)
-  }
-
   /** All (a, b) interval pairs that overlap: `a.lo <= b.hi AND b.lo <= a.hi`.
     * Both sides explode to their bucket sets; a pair sharing k buckets would
     * match k times, so the join keeps only the FIRST shared bucket —

@@ -51,48 +51,6 @@ object Skew {
       .orderBy(col("n").desc, col(key)).limit(topN)
   }
 
-  /** Replication cap for [[saltedJoinAuto]]: every salt multiplies the build
-    * side's shuffle volume, so past a point more salts cost more than the
-    * skew they cure. 64 splits a key that is 64× the target — beyond that
-    * the key is better handled by a broadcast of its build rows or an AQE
-    * skew split of the residual. */
-  val MaxAutoSalts = 64
-
-  /** Salt count derived from MEASURED skew, not caller guesswork: the
-    * hottest key's row count divided by the target rows-per-task, so each
-    * hot key splits into tasks of roughly `targetRowsPerTask` rows. Only
-    * the RESULT is O(1) rows — the measurement itself scans the frame
-    * (see [[heavyHitters]]); at 100 TB either pass `sampleMod` so the
-    * estimate aggregates a 1-in-sampleMod slice, measure once on a cached/
-    * pre-aggregated frame, or skip the probe and call [[saltedJoin]] with
-    * an explicit salt count. Returns 1 (no salting needed) when no key
-    * exceeds the target. */
-  def chooseSalts(skewed: DataFrame, key: String, targetRowsPerTask: Long,
-      sampleMod: Int = 1): Int = {
-    require(targetRowsPerTask > 0)
-    val top = heavyHitters(skewed, key, 1, sampleMod).collect()
-    if (top.isEmpty) 1
-    else {
-      val hottest = top.head.getLong(1)
-      val ideal = (hottest + targetRowsPerTask - 1) / targetRowsPerTask
-      math.min(MaxAutoSalts.toLong, math.max(1L, ideal)).toInt
-    }
-  }
-
-  /** [[saltedJoin]] with the salt count chosen from measured skew
-    * ([[chooseSalts]]): no caller tuning knob to get wrong. Falls back to
-    * the PLAIN join when no key exceeds the target — salting an unskewed
-    * join only replicates the build side for nothing. Cost honesty: this
-    * reads the probe side twice (once to measure, once to join); amortize
-    * by probing a sample (`sampleMod`), persisting the input, or measuring
-    * once per table release rather than per join. */
-  def saltedJoinAuto(skewed: DataFrame, build: DataFrame, key: String,
-      targetRowsPerTask: Long = 1000000L, sampleMod: Int = 1): DataFrame = {
-    val salts = chooseSalts(skewed, key, targetRowsPerTask, sampleMod)
-    if (salts == 1) skewed.join(build, Seq(key))
-    else saltedJoin(skewed, build, key, salts)
-  }
-
   /** Count–min sketch of `key` occurrence counts: `depth` independent hash
     * rows × 2^widthBits buckets, counts by portable md5 hashing
     * (rerun/engine/partitioning stable, unlike native `hash()`). The

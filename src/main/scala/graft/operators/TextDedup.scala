@@ -52,9 +52,7 @@ object TextDedup {
     * n_occurrences) — one hash aggregate over the span stream. These
     * partials are exactly MERGEABLE across doc-disjoint document sets (a
     * doc contributes all its spans to exactly one set, so both counts add),
-    * which is what lets a recurring crawl keep a living span inventory:
-    * append each batch's partial, merge at read time
-    * ([[duplicatedSpansFromStats]]; maintained by `run.CrawlIngest`). */
+    * so a span inventory can be kept per batch and merged by sum. */
   def spanStats(docs: DataFrame, width: Int = DefaultSpanWidth,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame =
     spanOccurrences(docs, width, idCol, textCol)
@@ -139,16 +137,6 @@ object TextDedup {
         concat_ws(" ", col("kept")).as("text_scrubbed"),
         size(col("toks")).cast("long").as("n_tokens"),
         size(col("kept")).cast("long").as("n_tokens_kept"))
-
-  /** [[duplicatedSpans]] answered from a STORED inventory of per-batch
-    * [[spanStats]] partials instead of re-tokenizing the corpus: merge by
-    * sum (exact for doc-disjoint batches), then the same ≥2 filter. The
-    * aggregate is inventory-sized, not corpus-sized — the recurring-crawl
-    * shape, like the stored postings/band indexes. */
-  def duplicatedSpansFromStats(stats: DataFrame): DataFrame =
-    stats.groupBy(col("span_hash"))
-      .agg(sum(col("n_docs")).as("n_docs"), sum(col("n_occurrences")).as("n_occurrences"))
-      .filter(col("n_occurrences") >= 2)
 
   /** Per-document duplicated-span profile: of the doc's w-token windows, how
     * many occur `minCount`+ times corpus-wide (at 2, "also occurs elsewhere —
@@ -541,60 +529,6 @@ object TextDedup {
       .select(col("batch_id"), col("corpus_id"), col("jaccard"))
   }
 
-  /** The crawl-batch near-dup kernel: ONE tokenize→shingle→signature
-    * derivation of the batch feeds all three consumers a recurring ingest
-    * needs — (a) the vs-stored-index candidate join, (b) the within-batch
-    * self-join, and (c) the batch's own (doc_id, band) rows for the index
-    * append. [[graft.run.CrawlIngest]] previously composed
-    * [[minhashLshIndexed]] + [[minhashLsh]] + [[buildBandIndex]], which
-    * re-ran the per-doc pipeline (the dominant batch cost) 2-3× per ingest.
-    *
-    * Returns (dropIds, batchBands): `dropIds` is one `doc_id` column —
-    * batch docs near-dup of the corpus, plus the LARGER id of every
-    * within-batch near-dup pair (greedy keep-smallest); `batchBands` is the
-    * full batch band frame — filter it to the accepted ids for the index
-    * append (bands are per-doc, so the filter equals rebuilding the index
-    * on the accepted slice). Pass `corpusAndIndex = None` on bootstrap
-    * (no corpus to check). */
-  def crawlNearDups(corpusAndIndex: Option[(DataFrame, DataFrame)], batch: DataFrame,
-      threshold: Double = 0.5, numHashes: Int = 16, numBands: Int = 8):
-      (DataFrame, DataFrame) = {
-    val bBase = hashedShingles(batch)
-    // persisted: the band frame feeds the self-join (twice), the index
-    // candidate join, and the caller's index append
-    val bands = bandFrame(bBase, numHashes, numBands)
-      .persistTracked()
-    val selfCands = bands.select(col("doc_id").as("id1"), col("band"))
-      .join(bands.select(col("doc_id").as("id2"), col("band")), Seq("band"))
-      .filter(col("id1") < col("id2"))
-      .select(col("id1"), col("id2")).distinct()
-    val selfDrops = selfCands
-      .join(bBase.select(col("doc_id").as("id1"), col("sh").as("sh1")), Seq("id1"))
-      .join(bBase.select(col("doc_id").as("id2"), col("sh").as("sh2")), Seq("id2"))
-      .withColumn("jaccard", Text.jaccard("sh1", "sh2"))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id2").as("doc_id"))
-    val drops = corpusAndIndex match {
-      case None => selfDrops
-      case Some((corpus, bandIndex)) =>
-        val cands = bands.select(col("doc_id").as("batch_id"), col("band"))
-          .join(bandIndex.select(col("doc_id").as("corpus_id"), col("band")), Seq("band"))
-          .select(col("batch_id"), col("corpus_id")).distinct()
-          .persistTracked()
-        val candCorpus = corpus.join(
-          cands.select(col("corpus_id").as("doc_id")).distinct(), Seq("doc_id"), "left_semi")
-        val corpusDrops = cands
-          .join(bBase.select(col("doc_id").as("batch_id"), col("sh").as("sh1")), Seq("batch_id"))
-          .join(shingled(candCorpus).select(col("doc_id").as("corpus_id"), col("sh").as("sh2")),
-            Seq("corpus_id"))
-          .withColumn("jaccard", Text.jaccard("sh1", "sh2"))
-          .filter(col("jaccard") >= threshold)
-          .select(col("batch_id").as("doc_id"))
-        corpusDrops.unionByName(selfDrops)
-    }
-    (drops.distinct(), bands)
-  }
-
   /** Benchmark decontamination: per EVAL document, the fraction of its
     * k-token shingles that appear ANYWHERE in the training corpus — the
     * standard train/test overlap check run before any evaluation is
@@ -622,51 +556,6 @@ object TextDedup {
       .join(corpusShingles, Seq("h"), "left")
       .groupBy(col("eval_id"))
       .agg(count(lit(1)).as("n_shingles"), count(col("__hit")).as("n_contaminated"))
-      .withColumn("contamination",
-        col("n_contaminated") / col("n_shingles").cast("double"))
-  }
-
-  /** [[contamination]] with the corpus side collapsed to a BLOOM FILTER —
-    * the approximate one-sided-error form for when the corpus shingle set
-    * is too large to distinct+join per eval run. Error is strictly
-    * one-sided: a Bloom filter has NO false negatives, so real train/test
-    * overlap can never be under-reported; false positives (rate `fpp`)
-    * only over-flag — the safe direction for decontamination.
-    *
-    * Scale shape vs the exact form: the corpus contributes ONE pass with a
-    * map-side partial Bloom filter per partition, merged to a single
-    * fixed-size sketch (`numBits/8` bytes ≈ 5 MB at the defaults) — no
-    * corpus-shingle distinct, no corpus-side shuffle of shingle hashes at
-    * all. The merged filter makes one fixed-size hop through the driver and
-    * rides to the eval side as a literal (the same movement Spark's own
-    * runtime join filters perform; BloomFilterMightContain requires a
-    * constant/scalar-subquery filter operand). Build once per corpus
-    * release and reuse across eval suites — the filter, like the corpus, is
-    * content-addressed.
-    *
-    * `expectedItems` sizes the filter for the DISTINCT corpus shingle
-    * count; numBits is the textbook optimum -n·ln(fpp)/ln²2, so fpp holds
-    * at n = expectedItems and degrades gracefully past it. Spark caps both
-    * via spark.sql.optimizer.runtime.bloomFilter.{maxNumItems,maxNumBits};
-    * raise those confs along with the parameters for 100 TB corpora. */
-  def contaminationBloom(corpus: DataFrame, eval: DataFrame,
-      expectedItems: Long = 4000000L, fpp: Double = 0.01): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
-    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    import org.apache.spark.sql.graftbridge.Bridge
-    val numBits = math.ceil(-expectedItems * math.log(fpp) / (math.log(2) * math.log(2))).toLong
-    val bloomAgg = Bridge.column(new BloomFilterAggregate(
-        Bridge.expression(col("h")), Literal(expectedItems), Literal(numBits))
-      .toAggregateExpression())
-    val bf = shingled(corpus).select(explode(shingleHashes60).as("h"))
-      .agg(bloomAgg.as("bf")).head().getAs[Array[Byte]](0)
-    val hit = Bridge.column(BloomFilterMightContain(
-      Literal(bf, org.apache.spark.sql.types.BinaryType),
-      Bridge.expression(col("h"))))
-    shingled(eval)
-      .select(col("doc_id").as("eval_id"), explode(shingleHashes60).as("h"))
-      .groupBy(col("eval_id"))
-      .agg(count(lit(1)).as("n_shingles"), count(when(hit, 1)).as("n_contaminated"))
       .withColumn("contamination",
         col("n_contaminated") / col("n_shingles").cast("double"))
   }

@@ -17,16 +17,14 @@ import graft.model.{Schemas, Scd2Spec}
   *
   * Note the as-is behavior: the reference re-versions EVERY source row each
   * run, changed or not — there is no change detection (SURVEY.md §7.5.1).
-  * [[run]] reproduces that; [[runChangedOnly]] is the opt-in hash-diff
-  * improvement and is never the default.
+  * [[run]] reproduces that.
   *
   * Scale notes:
-  *  - The close-out "UPDATE" is a left join of dim against the distinct
-  *    source keys — broadcast for ordinary dims (no dim shuffle), shuffled
-  *    when `spec.scalableKeys` says the key set is dimension-sized (a
-  *    broadcast there is the OOM). No in-place update exists in Spark — the
-  *    caller persists the returned frame via [[graft.catalog.Catalog.write]]'s
-  *    atomic version swap, giving the reference's transactional visibility.
+  *  - The close-out "UPDATE" is a left join of dim against the broadcast
+  *    distinct source keys (no dim shuffle). No in-place update exists in
+  *    Spark — the caller persists the returned frame via
+  *    [[graft.catalog.Catalog.write]]'s atomic version swap, giving the
+  *    reference's transactional visibility.
   *  - Surrogate keys use a window over the (small) staged increment only, not
   *    the whole dimension — the existing dim is never re-keyed or sorted.
   *  - `runDate` is injected (not `current_date()`) for determinism (F7,
@@ -45,13 +43,11 @@ object Scd2Upsert {
     // Close-out rewrite of the reference's UPDATE (dynamic_upsert.py:128-131):
     // a left join marks the keys present in the source ("IN (SELECT ... FROM
     // source)", P7); matched current rows get EndDate = runDate - 1 day,
-    // everyone else passes through unchanged. The staged key set is broadcast
-    // for ordinary dimensions (no dim shuffle); `spec.scalableKeys` — the
-    // huge-dimension opt-in — drops the hint so Catalyst plans a shuffled
-    // join instead of building/OOMing a dimension-sized broadcast table.
+    // everyone else passes through unchanged. The staged key set is
+    // broadcast, so the dimension is never shuffled.
     val hitKeys = stagedKeys.withColumn("__hit", lit(true))
     val closed = dim
-      .join(if (spec.scalableKeys) hitKeys else broadcast(hitKeys), Seq(spec.businessKey), "left")
+      .join(broadcast(hitKeys), Seq(spec.businessKey), "left")
       .withColumn(spec.endDateCol,
         when(isCurrent && col("__hit"), date_sub(lit(runDate), 1))
           .otherwise(col(spec.endDateCol)))
@@ -70,29 +66,9 @@ object Scd2Upsert {
   /** Key assignment ordered by ALL tracked columns, not just the business
     * key: the staging is `SELECT DISTINCT trackedColumns`, so one business
     * key can stage two attribute variants in a batch — ordering by the full
-    * row makes which variant gets which key deterministic across reruns.
-    * `spec.scalableKeys` routes a huge dimension to the distributed
-    * sort+zipWithIndex path (no single-partition window sort). */
+    * row makes which variant gets which key deterministic across reruns. */
   private def assignKeys(staged: DataFrame, spec: Scd2Spec, offset: Long): DataFrame =
-    if (spec.scalableKeys)
-      SurrogateKeys.assignScalable(staged, spec.surrogateKey, offset, spec.trackedColumns: _*)
-    else
-      SurrogateKeys.assign(staged, spec.surrogateKey, offset, spec.trackedColumns: _*)
-
-  /** Opt-in improvement (SURVEY.md §7.5.1): only rows whose tracked-attribute
-    * hash differs from the current dim version are re-versioned. */
-  def runChangedOnly(source: DataFrame, dim: DataFrame, spec: Scd2Spec, runDate: Date): DataFrame = {
-    val hashCols = spec.trackedColumns.map(c => col(c).cast("string"))
-    def withHash(df: DataFrame) = df.withColumn("__h", sha2(concat_ws("", hashCols: _*), 256))
-    val currentHashes = withHash(dim.filter(col(spec.endDateCol) === lit(Schemas.HighDate)))
-      .select(col(spec.businessKey), col("__h"))
-    val curRenamed = currentHashes.withColumnRenamed("__h", "__cur")
-    val changed = withHash(source.select(spec.trackedColumns.map(col): _*).distinct())
-      .join(if (spec.scalableKeys) curRenamed else broadcast(curRenamed), Seq(spec.businessKey), "left")
-      .filter(col("__cur").isNull || col("__cur") =!= col("__h"))
-      .drop("__h", "__cur")
-    run(changed, dim, spec, runDate)
-  }
+    SurrogateKeys.assign(staged, spec.surrogateKey, offset, spec.trackedColumns: _*)
 
   /** Initial load: empty dim → every source row becomes version 1. */
   def initialLoad(source: DataFrame, spec: Scd2Spec, runDate: Date): DataFrame = {

@@ -118,90 +118,6 @@ object EventStream {
   private[graft] def tsMicros(ts: java.sql.Timestamp): Long =
     Math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000L
 
-  // ---- Stateful streaming debounce ----
-
-  final case class TypedEvent(event_id: Long, ts: java.sql.Timestamp,
-      user_id: Long, event_type: String)
-  final case class DebounceState(lastUs: Long)
-  final case class KeptEvent(user_id: Long, event_type: String,
-      event_id: Long, ts_us: Long)
-
-  /** Streaming twin of the batch burst-suppression rule (q_x_event_debounce):
-    * per (user, type), an event is kept iff ≥ `minGapUs` has passed since
-    * the PREVIOUS event of that key (kept or not — the trailing-debounce
-    * rule, so a sustained burst stays suppressed instead of re-arming every
-    * minGap). State is ONE long per live key (last-seen µs) — the minimal
-    * bounded-state contract; a stream fed in event-time order reproduces
-    * the batch keep column exactly (spec-pinned across micro-batches). */
-  def debounceStream(events: Dataset[TypedEvent],
-      minGapUs: Long = 60000000L): Dataset[KeptEvent] = {
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", "1 hour")
-      .groupByKey(e => (e.user_id, e.event_type))
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        debounceFn(minGapUs))
-  }
-
-  private[graft] def debounceFn(minGapUs: Long)(
-      key: (Long, String), events: Iterator[TypedEvent],
-      state: GroupState[DebounceState]): Iterator[KeptEvent] = {
-    var last = state.getOption.map(_.lastUs)
-    val out = events.toSeq.sortBy(e => (tsMicros(e.ts), e.event_id)).flatMap { e =>
-      val us = tsMicros(e.ts)
-      val keep = last.forall(us - _ >= minGapUs)
-      last = Some(us)
-      if (keep) Some(KeptEvent(key._1, key._2, e.event_id, us)) else None
-    }
-    last.foreach(us => state.update(DebounceState(us)))
-    out.iterator
-  }
-
-  // ---- Stateful streaming EWMA ----
-
-  final case class EwmaState(recentCents: Seq[Long])
-  final case class EwmaPoint(user_id: Long, event_id: Long, ts_us: Long,
-      ewma_num: Long, ewma_wsum: Long, ewma: Double)
-
-  /** Streaming twin of [[graft.operators.Trend.ewmaHalf]]: per-user running
-    * EWMA (α=1/2, trailing `window` events) emitted per event. State is a
-    * ring of ≤ `window` cent values per user — O(window) longs, the bounded-
-    * state contract — and the arithmetic is the SAME exact-integer
-    * numerator/weight-sum as the batch op, so a stream fed in event-time
-    * order reproduces the batch column bit-for-bit (spec-pinned). Events
-    * are sorted within each micro-batch; cross-batch disorder within the
-    * watermark surfaces as a state-order difference exactly as it would in
-    * any running-statistic stream — size the watermark to the feed's real
-    * disorder and replay when it is exceeded. */
-  def ewmaStream(events: Dataset[Event], window: Int = 16): Dataset[EwmaPoint] = {
-    import events.sparkSession.implicits._
-    // same overflow bound as the batch twin: cents·2^(window−1) in BIGINT
-    // with |cents| < 2^40 needs window ≤ 22
-    require(window >= 1 && window <= 22, s"window must be in [1,22]: $window")
-    events
-      .withWatermark("ts", "1 hour")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        ewmaFn(window))
-  }
-
-  private[graft] def ewmaFn(window: Int)(
-      userId: Long, events: Iterator[Event], state: GroupState[EwmaState]): Iterator[EwmaPoint] = {
-    var recent = state.getOption.map(_.recentCents).getOrElse(Seq.empty)
-    val out = events.toSeq.sortBy(e => (tsMicros(e.ts), e.event_id)).map { e =>
-      recent = (recent :+ math.round(e.value * 100)).takeRight(window)
-      val m = recent.size
-      // oldest..newest get weights 2^(window−m) .. 2^(window−1), matching
-      // the batch op's lag-k weight 2^(window−1−k)
-      val num = recent.zipWithIndex.map { case (c, j) => c << (window - m + j) }.sum
-      val wsum = (1L << window) - (1L << (window - m))
-      EwmaPoint(userId, e.event_id, tsMicros(e.ts), num, wsum,
-        num.toDouble / (wsum * 100L))
-    }
-    state.update(EwmaState(recent))
-    out.iterator
-  }
-
   private[graft] def sessionFn(gapUs: Long)(
       userId: Long, events: Iterator[Event], state: GroupState[SessionState]): Iterator[Session] = {
     val out = scala.collection.mutable.ListBuffer[Session]()

@@ -19,44 +19,23 @@ class CacheGuardSpec extends SparkSpec {
     assert(CacheGuard.releaseAll(spark) > 0)
   }
 
-  test("consecutive crawl-ingest batches leave no tracked frames behind") {
-    import org.apache.spark.sql.types.{LongType, StringType, StructType}
-    val schema = new StructType()
-      .add("doc_id", LongType).add("text", StringType)
-    def jsonl(lines: Seq[String]): String = {
-      val f = java.nio.file.Files.createTempFile("graft-cg-crawl", ".jsonl")
-      java.nio.file.Files.writeString(f, lines.mkString("\n"))
-      f.toString
-    }
-    def doc(id: Long, text: String) = s"""{"doc_id": $id, "text": "$text"}"""
-    val cat = new graft.catalog.Catalog(spark,
-      java.nio.file.Files.createTempDirectory("graft-cg-crawl").toString)
-    val ingest = new graft.run.CrawlIngest(spark, cat,
-      graft.run.CrawlIngestConfig(quality = graft.operators.QualityFilter
-        .Thresholds(minTokens = 1, minAlphaRatio = 0.0, minStopRatio = 0.0)))
-    CacheGuard.releaseAll(spark)
-    val t1 = (1 to 32).map(i => s"alpha$i").mkString(" ")
-    val t2 = (1 to 32).map(i => s"beta$i").mkString(" ")
-    ingest.ingest(jsonl(Seq(doc(1, t1))), schema)
-    assert(CacheGuard.trackedCount(spark) == 0,
-      "batch 1 must release its tracked frames")
-    ingest.ingest(jsonl(Seq(doc(2, t2), doc(3, t1))), schema)
-    assert(CacheGuard.trackedCount(spark) == 0,
-      "batch 2 must release its tracked frames")
-  }
-
-  test("consecutive pipeline runs leave no tracked frames behind") {
+  test("pipeline runs leave frames registered by other code cached") {
+    val docs = Seq((1L, "a b a c"), (2L, "b c d")).toDF("doc_id", "text")
+    TextIndex.tfIdfTopK(docs).count() // persists + registers postings
+    val tracked = CacheGuard.trackedCount(spark)
+    assert(tracked > 0)
+    def postingsCached = TextIndex.postings(docs, "doc_id", "text").storageLevel.useMemory
+    assert(postingsCached)
     val cat = new graft.catalog.Catalog(spark,
       java.nio.file.Files.createTempDirectory("graft-cg-pipe").toString)
     val runner = new graft.run.PipelineRunner(spark, cat)
-    CacheGuard.releaseAll(spark)
     val cfg = graft.run.RunConfig("customers", fixture("customers.csv"),
       java.sql.Date.valueOf("2024-01-01"))
     runner.run(cfg)
-    assert(CacheGuard.trackedCount(spark) == 0,
-      "run 1 must release its tracked frames")
     runner.run(cfg.copy(runDate = java.sql.Date.valueOf("2024-01-02")))
-    assert(CacheGuard.trackedCount(spark) == 0,
-      "run 2 must release its tracked frames")
+    assert(CacheGuard.trackedCount(spark) == tracked,
+      "a pipeline run must not release frames it did not register")
+    assert(postingsCached, "the registered postings must stay cached")
+    CacheGuard.releaseAll(spark)
   }
 }

@@ -36,21 +36,6 @@ class RangeJoinSpec extends SparkSpec {
     }
   }
 
-  test("pointInIntervalAuto: measured width reproduces fixed-width results; zero-span ok") {
-    val points = Seq(-7.5, -0.1, 0.0, 3.0, 9.99, 10.0, 25.0, 99.0)
-    val ivals = Seq((1, -10.0, 0.0), (2, 0.0, 10.0), (3, 10.0, 10.0))
-    val got = graft.operators.RangeJoin.pointInIntervalAuto(
-        points.toDF("p"), "p", ivals.toDF("id", "lo", "hi"), "lo", "hi")
-      .select($"p", $"id").as[(Double, Int)].collect().toSeq.sorted
-    assert(got == naivePoints(points, ivals))
-    // all intervals degenerate (median span 0): falls back to width 1
-    val pts = Seq(1.0, 2.0).toDF("p")
-    val deg = Seq((1, 1.0, 1.0), (2, 2.0, 2.0)).toDF("id", "lo", "hi")
-    val got2 = graft.operators.RangeJoin.pointInIntervalAuto(pts, "p", deg, "lo", "hi")
-      .select($"p", $"id").as[(Double, Int)].collect().toSeq.sorted
-    assert(got2 == Seq((1.0, 1), (2.0, 2)))
-  }
-
   test("plan is an equi-join on the bucket key — no nested-loop/cartesian at any size") {
     val pts = spark.range(1000).select(($"id" * 1.0).as("p"))
     val iv = spark.range(200).select($"id".as("iid"),

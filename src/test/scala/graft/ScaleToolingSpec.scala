@@ -29,14 +29,12 @@ class ScaleToolingSpec extends SparkSpec {
     assert(hh == Seq(Seq(1, 90L), Seq(2, 9L)))
   }
 
-  test("saltedJoinAuto derives salts from measured skew and bounds task spread") {
+  test("saltedJoin with 9 salts: power-law hot key spreads, same multiset") {
     // power-law key: key 0 carries 9000 rows, keys 1..100 carry ~10 each
     val hot = spark.range(9000).select(lit(0L).as("k"), col("id").as("v"))
     val tail = spark.range(1000).select((col("id") % 100 + 1).as("k"), col("id").as("v"))
     val skewed = hot.unionByName(tail)
     val build = spark.range(101).select(col("id").as("k"), (col("id") * 7).as("w"))
-    // hottest key 9000 / target 1000 → 9 salts
-    assert(Skew.chooseSalts(skewed, "k", 1000) == 9)
     // the hot key's rows spread across salts with no salt bucket oversized:
     // every per-(key,salt) task group stays within 2× the ideal share
     val saltCounts = rows(hot
@@ -46,16 +44,12 @@ class ScaleToolingSpec extends SparkSpec {
     assert(saltCounts.size == 9, "all 9 salt buckets must be populated")
     assert(saltCounts.max <= 2 * (9000 / 9), s"spread too skewed: $saltCounts")
     // multiset equality with the plain join, salt column dropped
-    val auto = Skew.saltedJoinAuto(skewed, build, "k", 1000)
+    val salted = Skew.saltedJoin(skewed, build, "k", 9)
     val plain = skewed.join(build, Seq("k"))
-    assert(auto.columns.toSeq == plain.columns.toSeq)
-    assert(auto.count() == plain.count())
-    assert(auto.groupBy("k", "v", "w").count()
+    assert(salted.columns.toSeq == plain.columns.toSeq)
+    assert(salted.count() == plain.count())
+    assert(salted.groupBy("k", "v", "w").count()
       .except(plain.groupBy("k", "v", "w").count()).count() == 0)
-    // unskewed input → no salting, identical plain-join plan shape
-    assert(Skew.chooseSalts(tail, "k", 1000) == 1)
-    // and the cap holds for pathological skew
-    assert(Skew.chooseSalts(hot, "k", 10) == Skew.MaxAutoSalts)
   }
 
   test("30%-hot-key fixture: salting physically splits the hot key's task") {
@@ -77,9 +71,7 @@ class ScaleToolingSpec extends SparkSpec {
       val plain = skewed.join(build, Seq("k"))
       assert(hotPartitions(plain) == 1,
         "plain hash-partitioned join must place the whole hot key in one task")
-      val salts = Skew.chooseSalts(skewed, "k", targetRowsPerTask = 1000)
-      assert(salts >= 6, s"6000 hot rows / 1000 target → ≥6 salts, got $salts")
-      val salted = Skew.saltedJoin(skewed, build, "k", salts)
+      val salted = Skew.saltedJoin(skewed, build, "k", 6)
       assert(hotPartitions(salted) > 1,
         "salted join must spread the hot key across multiple tasks")
       assert(salted.count() == plain.count())

@@ -171,120 +171,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("streaming first-seen doc dedup matches batch exact dedup across micro-batches") {
-    import graft.streaming.DocStream
-    val dir = Files.createTempDirectory("graft-docdedup").toString
-    def append(docs: Seq[(Long, String)]): Unit =
-      docs.toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(dir)
-    // batch 1 carries a WITHIN-batch duplicate (1,3 share content)
-    append(Seq((1L, "alpha"), (2L, "beta"), (3L, "alpha")))
-    val stream = spark.readStream.schema("doc_id bigint, text string")
-      .parquet(dir).as[DocStream.Doc]
-    val q = DocStream.firstSeen(stream)
-      .writeStream.outputMode("append").format("memory").queryName("docdedup").start()
-    try {
-      q.processAllAvailable()
-      assert(rows(spark.table("docdedup").select("doc_id").orderBy("doc_id"))
-        .flatten == Seq(1L, 2L))
-      // batch 2: a CROSS-batch re-crawl (4 = "beta") plus novel content
-      append(Seq((4L, "beta"), (5L, "gamma")))
-      q.processAllAvailable()
-      val kept = spark.table("docdedup")
-      assert(rows(kept.select("doc_id").orderBy("doc_id")).flatten == Seq(1L, 2L, 5L))
-      // keepers agree with the batch twin over the full corpus (ids arrive
-      // in increasing order here, so first-seen == global-min keeper)
-      val batchKeepers = rows(graft.operators.TextDedup.exact(
-        spark.read.parquet(dir)).select("keep_id").orderBy("keep_id")).flatten
-      assert(rows(kept.select("doc_id").orderBy("doc_id")).flatten == batchKeepers)
-    } finally q.stop()
-  }
-
-  test("TTL first-seen dedup: end-to-end stream dedups a batch (poll sink)") {
-    // NOTE: a ProcessingTimeTimeout stream neither quiesces under
-    // processAllAvailable nor terminates under AvailableNow — wall-clock
-    // timeouts keep it scheduling batches (verified live; that IS the
-    // operator's continuous nature). So this end-to-end case POLLS the
-    // sink for the expected keepers instead of awaiting quiescence.
-    // Cross-batch TTL semantics (suppress / re-arm / expire / re-emit)
-    // are pinned by the state-machine test below.
-    import graft.streaming.DocStream
-    val dir = Files.createTempDirectory("graft-docttl").toString
-    Seq((1L, "alpha"), (2L, "beta"), (3L, "alpha")).toDF("doc_id", "text")
-      .coalesce(1).write.mode("append").parquet(dir)
-    val stream = spark.readStream.schema("doc_id bigint, text string")
-      .parquet(dir).as[DocStream.Doc]
-    val q = DocStream.firstSeenTtl(stream, ttlMs = 3600 * 1000L)
-      .writeStream.outputMode("append").format("memory").queryName("docttl").start()
-    try {
-      val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
-      def kept() = rows(spark.table("docttl").select("doc_id").orderBy("doc_id")).flatten
-      while (kept() != Seq(1L, 2L) && System.nanoTime() < deadline)
-        Thread.sleep(200)
-      assert(kept() == Seq(1L, 2L))
-    } finally q.stop()
-  }
-
-  test("TTL first-seen state machine: suppress, re-arm, expire, re-emit") {
-    import graft.streaming.{DocStream}
-    import graft.streaming.DocStream.{Doc, Seen}
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
-    import org.apache.spark.api.java.Optional
-    def st(existing: Option[Seen], timedOut: Boolean) =
-      TestGroupState.create[Seen](
-        existing.map(Optional.of[Seen]).getOrElse(Optional.empty[Seen]),
-        GroupStateTimeout.ProcessingTimeTimeout, 1000L,
-        Optional.empty[Long], timedOut)
-    val fn = DocStream.firstSeenTtlFn(5000L) _
-    // fresh key: emits min id, arms the TTL
-    val s1 = st(None, timedOut = false)
-    assert(fn("h", Iterator(Doc(7, "x"), Doc(3, "x")), s1).toSeq
-      .map(_.doc_id) == Seq(3L))
-    assert(s1.exists && s1.getTimeoutTimestampMs.isPresent)
-    // duplicate while alive: suppressed but the TTL RE-ARMS (sliding)
-    val s2 = st(Some(Seen(true)), timedOut = false)
-    assert(fn("h", Iterator(Doc(9, "x")), s2).isEmpty)
-    assert(s2.getTimeoutTimestampMs.isPresent, "inactivity TTL must re-arm")
-    // expiry: state removed — the NEXT arrival of this content re-emits
-    val s3 = st(Some(Seen(true)), timedOut = true)
-    assert(fn("h", Iterator.empty, s3).isEmpty)
-    assert(s3.isRemoved)
-    val s4 = st(None, timedOut = false)
-    assert(fn("h", Iterator(Doc(11, "x")), s4).toSeq.map(_.doc_id) == Seq(11L))
-  }
-
-  test("streaming span inventory matches batch spanStats across micro-batches") {
-    import graft.streaming.DocStream
-    val dir = Files.createTempDirectory("graft-spanstream").toString
-    def append(docs: Seq[(Long, String)]): Unit =
-      docs.toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(dir)
-    val w = 3
-    // batch 1: doc 1 repeats a span internally; docs 1/2 share one
-    append(Seq(
-      (1L, "a b c a b c a b c"),     // span "a b c" ×3 + rotations
-      (2L, "x y a b c z q")))
-    val stream = spark.readStream.schema("doc_id bigint, text string")
-      .parquet(dir).as[DocStream.Doc]
-    val q = DocStream.spanInventory(stream, w)
-      .writeStream.outputMode("update").format("memory").queryName("spaninv").start()
-    try {
-      q.processAllAvailable()
-      // batch 2: a third doc re-hits the shared span and adds novel ones
-      append(Seq((3L, "a b c d e f")))
-      q.processAllAvailable()
-      // latest totals per span (totals are monotone → max): must equal the
-      // batch operator over the union corpus, bit for bit
-      val streamed = spark.table("spaninv")
-        .groupBy("span_hash")
-        .agg(max(col("n_docs")).as("n_docs"), max(col("n_occurrences")).as("n_occurrences"))
-      val batch = graft.operators.TextDedup.spanStats(spark.read.parquet(dir), width = w)
-      assert(rows(streamed.orderBy("span_hash")) == rows(batch.orderBy("span_hash")))
-      // and the duplicated-span filter derived from the stream matches too
-      assert(rows(streamed.filter(col("n_occurrences") >= 2).orderBy("span_hash")) ==
-        rows(graft.operators.TextDedup.duplicatedSpans(spark.read.parquet(dir), width = w)
-          .orderBy("span_hash")))
-    } finally q.stop()
-  }
-
   test("streaming count-min sketch matches the batch sketch across micro-batches") {
     val dir = Files.createTempDirectory("graft-cms-stream").toString
     def append(keys: Seq[String]): Unit =
@@ -410,88 +296,6 @@ class StreamingSpec extends SparkSpec {
         streamed.count() == mismatches.count(),
         "streamed sessions != batch sessions")
       assert(streamed.count() > 100) // the fixture produces real session volume
-    } finally q.stop()
-  }
-
-  test("streaming EWMA matches batch Trend.ewmaHalf bit-exactly across micro-batches") {
-    import EventStream._
-    // real feed, time-split into 3 ordered micro-batches (zero lateness)
-    val ev = graft.queries.Q.events(spark, sf0001)
-      .select(col("event_id"), timestamp_micros(col("ts_us")).as("ts"),
-        col("user_id"), col("value"), col("ts_us"))
-    val bounds = rows(ev.agg(
-      expr("percentile(ts_us, 0.33)"), expr("percentile(ts_us, 0.66)"))).head
-      .map(v => math.ceil(v.toString.toDouble).toLong)
-    val dir = Files.createTempDirectory("graft-ewma-stream").toString
-    def stage(from: Long, until: Long): Unit =
-      ev.filter(col("ts_us") >= from && col("ts_us") < until)
-        .select("event_id", "ts", "user_id", "value")
-        .coalesce(1).write.mode("append").parquet(dir)
-    stage(Long.MinValue, bounds(0))
-    val q = EventStream.ewmaStream(
-        spark.readStream
-          .schema("event_id bigint, ts timestamp, user_id bigint, value double")
-          .parquet(dir).as[Event], window = 16)
-      .toDF().writeStream.outputMode("append")
-      .format("memory").queryName("ewma_stream").start()
-    try {
-      q.processAllAvailable()
-      stage(bounds(0), bounds(1))
-      q.processAllAvailable()
-      stage(bounds(1), Long.MaxValue)
-      q.processAllAvailable()
-      val streamed = spark.table("ewma_stream")
-        .select("event_id", "ewma_num", "ewma_wsum", "ewma")
-      val batch = graft.operators.Trend.ewmaHalf(
-          graft.queries.Q.events(spark, sf0001)
-            .select(col("event_id"), col("user_id"), col("ts_us"), col("value")),
-          "user_id", Seq("ts_us", "event_id"),
-          round(col("value") * 100, 0).cast("long"), window = 16)
-        .select("event_id", "ewma_num", "ewma_wsum", "ewma")
-      val n = batch.count()
-      val matched = streamed.join(batch,
-        Seq("event_id", "ewma_num", "ewma_wsum", "ewma")).count()
-      assert(streamed.count() == n && matched == n,
-        "streaming EWMA must equal the batch column bit-for-bit")
-    } finally q.stop()
-  }
-
-  test("streaming debounce matches the batch keep rule across micro-batches") {
-    import EventStream._
-    val ev = graft.queries.Q.events(spark, sf0001)
-      .filter(col("user_id").isNotNull)
-      .select(col("event_id"), timestamp_micros(col("ts_us")).as("ts"),
-        col("user_id"), col("event_type"), col("ts_us"))
-    val bounds = rows(ev.agg(expr("percentile(ts_us, 0.5)"))).head
-      .map(v => math.ceil(v.toString.toDouble).toLong)
-    val dir = Files.createTempDirectory("graft-debounce-stream").toString
-    def stage(from: Long, until: Long): Unit =
-      ev.filter(col("ts_us") >= from && col("ts_us") < until)
-        .select("event_id", "ts", "user_id", "event_type")
-        .coalesce(1).write.mode("append").parquet(dir)
-    stage(Long.MinValue, bounds(0))
-    val q = EventStream.debounceStream(
-        spark.readStream
-          .schema("event_id bigint, ts timestamp, user_id bigint, event_type string")
-          .parquet(dir).as[TypedEvent])
-      .toDF().writeStream.outputMode("append")
-      .format("memory").queryName("debounce_stream").start()
-    try {
-      q.processAllAvailable()
-      stage(bounds(0), Long.MaxValue)
-      q.processAllAvailable()
-      val streamed = spark.table("debounce_stream").select("event_id").as[Long]
-        .collect().toSet
-      // batch twin: keep iff gap from PREVIOUS event of the key >= 60s
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("user_id", "event_type").orderBy("ts_us", "event_id")
-      val batch = graft.queries.Q.events(spark, sf0001)
-        .filter(col("user_id").isNotNull)
-        .withColumn("prev", lag(col("ts_us"), 1).over(w))
-        .filter(col("prev").isNull || col("ts_us") - col("prev") >= 60000000L)
-        .select("event_id").as[Long].collect().toSet
-      assert(streamed == batch,
-        s"streaming debounce must equal the batch rule (${streamed.size} vs ${batch.size})")
     } finally q.stop()
   }
 

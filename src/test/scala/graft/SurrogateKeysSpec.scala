@@ -43,10 +43,9 @@ class SurrogateKeysSpec extends SparkSpec {
     assert(got == Seq(Seq(1L, 1, "a"), Seq(2L, 1, "b")))
   }
 
-  test("scalableKeys spec routes SCD2 keying around the single-partition window (plan shape)") {
-    val spec = graft.model.Scd2Spec("dim_t", "tkey", "tid", Seq("attr"), scalableKeys = true)
+  test("assignScalable plans no single-partition window") {
     val src = Seq((2, "y"), (1, "x"), (3, "z")).toDF("tid", "attr")
-    val out = graft.ops.Scd2Upsert.initialLoad(src, spec, java.sql.Date.valueOf("2024-01-01"))
+    val out = SurrogateKeys.assignScalable(src, "tkey", 0L, "tid", "attr")
     assert(!out.queryExecution.executedPlan.toString.contains("Window"),
       "scalable path must not plan a global window sort")
     assert(rows(out.orderBy("tkey").select("tkey", "tid")) ==
