@@ -1,11 +1,12 @@
 #!/bin/bash
 # Full local replica of the round gates:
-# compile → tests → verify+oracle at sf0.001 and sf0.01 → bench at sf0.1
-# → smoke → perfbench selftest and one etl_daily run.
+# spec-only scan → compile → tests → verify+oracle at sf0.001 and sf0.01
+# → bench at sf0.1 → smoke → perfbench selftest and one etl_daily run.
 # Every main runs on graft.Session: local[SPARK_GRAFT_CPUS or host cores],
 # AQE on, so the bench below times the config that ships.
 set -euo pipefail
 cd "$(dirname "$0")/.."
+python3 dev/spec_only_scan.py   # no def that only specs call, beyond its keep-list
 sbt -batch compile
 sbt -batch test
 for sf in sf0.001 sf0.01; do

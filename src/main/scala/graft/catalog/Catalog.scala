@@ -7,6 +7,32 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
+/** One retained catalog version, as reported by [[Catalog.history]]. */
+final case class CatalogVersionInfo(
+    version: Long, isCurrent: Boolean, nFiles: Int, nCarried: Int)
+
+/** A pinned multi-table read set ([[Catalog.snapshot]]): every `read` goes to
+  * the version that was current when the snapshot was taken, so a plan
+  * joining N tables cannot mix one table's pre-flip rows with another's
+  * post-flip rows when writers commit mid-plan. Single-table reads were
+  * always atomic (pointer swap); this extends the guarantee across a READ
+  * SET — the same role Iceberg/Delta give a query's table snapshot ids.
+  * Validity window = version retention (`keepVersions`): a writer pruning a
+  * pinned version past that window fails the read loudly, never silently
+  * substitutes newer rows. */
+final class CatalogSnapshot private[catalog] (catalog: Catalog,
+    pinned: Map[String, Long]) {
+  /** Version pinned per table at snapshot time. */
+  def versions: Map[String, Long] = pinned
+  def read(name: String): DataFrame = pinned.get(name.toLowerCase) match {
+    case Some(v) => catalog.readVersion(name, v)
+    case None => throw new IllegalArgumentException(
+      s"catalog snapshot: '$name' is not in the pinned read set " +
+        s"(${pinned.keys.toSeq.sorted.mkString(", ")}) — declare every table " +
+        "the plan reads when taking the snapshot")
+  }
+}
+
 /** Parquet-backed table catalog replacing the reference's Redshift tables.
   *
   * The reference wraps every multi-statement load in a Redshift transaction
@@ -33,33 +59,6 @@ import scala.util.control.NonFatal
   * parallel (standard parquet commit protocol); only the pointer flip is
   * driver-side and O(1). Old versions are pruned, keeping `keepVersions`.
   */
-/** One retained catalog version, as reported by [[Catalog.history]]. */
-final case class CatalogVersionInfo(
-    version: Long, isCurrent: Boolean, nFiles: Int, nCarried: Int,
-    streamBatchId: Option[Long])
-
-/** A pinned multi-table read set ([[Catalog.snapshot]]): every `read` goes to
-  * the version that was current when the snapshot was taken, so a plan
-  * joining N tables cannot mix one table's pre-flip rows with another's
-  * post-flip rows when writers commit mid-plan. Single-table reads were
-  * always atomic (pointer swap); this extends the guarantee across a READ
-  * SET — the same role Iceberg/Delta give a query's table snapshot ids.
-  * Validity window = version retention (`keepVersions`): a writer pruning a
-  * pinned version past that window fails the read loudly, never silently
-  * substitutes newer rows. */
-final class CatalogSnapshot private[catalog] (catalog: Catalog,
-    pinned: Map[String, Long]) {
-  /** Version pinned per table at snapshot time. */
-  def versions: Map[String, Long] = pinned
-  def read(name: String): DataFrame = pinned.get(name.toLowerCase) match {
-    case Some(v) => catalog.readVersion(name, v)
-    case None => throw new IllegalArgumentException(
-      s"catalog snapshot: '$name' is not in the pinned read set " +
-        s"(${pinned.keys.toSeq.sorted.mkString(", ")}) — declare every table " +
-        "the plan reads when taking the snapshot")
-  }
-}
-
 final class Catalog(spark: SparkSession, rootDir: String, keepVersions: Int = 2) {
   private def tableDir(name: String): Path = Paths.get(rootDir, name.toLowerCase)
   private def pointerFile(name: String): Path = tableDir(name).resolve("_CURRENT")
@@ -273,7 +272,7 @@ final class Catalog(spark: SparkSession, rootDir: String, keepVersions: Int = 2)
   }
 
   /** Audit surface: one row per retained version — (version, current?,
-    * data-file count, carried-from-earlier-version count, stream batch id).
+    * data-file count, carried-from-earlier-version count).
     * The operational "what is this table made of" view: a long manifest
     * chain with many carried files is the signal to [[compact]]. */
   def history(name: String): Seq[CatalogVersionInfo] = {
@@ -281,9 +280,7 @@ final class Catalog(spark: SparkSession, rootDir: String, keepVersions: Int = 2)
     versions(name).map { v =>
       val files = versionDataFiles(name, s"v_$v")
       val carried = files.count(!_.startsWith(s"v_$v/"))
-      val batchId = Some(tableDir(name).resolve(s"v_$v").resolve(BatchIdFile))
-        .filter(Files.isRegularFile(_)).map(Files.readString(_).trim.toLong)
-      CatalogVersionInfo(v, cur.contains(s"v_$v"), files.size, carried, batchId)
+      CatalogVersionInfo(v, cur.contains(s"v_$v"), files.size, carried)
     }
   }
 
@@ -305,7 +302,7 @@ final class Catalog(spark: SparkSession, rootDir: String, keepVersions: Int = 2)
     * went stale during its Spark job aborts loudly instead of flipping the
     * pointer over the newer commit (the reference gets the same guarantee
     * from Redshift transactions, dynamic_upsert.py:108,151). */
-  def write(name: String, df: DataFrame): Unit = writeVersion(name, df, Map.empty)
+  def write(name: String, df: DataFrame): Unit = writeVersion(name, df)
 
   /** Compare-and-swap [[write]] for read-modify-write flows: fails unless
     * the table is STILL at `expectedVersion` (the version the caller read
@@ -313,7 +310,7 @@ final class Catalog(spark: SparkSession, rootDir: String, keepVersions: Int = 2)
     * exist yet". On failure nothing is written and `_CURRENT` is untouched —
     * re-read, re-derive, retry. */
   def write(name: String, df: DataFrame, expectedVersion: Long): Unit =
-    writeVersion(name, df, Map.empty, expected = Some(expectedVersion))
+    writeVersion(name, df, expected = Some(expectedVersion))
 
   /** [[write]] with a pre-flip check: once the data has landed in the
     * claimed version directory, `verify` gets that version as a frame
@@ -321,41 +318,19 @@ final class Catalog(spark: SparkSession, rootDir: String, keepVersions: Int = 2)
     * OUTSIDE the commit lock, like the data write; on a throw the writer
     * deletes its own claim and rethrows, and `_CURRENT` never moves. */
   def write(name: String, df: DataFrame, verify: DataFrame => Unit): Unit =
-    writeVersion(name, df, Map.empty, verify = Some(verify))
+    writeVersion(name, df, verify = Some(verify))
 
-  /** Version writer: lands the data AND any metadata files (the
-    * `_SCHEMA` of a non-partitioned version among them) in the new version
-    * directory BEFORE the pointer flip, so metadata commits atomically with
-    * the rows it describes. ALLOWLISTED metadata the caller
-    * does not override is CARRIED FORWARD from the current version —
-    * otherwise an intervening write (compact, append) would silently reset
-    * the streaming batch-id high-water mark and re-open the replay window.
-    * The allowlist is explicit (only the catalog's own marker files):
-    * inheriting every `_`-file would choke on Spark's binary parquet
-    * summary files and copy stale file manifests forward. `truncate`
-    * disables inheritance — an emptied table is a full reset, including its
-    * stream high-water mark. */
-  private def writeVersion(name: String, df: DataFrame, meta: Map[String, String],
-      inherit: Boolean = true, carryFiles: Boolean = false,
+  /** Version writer: lands the data, the `_SCHEMA` of a non-partitioned
+    * version and any `_MANIFEST` in the new version directory BEFORE the
+    * pointer flip, so metadata commits atomically with the rows it
+    * describes. Nothing is carried over from the current version's
+    * directory but the data files the manifest references. */
+  private def writeVersion(name: String, df: DataFrame, carryFiles: Boolean = false,
       expected: Option[Long] = None, partitionCols: Seq[String] = Nil,
       keepFiles: Seq[String] = Nil, verify: Option[DataFrame => Unit] = None): Unit = {
-    // A file-level append's flat manifest cannot reference files nested in
-    // partition directories — carrying a partitioned version by pointer
-    // would resolve to ZERO files and silently drop the table's data.
-    if (carryFiles)
-      currentPath(name).map(Paths.get(_)).filter(isPartitionedVersion).foreach { _ =>
-        throw new IllegalStateException(
-          s"catalog: '$name' is partition-laid-out — file-level append is not " +
-            "supported on partitioned versions; rewrite with write()/" +
-            "writePartitioned() or append partition-wise")
-      }
+    if (carryFiles) requireFlat(name, "file-level append")
     val dir = tableDir(name)
     Files.createDirectories(dir)
-    val inherited = if (!inherit) Map.empty[String, String] else
-      currentPath(name).map(Paths.get(_)).toSeq
-        .flatMap(p => InheritedMeta.map(p.resolve).filter(Files.isRegularFile(_)))
-        .map(f => f.getFileName.toString -> Files.readString(f))
-        .toMap
     val cur = currentVersion(name)
     val base = cur.map(_.stripPrefix("v_").toLong)
     expected.foreach { want =>
@@ -402,12 +377,9 @@ final class Catalog(spark: SparkSession, rootDir: String, keepVersions: Int = 2)
       }
       // the schema the parquet reader would infer: Spark reads every
       // parquet column as nullable
-      val schema = if (partitionCols.isEmpty) Map(SchemaFile -> asNullable(df.schema).json)
-        else Map.empty[String, String]
-      (inherited ++ meta ++ schema).foreach { case (file, content) =>
-        Files.writeString(claim.resolve(file), content,
+      if (partitionCols.isEmpty)
+        Files.writeString(claim.resolve(SchemaFile), asNullable(df.schema).json,
           StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-      }
       verify.foreach(_(readVersionDir(name, next)))
     } catch { case NonFatal(e) => deleteRecursively(claim); throw e }
     // Pointer-regression guard, INSIDE the commit lock: if another writer
@@ -532,64 +504,13 @@ final class Catalog(spark: SparkSession, rootDir: String, keepVersions: Int = 2)
     }
   }
 
-  /** Idempotent micro-batch append for Structured Streaming `foreachBatch`
-    * sinks: the committed batch id travels IN the version directory (atomic
-    * with the rows), so a replayed batch after a restart — Structured
-    * Streaming's at-least-once foreachBatch contract — is detected and
-    * skipped. Composed with the pointer flip this gives effectively-once
-    * appends into the catalog. Returns false when the batch was a replay. */
-  def appendStreamBatch(name: String, df: DataFrame, batchId: Long): Boolean = {
-    val last = currentPath(name)
-      .map(p => Paths.get(p).resolve(BatchIdFile))
-      .filter(Files.exists(_))
-      .map(Files.readString(_).trim.toLong)
-      .getOrElse(-1L)
-    if (batchId <= last) false
-    else {
-      if (exists(name))
-        writeVersion(name, alignedForAppend(name, df), Map(BatchIdFile -> batchId.toString),
-          carryFiles = true)
-      else writeVersion(name, df, Map(BatchIdFile -> batchId.toString))
-      true
-    }
-  }
-  /** Idempotent versioned OVERWRITE for `foreachBatch` sinks that REBUILD
-    * their table every micro-batch (e.g. [[graft.ops.IncrementalAgg]]'s
-    * streaming refresh): same replay guard as [[appendStreamBatch]] — the
-    * committed batch id travels in the version directory, a redelivered
-    * batch is skipped BEFORE any plan materializes — but full-write
-    * semantics instead of an append. Returns false on a replay. */
-  def writeStreamBatch(name: String, df: DataFrame, batchId: Long): Boolean = {
-    val last = currentPath(name)
-      .map(p => Paths.get(p).resolve(BatchIdFile))
-      .filter(Files.exists(_))
-      .map(Files.readString(_).trim.toLong)
-      .getOrElse(-1L)
-    if (batchId <= last) false
-    else { writeVersion(name, df, Map(BatchIdFile -> batchId.toString)); true }
-  }
-
-  private val BatchIdFile = "_BATCH_ID"
   /** A version's schema as JSON, written by [[writeVersion]] so reads need
-    * no footer-inference job. Not inherited: every version records its own. */
+    * no footer-inference job. Every version records its own. */
   private val SchemaFile = "_SCHEMA"
-  /** The catalog-owned marker files carried across versions. */
-  private val InheritedMeta = Seq(BatchIdFile)
 
-  /** TRUNCATE equivalent (validate_data.py:139): next version is empty.
-    * The streaming batch-id high-water mark is KEPT — a truncate while a
-    * stream is live must not re-open the replay window (a redelivered old
-    * batch would resurrect truncated rows). Rebuilding with a NEW stream
-    * checkpoint (whose batch ids restart at 0) is a deliberate operator
-    * action: call [[resetStreamState]] for that. */
+  /** TRUNCATE equivalent (validate_data.py:139): the next version is empty
+    * and keeps the table's schema. */
   def truncate(name: String): Unit = write(name, read(name).limit(0))
-
-  /** Drop the streaming replay marker: the next version carries no
-    * `_BATCH_ID`, so a NEW streaming query (fresh checkpoint, batch ids
-    * from 0) can sink into the table. Only for deliberate rebuilds — with
-    * the OLD stream still running this re-opens the replay window. */
-  def resetStreamState(name: String): Unit =
-    writeVersion(name, read(name), Map.empty, inherit = false)
 
   /** INSERT INTO equivalent (S4, populate_fact.py:117): append rows as a new
     * version, preserving the atomic-swap visibility rule — but FILE-LEVEL:
@@ -597,18 +518,18 @@ final class Catalog(spark: SparkSession, rootDir: String, keepVersions: Int = 2)
     * carried forward by a one-line `@prev` pointer in the new version's
     * `_MANIFEST`, never copied OR re-listed. An append is therefore
     * O(batch) in data AND commit metadata, not O(table) — the difference
-    * between a usable and an unusable streaming/fact sink at 100 TB (a
-    * micro-batch append against a 100 TB fact must not rewrite 100 TB).
+    * between a usable and an unusable fact sink at 100 TB (a daily append
+    * against a 100 TB fact must not rewrite 100 TB).
     * [[compact]] collapses an append chain back into one self-contained
     * version when the file count grows. Appended rows must match the table
     * schema by column name and type (checked; order is normalized) — mixed
     * file schemas under one manifest would mis-resolve at scan time. */
   def append(name: String, df: DataFrame): Unit =
     if (!exists(name)) write(name, df)
-    else writeVersion(name, alignedForAppend(name, df), Map.empty, carryFiles = true)
+    else writeVersion(name, alignedForAppend(name, df), carryFiles = true)
 
   /** Table schemas resolved once per Catalog instance: without this, every
-    * streaming micro-batch append re-resolves the whole manifest file list
+    * append re-resolves the whole manifest file list
     * just to read `.schema` — O(chain length) driver work per commit,
     * undercutting the O(batch) append claim. Safe under the catalog's
     * single-writer design: schema changes go through THIS instance's
@@ -674,38 +595,59 @@ final class Catalog(spark: SparkSession, rootDir: String, keepVersions: Int = 2)
     * manifest reason). */
   def deleteWhere(name: String, pred: org.apache.spark.sql.Column): Long = {
     import org.apache.spark.sql.functions.{coalesce, count, input_file_name, lit, not}
-    val cur = currentVersion(name).getOrElse(
-      throw new IllegalArgumentException(s"catalog: no such table '$name'"))
-    currentPath(name).map(Paths.get(_)).filter(isPartitionedVersion).foreach { _ =>
-      throw new IllegalStateException(
-        s"catalog: '$name' is partition-laid-out — deleteWhere is not " +
-          "supported on partitioned versions; delete partition-wise and " +
-          "rewrite with writePartitioned()")
-    }
-    val base = cur.stripPrefix("v_").toLong
-    val rels = versionDataFiles(name, cur)
-    val absToRel = rels.map { r =>
-      tableDir(name).resolve(r).toAbsolutePath.normalize.toString -> r
-    }.toMap
-    val perFile = readVersionDir(name, cur).filter(pred)
+    val rw = new FileRewrite(name, "deleteWhere")
+    val perFile = rw.rows.filter(pred)
       .groupBy(input_file_name().as("f")).agg(count(lit(1)).as("n"))
       .collect()
     if (perFile.isEmpty) return 0L
-    val deleted = perFile.map(_.getLong(1)).sum
-    val touched = perFile.map { r =>
-      val p = Paths.get(java.net.URI.create(r.getString(0)))
-        .toAbsolutePath.normalize.toString
-      absToRel.getOrElse(p, throw new IllegalStateException(
+    val touched = rw.files(perFile.map(_.getString(0)).toSeq)
+    rw.commit(rw.read(touched).filter(coalesce(not(pred), lit(true))), touched)
+    perFile.map(_.getLong(1)).sum
+  }
+
+  /** The current version of `name` opened for a file-pruned copy-on-write
+    * rewrite — the shared core of [[deleteWhere]] and [[merge]]. A probe
+    * over [[rows]] reports `input_file_name()` for each match; [[files]]
+    * maps those names to the version's table-relative data files; the
+    * caller rewrites only those files' rows, and [[commit]] carries every
+    * other file into the new version by plain manifest reference, as a CAS
+    * write against the opened version. */
+  private final class FileRewrite(name: String, op: String) {
+    private val cur = currentVersion(name).getOrElse(
+      throw new IllegalArgumentException(s"catalog: no such table '$name'"))
+    requireFlat(name, op)
+    private val rels = versionDataFiles(name, cur)
+    private val relOf = rels.map { r =>
+      tableDir(name).resolve(r).toAbsolutePath.normalize.toString -> r
+    }.toMap
+
+    val rows: DataFrame = readVersionDir(name, cur)
+
+    def files(inputFileNames: Seq[String]): Set[String] = inputFileNames.map { f =>
+      val p = Paths.get(java.net.URI.create(f)).toAbsolutePath.normalize.toString
+      relOf.getOrElse(p, throw new IllegalStateException(
         s"catalog: matched file $p is not part of version $cur of '$name'"))
     }.toSet
-    val untouched = rels.filterNot(touched)
-    val remaining = spark.read
-      .parquet(touched.toSeq.sorted.map(r => tableDir(name).resolve(r).toString): _*)
-      .filter(coalesce(not(pred), lit(true)))
-    writeVersion(name, remaining, Map.empty, expected = Some(base),
-      keepFiles = untouched)
-    deleted
+
+    def read(files: Set[String]): DataFrame =
+      spark.read.parquet(files.toSeq.sorted.map(r => tableDir(name).resolve(r).toString): _*)
+
+    def commit(df: DataFrame, touched: Set[String]): Unit =
+      writeVersion(name, df, expected = Some(cur.stripPrefix("v_").toLong),
+        keepFiles = rels.filterNot(touched))
   }
+
+  /** Refuse `op` on a partition-laid-out current version: a flat manifest
+    * cannot reference files nested in partition directories, so carrying
+    * such a version by reference would resolve to ZERO files and silently
+    * drop the table's data. */
+  private def requireFlat(name: String, op: String): Unit =
+    currentPath(name).map(Paths.get(_)).filter(isPartitionedVersion).foreach { _ =>
+      throw new IllegalStateException(
+        s"catalog: '$name' is partition-laid-out — $op is not supported on " +
+          "partitioned versions; apply it partition-wise, or rewrite with " +
+          "write()/writePartitioned()")
+    }
 
   private def morDeletesTable(name: String): String =
     s"${name.toLowerCase}__deletes"
@@ -780,14 +722,7 @@ final class Catalog(spark: SparkSession, rootDir: String, keepVersions: Int = 2)
       whenMatchedDelete: Option[org.apache.spark.sql.Column] = None)
       : (Long, Long, Long) = {
     import org.apache.spark.sql.functions.{broadcast, col, count, input_file_name, lit}
-    val cur = currentVersion(name).getOrElse(
-      throw new IllegalArgumentException(s"catalog: no such table '$name'"))
-    currentPath(name).map(Paths.get(_)).filter(isPartitionedVersion).foreach { _ =>
-      throw new IllegalStateException(
-        s"catalog: '$name' is partition-laid-out — merge is not supported " +
-          "on partitioned versions; merge partition-wise and rewrite with " +
-          "writePartitioned()")
-    }
+    val rw = new FileRewrite(name, "merge")
     val src = alignedForAppend(name, source).persist()
     try {
       val dupKeys = src.groupBy(col(key)).agg(count(lit(1)).as("n"))
@@ -796,12 +731,7 @@ final class Catalog(spark: SparkSession, rootDir: String, keepVersions: Int = 2)
         s"catalog: merge source has duplicate key '${dupKeys.headOption.map(_.get(0))
           .getOrElse("")}' — a key matched by two source rows has no " +
           "well-defined merge result; dedup the source first")
-      val base = cur.stripPrefix("v_").toLong
-      val rels = versionDataFiles(name, cur)
-      val absToRel = rels.map { r =>
-        tableDir(name).resolve(r).toAbsolutePath.normalize.toString -> r
-      }.toMap
-      val target = readVersionDir(name, cur)
+      val target = rw.rows
       // ONE probe scan: which files hold matched keys (source side broadcast
       // when batch-sized — AQE/stats decide; hint it since |src| ≪ |table|).
       // input_file_name() is captured BEFORE the join: it refuses plans with
@@ -811,13 +741,7 @@ final class Catalog(spark: SparkSession, rootDir: String, keepVersions: Int = 2)
         .groupBy(col("f")).agg(count(lit(1)).as("n"))
         .collect()
       val nMatched = perFile.map(_.getLong(1)).sum
-      val touched = perFile.map { r =>
-        val p = Paths.get(java.net.URI.create(r.getString(0)))
-          .toAbsolutePath.normalize.toString
-        absToRel.getOrElse(p, throw new IllegalStateException(
-          s"catalog: matched file $p is not part of version $cur of '$name'"))
-      }.toSet
-      val untouched = rels.filterNot(touched)
+      val touched = rw.files(perFile.map(_.getString(0)).toSeq)
       // inserts: source keys absent from the table — ONE column-pruned key
       // scan of the target (the matched keys all live in touched files, so
       // the key scan could prune to them; kept whole-table for correctness
@@ -835,8 +759,7 @@ final class Catalog(spark: SparkSession, rootDir: String, keepVersions: Int = 2)
       // values — per TARGET row, so a key duplicated in the target updates
       // (or deletes) every copy, exactly like SQL MERGE
       val survivors: DataFrame = if (touched.isEmpty) inserts else {
-        val touchedRows = spark.read.parquet(
-          touched.toSeq.sorted.map(r => tableDir(name).resolve(r).toString): _*)
+        val touchedRows = rw.read(touched)
         val keepSrc = src.filter(!deletePred)
         val kept = touchedRows.join(broadcast(src.select(col(key))), Seq(key), "left_anti")
           .select(touchedRows.columns.map(col).toIndexedSeq: _*)
@@ -850,8 +773,7 @@ final class Catalog(spark: SparkSession, rootDir: String, keepVersions: Int = 2)
           broadcast(src.filter(deletePred).select(col(key))), Seq(key), "left_semi")
           .count()
       }.getOrElse(0L)
-      writeVersion(name, survivors, Map.empty, expected = Some(base),
-        keepFiles = untouched)
+      rw.commit(survivors, touched)
       (nMatched - nDeleted, nDeleted, nInserted)
     } finally { src.unpersist(); () }
   }
@@ -886,7 +808,7 @@ final class Catalog(spark: SparkSession, rootDir: String, keepVersions: Int = 2)
     * self-contained: file-level [[append]] refuses them (a flat manifest
     * cannot reference nested files) — rewrite, or append partition-wise. */
   def writePartitioned(name: String, df: DataFrame, cols: String*): Unit =
-    writeVersion(name, df, Map.empty, partitionCols = cols)
+    writeVersion(name, df, partitionCols = cols)
 
   private def isPartitionedVersion(versionDir: Path): Boolean =
     Files.isDirectory(versionDir) && listDir(versionDir)

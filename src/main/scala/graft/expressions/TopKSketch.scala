@@ -17,10 +17,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * `TypedImperativeAggregate`: approximate top keys of a group with a
   * FIXED-SIZE buffer (`capacity` counters), composable across partitions.
   *
-  * Why it exists next to [[graft.operators.Skew.heavyHitters]] (exact
-  * groupBy+limit): the exact form shuffles one row per distinct key — at
-  * 100 TB a high-cardinality key column (user id, URL host) makes that
-  * shuffle itself the problem this diagnostic is trying to find. The sketch
+  * Why a sketch rather than an exact groupBy+limit: the exact form
+  * shuffles one row per distinct key — at 100 TB a high-cardinality key
+  * column (user id, URL host) makes that shuffle itself the problem this
+  * diagnostic is trying to find. The sketch
   * keeps `capacity` counters per partition and merges them pairwise
   * (Agarwal et al., "Mergeable Summaries": sum counts, then subtract the
   * (capacity+1)-th largest and drop non-positives), so the full aggregation

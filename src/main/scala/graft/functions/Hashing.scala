@@ -54,14 +54,4 @@ object Hashing {
     * hashing (thread-local digest, no per-call getInstance). */
   def hash64Local(s: String): Long =
     java.lang.Long.parseLong(md5HexLocal(s).substring(0, 15), 16)
-
-  /** Order-dependent polynomial rolling hash over a string-array column
-    * (document fingerprinting that IS word-order sensitive, complementing
-    * the order-insensitive sorted-set md5). Folds (acc*31 + h(t)) mod p with
-    * operands kept small enough to never overflow a long. */
-  def rollingHash(tokens: Column): Column = {
-    val p = 2147483647L // 2^31 - 1
-    aggregate(tokens, lit(0L),
-      (acc, t) => (acc * 31L % p + pmod(hash64(t), lit(p))) % p)
-  }
 }

@@ -73,7 +73,7 @@ object Text {
     s"size(filter($a, x -> array_contains($b, x))) / CAST(size($a) AS DOUBLE)")
 
   /** Order-insensitive content fingerprint: md5 of the sorted distinct
-    * token set. For the order-SENSITIVE variant see [[Hashing.rollingHash]]. */
+    * token set. */
   def setFingerprint(toks: Column): Column =
     md5(concat_ws(" ", array_sort(array_distinct(toks))))
 

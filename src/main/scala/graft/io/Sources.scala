@@ -29,49 +29,6 @@ object Sources {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
-  /** [[csv]] with per-record quarantine instead of COPY's abort-on-error.
-    *
-    * Clean rows come from the NATIVE csv source with `header=true`: that
-    * skips exactly the first physical line of every file — true
-    * IGNOREHEADER 1 semantics, no value matching — so a header whose
-    * case/spacing differs from the spec's field names is still skipped,
-    * and a legitimate data row that happens to equal the header text is
-    * parsed as data.
-    *
-    * Quarantine rows cannot come from the csv source (selecting ONLY its
-    * corrupt column is a forbidden scan — QUERY_ONLY_CORRUPT_RECORD_COLUMN,
-    * same restriction as the json source; see [[jsonlWithQuarantine]]), so
-    * they come from a raw TEXT scan + `from_csv` twin of the parse. The
-    * text scan has no per-file header concept, so header lines are dropped
-    * BY VALUE there — compared TOKEN-WISE (split on ',', each field
-    * trimmed + lowercased), so "id, name" and "ID,Name" both count as the
-    * header instead of surfacing as one phantom corrupt row per file. One
-    * documented edge: a MALFORMED line whose normalized tokens equal the
-    * header's is treated as a header, not quarantined (a well-formed one is
-    * already handled correctly by the clean side). */
-  def csvWithQuarantine(spark: SparkSession, path: String, spec: TableSpec):
-      (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.functions.{col, from_csv, lower, split, transform, trim, typedLit}
-    val ext = spec.schema.add("_corrupt", org.apache.spark.sql.types.StringType)
-    val clean = spark.read
-      .schema(ext)
-      .option("header", "true")
-      .option("delimiter", ",")
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt")
-      .csv(path)
-      .filter(col("_corrupt").isNull)
-      .select(spec.schema.fieldNames.map(col).toIndexedSeq: _*)
-    val headerTokens = typedLit(spec.schema.fieldNames.map(_.trim.toLowerCase).toSeq)
-    val quarantine = spark.read.text(path)
-      .filter(!(transform(split(col("value"), ","), t => lower(trim(t))) === headerTokens))
-      .select(col("value"), from_csv(col("value"), ext, Map(
-        "mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> "_corrupt")).as("r"))
-      .filter(col("r._corrupt").isNotNull)
-      .select(col("value").as("raw_line"))
-    (clean, quarantine)
-  }
-
   /** JSONL (one JSON document per line) with an explicit schema — the
     * de-facto crawl/training-corpus interchange format. Same schema-on-write
     * posture as [[csv]]: no inference pass (an inference scan over 100 TB is

@@ -1,114 +1,39 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Multimodal column plumbing: image/audio/video payloads as opaque `binary`
-  * columns with typed metadata, processed batch-wise with `mapPartitions`
-  * (the Scala equivalent of a pandas `mapInPandas` UDF: one JVM-side batch
-  * iterator per partition, no per-row launch overhead).
+/** Multimodal column plumbing: image/audio payloads as opaque `binary`
+  * columns, processed batch-wise with `mapPartitions` (the Scala equivalent
+  * of a pandas `mapInPandas` UDF: one JVM-side batch iterator per
+  * partition, no per-row launch overhead).
   *
-  * Codec reality (narrower stub boundary than the original plan): the
-  * container-format codecs below are REAL — [[PngCodec]]/[[GifCodec]]
-  * decode and re-encode actual PNG/GIF/BMP/PPM pixels via
-  * `javax.imageio`/byte arithmetic, [[WavCodec]] parses and writes real
-  * RIFF/WAVE sample frames, and the MP3 path walks real MPEG frame
-  * headers. The ONLY stubbed step is ENTROPY-CODED SAMPLE DECODE where the
-  * JDK has no codec (H.264 motion-compensated frames, MP3's MDCT sample
-  * reconstruction): there [[StubDecoder]] produces deterministic
-  * pseudo-features from the raw bytes so the surrounding plumbing —
-  * schema, batching, partition sizing, feature layout — stays real and
-  * tested, and a real decoder (JNI/ffmpeg) drops in by replacing one
-  * function.
+  * Every codec here is REAL and gated: [[PngCodec]]/[[GifCodec]] encode and
+  * decode actual PNG/GIF pixels via `javax.imageio`/byte arithmetic,
+  * [[WavCodec]] parses and writes real RIFF/WAVE sample frames, and
+  * [[Mp3Codec]] synthesizes and walks real MPEG frame headers. Each gate
+  * packs a document's text bytes into a payload, runs a genuine codec
+  * cycle, and reports facts a SQL oracle re-derives from the text alone.
   *
-  * Scale notes: media rows are large (MBs), so [[repartitionForPayloads]]
-  * targets a row-count per partition rather than Spark's default byte-based
-  * splits, keeping peak executor memory = batch × payload bounded. Feature
-  * extraction is embarrassingly parallel; the frame-sample op emits multiple
-  * rows per input (flatMap shape), which Spark handles without skew as long
-  * as payload sizes are bounded.
+  * Scale notes: decoding is embarrassingly parallel — a pure map over the
+  * media scan. [[spread]] widens a narrow input to every core, because one
+  * small parquet file scans as one partition and would serialize the whole
+  * per-row codec loop.
   */
 object Multimodal {
 
-  val featureDim = 8
-
-  /** The stub codec: a real build replaces these with JNI/ffmpeg/etc. Each is
-    * a pure function bytes → value, deterministic for testability. */
-  object StubDecoder {
-    /** Pseudo "embedding": moments of the byte stream per stripe. */
-    def features(payload: Array[Byte]): Array[Float] = {
-      val out = new Array[Float](featureDim)
-      if (payload.isEmpty) return out
-      var i = 0
-      while (i < payload.length) {
-        out(i % featureDim) += (payload(i) & 0xff) / 255.0f
-        i += 1
-      }
-      val stripe = math.max(1, payload.length / featureDim)
-      var j = 0
-      while (j < featureDim) { out(j) /= stripe.toFloat; j += 1 }
-      out
-    }
-
-    /** Pseudo "resize": deterministic subsample of the payload bytes. */
-    def resize(payload: Array[Byte], targetBytes: Int): Array[Byte] = {
-      if (payload.length <= targetBytes) payload
-      else Array.tabulate(targetBytes)(i => payload((i.toLong * payload.length / targetBytes).toInt))
-    }
-
-    /** Pseudo "frame sample": split the payload into n equal frames. */
-    def sampleFrames(payload: Array[Byte], n: Int): Seq[Array[Byte]] = {
-      val size = math.max(1, payload.length / math.max(1, n))
-      payload.grouped(size).take(n).toSeq
-    }
-  }
-
-  /** REAL pixel codec for PNG and JPEG — the entropy-coded image formats
-    * the JDK decodes without external libraries (javax.imageio ships PNG
-    * and JPEG plugins). This narrows the [[StubDecoder]] boundary: PNG and
-    * JPEG payloads get a true decode (dimensions AND pixels); only formats
-    * the container genuinely cannot decode (MP3 samples/H.264) stay stubbed.
-    * 8-bit grayscale PNG is lossless, so encode→decode round-trips byte
-    * values exactly — the property the q_x_png_roundtrip gate checks (JPEG
-    * is lossy by design, so its real decode is spec-verified against
-    * tolerance rather than oracle-gated). */
+  /** REAL pixel codec for PNG — the JDK decodes it without external
+    * libraries (javax.imageio ships a PNG plugin), so payloads get a true
+    * decode (dimensions AND pixels). 8-bit grayscale PNG is lossless, so
+    * encode→decode round-trips byte values exactly — the property the
+    * q_x_png_roundtrip gate checks. */
   object PngCodec {
     // ImageIO's default stream cache is DISK-backed: every encode/decode of
     // an in-memory byte array would create+delete a temp file — per row,
     // inside mapPartitions, under parallel tasks. Keep it on the heap.
     javax.imageio.ImageIO.setUseCache(false)
-
-    def isPng(b: Array[Byte]): Boolean =
-      b != null && b.length >= 8 && (b(0) & 0xff) == 0x89 &&
-        b(1) == 'P' && b(2) == 'N' && b(3) == 'G'
-
-    def isJpeg(b: Array[Byte]): Boolean =
-      b != null && b.length >= 4 && (b(0) & 0xff) == 0xff && (b(1) & 0xff) == 0xd8
-
-    /** Grayscale JPEG encode (lossy — for specs exercising the real JPEG
-      * decode path; quality is the writer default). */
-    def encodeGrayJpeg(bytes: Array[Byte], width: Int = 64): Array[Byte] =
-      encodeGrayAs(bytes, width, "jpg")
-
-    /** Pack raw bytes as rows of an 8-bit grayscale image (zero-padded to
-      * the last row) and encode in `format` — shared by the PNG (lossless,
-      * gate-backed) and JPEG (lossy, spec-backed) encoders. */
-    private def encodeGrayAs(bytes: Array[Byte], width: Int, format: String): Array[Byte] = {
-      val h = math.max(1, (bytes.length + width - 1) / width)
-      val img = new java.awt.image.BufferedImage(
-        width, h, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-      val raster = img.getRaster
-      var i = 0
-      while (i < bytes.length) {
-        raster.setSample(i % width, i / width, 0, bytes(i) & 0xff)
-        i += 1
-      }
-      val bos = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(img, format, bos)
-      bos.toByteArray
-    }
 
     /** Direct spec-valid gray-8 PNG writer (PNG spec §11: IHDR color type
       * 0, filter 0 scanlines, one zlib IDAT, IEND): the JDK's
@@ -153,8 +78,9 @@ object Multimodal {
       bos.toByteArray
     }
 
-    /** Deterministic "image of this payload" used by tests and the
-      * round-trip gate (PNG: lossless). */
+    /** Deterministic "image of this payload" used by the image gates
+      * (PNG: lossless): bytes pack as rows of an 8-bit grayscale image,
+      * zero-padded to the last row. */
     def encodeGray(bytes: Array[Byte], width: Int = 64): Array[Byte] = {
       val h = math.max(1, (bytes.length + width - 1) / width)
       val pix = java.util.Arrays.copyOf(bytes, width * h) // zero-padded rows
@@ -209,40 +135,17 @@ object Multimodal {
       val (w, h) = (img.getWidth, img.getHeight)
       img.getRaster.getSamples(0, 0, w, h, 0, new Array[Int](w * h))
     }
-
-    /** Real pixel features: mean luminance (0..1) of `dim` horizontal
-      * stripes — the drop-in replacement for [[StubDecoder.features]] on
-      * payloads that actually decode. */
-    def features(img: java.awt.image.BufferedImage, dim: Int): Array[Float] = {
-      val px = grayPixels(img)
-      val out = new Array[Float](dim)
-      val counts = new Array[Int](dim)
-      var i = 0
-      while (i < px.length) {
-        val stripe = math.min(dim - 1, i * dim / px.length)
-        out(stripe) += px(i) / 255.0f
-        counts(stripe) += 1
-        i += 1
-      }
-      var j = 0
-      while (j < dim) { if (counts(j) > 0) out(j) /= counts(j); j += 1 }
-      out
-    }
   }
 
-  /** Little/big-endian byte readers shared by every header/codec parser
-    * here (one implementation — a bounds fix must not fork). */
+  /** Little-endian byte readers of the RIFF chunk walk. */
   private def le16(b: Array[Byte], o: Int): Int =
     (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
   private def le32(b: Array[Byte], o: Int): Int =
     (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8) | ((b(o + 2) & 0xff) << 16) | ((b(o + 3) & 0xff) << 24)
-  private def be32(b: Array[Byte], o: Int): Int =
-    ((b(o) & 0xff) << 24) | ((b(o + 1) & 0xff) << 16) | ((b(o + 2) & 0xff) << 8) | (b(o + 3) & 0xff)
 
-  /** REAL multi-frame GIF decode via the JDK reader — the one VIDEO-LIKE
-    * format this container can genuinely decode frame-by-frame, making
-    * [[sampleFrames]]' flatMap shape real (true pixel frames, not byte
-    * splits) for animated GIFs. H.264 remains the stub boundary. */
+  /** REAL multi-frame GIF encode and decode via the JDK writer and reader —
+    * animated GIF is the one video-like format the JDK decodes frame by
+    * frame (gate q_x_gif_frames). */
   object GifCodec {
     def isGif(b: Array[Byte]): Boolean =
       b != null && b.length >= 13 &&
@@ -260,17 +163,9 @@ object Multimodal {
     def newWriter(): javax.imageio.ImageWriter =
       javax.imageio.ImageIO.getImageWritersByFormatName("gif").next()
 
-    /** Every frame of a (possibly animated) GIF; empty for non-GIF or
-      * undecodable payloads — never a partial garbage decode. */
-    def decodeFrames(b: Array[Byte]): Seq[java.awt.image.BufferedImage] = {
-      if (!isGif(b)) return Seq.empty
-      val readers = javax.imageio.ImageIO.getImageReadersByFormatName("gif")
-      if (!readers.hasNext) return Seq.empty
-      val reader = readers.next()
-      try decodeFramesWith(reader, b) finally reader.dispose()
-    }
-
-    /** [[decodeFrames]] against a caller-owned (per-partition) reader. */
+    /** Every frame of a (possibly animated) GIF, read with a caller-owned
+      * (per-partition) reader; empty for non-GIF or undecodable payloads —
+      * never a partial garbage decode. */
     def decodeFramesWith(reader: javax.imageio.ImageReader,
         b: Array[Byte]): Seq[java.awt.image.BufferedImage] = {
       if (!isGif(b)) return Seq.empty
@@ -284,15 +179,8 @@ object Multimodal {
       finally { reader.reset(); iis.close() }
     }
 
-    /** Deterministic animated-GIF encode (frame sequence writer) — used by
-      * specs and the synthetic-media path to produce REAL multi-frame
-      * payloads the decode half then proves itself on. */
-    def encodeFrames(frames: Seq[java.awt.image.BufferedImage]): Array[Byte] = {
-      val writer = newWriter()
-      try encodeFramesWith(writer, frames) finally writer.dispose()
-    }
-
-    /** [[encodeFrames]] against a caller-owned (per-partition) writer. */
+    /** Deterministic animated-GIF encode (frame sequence writer) with a
+      * caller-owned (per-partition) writer. */
     def encodeFramesWith(writer: javax.imageio.ImageWriter,
         frames: Seq[java.awt.image.BufferedImage]): Array[Byte] = {
       val bos = new java.io.ByteArrayOutputStream()
@@ -316,11 +204,8 @@ object Multimodal {
 
   /** REAL WAV codec: canonical-header PCM16 encode plus a chunk-WALKING
     * decode — WAV is uncompressed, so both directions are plain byte
-    * arithmetic with no codec library. This narrows the [[StubDecoder]]
-    * boundary again (after PNG/JPEG): audio gets true sample-domain decode;
-    * only entropy-coded SAMPLE decode (MP3 Huffman+IMDCT,
-    * H.264) remains stubbed — the MP3 frame layer itself is real, see
-    * [[Mp3Codec]]. */
+    * arithmetic with no codec library, and audio gets a true sample-domain
+    * decode. */
   object WavCodec {
     def isWav(b: Array[Byte]): Boolean =
       b != null && b.length >= 44 &&
@@ -386,10 +271,8 @@ object Multimodal {
     * fields, exact frame lengths) carrying an arbitrary payload in the
     * frame bodies; `frameWalk` re-derives frame count, per-frame bitrates
     * and the frame-exact duration by walking every header. This is the
-    * whole metadata layer of the format — only the entropy-coded SAMPLE
-    * decode (Huffman + IMDCT + synthesis filterbank) remains with
-    * [[StubDecoder]], and that boundary is now precisely the codec, not
-    * "MP3". */
+    * whole metadata layer of the format; the entropy-coded SAMPLE decode
+    * (Huffman + IMDCT + synthesis filterbank) is not implemented. */
   object Mp3Codec {
     val SampleRate = 44100
     val SamplesPerFrame = 1152
@@ -399,6 +282,28 @@ object Multimodal {
     private val PayloadPerFrame = 64
 
     private def frameLen(kbps: Int): Int = 144 * kbps * 1000 / SampleRate
+
+    /** MPEG-1 Layer III header tables (bitrate kbps by index; sample rate
+      * by index) — the constants every MP3 tool ships. */
+    private val Mp3Bitrates =
+      Array(0, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320)
+    private val Mp3Rates = Array(44100, 48000, 32000)
+    private def Mp3BitrateAt(idx: Int): Int = Mp3Bitrates(idx)
+    private def Mp3RateAt(idx: Int): Int = Mp3Rates(idx)
+
+    /** MPEG-1 Layer III header test at offset `i` (sync bits + legal
+      * bitrate/sample-rate indices). Returns the frame byte length, or -1. */
+    private def mp3FrameLenAt(b: Array[Byte], i: Int): Int = {
+      if (i + 4 > b.length ||
+          (b(i) & 0xff) != 0xff || (b(i + 1) & 0xe0) != 0xe0) return -1
+      val version = (b(i + 1) >> 3) & 3 // 3 = MPEG-1
+      val layer = (b(i + 1) >> 1) & 3 // 1 = Layer III
+      val brIdx = (b(i + 2) >> 4) & 0xf
+      val srIdx = (b(i + 2) >> 2) & 3
+      val padding = (b(i + 2) >> 1) & 1
+      if (version != 3 || layer != 1 || brIdx < 1 || brIdx > 14 || srIdx >= 3) -1
+      else 144 * Mp3Bitrates(brIdx) * 1000 / Mp3Rates(srIdx) + padding
+    }
 
     /** ceil(len/64) frames, at least one; frame j carries payload slice j
       * zero-padded into a body sized by its cycling bitrate. */
@@ -428,8 +333,8 @@ object Multimodal {
 
     /** Walk every frame header from the stream start (after an ID3v2 tag if
       * present). Exact duration = nFrames·1152/rate — the real number, not
-      * the first-frame CBR estimate [[HeaderProbe.probe]] reports. Returns
-      * None when no valid frame starts the stream. */
+      * a first-frame CBR estimate. Returns None when no valid frame starts
+      * the stream. */
     def frameWalk(b: Array[Byte]): Option[Mp3Stats] = {
       var i = 0
       if (b.length >= 10 && b(0) == 'I' && b(1) == 'D' && b(2) == '3')
@@ -439,188 +344,18 @@ object Multimodal {
       var minK = Int.MaxValue
       var maxK = 0
       var rate = -1
-      while (i + 4 <= b.length && HeaderProbe.mp3FrameLenAt(b, i) > 0) {
-        val kbps = HeaderProbe.Mp3BitrateAt((b(i + 2) >> 4) & 0xf)
-        if (rate < 0) rate = HeaderProbe.Mp3RateAt((b(i + 2) >> 2) & 3)
+      while (i + 4 <= b.length && mp3FrameLenAt(b, i) > 0) {
+        val kbps = Mp3BitrateAt((b(i + 2) >> 4) & 0xf)
+        if (rate < 0) rate = Mp3RateAt((b(i + 2) >> 2) & 3)
         n += 1
         if (kbps < minK) minK = kbps
         if (kbps > maxK) maxK = kbps
-        i += HeaderProbe.mp3FrameLenAt(b, i)
+        i += mp3FrameLenAt(b, i)
       }
       if (n == 0) None
       else Some(Mp3Stats(n, rate,
         n * SamplesPerFrame * 1000L / rate, minK, maxK, minK != maxK))
     }
-  }
-
-  /** REAL header decode for self-describing formats — PNG (IHDR), BMP, WAV
-    * (RIFF) and PPM (P6) are plain byte arithmetic, no codec library needed.
-    * Formats that require an actual codec the JDK lacks (MP3/H.264) stay
-    * with [[StubDecoder]]; this split makes the "stub" boundary honest: the
-    * plumbing AND the parseable metadata path are real, only unsupported
-    * entropy-coded sample decode is not. */
-  object HeaderProbe {
-    final case class MediaMeta(format: String, width: Option[Int], height: Option[Int],
-        sampleRate: Option[Int], durationMs: Option[Int])
-
-    /** JPEG dimensions from the first SOFn marker (plain byte arithmetic —
-      * segments are FF <marker> <len BE16> <payload>; SOF carries
-      * precision(1) height(2) width(2)). DHT/JPG/DAC share the 0xC0 nibble
-      * but are not frame headers. Runs of 0xFF are legal fill between
-      * segments (the marker byte is the first non-FF), and TEM/RSTn/SOI/EOI
-      * are stand-alone — they carry no length word, so reading one there
-      * would desynchronize the whole scan. The scan stops at SOS/EOI:
-      * entropy-coded data follows and SOF always precedes SOS. */
-    private def jpegDims(b: Array[Byte]): Option[(Int, Int)] = {
-      var i = 2
-      while (i + 1 < b.length && (b(i) & 0xff) == 0xff) {
-        var j = i + 1 // skip 0xFF fill bytes to the real marker byte
-        while (j < b.length && (b(j) & 0xff) == 0xff) j += 1
-        if (j >= b.length) return None
-        val marker = b(j) & 0xff
-        if (marker >= 0xc0 && marker <= 0xcf &&
-            marker != 0xc4 && marker != 0xc8 && marker != 0xcc) {
-          if (j + 7 >= b.length) return None
-          val h = ((b(j + 4) & 0xff) << 8) | (b(j + 5) & 0xff)
-          val w = ((b(j + 6) & 0xff) << 8) | (b(j + 7) & 0xff)
-          return Some((w, h))
-        }
-        if (marker == 0xd9 || marker == 0xda) return None // EOI / SOS
-        if (marker == 0x01 || (marker >= 0xd0 && marker <= 0xd8)) i = j + 1
-        else {
-          if (j + 2 >= b.length) return None
-          i = j + 1 + (((b(j + 1) & 0xff) << 8) | (b(j + 2) & 0xff))
-        }
-      }
-      None
-    }
-
-    /** MPEG-1 Layer III header tables (bitrate kbps by index; sample rate
-      * by index) — the constants every MP3 tool ships. */
-    private val Mp3Bitrates =
-      Array(0, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320)
-    private val Mp3Rates = Array(44100, 48000, 32000)
-    private[multimodal] def Mp3BitrateAt(idx: Int): Int = Mp3Bitrates(idx)
-    private[multimodal] def Mp3RateAt(idx: Int): Int = Mp3Rates(idx)
-
-    /** MP3 sample rate + CBR duration estimate from the first valid sync
-      * frame header — 32 bits of documented bit-fields, no entropy decode
-      * (which is exactly why this is NOT stubbed: frame headers are plain
-      * byte arithmetic; only the sample decode needs a codec). Skips an
-      * ID3v2 tag (syncsafe 28-bit size) and false syncs; VBR files get the
-      * first-frame-bitrate estimate, the standard quick probe. */
-    /** False-sync scan bound: a real MP3's first frame header sits at the
-      * audio start (or within ID3 padding slop); arbitrary binary no longer
-      * pays an O(n) byte scan before being rejected. */
-    private val Mp3SyncScanWindow = 8192
-
-    /** MPEG-1 Layer III header test at offset `i` (sync bits + legal
-      * bitrate/sample-rate indices). Returns the frame byte length, or -1. */
-    private[multimodal] def mp3FrameLenAt(b: Array[Byte], i: Int): Int = {
-      if (i + 4 > b.length ||
-          (b(i) & 0xff) != 0xff || (b(i + 1) & 0xe0) != 0xe0) return -1
-      val version = (b(i + 1) >> 3) & 3 // 3 = MPEG-1
-      val layer = (b(i + 1) >> 1) & 3 // 1 = Layer III
-      val brIdx = (b(i + 2) >> 4) & 0xf
-      val srIdx = (b(i + 2) >> 2) & 3
-      val padding = (b(i + 2) >> 1) & 1
-      if (version != 3 || layer != 1 || brIdx < 1 || brIdx > 14 || srIdx >= 3) -1
-      else 144 * Mp3Bitrates(brIdx) * 1000 / Mp3Rates(srIdx) + padding
-    }
-
-    private def mp3Meta(b: Array[Byte]): Option[(Int, Int)] = {
-      var start = 0
-      if (b.length >= 10 && b(0) == 'I' && b(1) == 'D' && b(2) == '3')
-        start = 10 + (((b(6) & 0x7f) << 21) | ((b(7) & 0x7f) << 14) |
-          ((b(8) & 0x7f) << 7) | (b(9) & 0x7f))
-      val limit = math.min(b.length.toLong, start.toLong + Mp3SyncScanWindow).toInt
-      var i = start
-      while (i >= 0 && i + 4 <= limit) {
-        val frameLen = mp3FrameLenAt(b, i)
-        if (frameLen > 0) {
-          // A lone 4-byte pattern is not evidence: require a SECOND valid
-          // sync header exactly one frame later — or, for a single-frame /
-          // truncated-tail payload, that the candidate sits at the audio
-          // start (byte 0 / right after the ID3 tag).
-          val verified =
-            if (i.toLong + frameLen + 4 <= b.length) mp3FrameLenAt(b, i + frameLen) > 0
-            else i == start
-          if (verified) {
-            val kbps = Mp3Bitrates((b(i + 2) >> 4) & 0xf)
-            val durMs = ((b.length - i).toLong * 8L / kbps).toInt
-            return Some((Mp3Rates((b(i + 2) >> 2) & 3), durMs))
-          }
-        }
-        i += 1
-      }
-      None
-    }
-
-    private def isMp3(b: Array[Byte]): Boolean =
-      b != null && b.length >= 4 &&
-        (((b(0) & 0xff) == 0xff && (b(1) & 0xe0) == 0xe0) ||
-          (b.length >= 10 && b(0) == 'I' && b(1) == 'D' && b(2) == '3'))
-
-    def probe(b: Array[Byte]): MediaMeta = {
-      if (b == null) MediaMeta("unknown", None, None, None, None)
-      else if (b.length >= 24 && PngCodec.isPng(b))
-        // signature(8) + IHDR len/type(8), then width/height big-endian
-        MediaMeta("png", Some(be32(b, 16)), Some(be32(b, 20)), None, None)
-      else if (PngCodec.isJpeg(b)) {
-        val dims = jpegDims(b)
-        MediaMeta("jpeg", dims.map(_._1), dims.map(_._2), None, None)
-      }
-      else if (GifCodec.isGif(b))
-        // signature(6) then logical-screen width/height little-endian
-        MediaMeta("gif", Some(le16(b, 6)), Some(le16(b, 8)), None, None)
-      else if (isMp3(b)) mp3Meta(b) match {
-        case Some((rate, dur)) => MediaMeta("mp3", None, None, Some(rate), Some(dur))
-        case None => MediaMeta("unknown", None, None, None, None)
-      }
-      else if (b.length >= 26 && b(0) == 'B' && b(1) == 'M')
-        MediaMeta("bmp", Some(le32(b, 18)), Some(le32(b, 22)), None, None)
-      else if (b.length >= 44 && b.startsWith("RIFF".getBytes) &&
-          new String(b, 8, 4, "US-ASCII") == "WAVE") {
-        val byteRate = le32(b, 28)
-        val dataBytes = b.length - 44 // canonical header; fine for probing
-        MediaMeta("wav", None, None, Some(le32(b, 24)),
-          if (byteRate > 0) Some((dataBytes.toLong * 1000 / byteRate).toInt) else None)
-      } else if (b.length >= 2 && b(0) == 'P' && b(1) == '6') {
-        // "P6\n<w> <h>\n<max>\n" — ASCII ints separated by whitespace
-        val header = new String(b, 0, math.min(b.length, 64), "US-ASCII")
-        val ints = "\\d+".r.findAllIn(header.drop(2)).take(2).toList
-        ints match {
-          case w :: h :: Nil => MediaMeta("ppm", Some(w.toInt), Some(h.toInt), None, None)
-          case _ => MediaMeta("unknown", None, None, None, None)
-        }
-      } else MediaMeta("unknown", None, None, None, None)
-    }
-  }
-
-  /** Sniff payload headers batch-wise: (media_id, format, width, height,
-    * sample_rate, duration_ms) — nulls where the format does not carry the
-    * field or needs a real codec. */
-  def probeMetadata(media: DataFrame): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("format", StringType, nullable = false),
-      StructField("width", IntegerType), StructField("height", IntegerType),
-      StructField("sample_rate", IntegerType), StructField("duration_ms", IntegerType)))
-    val enc = ExpressionEncoder(RowEncoder.encoderFor(outSchema))
-    spread(media.select("media_id", "payload")).mapPartitions { it =>
-      it.map { r =>
-        val m = HeaderProbe.probe(r.getAs[Array[Byte]]("payload"))
-        Row(r.getLong(0), m.format, m.width.orNull, m.height.orNull,
-          m.sampleRate.orNull, m.durationMs.orNull)
-      }
-    }(enc)
-  }
-
-  /** Bound rows-per-partition so batch × payload stays in executor memory
-    * (media rows are MB-scale; byte-based splits under-estimate them). */
-  def repartitionForPayloads(df: DataFrame, rowsPerPartition: Int): DataFrame = {
-    val n = math.max(1, (df.count() / math.max(1, rowsPerPartition)).toInt)
-    df.repartition(n)
   }
 
   /** CPU-bound codec passes need every core: a small corpus (one parquet
@@ -633,30 +368,6 @@ object Multimodal {
   private def spread(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < target) df.repartition(target) else df
-  }
-
-  /** Decode + feature-extract, one batch iterator per partition. Output:
-    * (media_id, kind, n_bytes, features: array<float>). */
-  def extractFeatures(media: DataFrame): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("kind", StringType, nullable = false),
-      StructField("n_bytes", LongType, nullable = false),
-      StructField("features", ArrayType(FloatType, containsNull = false), nullable = false)))
-    val enc = ExpressionEncoder(RowEncoder.encoderFor(outSchema))
-    spread(media.select("media_id", "kind", "payload")).mapPartitions { it =>
-      it.map { r =>
-        val bytes = r.getAs[Array[Byte]]("payload")
-        // PNG, JPEG and GIF payloads get REAL pixel features (JDK decode;
-        // GIF: first frame); everything else falls back to the declared stub.
-        val feats =
-          if (PngCodec.isPng(bytes) || PngCodec.isJpeg(bytes) || GifCodec.isGif(bytes))
-            PngCodec.decode(bytes).map(PngCodec.features(_, featureDim))
-              .getOrElse(StubDecoder.features(bytes))
-          else StubDecoder.features(bytes)
-        Row(r.getLong(0), r.getString(1), bytes.length.toLong, feats.toSeq)
-      }
-    }(enc)
   }
 
   /** PNG round-trip probe over a text corpus: each document's UTF-8 bytes
@@ -790,8 +501,8 @@ object Multimodal {
       }(enc)
   }
 
-  /** Sample-domain audio features over a media frame — the audio analogue
-    * of [[extractFeatures]]'s pixel path: WAV payloads get a REAL decode
+  /** Sample-domain audio features over a media frame: WAV payloads get a
+    * REAL decode
     * ([[WavCodec.decodePcm16]]) and per-payload statistics; non-WAV rows
     * keep their id with NULL features (the honest "needs a codec we don't
     * have" marker, not a fake number). All features are deterministic
@@ -1017,65 +728,4 @@ object Multimodal {
         }
       }(enc)
   }
-
-  /** Payload "resize" (image downscale stand-in): binary → bounded binary,
-    * batch-wise per partition; metadata passes through. */
-  def resizePayloads(media: DataFrame, targetBytes: Int): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("kind", StringType, nullable = false),
-      StructField("payload", BinaryType, nullable = false),
-      StructField("n_bytes_in", LongType, nullable = false),
-      StructField("n_bytes_out", LongType, nullable = false)))
-    val enc = ExpressionEncoder(RowEncoder.encoderFor(outSchema))
-    spread(media.select("media_id", "kind", "payload")).mapPartitions { it =>
-      it.map { r =>
-        val bytes = r.getAs[Array[Byte]]("payload")
-        val out = StubDecoder.resize(bytes, targetBytes)
-        Row(r.getLong(0), r.getString(1), out, bytes.length.toLong, out.length.toLong)
-      }
-    }(enc)
-  }
-
-  /** Frame sampling (video → n frame rows each): flatMap shape. Animated
-    * GIFs get REAL frames — n evenly-spaced decoded images, each shipped
-    * as a standalone lossless PNG payload; other formats fall back to the
-    * declared stub byte-split (H.264 etc. need a codec this container
-    * lacks). */
-  def sampleFrames(media: DataFrame, nFrames: Int): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("frame_no", IntegerType, nullable = false),
-      StructField("frame", BinaryType, nullable = false)))
-    val enc = ExpressionEncoder(RowEncoder.encoderFor(outSchema))
-    spread(media.select("media_id", "payload")).mapPartitions { it =>
-      it.flatMap { r =>
-        val bytes = r.getAs[Array[Byte]]("payload")
-        val gifFrames =
-          if (GifCodec.isGif(bytes)) GifCodec.decodeFrames(bytes) else Seq.empty
-        if (gifFrames.nonEmpty) {
-          val n = math.min(nFrames, gifFrames.size)
-          (0 until n).map { i =>
-            Row(r.getLong(0), i,
-              PngCodec.encodePng(gifFrames(i * gifFrames.size / n)))
-          }
-        } else StubDecoder.sampleFrames(bytes, nFrames).zipWithIndex.map {
-          case (f, i) => Row(r.getLong(0), i, f)
-        }
-      }
-    }(enc)
-  }
-
-  /** Deterministic synthetic media table (documents' text bytes as payload)
-    * for tests and demos — real pipelines read actual media files here. */
-  def syntheticMedia(spark: SparkSession, documentsDir: String): DataFrame =
-    spark.read.parquet(documentsDir)
-      .select(
-        col("doc_id").as("media_id"),
-        when(col("doc_id") % 3 === 0, "image")
-          .when(col("doc_id") % 3 === 1, "audio").otherwise("video").as("kind"),
-        col("text").cast("binary").as("payload"),
-        (col("doc_id") % 1920).cast("int").as("width"),
-        (col("doc_id") % 1080).cast("int").as("height"),
-        (col("n_chars") * 10).cast("int").as("duration_ms"))
 }

@@ -97,12 +97,6 @@ object Anomaly {
         sum(col(valueCol)).as("s"),
         sum(dec(col(valueCol)) * col(valueCol)).as("sq"))
 
-  /** Merge stats frames from disjoint batches of the same series. */
-  def mergeStats(statFrames: DataFrame*): DataFrame =
-    statFrames.reduce(_ unionByName _)
-      .groupBy(statFrames.head.columns.filterNot(Set("n", "s", "sq")).map(col): _*)
-      .agg(sum(col("n")).as("n"), sum(col("s")).as("s"), sum(col("sq")).as("sq"))
-
   /** Fitted robust statistics (med, mad) per key — the model table for
     * [[flagAgainstRobustStats]]. UNLIKE the raw moments of [[stats]], exact
     * medians are NOT mergeable across batches: refreshing the fit needs the

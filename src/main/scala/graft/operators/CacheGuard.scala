@@ -18,6 +18,12 @@ import org.apache.spark.storage.StorageLevel
   * Registration holds a strong reference until release, which is the
   * point: the frame must stay listed even after the caller drops the plan.
   * Frames a function unpersists itself (try/finally loops) do NOT register.
+  *
+  * One cache rule, owned by the creator ([[persistIfAbsent]]): a plan is
+  * persisted only if it is not cached already, and only the call that
+  * persisted it owns the entry. So a second build of the same plan neither
+  * re-persists nor re-registers it, and [[releaseAll]] never drops a
+  * session-shared frame that `Q.cached` persisted first.
   */
 object CacheGuard {
   private val tracked =
@@ -51,11 +57,18 @@ object CacheGuard {
     }
   }
 
+  /** Persist `df` at `lvl` unless its plan is already cached. True when
+    * this call persisted it: the caller then owns the cache entry. */
+  private[graft] def persistIfAbsent(df: DataFrame,
+      lvl: StorageLevel = StorageLevel.MEMORY_AND_DISK): Boolean =
+    df.storageLevel == StorageLevel.NONE && { df.persist(lvl); true }
+
   implicit class PersistTrackedOps(private val df: DataFrame) extends AnyVal {
-    /** `persist(lvl)` + register with [[CacheGuard]] — for frames the
-      * returned plan reads but the function cannot unpersist. */
+    /** [[persistIfAbsent]] + register with [[CacheGuard]] when this call
+      * persisted — for frames the returned plan reads but the function
+      * cannot unpersist. */
     def persistTracked(
         lvl: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame =
-      track(df.persist(lvl))
+      if (persistIfAbsent(df, lvl)) track(df) else df
   }
 }

@@ -377,11 +377,6 @@ object KMeans {
           .as("sil"))
   }
 
-  /** fit + assign in one call (the q_x_kmeans gate surface). */
-  def fitAssign(emb: DataFrame, k: Int = 8, iters: Int = 2,
-      idCol: String = "vec_id", embCol: String = "embedding"): DataFrame =
-    assign(emb, fit(emb, k, iters, idCol, embCol), idCol, embCol)
-
   /** Cluster-balanced selection — keep the `quota` most PROTOTYPICAL rows
     * of every cluster (smallest exact squared distance to the assigned
     * centroid, ties by id): the diversity-preserving curation step between

@@ -109,19 +109,14 @@ object NaiveBayes {
           + coalesce(col("delta_micro"), lit(0L))).as("score_micro"))
   }
 
-  /** Top-1 prediction per document (deterministic: score desc, label asc).
-    * The argmax is a HASH AGGREGATE over a (−score, label) struct min —
-    * scores are exact integers so the negation is lossless and the struct
-    * ordering reproduces (score desc, label asc) without the sort a
-    * row_number window would pay per doc group. */
-  def classify(docs: DataFrame, model: NbModel,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    classifyFromScores(scores(docs, model, idCol, textCol))
-
-  /** [[classify]] over a precomputed (doc_id, label, score_micro) frame —
-    * the shared-lineage form: one persisted [[scores]] run can feed the
-    * classify/confusion/margin/AUC/PR gates without re-deriving the
-    * token explode per consumer. */
+  /** Top-1 prediction per document (deterministic: score desc, label asc)
+    * over a (doc_id, label, score_micro) frame from [[scores]] — one
+    * persisted scores run feeds the classify/confusion/margin/AUC/PR gates
+    * without re-deriving the token explode per consumer. The argmax is a
+    * HASH AGGREGATE over a (−score, label) struct min — scores are exact
+    * integers so the negation is lossless and the struct ordering
+    * reproduces (score desc, label asc) without the sort a row_number
+    * window would pay per doc group. */
   def classifyFromScores(scoreFrame: DataFrame): DataFrame =
     scoreFrame
       .groupBy(col("doc_id"))
@@ -141,18 +136,10 @@ object NaiveBayes {
     * unmeasurable and excluded. Counts exact; accuracy is ONE IEEE
     * division per bin. Output is bin-cardinality-sized.
     *
-    * Scale shape: one window over the (doc, K-class) score frame (same
-    * frame [[classify]] aggregates), then a bin-keyed count — nothing
+    * Inputs: a [[scores]] frame and a (doc_id, gold) frame. Scale shape:
+    * one window over the (doc, K-class) score frame (the frame
+    * [[classifyFromScores]] aggregates), then a bin-keyed count — nothing
     * beyond [[scores]]' existing shuffles plus one K-bounded window. */
-  def marginBins(docs: DataFrame, model: NbModel, goldCol: String,
-      idCol: String = "doc_id", textCol: String = "text",
-      binMicro: Long = 200000L, maxBin: Long = 10L): DataFrame =
-    marginBinsFromScores(scores(docs, model, idCol, textCol),
-      docs.select(col(idCol).as("doc_id"), col(goldCol).as("gold")),
-      binMicro, maxBin)
-
-  /** [[marginBins]] over a precomputed score frame plus a (doc_id, gold)
-    * frame — see [[classifyFromScores]] for the shared-lineage contract. */
   def marginBinsFromScores(scoreFrame: DataFrame, gold: DataFrame,
       binMicro: Long = 200000L, maxBin: Long = 10L): DataFrame = {
     require(binMicro > 0 && maxBin >= 0)
@@ -174,12 +161,13 @@ object NaiveBayes {
         col("n_correct").cast("double") / col("n_docs"))
   }
 
-  /** Per-class precision / recall / F1 from a [[confusion]] matrix — the
-    * standard classifier-eval report. All counts stay exact integers; each
-    * metric is ONE IEEE division (F1 as 2·tp/(n_gold+n_pred), never the
-    * p·r composition — one rounding, cross-engine exact). Classes that are
-    * gold-only or predicted-only still get a row (full join); a zero
-    * denominator yields NULL. K-bounded output. */
+  /** Per-class precision / recall / F1 from a [[confusionFromScores]]
+    * matrix — the standard classifier-eval report. All counts stay exact
+    * integers; each metric is ONE IEEE division (F1 as
+    * 2·tp/(n_gold+n_pred), never the p·r composition — one rounding,
+    * cross-engine exact). Classes that are gold-only or predicted-only
+    * still get a row (full join); a zero denominator yields NULL.
+    * K-bounded output. */
   def metrics(conf: DataFrame): DataFrame = {
     val byGold = conf.groupBy(col("gold").as("label")).agg(sum("n_docs").as("n_gold"))
     val byPred = conf.groupBy(col("predicted").as("label")).agg(sum("n_docs").as("n_pred"))
@@ -229,15 +217,9 @@ object NaiveBayes {
           .as("kappa"))
   }
 
-  /** Confusion matrix of [[classify]] against a gold label column — the
-    * classifier-eval surface (per-(gold, predicted) counts, K²-bounded). */
-  def confusion(docs: DataFrame, model: NbModel, goldCol: String,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    confusionFromScores(scores(docs, model, idCol, textCol),
-      docs.select(col(idCol).as("doc_id"), col(goldCol).as("gold")))
-
-  /** [[confusion]] over a precomputed score frame plus a (doc_id, gold)
-    * frame — see [[classifyFromScores]] for the shared-lineage contract. */
+  /** Confusion matrix of [[classifyFromScores]] against a (doc_id, gold)
+    * frame — the classifier-eval surface (per-(gold, predicted) counts,
+    * K²-bounded). */
   def confusionFromScores(scoreFrame: DataFrame, gold: DataFrame): DataFrame =
     gold.join(classifyFromScores(scoreFrame), Seq("doc_id"))
       .groupBy("gold", "predicted").agg(count(lit(1)).as("n_docs"))

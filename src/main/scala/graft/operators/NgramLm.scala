@@ -25,9 +25,9 @@ import CacheGuard.PersistTrackedOps
   * final IEEE division (deterministic). The only cross-engine hazard left is
   * a libm `ln` disagreeing in the last ulp EXACTLY at a 0.5e-6 rounding
   * boundary — probability ~1e-10 per distinct (num,den) pair, i.e. none in
-  * practice. (Unquantized float scores are what keeps
-  * [[TextIndex.searchBM25]] off the oracle gate; quantizing at the source is
-  * what lets this family be hash-exact.)
+  * practice. (Unquantized float scores cannot pass a hash-exact oracle
+  * gate; quantizing at the source is what lets this family be hash-exact,
+  * as [[TextIndex.searchBM25Micro]] does for BM25.)
   *
   * == 100 TB shape ==
   * Training is one word-count-shaped aggregate over the reference slice

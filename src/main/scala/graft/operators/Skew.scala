@@ -29,28 +29,6 @@ object Skew {
     * (avoids rand(), which breaks retry/replay determinism at scale). */
   private def spark_hash(cols: Column*): Column = abs(hash(cols: _*))
 
-  /** Top-N heavy-hitter keys with counts — the diagnostic used to decide
-    * whether a join needs salting and with how many salts. This is a full
-    * groupBy+count over `df` (the shuffle is map-side combined to #keys,
-    * but the SCAN is the whole frame): pass `sampleMod > 1` to estimate
-    * from a deterministic 1-in-sampleMod row sample instead — per-key
-    * counts scale linearly, so reported counts are sampled × sampleMod and
-    * the argmax of a genuinely hot key is stable. The sample is keyed on a
-    * full-row hash (rand() would break retry/replay determinism); fully
-    * identical duplicate rows therefore sample together, which can lump a
-    * hot key of REPEATED rows into 0 or sampleMod× — acceptable for a
-    * salting heuristic, not for an exact census. */
-  def heavyHitters(df: DataFrame, key: String, topN: Int = 20,
-      sampleMod: Int = 1): DataFrame = {
-    require(sampleMod >= 1)
-    val base = if (sampleMod == 1) df
-      else df.filter(pmod(spark_hash(df.columns.toIndexedSeq.map(col): _*),
-        lit(sampleMod)) === 0)
-    base.groupBy(col(key))
-      .agg((count(lit(1)) * sampleMod).as("n"))
-      .orderBy(col("n").desc, col(key)).limit(topN)
-  }
-
   /** Count–min sketch of `key` occurrence counts: `depth` independent hash
     * rows × 2^widthBits buckets, counts by portable md5 hashing
     * (rerun/engine/partitioning stable, unlike native `hash()`). The
@@ -60,8 +38,7 @@ object Skew {
     * portability tax and was the measured hot path. The frequency sketch
     * for streams and merges: sketches of shards ADD cell-wise (counts are
     * sums), so a 100 TB corpus sketches per-partition and merges
-    * depth·width integers — the fixed-size complement of
-    * [[heavyHitters]]' exact scan. */
+    * depth·width integers, never a key-cardinality shuffle. */
   def cmsSketch(df: DataFrame, key: String, depth: Int = 4,
       widthBits: Int = 10): DataFrame = {
     val width = 1L << widthBits

@@ -15,8 +15,8 @@ import CacheGuard.PersistTrackedOps
   *    the batch analogue of a search engine's posting-list seek.
   *  - [[docFrequencies]] / [[docLengths]] are one hash-agg each, k-row /
   *    doc-row outputs.
-  *  - [[searchWeighted]] / [[searchBM25]] touch ONLY the postings of the
-  *    query's terms (a filter on the index's sort key — never a corpus
+  *  - [[searchWeighted]] / [[searchBM25Micro]] touch ONLY the postings of
+  *    the query's terms (a filter on the index's sort key — never a corpus
   *    scan), then one small hash-agg by doc and a top-k. Query cost scales
   *    with the matched postings, not the corpus.
   *
@@ -25,8 +25,9 @@ import CacheGuard.PersistTrackedOps
   *    weights (`weightScale div df`), so scores are exact BIGINTs — the
   *    cross-engine-reproducible gate form (doubles from `ln` differ across
   *    libms in the last ulp; integer division does not).
-  *  - [[searchBM25]]: the real Okapi BM25 (k1/b, log-damped idf) for ranking
-  *    quality, spec-verified in-JVM against an independent recomputation.
+  *  - [[searchBM25Micro]]: Okapi BM25 (k1/b, log-damped idf) with each
+  *    term contribution rounded to integer micro units, so the per-doc sum
+  *    is an exact BIGINT (gate q_x_bm25_exact).
   */
 object TextIndex {
 
@@ -233,9 +234,9 @@ object TextIndex {
     // document frequency of a term = row count of its own postings, so the
     // QUERY terms' dfs come from the already-filtered slice — on a
     // term-sorted stored index both derivations prune to the same files.
-    // Not persisted (see searchBM25): the result is lazy, so an in-call
-    // persist would live for the session and leak across repeated searches;
-    // the double-reference costs one extra filtered postings scan.
+    // Not persisted: the result is lazy, so an in-call persist would live
+    // for the session and leak across repeated searches; the
+    // double-reference costs one extra filtered postings scan.
     val matched = post.filter(col("term").isin(terms: _*))
     val dfs = matched.groupBy("term").agg(count(lit(1)).as("df"))
     matched
@@ -314,56 +315,21 @@ object TextIndex {
   }
 
   /** Okapi BM25 top-`k`: idf(t) = ln(1 + (N - df + 0.5)/(df + 0.5)),
-    * tfNorm = tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl)). One filtered
-    * postings scan + two broadcast-sized joins (term stats, doc lengths) +
-    * one hash-agg + a global [[TopK]]. */
-  def searchBM25(post: DataFrame, queryTerms: Seq[String], k: Int,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    // lens is referenced twice (the (N, avgdl) stats probe here and the
-    // per-doc normalizer join in the returned plan). Deliberately NOT
-    // persisted: the returned frame is lazy, so an in-call persist could
-    // never be unpersisted without defeating itself, and repeated searches
-    // would accumulate cached RDDs for the session's lifetime. Cost of the
-    // re-walk is one extra aggregate over the postings table per search.
-    val lens = docLengths(post)
-    val stats = lens.agg(count(lit(1)).as("n"), avg(col("dl")).as("avgdl")).head()
-    // empty corpus (e.g. a postings table bootstrapped before any doc
-    // arrived): avg(dl) is null — return zero hits with the right schema
-    // instead of an NPE, matching searchWeighted's graceful degradation
-    if (stats.isNullAt(1))
-      return post.select(col("doc_id")).limit(0)
-        .withColumn("n_terms", lit(0L)).withColumn("score", lit(0.0))
-        .withColumn("rank", lit(0L))
-    val n = stats.getLong(0)
-    val avgdl = stats.getDouble(1)
-    val terms = queryTerms.distinct
-    // query-term dfs from the filtered slice (see searchWeighted); same
-    // no-persist policy as lens — the double-reference is a filtered
-    // postings scan ×2, not worth a session-lifetime cache entry
-    val matched = post.filter(col("term").isin(terms: _*))
-    val dfs = matched.groupBy("term").agg(count(lit(1)).as("df"))
-    val idf = log(lit(1.0) + (lit(n.toDouble) - col("df") + 0.5) / (col("df") + 0.5))
-    val tfNorm = (col("tf") * (k1 + 1)) /
-      (col("tf") + lit(k1) * (lit(1 - b) + lit(b) * col("dl") / avgdl))
-    TopK.perGroup(matched
-        .join(dfs, "term")
-        .join(lens, "doc_id")
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_terms"), sum(idf * tfNorm).as("score")),
-      Nil, Seq(col("score").desc, col("doc_id")), k)
-  }
-
-  /** [[searchBM25]] with the per-(term,doc) contribution QUANTIZED to an
-    * integer micro score: contrib = round(idf·tfNorm·1e6). Everything
-    * feeding the round is either an exact integer (tf, df, dl, N) or one
-    * deterministic IEEE chain over them (avgdl = Σdl/N is a single exact
-    * division; +,·,/ are bit-deterministic cross-engine — only libm `ln`
-    * carries the usual negligible last-ulp-at-boundary caveat of the
-    * micro-nat contract, see [[NgramLm]]). The per-doc score is then an
-    * exact BIGINT sum — order-independent — so unlike [[searchBM25]]'s
-    * float sum this ranking IS hash-exact against a SQL oracle. At 1e-6
-    * granularity the ranking is indistinguishable from the float form for
-    * any practical score range (BM25 scores live in [0, ~30]). */
+    * tfNorm = tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl)), with the
+    * per-(term,doc) contribution QUANTIZED to an integer micro score:
+    * contrib = round(idf·tfNorm·1e6). One filtered postings scan + two
+    * broadcast-sized joins (term stats, doc lengths) + one hash-agg + a
+    * global [[TopK]]. Everything feeding the round is either an exact
+    * integer (tf, df, dl, N) or one deterministic IEEE chain over them
+    * (avgdl = Σdl/N is a single exact division; +,·,/ are
+    * bit-deterministic cross-engine — only libm `ln` carries the usual
+    * negligible last-ulp-at-boundary caveat of the micro-nat contract, see
+    * [[NgramLm]]). The per-doc score is then an exact BIGINT sum —
+    * order-independent — so unlike a float sum this ranking IS hash-exact
+    * against a SQL oracle. At 1e-6 granularity the ranking is
+    * indistinguishable from the float form for any practical score range
+    * (BM25 scores live in [0, ~30]). An empty corpus (avg(dl) null)
+    * returns zero hits with the same schema. */
   def searchBM25Micro(post: DataFrame, queryTerms: Seq[String], k: Int,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     // Persisted because it feeds BOTH the eager stats action and the final

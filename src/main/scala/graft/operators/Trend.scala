@@ -19,8 +19,7 @@ import CacheGuard.PersistTrackedOps
   *
   * Scale shape: both are single-shuffle window/group ops keyed by the entity
   * (partitionBy user). No state beyond the frame; at 100 TB this is one
-  * hash-partitioned sort per key group — the same silhouette as
-  * [[graft.streaming.EventStream]] sessionization, and AQE handles hot keys.
+  * hash-partitioned sort per key group, and AQE handles hot keys.
   */
 object Trend {
 

@@ -1,11 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Z-order (Morton) clustering: interleave the bits of two dimension columns
   * so that sorting by ONE key co-locates rows that are close in BOTH
-  * dimensions. Written through `Catalog.writeSorted(..., "zval")`, parquet
+  * dimensions. Written sorted on the z-value (`Catalog.writeSorted(name,
+  * df.withColumn("zval", zValue(x, y)), files, "zval")`), parquet
   * file-level min/max stats then prune 2-D box predicates (date range ×
   * key range) down to a few files — the multi-dimensional generalization of
   * the single-column sort the catalog already exploits, and the standard
@@ -15,8 +16,7 @@ import org.apache.spark.sql.functions._
   * bit-spreading network), pure integer ops inside whole-stage codegen, and
   * portable: the identical `<< & |` arithmetic runs on any SQL engine, so
   * z-values are cross-engine exact. Inputs must be non-negative and fit in
-  * 31 bits — pre-scale real columns onto that domain ([[toOrdinal]] helps
-  * for doubles/dates).
+  * 31 bits — pre-scale real columns onto that domain.
   */
 object ZOrder {
 
@@ -35,19 +35,4 @@ object ZOrder {
     * x occupies even bits, y odd bits. */
   def zValue(x: Column, y: Column): Column =
     spread(x.cast("long")).bitwiseOR(shiftleft(spread(y.cast("long")), 1))
-
-  /** Map an arbitrary numeric column onto the integer grid zValue needs:
-    * `floor((c - min) / width)` — exact IEEE arithmetic, engine-portable.
-    * Callers pick (min, width) from domain knowledge or a stats probe. */
-  def toOrdinal(c: Column, min: Double, width: Double): Column =
-    floor((c - min) / width).cast("long")
-
-  /** The frame with a `zval` column, sorted by it — ready for a partitioned
-    * write (`Catalog.writeSorted(name, ZOrder.cluster(df, x, y), files, "zval")`).
-    * repartitionByRange puts disjoint z-ranges in disjoint files, which is
-    * what makes the parquet min/max stats selective. */
-  def cluster(df: DataFrame, x: Column, y: Column, files: Int = 32): DataFrame =
-    df.withColumn("zval", zValue(x, y))
-      .repartitionByRange(files, col("zval"))
-      .sortWithinPartitions(col("zval"))
 }

@@ -13,9 +13,9 @@ import org.apache.spark.sql.functions._
   *
   * == 100 TB shape ==
   * Every ROW-LEVEL expectation in a suite is evaluated in ONE scan — a
-  * single aggregate of conditional counts (the [[Validator.nullCounts]]
-  * single-pass device), unpivoted driver-side from one 1-row result; the
-  * scan prunes to exactly the referenced columns. `unique` is one
+  * single aggregate of conditional counts (the single-pass device of
+  * [[Validator]]'s C1 aggregate), unpivoted driver-side from one 1-row
+  * result; the scan prunes to exactly the referenced columns. `unique` is one
   * key-grouped aggregate; `foreignKey` is one left-anti join (broadcast
   * when the parent is dim-sized). Nothing is collected beyond the 1-row
   * summary per non-row-local constraint.

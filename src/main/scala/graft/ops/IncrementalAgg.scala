@@ -21,8 +21,7 @@ import graft.catalog.Catalog
   * readers never see a half-merged table.
   *
   * Exactly-once is the CALLER's contract (same as `Catalog.append`): a
-  * replayed batch double-counts. Streaming ingestion should route through
-  * `Catalog.appendStreamBatch`-style batch-id dedup before refreshing.
+  * replayed batch double-counts, so refresh each batch once.
   */
 object IncrementalAgg {
 
@@ -30,27 +29,15 @@ object IncrementalAgg {
     * `<c>_sum` per sum column. Sums stay BIGINT (exact, portable);
     * pre-scale monetary doubles to integer cents upstream. */
   def refresh(cat: Catalog, table: String, batch: DataFrame,
-      keys: Seq[String], sumCols: Seq[String]): Unit =
-    cat.write(table, merged(cat, table, batch, keys, sumCols))
-
-  /** The streaming form — `foreachBatch { (b, id) => refreshStreamBatch(...,
-    * id, ...) }`: Structured Streaming's foreachBatch is at-least-once, so
-    * the refresh goes through [[Catalog.writeStreamBatch]]'s replay guard —
-    * a redelivered micro-batch returns false and merges NOTHING, closing
-    * the double-count hole the batch API leaves to its caller. */
-  def refreshStreamBatch(cat: Catalog, table: String, batch: DataFrame,
-      batchId: Long, keys: Seq[String], sumCols: Seq[String]): Boolean =
-    cat.writeStreamBatch(table, merged(cat, table, batch, keys, sumCols), batchId)
-
-  private def merged(cat: Catalog, table: String, batch: DataFrame,
-      keys: Seq[String], sumCols: Seq[String]): DataFrame = {
+      keys: Seq[String], sumCols: Seq[String]): Unit = {
     val partial = batch.groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("n_rows"),
         sumCols.map(c => sum(col(c)).cast("long").as(s"${c}_sum")): _*)
-    if (!cat.exists(table)) partial
-    else cat.read(table).unionByName(partial)
-      .groupBy(keys.map(col): _*)
-      .agg(sum(col("n_rows")).cast("long").as("n_rows"),
-        sumCols.map(c => sum(col(s"${c}_sum")).cast("long").as(s"${c}_sum")): _*)
+    cat.write(table,
+      if (!cat.exists(table)) partial
+      else cat.read(table).unionByName(partial)
+        .groupBy(keys.map(col): _*)
+        .agg(sum(col("n_rows")).cast("long").as("n_rows"),
+          sumCols.map(c => sum(col(s"${c}_sum")).cast("long").as(s"${c}_sum")): _*))
   }
 }

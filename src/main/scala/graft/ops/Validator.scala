@@ -81,15 +81,6 @@ object Validator {
         StructField("n_distinct", LongType))))
   }
 
-  /** Single-pass null counts for `cols` (A1). One row out, no shuffle. */
-  def nullCounts(df: DataFrame, cols: Seq[String]): Map[String, Long] = {
-    if (cols.isEmpty) return Map.empty
-    val aggs: Seq[Column] =
-      count(lit(1)).as("__rows") +: cols.map(c => count(when(col(c).isNull, 1)).as(c))
-    val row: Row = df.select(aggs: _*).head()
-    cols.zipWithIndex.map { case (c, i) => c -> row.getLong(i + 1) }.toMap
-  }
-
   /** A2: distinct PK values that occur more than once. */
   def duplicateKeys(df: DataFrame, pk: Seq[String]): DataFrame =
     df.groupBy(pk.map(col): _*).count().filter(col("count") > 1)

@@ -468,12 +468,9 @@ object EventQueries {
       Some(toleranceOracleSql)),
 
     // Purchase attribution: every (purchase, click) pair where the click is
-    // within the hour before the purchase — the BATCH twin of the
-    // stream-stream interval join (graft.streaming.EventStream
-    // .purchasesWithRecentClicks), so the watermarked streaming semantics
-    // have an oracle-checked row. Scale shape: one equi-join shuffle on
-    // user_id with the time interval as a residual predicate (never a range
-    // cross join).
+    // within the hour before the purchase. Scale shape: one equi-join
+    // shuffle on user_id with the time interval as a residual predicate
+    // (never a range cross join).
     QueryDef("q_x_attribution",
       (s, d) => {
         val ev = events(s, d)

@@ -73,12 +73,13 @@ object Q {
       _ => java.nio.file.Files.createTempDirectory(prefix).toString)
   }
 
-  /** Persist a shared, cached-per-session frame unless it is still cached:
-    * Bench `clearCache()`s between queries, so each access re-persists,
-    * and persisting an already cached plan only logs CacheManager's
-    * "already cached" warning. Returns `df`. */
+  /** Persist a shared, cached-per-session frame unless it is still cached
+    * ([[graft.operators.CacheGuard.persistIfAbsent]]): Bench
+    * `clearCache()`s between queries, so each access re-persists. The frame
+    * is not registered with CacheGuard, so `releaseAll` leaves it cached.
+    * Returns `df`. */
   def cached(df: DataFrame): DataFrame = {
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) df.persist()
+    graft.operators.CacheGuard.persistIfAbsent(df)
     df
   }
 

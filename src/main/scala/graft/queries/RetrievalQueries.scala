@@ -413,11 +413,9 @@ object RetrievalQueries {
     // hash-exact gate form of Okapi BM25: idf's ln is quantized to an
     // integer at the one point a transcendental enters, the per-doc score
     // becomes an exact BIGINT sum, and the whole top-10 IS oracle-checked.
-    // The float-scoring TextIndex.searchBM25 remains API surface (ranking
-    // spec-pinned in-JVM by TextIndexSpec) but is deliberately NOT a gate
-    // query: libm ln and float summation order differ across engines in
-    // the last ulp, which a hash compare cannot tolerate — this quantized
-    // twin supersedes the rows-only row the gate carried through round 7.
+    // A float-summed BM25 cannot be a gate query: libm ln and float
+    // summation order differ across engines in the last ulp, which a hash
+    // compare cannot tolerate.
     QueryDef("q_x_bm25_exact",
       (s, d) => graft.operators.TextIndex.searchBM25Micro(
         sharedPostings(s, d), searchTerms, k = 10, k1 = 1.2, b = 0.75),

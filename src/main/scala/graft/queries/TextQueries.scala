@@ -1869,8 +1869,8 @@ object TextQueries {
                FROM pk""")),
 
     // Multimodal plumbing: opaque binary payload column + typed metadata.
-    // The real decode path (graft.multimodal) is a mapPartitions stub; this
-    // gate query proves the binary-column schema/arithmetic round-trips.
+    // This gate proves the binary-column schema/arithmetic round-trips; the
+    // codec cycles of graft.multimodal have their own gates below.
     QueryDef("q_x_binary_meta",
       (s, d) => t(s, d, "documents").select(
         col("doc_id"),

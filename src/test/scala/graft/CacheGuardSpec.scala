@@ -38,4 +38,21 @@ class CacheGuardSpec extends SparkSpec {
     assert(postingsCached, "the registered postings must stay cached")
     CacheGuard.releaseAll(spark)
   }
+
+  test("persistTracked registers a plan once and never a frame it did not persist") {
+    import CacheGuard.PersistTrackedOps
+    CacheGuard.releaseAll(spark)
+    def evens = spark.range(10).toDF("id").filter($"id" % 2 === 0)
+    val first = evens.persistTracked()
+    evens.persistTracked() // same plan, built again: no re-persist, no re-register
+    assert(CacheGuard.trackedCount(spark) == 1)
+    // a session-shared frame persisted by its owner first stays the owner's
+    val shared = graft.queries.Q.cached(spark.range(7).toDF("id"))
+    spark.range(7).toDF("id").persistTracked()
+    assert(CacheGuard.trackedCount(spark) == 1)
+    assert(CacheGuard.releaseAll(spark) == 1)
+    assert(!first.storageLevel.useMemory, "the registered frame is released")
+    assert(shared.storageLevel.useMemory, "the shared frame stays cached")
+    shared.unpersist()
+  }
 }

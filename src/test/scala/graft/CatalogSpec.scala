@@ -237,30 +237,6 @@ class CatalogSpec extends SparkSpec {
     assert(rows(cat.read("t").orderBy("id")).last == Seq(3, "c", null))
   }
 
-  test("streaming batch-id survives intervening writes (replay protection holds)") {
-    val cat = freshCatalog()
-    assert(cat.appendStreamBatch("t", Seq(1, 2).toDF("v"), 5L))
-    // housekeeping between micro-batches must not reset the high-water mark
-    cat.compact("t", 1)
-    assert(!cat.appendStreamBatch("t", Seq(9).toDF("v"), 5L)) // replay → skipped
-    assert(cat.read("t").count() == 2)
-    assert(cat.appendStreamBatch("t", Seq(3).toDF("v"), 6L))  // next batch → lands
-    assert(cat.read("t").count() == 3)
-  }
-
-  test("truncate keeps replay protection; resetStreamState deliberately clears it") {
-    val cat = freshCatalog()
-    assert(cat.appendStreamBatch("t", Seq(1).toDF("v"), 3L))
-    cat.truncate("t")
-    // a redelivered old batch must NOT resurrect truncated rows
-    assert(!cat.appendStreamBatch("t", Seq(9).toDF("v"), 3L))
-    assert(cat.read("t").count() == 0)
-    // deliberate rebuild with a fresh stream checkpoint: explicit reset
-    cat.resetStreamState("t")
-    assert(cat.appendStreamBatch("t", Seq(9).toDF("v"), 0L))
-    assert(cat.read("t").count() == 1)
-  }
-
   test("failed write never moves the pointer (COMMIT-equivalent atomicity)") {
     val cat = freshCatalog()
     cat.write("t", Seq(1, 2).toDF("v"))
@@ -305,8 +281,7 @@ class CatalogSpec extends SparkSpec {
     cat.merge("t", rows(Seq(3, 10)).withColumn("note", lit("m")), "id"); recorded()
     val merged = cat.currentVersionNumber("t").get
     cat.truncate("t"); recorded()
-    assert(cat.appendStreamBatch("t", rows(11 to 12).withColumn("note", lit("s")), 0L))
-    recorded()
+    cat.append("t", rows(11 to 12).withColumn("note", lit("s"))); recorded()
     cat.rollback("t", merged); recorded()
     assert(cat.read("t").count() == 9)
     // a version without the file (older warehouse) is read by inference
@@ -372,22 +347,7 @@ class CatalogSpec extends SparkSpec {
     assert(rows(cat.read("t").orderBy("id")) == Seq(Seq(1L, "a"), Seq(2L, "b")))
   }
 
-  test("streaming micro-batch append is file-level too") {
-    val cat = freshCatalog()
-    assert(cat.appendStreamBatch("t", spark.range(50).toDF("v"), 0L))
-    val v0files = new java.io.File(cat.currentPath("t").get).listFiles().toSeq
-      .filter(_.getName.endsWith(".parquet")).map(_.toPath)
-    assert(cat.appendStreamBatch("t", Seq(99L).toDF("v"), 1L))
-    val cur = java.nio.file.Paths.get(cat.currentPath("t").get)
-    assert(Files.exists(cur.resolve("_MANIFEST")), "micro-batch must commit a manifest")
-    v0files.foreach(f => assert(Files.exists(f)))
-    assert(cat.read("t").count() == 51)
-    // replay protection still rides in the new version dir
-    assert(!cat.appendStreamBatch("t", Seq(7L).toDF("v"), 1L))
-    assert(cat.read("t").count() == 51)
-  }
-
-  test("history reports per-version file composition and stream batch ids") {
+  test("history reports per-version file composition") {
     val cat = freshCatalog()
     cat.write("t", spark.range(10).toDF("id").repartition(2)) // v_0: 2 files
     cat.append("t", Seq(10L).toDF("id"))                      // v_1: manifest
@@ -397,10 +357,35 @@ class CatalogSpec extends SparkSpec {
     assert(h.head.nFiles == 2 && h.head.nCarried == 0)
     val v1 = h.last
     assert(v1.nFiles == 3 && v1.nCarried == 2, v1) // 2 carried + 1 new
-    assert(h.forall(_.streamBatchId.isEmpty))
-    // stream batch id surfaces
-    assert(cat.appendStreamBatch("t", Seq(11L).toDF("id"), 7L))
-    assert(cat.history("t").last.streamBatchId.contains(7L))
+    // a compaction collapses the chain into one self-contained version;
+    // v_0 stays while the retained v_1 still references its files
+    cat.compact("t", 1)
+    assert(cat.history("t").map(i => (i.version, i.isCurrent, i.nFiles, i.nCarried)) ==
+      Seq((0L, false, 2, 0), (1L, false, 3, 2), (2L, true, 1, 0)))
+  }
+
+  test("a legacy _BATCH_ID file in the current version is ignored and not carried") {
+    val cat = freshCatalog() // keepVersions = 2
+    cat.write("t", Seq(1L, 2L, 3L).toDF("id"))
+    // a warehouse written when versions carried a stream batch id
+    val v0 = java.nio.file.Paths.get(cat.currentPath("t").get)
+    Files.writeString(v0.resolve("_BATCH_ID"), "7")
+    def batchIdFiles(): Seq[String] = cat.versions("t")
+      .map(v => v0.resolveSibling(s"v_$v").resolve("_BATCH_ID"))
+      .filter(Files.exists(_)).map(_.getParent.getFileName.toString)
+    assert(rows(cat.read("t").orderBy("id")).flatten == Seq(1L, 2L, 3L))
+    cat.append("t", Seq(4L).toDF("id"))
+    assert(rows(cat.read("t").orderBy("id")).flatten == Seq(1L, 2L, 3L, 4L))
+    val h = cat.history("t")
+    assert(h.last.nCarried == h.head.nFiles && h.last.nFiles == h.head.nFiles + 1)
+    cat.truncate("t")
+    assert(cat.read("t").count() == 0 && cat.read("t").columns.toSeq == Seq("id"))
+    assert(batchIdFiles() == Seq("v_0"), "no later version may carry _BATCH_ID")
+    // v_3: the retained v_2 and v_3 reference nothing older, so the prune
+    // drops v_0 (with its _BATCH_ID) and v_1
+    cat.write("t", Seq(9L).toDF("id"))
+    assert(cat.versions("t") == Seq(2L, 3L))
+    assert(rows(cat.read("t")).flatten == Seq(9L) && batchIdFiles().isEmpty)
   }
 
   test("writePartitioned: directory pruning on the partition filter, appends refused") {

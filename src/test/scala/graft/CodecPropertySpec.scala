@@ -46,10 +46,13 @@ class CodecPropertySpec extends AnyFunSuite {
   }
 
   test("animated GIF round-trips arbitrary gray frame stacks pixel-exactly") {
+    // one writer and one reader reused across cases, as the gate's
+    // per-partition loop reuses them across rows
+    val (writer, reader) = (GifCodec.newWriter(), GifCodec.newReader())
     val prop = Prop.forAll(Gen.choose(1, 5).flatMap(n => Gen.listOfN(n, frameGen))) {
       frames =>
-        val gif = GifCodec.encodeFrames(frames.map(gray8x4))
-        val got = GifCodec.decodeFrames(gif)
+        val gif = GifCodec.encodeFramesWith(writer, frames.map(gray8x4))
+        val got = GifCodec.decodeFramesWith(reader, gif)
         got.size == frames.size && got.zip(frames).forall { case (img, px) =>
           (0 until 32).forall(i => (img.getRGB(i % 8, i / 8) & 0xff) == px(i))
         }

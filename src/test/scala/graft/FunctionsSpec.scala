@@ -45,10 +45,8 @@ class FunctionsSpec extends SparkSpec {
     assert(fromCol.forall(h => h >= 0 && h < (1L << 60)))
   }
 
-  test("rollingHash is order-sensitive; setFingerprint is order-insensitive") {
+  test("setFingerprint is order-insensitive") {
     val df = Seq("a b c", "c b a").toDF("text").select(Text.tokens(col("text")).as("toks"))
-    val rolling = rows(df.select(Hashing.rollingHash(col("toks")))).flatten.distinct
-    assert(rolling.size == 2)
     val set = rows(df.select(Text.setFingerprint(col("toks")))).flatten.distinct
     assert(set.size == 1)
   }
@@ -262,9 +260,10 @@ class FunctionsSpec extends SparkSpec {
       .toDF("k", "t", "v")
     // mergeable moments: per-half stats merged == whole-series stats
     val whole = rows(Anomaly.stats(series, Seq("k"), "v").orderBy("k"))
-    val merged = rows(Anomaly.mergeStats(
-      Anomaly.stats(series.filter(col("t") <= 5), Seq("k"), "v"),
-      Anomaly.stats(series.filter(col("t") > 5), Seq("k"), "v")).orderBy("k"))
+    val merged = rows(Anomaly.stats(series.filter(col("t") <= 5), Seq("k"), "v")
+      .unionByName(Anomaly.stats(series.filter(col("t") > 5), Seq("k"), "v"))
+      .groupBy("k").agg(sum("n").as("n"), sum("s").as("s"), sum("sq").as("sq"))
+      .orderBy("k"))
     assert(merged == whole)
     // train == score set ⇒ identical flags to the windowed form
     val viaStats = rows(Anomaly.flagAgainstStats(series,

@@ -46,22 +46,6 @@ class IncrementalAggSpec extends SparkSpec {
       Seq(Seq("a", 1L, 10L), Seq("z", 2L, 11L)))
   }
 
-  test("streaming refresh: a replayed micro-batch merges nothing") {
-    val cat = freshCat()
-    val b0 = Seq((1L, "a", 10L), (2L, "b", 20L)).toDF("id", "g", "v")
-    val b1 = Seq((3L, "a", 5L)).toDF("id", "g", "v")
-    assert(IncrementalAgg.refreshStreamBatch(cat, "agg", b0, 0L, Seq("g"), Seq("v")))
-    assert(IncrementalAgg.refreshStreamBatch(cat, "agg", b1, 1L, Seq("g"), Seq("v")))
-    val after = rows(cat.read("agg").orderBy("g"))
-    assert(after == Seq(Seq("a", 2L, 15L), Seq("b", 1L, 20L)))
-    // at-least-once redelivery of batch 1: skipped, table bit-identical
-    assert(!IncrementalAgg.refreshStreamBatch(cat, "agg", b1, 1L, Seq("g"), Seq("v")))
-    assert(rows(cat.read("agg").orderBy("g")) == after)
-    // a LATE batch id below the high-water mark is a replay too
-    assert(!IncrementalAgg.refreshStreamBatch(cat, "agg", b0, 0L, Seq("g"), Seq("v")))
-    assert(rows(cat.read("agg").orderBy("g")) == after)
-  }
-
   test("a bad batch is one rollback away") {
     val cat = freshCat()
     IncrementalAgg.refresh(cat, "agg",

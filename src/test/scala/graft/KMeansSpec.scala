@@ -14,15 +14,15 @@ class KMeansSpec extends SparkSpec {
   }.toDF("vec_id", "embedding")
 
   test("k-means separates two obvious blobs") {
-    val got = rows(KMeans.fitAssign(blobs, k = 2, iters = 3)
+    val assigned = KMeans.assign(blobs, KMeans.fit(blobs, k = 2, iters = 3))
+    val got = rows(assigned
       .withColumn("parity", col("vec_id") % 2)
       .groupBy("parity").agg(countDistinct("cluster").as("n_clusters"))
       .orderBy("parity"))
     // each parity blob maps to exactly one cluster...
     assert(got == Seq(Seq(0L, 1L), Seq(1L, 1L)))
     // ...and the two blobs land in different clusters
-    assert(KMeans.fitAssign(blobs, k = 2, iters = 3)
-      .select("cluster").distinct().count() == 2)
+    assert(assigned.select("cluster").distinct().count() == 2)
   }
 
   test("clusterBalancedSelect: per-cluster quota, nearest-to-centroid first") {
@@ -86,7 +86,7 @@ class KMeansSpec extends SparkSpec {
 
   test("null embeddings are excluded, not crashed on") {
     val withNull = blobs.union(Seq((99L, null: Seq[Float])).toDF("vec_id", "embedding"))
-    assert(KMeans.fitAssign(withNull, k = 2, iters = 2).count() == 10)
+    assert(KMeans.assign(withNull, KMeans.fit(withNull, k = 2, iters = 2)).count() == 10)
   }
 
   test("kmeans|| seeding: lower inertia than hash seeds at equal iterations, bit-reproducible") {

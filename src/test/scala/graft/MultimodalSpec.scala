@@ -3,133 +3,20 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.multimodal.Multimodal
 
-/** Binary-column plumbing with the stubbed decoder: schema, batching, and
-  * determinism are the real things under test (no media libs here). */
+/** The gated media codecs: real PNG/GIF/WAV/MP3 encode→decode cycles over
+  * binary columns, checked against hand-computed pixels, samples and
+  * frame layouts (JDK codecs only, no media libraries). */
 class MultimodalSpec extends SparkSpec {
-
-  private lazy val media =
-    Multimodal.syntheticMedia(spark, s"$sf0001/documents.parquet").cache()
-
-  test("synthetic media table has the canonical multimodal schema") {
-    val s = media.schema
-    assert(s("payload").dataType.typeName == "binary")
-    assert(Seq("media_id", "kind", "payload", "width", "height", "duration_ms")
-      .forall(s.fieldNames.contains))
-    assert(media.count() == 500)
-  }
-
-  test("feature extraction: fixed dim, deterministic across runs") {
-    val f1 = Multimodal.extractFeatures(media)
-    assert(f1.schema("features").dataType.simpleString == "array<float>")
-    val r1 = rows(f1.orderBy("media_id").limit(5))
-    val r2 = rows(Multimodal.extractFeatures(media).orderBy("media_id").limit(5))
-    assert(r1 == r2)
-    assert(r1.forall(_(3).asInstanceOf[collection.Seq[Float]].size == Multimodal.featureDim))
-    // n_bytes matches payload length
-    val mismatch = Multimodal.extractFeatures(media)
-      .join(media.select(col("media_id"), length(col("payload")).cast("long").as("len")), Seq("media_id"))
-      .filter(col("n_bytes") =!= col("len"))
-    assert(mismatch.count() == 0)
-  }
-
-  test("frame sampling is a flatMap: n frames per row, bytes partition the payload") {
-    val frames = Multimodal.sampleFrames(media.limit(10), 4)
-    val counts = frames.groupBy("media_id").count()
-    assert(rows(counts.select("count")).flatten.forall(_ == 4L))
-    // reassembled frame lengths sum to ≤ payload length (grouped split)
-    val sums = frames.groupBy("media_id").agg(sum(length(col("frame"))).as("fl"))
-      .join(media.select(col("media_id"), length(col("payload")).as("pl")), Seq("media_id"))
-    assert(sums.filter(col("fl") > col("pl")).count() == 0)
-  }
-
-  test("resize bounds payload bytes and reports in/out sizes") {
-    val resized = Multimodal.resizePayloads(media, 64)
-    assert(resized.filter(col("n_bytes_out") > 64).count() == 0)
-    assert(resized.filter(col("n_bytes_out") =!= length(col("payload"))).count() == 0)
-    // small payloads pass through untouched
-    assert(resized.filter(col("n_bytes_in") <= 64 && col("n_bytes_out") =!= col("n_bytes_in")).count() == 0)
-  }
-
-  test("payload-aware repartitioning bounds rows per partition") {
-    val rep = Multimodal.repartitionForPayloads(media, 100)
-    assert(rep.rdd.getNumPartitions == 5)
-  }
-
-  test("header probe REALLY decodes BMP/WAV/PPM headers; codec formats stay unknown") {
-    import spark.implicits._
-    // hand-assembled canonical headers — pure bytes, no media libraries
-    def le32(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte, (v >> 16).toByte, (v >> 24).toByte)
-    def le16(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte)
-    val bmp = "BM".getBytes ++ le32(70) ++ le32(0) ++ le32(54) ++ // file header
-      le32(40) ++ le32(640) ++ le32(480) ++ le16(1) ++ le16(24) ++ new Array[Byte](20)
-    val byteRate = 8000 * 2 // 8 kHz mono 16-bit
-    val wav = "RIFF".getBytes ++ le32(36 + byteRate) ++ "WAVE".getBytes ++
-      "fmt ".getBytes ++ le32(16) ++ le16(1) ++ le16(1) ++ le32(8000) ++ le32(byteRate) ++
-      le16(2) ++ le16(16) ++ "data".getBytes ++ le32(byteRate) ++ new Array[Byte](byteRate)
-    val ppm = "P6\n12 34\n255\n".getBytes ++ new Array[Byte](12 * 34 * 3)
-    // truncated JPEG: recognized by signature, no SOF frame → null dims
-    val jpegish = Array[Byte](0xff.toByte, 0xd8.toByte, 0xff.toByte) ++ new Array[Byte](32)
-    // an MP3 sync frame: MPEG-1 Layer III, 128 kbps, 44.1 kHz — the HEADER
-    // is plain bit-fields (parsed for real); only sample decode is stubbed.
-    // 35 bytes at 128 kbps → 35*8/128 = 2 ms CBR estimate
-    val mp3ish = Array[Byte](0xff.toByte, 0xfb.toByte, 0x90.toByte) ++ new Array[Byte](32)
-    // garbage that only LOOKS like an ID3 tag → no valid sync frame → unknown
-    val id3ish = "ID3".getBytes ++ new Array[Byte](16)
-    val df = Seq((1L, bmp), (2L, wav), (3L, ppm), (4L, jpegish), (5L, mp3ish),
-      (6L, id3ish)).toDF("media_id", "payload")
-    val got = rows(Multimodal.probeMetadata(df).orderBy("media_id")
-      .select("media_id", "format", "width", "height", "sample_rate", "duration_ms"))
-    assert(got == Seq(
-      Seq(1L, "bmp", 640, 480, null, null),
-      Seq(2L, "wav", null, null, 8000, 1000),  // 16000 data bytes at 16 kB/s = 1 s
-      Seq(3L, "ppm", 12, 34, null, null),
-      Seq(4L, "jpeg", null, null, null, null),
-      Seq(5L, "mp3", null, null, 44100, 2),
-      Seq(6L, "unknown", null, null, null, null)))
-  }
-
-  test("mp3 probe: false syncs rejected, consecutive-frame evidence accepted") {
-    import Multimodal.HeaderProbe
-    // 128 kbps / 44.1 kHz MPEG-1 Layer III header → frame length 417 bytes
-    val hdr = Array[Byte](0xff.toByte, 0xfb.toByte, 0x90.toByte, 0x00)
-    // Sync-looking start with room for a full frame but NO second header
-    // one frame later → not mp3 (pre-fix this was accepted outright).
-    val falseSync = hdr ++ new Array[Byte](600)
-    assert(HeaderProbe.probe(falseSync).format == "unknown")
-    // Same start WITH a valid header exactly one frame (417 B) later → mp3.
-    val twoFrames = hdr ++ new Array[Byte](413) ++ hdr ++ new Array[Byte](16)
-    assert(HeaderProbe.probe(twoFrames).format == "mp3")
-    // ID3-tagged text: tag skip lands in text, no verified frame → unknown,
-    // and the scan is bounded (large payload returns fast).
-    val id3Text = "ID3".getBytes ++ new Array[Byte](7) ++
-      ("lorem ipsum " * 8192).getBytes
-    assert(HeaderProbe.probe(id3Text).format == "unknown")
-  }
 
   test("PNG codec: known image round-trips pixels exactly through the JDK") {
     import Multimodal.PngCodec
     // 5 rows of 3 pixels with every interesting value class.
     val bytes = Array[Byte](0, 1, 127, -128, -1, 64, 65, 66, 67, 7, 8, 9, 10, 11, 12)
     val png = PngCodec.encodeGray(bytes, width = 3)
-    assert(PngCodec.isPng(png))
-    // Header probe reads IHDR without decoding.
-    val meta = Multimodal.HeaderProbe.probe(png)
-    assert(meta.format == "png" && meta.width.contains(3) && meta.height.contains(5))
     // Full decode returns the exact unsigned byte values (gray8 lossless).
     val img = PngCodec.decode(png).get
     assert(img.getWidth == 3 && img.getHeight == 5)
     assert(PngCodec.grayPixels(img).toSeq == bytes.map(_ & 0xff).toSeq)
-    // Features come from PIXELS: an all-white image scores 1.0 per stripe.
-    val white = PngCodec.decode(PngCodec.encodeGray(
-      Array.fill[Byte](64)(-1), width = 8)).get
-    assert(PngCodec.features(white, 4).toSeq == Seq(1.0f, 1.0f, 1.0f, 1.0f))
-    // extractFeatures routes PNG payloads through the real decoder.
-    import spark.implicits._
-    val pngMedia = Seq((1L, "image", png)).toDF("media_id", "kind", "payload")
-    val feats = rows(Multimodal.extractFeatures(pngMedia))
-      .head(3).asInstanceOf[collection.Seq[Float]]
-    val direct = PngCodec.features(img, Multimodal.featureDim).toSeq
-    assert(feats == direct)
   }
 
   test("imageResizeProbe: nearest-neighbor index map, hand-checked on a known raster") {
@@ -145,56 +32,9 @@ class MultimodalSpec extends SparkSpec {
     assert(got(1) == Seq(2L, 16L, 16L, 16L * 3L * 66L, 16L * 3L))
   }
 
-  test("JPEG: real JDK decode — SOF header probe, tolerance round-trip, routed features") {
-    import Multimodal.PngCodec
-    val bytes = Array.tabulate[Byte](96)(i => (i * 2).toByte)
-    val jpg = PngCodec.encodeGrayJpeg(bytes, width = 8)
-    assert(PngCodec.isJpeg(jpg) && !PngCodec.isPng(jpg))
-    // header probe finds the SOF frame dimensions by byte arithmetic
-    val meta = Multimodal.HeaderProbe.probe(jpg)
-    assert(meta.format == "jpeg" && meta.width.contains(8) && meta.height.contains(12))
-    // lossy but REAL: decoded pixels approximate the originals
-    val img = PngCodec.decode(jpg).get
-    assert(img.getWidth == 8 && img.getHeight == 12)
-    val px = PngCodec.grayPixels(img)
-    val maxErr = px.toSeq.zip(bytes.map(_ & 0xff)).map { case (a, b) => math.abs(a - b) }.max
-    assert(maxErr <= 24, s"JPEG round-trip drifted by $maxErr")
-    // extractFeatures routes JPEG through the real decoder, not the stub
-    import spark.implicits._
-    val media = Seq((1L, "image", jpg)).toDF("media_id", "kind", "payload")
-    val feats = rows(Multimodal.extractFeatures(media))
-      .head(3).asInstanceOf[collection.Seq[Float]]
-    assert(feats == PngCodec.features(img, Multimodal.featureDim).toSeq)
-    assert(feats != Multimodal.StubDecoder.features(jpg).toSeq)
-  }
-
-  test("JPEG header scan: 0xFF fill bytes and stand-alone markers don't desync") {
-    // hand-assembled marker stream: SOI, fill-padded APP0, TEM + RST0
-    // (stand-alone, no length word), then SOF0 8x12 — a scan that reads a
-    // "length" from TEM/RST or classifies a fill byte as the marker would
-    // land mid-payload and miss the SOF
-    def B(xs: Int*) = xs.map(_.toByte).toArray
-    val jpeg =
-      B(0xff, 0xd8) ++                        // SOI
-      B(0xff, 0xff, 0xff, 0xe0, 0x00, 0x04, 0x4a, 0x46) ++ // fill,fill,APP0 len=4
-      B(0xff, 0x01) ++                        // TEM (stand-alone)
-      B(0xff, 0xd0) ++                        // RST0 (stand-alone)
-      B(0xff, 0xc0, 0x00, 0x11, 0x08, 0x00, 0x0c, 0x00, 0x08) ++ // SOF0 h=12 w=8
-      new Array[Byte](16)
-    val meta = Multimodal.HeaderProbe.probe(jpeg)
-    assert(meta.format == "jpeg" && meta.width.contains(8) && meta.height.contains(12))
-    // a stream whose first frame-class byte sits inside entropy data after
-    // SOS must NOT be parsed as dimensions — the scan stops at SOS
-    val truncated = B(0xff, 0xd8, 0xff, 0xda, 0x00, 0x04, 0x01, 0x00,
-      0xff, 0xc0, 0x00, 0x11, 0x08, 0x00, 0x0c, 0x00, 0x08)
-    val m2 = Multimodal.HeaderProbe.probe(truncated)
-    assert(m2.format == "jpeg" && m2.width.isEmpty && m2.height.isEmpty)
-  }
-
   test("pngRoundTrip: decoded dims and nonzero pixels match the byte math") {
-    val docs = Multimodal.syntheticMedia(spark, s"$sf0001/documents.parquet")
-      .select(col("media_id").as("doc_id"),
-        col("payload").cast("string").as("text")).limit(20)
+    val docs = spark.read.parquet(s"$sf0001/documents.parquet")
+      .select("doc_id", "text").limit(20)
     val got = Multimodal.pngRoundTrip(docs)
       .join(docs.select(col("doc_id"),
         length(col("text").cast("binary")).cast("long").as("n")), Seq("doc_id"))
@@ -204,38 +44,26 @@ class MultimodalSpec extends SparkSpec {
     assert(got.filter(col("n_payload_bytes") =!= col("n")).count() == 0)
   }
 
-  test("GIF: real multi-frame decode — header dims, frame pixels, true sampled frames") {
-    import Multimodal.{GifCodec, PngCodec}
+  test("GIF: real multi-frame decode — frame pixels exact, garbage degrades") {
+    import Multimodal.GifCodec
     def gray(v: Int) = {
       val img = new java.awt.image.BufferedImage(
         4, 2, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
       for (x <- 0 until 4; y <- 0 until 2) img.getRaster.setSample(x, y, 0, v)
       img
     }
-    val gif = GifCodec.encodeFrames(Seq(gray(10), gray(80), gray(160), gray(240)))
+    val reader = GifCodec.newReader()
+    val gif = GifCodec.encodeFramesWith(GifCodec.newWriter(),
+      Seq(gray(10), gray(80), gray(160), gray(240)))
     assert(GifCodec.isGif(gif))
-    val meta = Multimodal.HeaderProbe.probe(gif)
-    assert(meta.format == "gif" && meta.width.contains(4) && meta.height.contains(2))
     // every animated frame decodes with its own pixel values
-    val frames = GifCodec.decodeFrames(gif)
+    val frames = GifCodec.decodeFramesWith(reader, gif)
     assert(frames.size == 4)
     assert(frames.map(_.getRGB(0, 0) & 0xff) == Seq(10, 80, 160, 240))
-    // sampleFrames ships REAL evenly-spaced pixel frames (as lossless PNG)
-    // for GIF payloads — not stub byte splits
-    import spark.implicits._
-    val media = Seq((1L, "video", gif)).toDF("media_id", "kind", "payload")
-    val out = Multimodal.sampleFrames(media, 2).collect().sortBy(_.getInt(1))
-    assert(out.length == 2)
-    // raster samples, not getRGB: the frames ship as 8-bit grayscale PNG,
-    // and getRGB on TYPE_BYTE_GRAY applies a linear→sRGB conversion
-    val sampled = out.map(r => PngCodec.decode(r.getAs[Array[Byte]]("frame")).get)
-    assert(sampled.map(f => PngCodec.grayPixels(f).head).toSeq == Seq(10, 160)) // indices 0, 2
-    // extractFeatures routes GIF through the real first-frame decode
-    val feats = rows(Multimodal.extractFeatures(media)).head(3)
-      .asInstanceOf[collection.Seq[Float]]
-    assert(feats == PngCodec.features(frames.head, Multimodal.featureDim).toSeq)
-    // garbage behind a GIF signature must degrade gracefully, never throw
-    GifCodec.decodeFrames("GIF89a".getBytes ++ new Array[Byte](20)): Unit
+    // garbage behind a GIF signature must degrade to no frames, never
+    // throw, and leave the reader usable
+    assert(GifCodec.decodeFramesWith(reader, "GIF89a".getBytes ++ new Array[Byte](20)).isEmpty)
+    assert(GifCodec.decodeFramesWith(reader, gif).size == 4)
   }
 
   test("WAV codec: PCM16 round-trips samples exactly; chunk walk survives LIST chunks") {
@@ -305,20 +133,8 @@ class MultimodalSpec extends SparkSpec {
     // single-frame stream: CBR, no VBR flag
     val one = Mp3Codec.frameWalk(Mp3Codec.encode(Array[Byte](1, 2, 3))).get
     assert(one.nFrames == 1 && !one.vbr && one.minKbps == 128)
-    // junk is rejected, and the existing first-frame probe still accepts
+    // junk is rejected
     assert(Mp3Codec.frameWalk("not an mp3 stream at all".getBytes).isEmpty)
-    val probed = graft.multimodal.Multimodal.HeaderProbe.probe(b)
-    assert(probed.format == "mp3" && probed.sampleRate.contains(44100))
-  }
-
-  test("stub decoder: deterministic, resize bounds size, frames cover bytes") {
-    val bytes = Array.tabulate[Byte](1000)(i => (i % 251).toByte)
-    val f1 = Multimodal.StubDecoder.features(bytes)
-    val f2 = Multimodal.StubDecoder.features(bytes.clone())
-    assert(f1.toSeq == f2.toSeq)
-    assert(Multimodal.StubDecoder.resize(bytes, 100).length == 100)
-    assert(Multimodal.StubDecoder.resize(bytes, 2000).length == 1000)
-    assert(Multimodal.StubDecoder.sampleFrames(bytes, 4).map(_.length).sum == 1000)
   }
 
   test("imageDHash: 32-bit words, equal images hash equal, gradient flip flips bits") {

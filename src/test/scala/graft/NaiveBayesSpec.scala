@@ -10,6 +10,8 @@ class NaiveBayesSpec extends SparkSpec {
 
   private val micro = NaiveBayes.MicroScale
   private def mn(x: Double): Long = math.round(math.log(x) * micro)
+  private def gold(docs: org.apache.spark.sql.DataFrame) =
+    docs.select(col("doc_id"), col("lang").as("gold"))
 
   test("scores: hand-checked on a 2-class corpus") {
     // class x: "a a b" (N_x=3), class y: "c c" (N_y=2); V=3, nd=2, k=2.
@@ -34,7 +36,8 @@ class NaiveBayesSpec extends SparkSpec {
     val model = NaiveBayes.train(train, "lang")
     // "" tokenizes to one empty token which is filtered → n_tokens 0 →
     // score = prior for both classes (equal priors) → tie → "x" (label asc)
-    val got = NaiveBayes.classify(Seq((9L, "")).toDF("doc_id", "text"), model)
+    val got = NaiveBayes.classifyFromScores(
+        NaiveBayes.scores(Seq((9L, "")).toDF("doc_id", "text"), model))
       .select("predicted").as[String].head()
     assert(got == "x")
   }
@@ -45,7 +48,7 @@ class NaiveBayesSpec extends SparkSpec {
     val docs = (mk("en", "hello") ++ mk("fr", "bonjour") ++ mk("de", "hallo"))
       .toDF("doc_id", "text", "lang")
     val model = NaiveBayes.train(docs, "lang")
-    val conf = NaiveBayes.confusion(docs, model, "lang")
+    val conf = NaiveBayes.confusionFromScores(NaiveBayes.scores(docs, model), gold(docs))
       .select("gold", "predicted", "n_docs").as[(String, String, Long)].collect()
     assert(conf.toSet == Set(("en", "en", 10L), ("fr", "fr", 10L), ("de", "de", 10L)))
   }
@@ -54,7 +57,7 @@ class NaiveBayesSpec extends SparkSpec {
     val docs = Seq((0L, "a b", "x"), (1L, "b c", "y"), (2L, "q", "x"))
       .toDF("doc_id", "text", "lang")
     val model = NaiveBayes.train(docs, "lang")
-    val total = NaiveBayes.confusion(docs, model, "lang")
+    val total = NaiveBayes.confusionFromScores(NaiveBayes.scores(docs, model), gold(docs))
       .agg(sum("n_docs")).head.getLong(0)
     assert(total == 3L)
   }
@@ -96,8 +99,8 @@ class NaiveBayesSpec extends SparkSpec {
   test("train: label absent from training is never predicted") {
     val train = Seq((0L, "a a", "x"), (1L, "b b", "y")).toDF("doc_id", "text", "lang")
     val model = NaiveBayes.train(train, "lang")
-    val preds = NaiveBayes.classify(
-        Seq((5L, "zz zz"), (6L, "a b")).toDF("doc_id", "text"), model)
+    val preds = NaiveBayes.classifyFromScores(NaiveBayes.scores(
+        Seq((5L, "zz zz"), (6L, "a b")).toDF("doc_id", "text"), model))
       .select("predicted").as[String].collect().toSet
     assert(preds.subsetOf(Set("x", "y")))
   }
@@ -107,7 +110,7 @@ class NaiveBayesSpec extends SparkSpec {
     val model = NaiveBayes.train(train, "lang")
     val docs = Seq((10L, "a a", "x"), (11L, "b b", "y"), (12L, "a", "x"))
       .toDF("doc_id", "text", "lang")
-    val bins = NaiveBayes.marginBins(docs, model, "lang")
+    val bins = NaiveBayes.marginBinsFromScores(NaiveBayes.scores(docs, model), gold(docs))
       .select("margin_bin", "n_docs", "n_correct", "accuracy")
       .as[(Long, Long, Long, Double)].collect()
     assert(bins.map(_._2).sum == 3, "every 2-class doc falls in exactly one bin")
@@ -116,7 +119,7 @@ class NaiveBayesSpec extends SparkSpec {
     }
     // a wrong-gold doc lands in a bin with accuracy < 1
     val flipped = Seq((20L, "a a a a", "y")).toDF("doc_id", "text", "lang")
-    val fb = NaiveBayes.marginBins(flipped, model, "lang")
+    val fb = NaiveBayes.marginBinsFromScores(NaiveBayes.scores(flipped, model), gold(flipped))
       .select("n_docs", "n_correct").as[(Long, Long)].collect()
     assert(fb.toSeq == Seq((1L, 0L)))
   }

@@ -45,52 +45,6 @@ class SourcesSpec extends SparkSpec {
     assert(bad.exists(_.contains(""""text": }""")))
   }
 
-  test("csv quarantine: bad-typed rows preserved raw, header skipped") {
-    val spec = graft.model.TableSpec("probe", Seq(
-      graft.model.ColumnSpec("id", org.apache.spark.sql.types.LongType),
-      graft.model.ColumnSpec("name", StringType)))
-    val f = Files.createTempFile("graft-csv", ".csv")
-    Files.writeString(f, Seq(
-      "id,name",
-      "1,alice",
-      "oops,bob",     // non-numeric id → quarantine
-      "2,carol").mkString("\n"))
-    val (clean, quarantine) = Sources.csvWithQuarantine(spark, f.toString, spec)
-    assert(rows(clean.orderBy("id")) == Seq(Seq(1L, "alice"), Seq(2L, "carol")))
-    assert(rows(quarantine.select("raw_line")).flatten == Seq("oops,bob"))
-    assert(quarantine.count() == 1) // the count that broke the source-based form
-  }
-
-  test("csv quarantine: IGNOREHEADER semantics — position, not value") {
-    // A header that differs in case from the spec's field names must still
-    // be skipped (it is line 1), not parsed as data or quarantined.
-    val typed = graft.model.TableSpec("probe", Seq(
-      graft.model.ColumnSpec("id", org.apache.spark.sql.types.LongType),
-      graft.model.ColumnSpec("name", StringType)))
-    val f1 = Files.createTempFile("graft-csv", ".csv")
-    Files.writeString(f1, Seq("ID,NAME", "1,alice").mkString("\n"))
-    val (c1, q1) = Sources.csvWithQuarantine(spark, f1.toString, typed)
-    assert(rows(c1) == Seq(Seq(1L, "alice")))
-    assert(q1.count() == 0)
-    // A DATA row that happens to equal the header text is real data when
-    // the schema admits it (all-string) — the clean side keeps it.
-    val strings = graft.model.TableSpec("probe", Seq(
-      graft.model.ColumnSpec("id", StringType),
-      graft.model.ColumnSpec("name", StringType)))
-    val f2 = Files.createTempFile("graft-csv", ".csv")
-    Files.writeString(f2, Seq("id,name", "id,name", "x,y").mkString("\n"))
-    val (c2, q2) = Sources.csvWithQuarantine(spark, f2.toString, strings)
-    assert(rows(c2.orderBy("id")) == Seq(Seq("id", "name"), Seq("x", "y")))
-    assert(q2.count() == 0)
-    // A header with internal spacing ("id, name") must not surface as a
-    // phantom corrupt row on the quarantine side (token-wise compare)
-    val f3 = Files.createTempFile("graft-csv", ".csv")
-    Files.writeString(f3, Seq("id, NAME", "1,alice").mkString("\n"))
-    val (c3, q3) = Sources.csvWithQuarantine(spark, f3.toString, typed)
-    assert(rows(c3) == Seq(Seq(1L, "alice")))
-    assert(q3.count() == 0, "spaced header must not be quarantined")
-  }
-
   test("jsonl reads gzip transparently (non-splittable — document, don't hide)") {
     val lines = Seq("""{"doc_id": 1, "text": "zipped"}""")
     val f = Files.createTempFile("graft-jsonl", ".jsonl.gz")

@@ -20,7 +20,8 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("windowed streaming agg matches the batch computation") {
-    val q = EventStream.hourlyByType(EventStream.read(spark, streamDir))
+    val q = EventStream.hourlyByType(
+        spark.readStream.schema(EventStream.schema).parquet(streamDir))
       .writeStream.outputMode("complete").format("memory").queryName("hourly").start()
     try {
       q.processAllAvailable()
@@ -39,7 +40,8 @@ class StreamingSpec extends SparkSpec {
   test("readStream → transform → writeStream parquet sink round-trips") {
     val outDir = Files.createTempDirectory("graft-sink").toString
     val ckpt = Files.createTempDirectory("graft-ckpt").toString
-    val q = EventStream.hourlyByType(EventStream.read(spark, streamDir))
+    val q = EventStream.hourlyByType(
+        spark.readStream.schema(EventStream.schema).parquet(streamDir))
       .writeStream.outputMode("append")
       .format("parquet").option("path", outDir)
       .option("checkpointLocation", ckpt)
@@ -134,43 +136,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("stream-stream interval join matches the batch equivalent") {
-    val q = EventStream.purchasesWithRecentClicks(EventStream.read(spark, streamDir))
-      .writeStream.outputMode("append").format("memory").queryName("ssjoin").start()
-    try {
-      q.processAllAvailable()
-      val streamed = spark.table("ssjoin")
-      val ev = spark.read.parquet(streamDir)
-      val p = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("purchase_id"), col("user_id"), col("ts").as("p_ts"))
-      val c = ev.filter(col("event_type") === "click")
-        .select(col("event_id").as("click_id"), col("user_id").as("c_user_id"), col("ts").as("c_ts"))
-      val batchJoin = p.join(c,
-        col("user_id") === col("c_user_id") &&
-          col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") && col("c_ts") <= col("p_ts"))
-      assert(streamed.count() == batchJoin.count())
-      assert(streamed.count() > 0)
-      val diff = streamed.select("purchase_id", "click_id")
-        .except(batchJoin.select("purchase_id", "click_id"))
-      assert(diff.count() == 0)
-    } finally q.stop()
-  }
-
-  test("streaming dedup drops re-delivered event ids") {
-    // duplicate the staged stream dir: every event delivered twice
-    val dupDir = Files.createTempDirectory("graft-dup").toString
-    val once = spark.read.parquet(streamDir)
-    once.unionByName(once).write.mode("overwrite").parquet(dupDir)
-    val q = EventStream.dedupByEventId(EventStream.read(spark, dupDir))
-      .writeStream.outputMode("append").format("memory").queryName("dedup").start()
-    try {
-      q.processAllAvailable()
-      val got = spark.table("dedup")
-      assert(got.count() == once.count())
-      assert(got.groupBy("event_id").count().filter(col("count") > 1).count() == 0)
-    } finally q.stop()
-  }
-
   test("streaming count-min sketch matches the batch sketch across micro-batches") {
     val dir = Files.createTempDirectory("graft-cms-stream").toString
     def append(keys: Seq[String]): Unit =
@@ -217,108 +182,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("stateful sessionization emits gap-separated sessions") {
-    import EventStream._
-    val events = Seq(
-      Event(1, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), 7L, 1.0),
-      Event(2, java.sql.Timestamp.valueOf("2024-01-01 00:10:00"), 7L, 2.0),
-      Event(3, java.sql.Timestamp.valueOf("2024-01-01 02:00:00"), 7L, 4.0) // > 30min gap
-    )
-    // exercise the state function directly (deterministic, no clock coupling)
-    val state = new TestGroupState[SessionState]
-    val out = EventStream.sessionFn(1800000000L)(7L, events.iterator, state).toList
-    assert(out.map(_.n_events) == List(2))         // first session closed by the gap
-    assert(out.head.value_cents == 300)
-    assert(state.getOption.exists(_.n == 1))       // third event holds open state
-  }
-
-  test("streaming sessionize matches batch sessionize bit-exactly on the real feed") {
-    import EventStream._
-    // the real µs-precision events feed, time-ordered and split into 3
-    // sequential micro-batches (zero lateness → nothing can be dropped)
-    val ev = graft.queries.Q.events(spark, sf0001)
-      .select(col("event_id"), timestamp_micros(col("ts_us")).as("ts"),
-        col("user_id"), col("value"), col("ts_us"))
-    val bounds = rows(ev.agg(
-      expr("percentile(ts_us, 0.33)"), expr("percentile(ts_us, 0.66)"),
-      max(col("ts_us")))).head.map(v => math.ceil(v.toString.toDouble).toLong)
-    val (c1, c2, tMax) = (bounds(0), bounds(1), bounds(2))
-    val dir = Files.createTempDirectory("graft-sess-stream").toString
-    def stage(from: Long, until: Long): Unit =
-      ev.filter(col("ts_us") >= from && col("ts_us") < until)
-        .select("event_id", "ts", "user_id", "value")
-        .coalesce(1).write.mode("append").parquet(dir)
-    stage(Long.MinValue, c1)
-    val sessions = EventStream.sessionize(
-      spark.readStream
-        .schema("event_id bigint, ts timestamp, user_id bigint, value double")
-        .parquet(dir).as[Event])
-    val q = sessions.toDF().writeStream.outputMode("append")
-      .format("memory").queryName("sess").start()
-    try {
-      q.processAllAvailable()
-      stage(c1, c2)
-      q.processAllAvailable()
-      stage(c2, Long.MaxValue)
-      q.processAllAvailable()
-      // two far-future closer batches for a synthetic user: the first
-      // advances the watermark past every open session's timeout, the
-      // second triggers timeout processing that flushes them
-      for (k <- 1 to 2) {
-        Seq((-k.toLong, tMax + k * 86400000000L)).toDF("event_id", "tus")
-          .select(col("event_id"), timestamp_micros(col("tus")).as("ts"),
-            lit(-1L).as("user_id"), lit(0.0).as("value"))
-          .coalesce(1).write.mode("append").parquet(dir)
-        q.processAllAvailable()
-      }
-      val streamed = spark.table("sess").filter(col("user_id") =!= -1L)
-        .select(col("user_id"), col("start_us"), col("end_us"),
-          col("n_events"), col("value_cents"))
-      // batch twin: q_x_sessionize's window logic, re-keyed on (start, end)
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("user_id")).orderBy(col("ts_us"), col("event_id"))
-      val batch = graft.queries.Q.events(spark, sf0001)
-        .select(col("user_id"), col("event_id"), col("ts_us"),
-          round(col("value") * 100, 0).cast("long").as("vc"))
-        .withColumn("brk",
-          when(col("ts_us") - lag(col("ts_us"), 1).over(w) > 1800000000L, 1)
-            .when(lag(col("ts_us"), 1).over(w).isNull, 1).otherwise(0))
-        .withColumn("sid", sum(col("brk")).over(
-          w.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)))
-        .groupBy(col("user_id"), col("sid"))
-        .agg(min(col("ts_us")).as("start_us"), max(col("ts_us")).as("end_us"),
-          count(lit(1)).as("n_events"), sum(col("vc")).as("value_cents"))
-        .drop("sid")
-      val mismatches = streamed
-        .join(batch, Seq("user_id", "start_us", "end_us", "n_events", "value_cents"),
-          "full_outer")
-      assert(streamed.count() == batch.count() &&
-        streamed.count() == mismatches.count(),
-        "streamed sessions != batch sessions")
-      assert(streamed.count() > 100) // the fixture produces real session volume
-    } finally q.stop()
-  }
-
-  test("catalog sink: micro-batches append effectively-once (replays skipped)") {
-    val cat = new graft.catalog.Catalog(spark,
-      Files.createTempDirectory("graft-cat-sink").toString)
-    // drive the stream end-to-end into the catalog
-    val q = EventStream.sinkToCatalog(
-        EventStream.read(spark, streamDir).filter(col("event_type") === "purchase"),
-        cat, "purchases")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val n = cat.read("purchases").count()
-    assert(n > 0)
-    // a replayed batch id (restart-after-crash contract) must be a no-op...
-    val replay = cat.read("purchases").limit(5)
-    assert(!cat.appendStreamBatch("purchases", replay, 0L))
-    assert(cat.read("purchases").count() == n)
-    // ...while the next batch id appends
-    assert(cat.appendStreamBatch("purchases", replay, 1000L))
-    assert(cat.read("purchases").count() == n + 5)
-  }
-
   test("map-side corpus operators compose unchanged on a stream") {
     // quality gate → repetition gate → weighted mixture, applied to a
     // STREAMING DataFrame exactly as to a batch one — all three are
@@ -350,24 +213,4 @@ class StreamingSpec extends SparkSpec {
       assert(spark.table("corpus_stream").count() > 0)
     } finally q.stop()
   }
-}
-
-/** Minimal in-memory GroupState for driving the session function. */
-class TestGroupState[S] extends org.apache.spark.sql.streaming.GroupState[S] {
-  private var v: Option[S] = None
-  private var removed = false
-  override def exists: Boolean = v.isDefined
-  override def get: S = v.get
-  override def getOption: Option[S] = v
-  override def update(s: S): Unit = { v = Some(s); removed = false }
-  override def remove(): Unit = { v = None; removed = true }
-  override def hasTimedOut: Boolean = false
-  override def setTimeoutDuration(d: Long): Unit = ()
-  override def setTimeoutDuration(d: String): Unit = ()
-  override def setTimeoutTimestamp(t: Long): Unit = ()
-  override def setTimeoutTimestamp(t: Long, additional: String): Unit = ()
-  override def setTimeoutTimestamp(t: java.sql.Date): Unit = ()
-  override def setTimeoutTimestamp(t: java.sql.Date, additional: String): Unit = ()
-  override def getCurrentWatermarkMs(): Long = 0L
-  override def getCurrentProcessingTimeMs(): Long = 0L
 }

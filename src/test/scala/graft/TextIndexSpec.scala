@@ -82,10 +82,10 @@ class TextIndexSpec extends SparkSpec {
     assert(ranked == expected.toSeq.sortBy { case (d, s) => (-s, d) }.map(_._1))
   }
 
-  test("searchBM25 equals an independent in-JVM Okapi recomputation exactly") {
+  test("searchBM25Micro equals an independent in-JVM Okapi recomputation exactly") {
     val post = TextIndex.postings(docs, "doc_id", "text")
-    val got = TextIndex.searchBM25(post, Seq("spark", "window"), k = 10)
-      .select($"doc_id", $"score").as[(Long, Double)].collect().toMap
+    val got = TextIndex.searchBM25Micro(post, Seq("spark", "window"), k = 10)
+      .select($"doc_id", $"score_micro", $"rank").as[(Long, Long, Long)].collect()
 
     val idx = naiveIndex
     val dfm = idx.keys.groupBy(_._1).map { case (t, ks) => t -> ks.size.toLong }
@@ -94,38 +94,22 @@ class TextIndexSpec extends SparkSpec {
     val (k1, b) = (1.2, 0.75)
     // mirrors the operator's expression tree association exactly — IEEE
     // arithmetic is association-sensitive, so the recompute must parenthesize
-    // the way the Column expression does
-    def contrib(t: String, d: Long): Double = {
+    // the way the Column expression does; round is Spark's HALF_UP
+    def contribMicro(t: String, d: Long): Long = {
       val tf = idx((t, d)).toDouble
       val idf = math.log(1.0 + (n.toDouble - dfm(t).toDouble + 0.5) / (dfm(t).toDouble + 0.5))
       val tfNorm = (tf * (k1 + 1)) / (tf + k1 * ((1 - b) + (b * dl(d).toDouble) / avgdl))
-      idf * tfNorm
+      BigDecimal(idf * tfNorm * 1000000.0).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
     }
-    // same add order as the Spark agg's input is not guaranteed, so compare
-    // per-term contributions summed both ways — with two terms the sum has
-    // one order; exact equality is well-defined
+    // each doc's score is the exact integer sum of its rounded contributions
     val expected = dl.keys.toSeq
       .map(d => d -> Seq("spark", "window").filter(t => idx.contains((t, d)))
-        .map(t => contrib(t, d)).sum)
+        .map(t => contribMicro(t, d)).sum)
       .filter(_._2 > 0).toMap
-    assert(got.keySet == expected.keySet)
-    for ((d, s) <- expected) assert(got(d) == s, s"doc $d")
-  }
-
-  test("searchBM25Micro: micro scores are the rounded float contributions; same ranking") {
-    val post = TextIndex.postings(docs, "doc_id", "text")
-    val float = TextIndex.searchBM25(post, Seq("spark", "window"), k = 10)
-      .select($"doc_id", $"rank").as[(Long, Long)].collect().toMap
-    val micro = TextIndex.searchBM25Micro(post, Seq("spark", "window"), k = 10)
-      .select($"doc_id", $"score_micro", $"rank").as[(Long, Long, Long)].collect()
-    // ranking agreement (scores 1e-6-quantized cannot flip well-separated
-    // ranks on this fixture)
-    assert(micro.map(r => r._1 -> r._3).toMap == float)
-    // micro score ≈ 1e6 × float score (within n_terms half-ulps of rounding)
-    val floatScores = TextIndex.searchBM25(post, Seq("spark", "window"), k = 10)
-      .select($"doc_id", $"score").as[(Long, Double)].collect().toMap
-    micro.foreach { case (d, sm, _) =>
-      assert(math.abs(sm - floatScores(d) * 1e6) <= 2.0, s"doc $d") }
+    assert(got.map(r => r._1 -> r._2).toMap == expected)
+    // ranked by score desc, then doc_id
+    assert(got.sortBy(_._3).map(_._1).toSeq ==
+      expected.toSeq.sortBy { case (d, sc) => (-sc, d) }.map(_._1))
   }
 
   test("searchWeightedPerGroup: independent top-k inside each group") {
@@ -207,7 +191,7 @@ class TextIndexSpec extends SparkSpec {
     val empty = TextIndex.postings(
       Seq.empty[(Long, String)].toDF("doc_id", "text"), "doc_id", "text")
     assert(TextIndex.searchWeighted(empty, Seq("spark"), k = 3).count() == 0)
-    assert(TextIndex.searchBM25(empty, Seq("spark"), k = 3).count() == 0)
+    assert(TextIndex.searchBM25Micro(empty, Seq("spark"), k = 3).count() == 0)
   }
 
   test("search touches only the query terms' postings, not the corpus scan") {

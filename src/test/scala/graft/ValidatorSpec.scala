@@ -41,9 +41,10 @@ class ValidatorSpec extends SparkSpec {
 
   test("null counts are a single-pass aggregate over all columns") {
     val df = Sources.csv(spark, fixture("customers_nulls.csv"), Schemas.customers)
-    val counts = Validator.nullCounts(df, Schemas.customers.columnNames)
-    assert(counts("email") == 1L)
-    assert(counts.values.sum == 1L)
+    val res = Validator.validate(df, Schemas.customers)
+    assert(res.nullViolations("email") == 1L)
+    assert(res.nullViolations.values.sum == 1L)
+    assert(res.rowCount == 2L)
   }
 
   test("VARCHAR over-width value raises length violation (DDL widths, dynamic_upsert.py:17-26)") {

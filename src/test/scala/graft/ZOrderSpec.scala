@@ -19,18 +19,15 @@ class ZOrderSpec extends SparkSpec {
     assert(got == samples.map { case (x, y) => interleaveRef(x, y) })
   }
 
-  test("toOrdinal grids doubles exactly") {
-    val got = Seq(0.0, 0.49, 0.5, 99.99, -0.5).toDF("v")
-      .select(ZOrder.toOrdinal($"v", min = -1.0, width = 0.5)).as[Long].collect().toSeq
-    assert(got == Seq(2L, 2L, 3L, 201L, 1L))
-  }
-
   test("z-order layout prunes 2-D boxes where a linear sort cannot") {
     val grid = spark.range(64L * 64).select(($"id" % 64).as("x"), expr("id div 64").as("y"))
     val base = java.nio.file.Files.createTempDirectory("graft-zorder").toString
     grid.repartitionByRange(16, $"x").sortWithinPartitions($"x")
       .write.parquet(s"$base/linear")
-    ZOrder.cluster(grid, $"x", $"y", files = 16).write.parquet(s"$base/zorder")
+    // the layout Catalog.writeSorted gives a z-value column
+    grid.withColumn("zval", ZOrder.zValue($"x", $"y"))
+      .repartitionByRange(16, $"zval").sortWithinPartitions($"zval")
+      .write.parquet(s"$base/zorder")
 
     // files whose [min,max] envelope intersects the predicate — exactly the
     // set a min/max-stat reader must open
