@@ -9,6 +9,10 @@ cd "$(dirname "$0")/.."
 python3 dev/spec_only_scan.py   # no def that only specs call, beyond its keep-list
 sbt -batch compile
 sbt -batch test
+# gate runs keep their fixtures under one scratch root the JVM deletes at
+# exit: a Verify run that leaves a /tmp/graft-* entry behind fails the check
+tmp_entries() { find /tmp -maxdepth 1 -name 'graft-*' | wc -l; }
+before=$(tmp_entries)
 for sf in sf0.001 sf0.01; do
   out=$(mktemp -d)
   log=$(mktemp --suffix=.verify-stderr.log)
@@ -18,6 +22,11 @@ for sf in sf0.001 sf0.01; do
   echo "$sf warnings: already-cached $(grep -c 'Asked to cache already cached data' "$log" || true)," \
     "no-partition-windows $(grep -c 'No Partition Defined' "$log" || true) (log: $log)"
 done
+after=$(tmp_entries)
+if [ "$after" -gt "$before" ]; then
+  echo "Verify left $((after - before)) /tmp/graft-* entries behind" >&2
+  exit 1
+fi
 dev/run_main.sh graft.Bench 2>/dev/null | tail -1   # sf0.1, the shipped session
 dev/run_main.sh graft.Smoke 2>/dev/null | grep smoke
 # perfbench: the frozen gates exist and keep their fingerprints, and one

@@ -259,11 +259,7 @@ final class Catalog(spark: SparkSession, rootDir: String, keepVersions: Int = 2)
     * schema from the parquet footers — one job per read. */
   private def readVersionDir(name: String, version: String): DataFrame = {
     val dir = tableDir(name).resolve(version)
-    val schemaFile = dir.resolve(SchemaFile)
-    val reader =
-      if (Files.isRegularFile(schemaFile))
-        spark.read.schema(DataType.fromJson(Files.readString(schemaFile)).asInstanceOf[StructType])
-      else spark.read
+    val reader = recordedSchema(dir).fold(spark.read)(spark.read.schema(_))
     if (Files.isRegularFile(dir.resolve(ManifestFile))) {
       val paths = versionDataFiles(name, version)
         .map(rel => tableDir(name).resolve(rel).toString)
@@ -398,7 +394,6 @@ final class Catalog(spark: SparkSession, rootDir: String, keepVersions: Int = 2)
             s"${nowCur.getOrElse("<absent>")} while this write ran — commit " +
             "aborted; re-read and retry")
       flipPointer(name, next)
-      schemaCache.put(name.toLowerCase, df.schema)
       // prune INSIDE the lock, against the LIVE pointer: run outside it, a
       // concurrent rollback could flip to an old version between this flip
       // and the prune, and the prune would delete the directory _CURRENT
@@ -528,22 +523,19 @@ final class Catalog(spark: SparkSession, rootDir: String, keepVersions: Int = 2)
     if (!exists(name)) write(name, df)
     else writeVersion(name, alignedForAppend(name, df), carryFiles = true)
 
-  /** Table schemas resolved once per Catalog instance: without this, every
-    * append re-resolves the whole manifest file list
-    * just to read `.schema` — O(chain length) driver work per commit,
-    * undercutting the O(batch) append claim. Safe under the catalog's
-    * single-writer design: schema changes go through THIS instance's
-    * write/appendEvolve, which refresh the entry. */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
-
-  private def tableSchema(name: String): StructType =
-    schemaCache.computeIfAbsent(name.toLowerCase, _ => read(name).schema)
+  /** The schema a version directory records in its `_SCHEMA`, if any. */
+  private def recordedSchema(dir: Path): Option[StructType] =
+    Some(dir.resolve(SchemaFile)).filter(Files.isRegularFile(_))
+      .map(f => DataType.fromJson(Files.readString(f)).asInstanceOf[StructType])
 
   /** Column-order/type normalization + loud schema check for file-level
-    * appends (every file under one manifest must agree by-name). */
+    * appends (every file under one manifest must agree by-name). The table
+    * schema is the current version's `_SCHEMA`, read on every append, so a
+    * column another writer added is never missed; a version without one
+    * (an older warehouse) falls back to the read's schema. */
   private def alignedForAppend(name: String, df: DataFrame): DataFrame = {
-    val existing = tableSchema(name)
+    val existing = currentVersion(name).flatMap(v => recordedSchema(tableDir(name).resolve(v)))
+      .getOrElse(read(name).schema)
     // nullability is not part of a file's type: parquet reads every
     // column, nested ones too, as nullable
     val have = df.schema.fields.map(f => f.name.toLowerCase -> asNullable(f.dataType)).toMap
@@ -796,7 +788,6 @@ final class Catalog(spark: SparkSession, rootDir: String, keepVersions: Int = 2)
         s"catalog: cannot roll '$name' back to version $version — not retained " +
           s"or never committed (retained: ${versions(name).mkString(", ")})")
     flipPointer(name, target)
-    schemaCache.remove(name.toLowerCase): Unit
   }
 
   /** Hive-style partition-directory layout: rows land under `col=value/`

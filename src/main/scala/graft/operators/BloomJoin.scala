@@ -43,7 +43,7 @@ object BloomJoin {
       Bridge.expression(xxhash64(col(keyCol))),
       Bridge.expression(lit(expectedItems)),
       Bridge.expression(lit(numBits))).toAggregateExpression()
-    build.agg(Bridge.column(agg).as("bf")).head.getAs[Array[Byte]]("bf")
+    build.agg(Bridge.column(agg).as("bf")).head().getAs[Array[Byte]]("bf")
   }
 
   /** Membership probe against a built filter (map-side, codegen'd). */

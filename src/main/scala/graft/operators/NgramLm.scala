@@ -83,7 +83,7 @@ object NgramLm {
     val contexts = bg.groupBy("w1").agg(count(lit(1)).as("c1"))
     val vocab = trainDocs
       .select(explode(Text.tokens(col(textCol))).as("tok"))
-      .agg(count_distinct(col("tok"))).head.getLong(0)
+      .agg(count_distinct(col("tok"))).head().getLong(0)
     BigramModel(pairs, contexts, vocab)
   }
 
@@ -147,7 +147,7 @@ object NgramLm {
 
   def loadModel(cat: graft.catalog.Catalog, prefix: String): BigramModel =
     BigramModel(cat.read(s"${prefix}_pairs"), cat.read(s"${prefix}_contexts"),
-      cat.read(s"${prefix}_meta").head.getLong(0))
+      cat.read(s"${prefix}_meta").head().getLong(0))
 
   /** Per-document cross-entropy under the model, in exact micro-nats:
     * `n_bigrams`, `nll_micro` = Σ −round(ln(p)·1e6) (BIGINT, exact), and

@@ -209,7 +209,7 @@ object Pca {
       idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
     require(v.length == g.dim)
     val sv = (0 until g.dim).map(i => BigInt(g.sums(i)) * BigInt(v(i))).sum
-    val vLit = array(v.map(lit): _*)
+    val vLit = array(v.toIndexedSeq.map(lit): _*)
     emb.filter(col(embCol).isNotNull)
       .select(col(idCol).as("vec_id"), VectorSearch.quantize(embCol).as("q"))
       .withColumn("qv", graft.expressions.DotProductLong(col("q"), vLit))

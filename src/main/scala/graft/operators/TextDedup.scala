@@ -686,27 +686,6 @@ object TextDedup {
     perBand.reduce(_ unionByName _).distinct()
   }
 
-  /** CCNet-style cross-corpus paragraph dedup (Wenzek et al. 2020, §3.1 —
-    * the recipe that removed ~70% of raw CommonCrawl text): paragraphs are
-    * the dedup unit, a paragraph's first occurrence in corpus order is
-    * kept, every later occurrence (in the same doc or any other doc) is
-    * dropped, and surviving documents are rebuilt from their kept
-    * paragraphs in original order. Normalization before comparison is
-    * lower+trim (CCNet normalizes harder — digits, punctuation — which
-    * composes here by pre-mapping the text column).
-    *
-    * Emits one row per INPUT doc: (doc_id, text_dedup, kept_paras,
-    * removed_paras) — a fully-duplicated doc survives as an empty string
-    * with kept_paras = 0 so the pipeline can drop or audit it explicitly.
-    *
-    * Shape: one `posexplode` (paragraph-volume-shaped, map-side), ONE
-    * row_number window keyed on the normalized paragraph — this is the only
-    * data shuffle, the word-count shape — then one per-doc rebuild
-    * aggregate. First-occurrence order is (doc_id, idx): deterministic,
-    * partition-layout-independent. At 100 TB, key the window on
-    * `xxhash64(norm)` instead of the full string to shrink the shuffle
-    * payload ~10× (collision risk 2⁻⁶⁴·pairs; CCNet itself dedups on a
-    * 64-bit hash) — the string key here keeps the oracle exact. */
   /** Boilerplate-paragraph removal by DOCUMENT FREQUENCY (the
     * RefinedWeb/Dolma companion rule to [[dedupParagraphs]]): a paragraph
     * appearing in more than `maxDocFreq` DISTINCT documents is boilerplate
@@ -739,6 +718,27 @@ object TextDedup {
         (col("__n_paras") - coalesce(col("kept_paras"), lit(0L))).as("removed_paras"))
   }
 
+  /** CCNet-style cross-corpus paragraph dedup (Wenzek et al. 2020, §3.1 —
+    * the recipe that removed ~70% of raw CommonCrawl text): paragraphs are
+    * the dedup unit, a paragraph's first occurrence in corpus order is
+    * kept, every later occurrence (in the same doc or any other doc) is
+    * dropped, and surviving documents are rebuilt from their kept
+    * paragraphs in original order. Normalization before comparison is
+    * lower+trim (CCNet normalizes harder — digits, punctuation — which
+    * composes here by pre-mapping the text column).
+    *
+    * Emits one row per INPUT doc: (doc_id, text_dedup, kept_paras,
+    * removed_paras) — a fully-duplicated doc survives as an empty string
+    * with kept_paras = 0 so the pipeline can drop or audit it explicitly.
+    *
+    * Shape: one `posexplode` (paragraph-volume-shaped, map-side), ONE
+    * row_number window keyed on the normalized paragraph — this is the only
+    * data shuffle, the word-count shape — then one per-doc rebuild
+    * aggregate. First-occurrence order is (doc_id, idx): deterministic,
+    * partition-layout-independent. At 100 TB, key the window on
+    * `xxhash64(norm)` instead of the full string to shrink the shuffle
+    * payload ~10× (collision risk 2⁻⁶⁴·pairs; CCNet itself dedups on a
+    * 64-bit hash) — the string key here keeps the oracle exact. */
   def dedupParagraphs(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
     val paras = docs.select(col(idCol).as("doc_id"),

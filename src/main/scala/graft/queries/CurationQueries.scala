@@ -23,15 +23,12 @@ object CurationQueries {
     * one fit (train once, score many, like the k-means coarse quantizer),
     * and the model tables persist so scoring's three references to them
     * (labels ×2, tokenProbs) don't re-execute the training lineage. */
-  private val nbModels = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), graft.operators.NaiveBayes.NbModel]()
+  private val nbModels = new Memo[graft.operators.NaiveBayes.NbModel]
 
   private def nbModel(s: org.apache.spark.sql.SparkSession, d: String)
       : graft.operators.NaiveBayes.NbModel = {
-    nbModels.keySet.removeIf(_._1.sparkContext.isStopped)
-    val m = nbModels.computeIfAbsent((s, d), _ =>
-      graft.operators.NaiveBayes.train(
-        docs(s, d).filter(col("doc_id") % 2 === 0), "lang"))
+    val m = nbModels(s, d)(graft.operators.NaiveBayes.train(
+      docs(s, d).filter(col("doc_id") % 2 === 0), "lang"))
     Q.cached(m.tokenProbs); Q.cached(m.labels)
     m
   }
@@ -41,28 +38,22 @@ object CurationQueries {
     * to replay the token explode + model joins per query; the r8 verdict
     * flagged q_x_nb_margin_bins paying ~1.5 s to re-derive what its
     * siblings already had). */
-  private val nbScoreFrames = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]()
+  private val nbScoreFrames = new Memo[org.apache.spark.sql.DataFrame]
 
   private def nbScores(s: org.apache.spark.sql.SparkSession, d: String)
-      : org.apache.spark.sql.DataFrame = {
-    nbScoreFrames.keySet.removeIf(_._1.sparkContext.isStopped)
-    Q.cached(nbScoreFrames.computeIfAbsent((s, d), _ =>
+      : org.apache.spark.sql.DataFrame =
+    Q.cached(nbScoreFrames(s, d)(
       graft.operators.NaiveBayes.scores(docs(s, d), nbModel(s, d))))
-  }
 
   /** Shared persisted confusion frame (K²-sized) — the confusion and
     * metrics gates consume the same classify run. */
-  private val nbConfusions = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]()
+  private val nbConfusions = new Memo[org.apache.spark.sql.DataFrame]
 
   private def nbConfusion(s: org.apache.spark.sql.SparkSession, d: String)
-      : org.apache.spark.sql.DataFrame = {
-    nbConfusions.keySet.removeIf(_._1.sparkContext.isStopped)
-    Q.cached(nbConfusions.computeIfAbsent((s, d), _ =>
+      : org.apache.spark.sql.DataFrame =
+    Q.cached(nbConfusions(s, d)(
       graft.operators.NaiveBayes.confusionFromScores(nbScores(s, d),
         docs(s, d).select(col("doc_id"), col("lang").as("gold")))))
-  }
 
   /** Shared DuckDB CTEs: whitespace tokens and the zipped bigram stream
     * (aligned unnests — DuckDB zips parallel unnests of equal length). */
@@ -166,10 +157,6 @@ object CurationQueries {
                   CAST(nll_micro AS DOUBLE) / (n_bigrams * $micro) AS xent_nats
                 FROM documents d LEFT JOIN sc USING (doc_id))"""
 
-  /** Per-(session, sfDir) catalog root for the stored-LM gate. */
-  private val lmRoots =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String), String]()
-
   lazy val all: Seq[QueryDef] = Seq(
 
     // Cross-entropy of every document under a bigram LM trained on the
@@ -187,7 +174,7 @@ object CurationQueries {
     // q_x_lm_xent, so the round-trip provably changes nothing.
     QueryDef("q_x_lm_xent_stored",
       (s, d) => {
-        val cat = new graft.catalog.Catalog(s, tempRoot(lmRoots, s, d, "graft-lm"))
+        val cat = new graft.catalog.Catalog(s, scratch(s, d, "graft-lm"))
         if (!cat.exists("reflm_pairs"))
           graft.operators.NgramLm.saveModel(cat, "reflm",
             graft.operators.NgramLm.trainBigram(docs(s, d).filter(col("doc_id") % 2 === 0)))

@@ -19,12 +19,6 @@ object EventQueries {
 
   private val micro = graft.operators.NgramLm.MicroScale
 
-  /** Per-(session, sfDir) chunked parquet source for the streaming gate
-    * (write-once, the stored-stream-source shape). */
-  private val streamSrcRoots =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String), String]()
-
   /** Memory-sink query names must be unique per run (the bench executes
     * the gate several times in one session). */
   private val streamRuns = new java.util.concurrent.atomic.AtomicLong(0)
@@ -109,7 +103,7 @@ object EventQueries {
     // memory sink is the fixture-scale stand-in for a table sink.
     QueryDef("q_x_stream_hourly",
       (s, d) => {
-        val src = s"${tempRoot(streamSrcRoots, s, d, "graft-stream-src")}/chunks"
+        val src = s"${scratch(s, d, "graft-stream-src")}/chunks"
         if (!java.nio.file.Files.exists(java.nio.file.Paths.get(src)))
           events(s, d).select(col("event_id"),
               timestamp_micros(col("ts_us")).as("ts"), col("user_id"),
@@ -117,7 +111,7 @@ object EventQueries {
             .repartitionByRange(4, col("ts"))
             .write.parquet(src)
         val name = s"graft_stream_hourly_${streamRuns.incrementAndGet()}"
-        val ckpt = java.nio.file.Files.createTempDirectory("graft-stream-ckpt")
+        val ckpt = s"${scratch(s, d, "graft-stream-ckpt")}/$name"
         val stream = s.readStream.schema(graft.streaming.EventStream.schema)
           .option("maxFilesPerTrigger", "1").parquet(src)
         // Stream-scoped tuning (StreamExecution clones the session at
@@ -140,7 +134,7 @@ object EventQueries {
           s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
           graft.streaming.EventStream.hourlyByType(stream, watermark = "720 hours")
             .writeStream.format("memory").queryName(name).outputMode("complete")
-            .option("checkpointLocation", ckpt.toString)
+            .option("checkpointLocation", ckpt)
             .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
             .start()
         } finally {

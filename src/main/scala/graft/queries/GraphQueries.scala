@@ -15,21 +15,13 @@ object GraphQueries {
     * degree gates (identical derivation) — built once, persisted, and
     * re-persisted on access because the bench session clearCache()s
     * between queries. */
-  private val coEdges = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]()
-
-  /** Per-(session, sfDir) roots for the q_x_cc_incremental stored seed
-    * labeling (write-once-read-many, like the stored band/IVF indexes). */
-  private val ccLabelRoots = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), String]()
+  private val coEdges = new Memo[org.apache.spark.sql.DataFrame]
 
   private def coPurchaseEdges(s: org.apache.spark.sql.SparkSession, d: String)
-      : org.apache.spark.sql.DataFrame = {
-    coEdges.keySet.removeIf(_._1.sparkContext.isStopped)
-    Q.cached(coEdges.computeIfAbsent((s, d), _ =>
+      : org.apache.spark.sql.DataFrame =
+    Q.cached(coEdges(s, d)(
       graft.operators.GraphRank.coOccurrenceEdges(
         t(s, d, "lineitem"), "l_orderkey", "l_partkey", minShared = 2L)))
-  }
 
   /** DuckDB replay of [[graft.operators.GraphRank.kCore]]: `rounds` peel
     * rounds as chained MATERIALIZED CTEs (default-inlined CTEs would
@@ -429,8 +421,7 @@ object GraphQueries {
         val edges = coPurchaseEdges(s, d)
         val isNew = graft.functions.Hashing.hash64(
           concat(col("a").cast("string"), lit(":"), col("b").cast("string"))) % 5 === 0
-        val cat = new graft.catalog.Catalog(s,
-          tempRoot(ccLabelRoots, s, d, "graft-cc-labels"))
+        val cat = new graft.catalog.Catalog(s, scratch(s, d, "graft-cc-labels"))
         if (!cat.exists("cc_labels"))
           cat.write("cc_labels",
             gr.connectedComponents(edges.filter(!isNew).select("a", "b"), rounds = 8))

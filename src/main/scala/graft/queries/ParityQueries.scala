@@ -31,16 +31,12 @@ object ParityQueries {
 
   private val scdCols = "c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment"
 
-  /** Per-(session, sfDir) catalog root for the S2/F12 catalog-surface gates. */
-  private val catalogRoots =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-
   /** Two-version fixture shared by the CDC and time-travel gates: v0 holds
     * orders with o_orderkey%3 ∈ {0,2}, v1 (current) replaces it with
     * %3 ∈ {0,1} — so the diff and both as-of reads are all predicate-
     * derivable by the oracle. */
   private def cdcCatalog(s: SparkSession, d: String): graft.catalog.Catalog = {
-    val cat = new graft.catalog.Catalog(s, tempRoot(catalogRoots, s, d, "graft-cat"))
+    val cat = new graft.catalog.Catalog(s, scratch(s, d, "graft-cat"))
     if (!cat.exists("orders_cdc")) {
       val o = t(s, d, "orders")
         .select(col("o_orderkey"), cents(col("o_totalprice")).as("rev_cents"))
@@ -50,23 +46,6 @@ object ParityQueries {
     }
     cat
   }
-
-  /** Per-(session, sfDir) export root for the JSONL sink gate. */
-  private val jsonlRoots =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-
-  /** Per-(session, sfDir) root for the copy-on-write DELETE gate. */
-  private val deleteRoots =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-
-  /** Per-(session, sfDir) root for the MERGE upsert gate. */
-  private val mergeRoots =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-
-  /** Per-(session, sfDir) root for the keyed-CDC gate (its fixture needs
-    * UPDATES between versions, which the shared cdcCatalog lacks). */
-  private val cdcKeyedRoots =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
 
   lazy val all: Seq[QueryDef] = Seq(
 
@@ -642,8 +621,7 @@ object ParityQueries {
         val (oTbl, dTbl) = (s"graft_orders_bkt_$tag", s"graft_details_bkt_$tag")
         if (!s.catalog.tableExists(oTbl)) {
           val (orders, details) = factInputs(s, d)
-          val cat = new graft.catalog.Catalog(s,
-            java.nio.file.Files.createTempDirectory("graft-buckets").toString)
+          val cat = new graft.catalog.Catalog(s, scratch(s, d, "graft-buckets"))
           cat.writeBucketed(oTbl, orders, "orderid", 8)
           cat.writeBucketed(dTbl, details, "orderid", 8)
         }
@@ -878,7 +856,7 @@ object ParityQueries {
     QueryDef("q_x_jsonl_export",
       (s, d) => {
         val docs = t(s, d, "documents")
-        val out = tempRoot(jsonlRoots, s, d, "graft-jsonl-export") + "/docs"
+        val out = scratch(s, d, "graft-jsonl-export") + "/docs"
         if (!new java.io.File(out).exists)
           graft.io.Sources.writeJsonl(docs, out, 4, "doc_id")
         graft.io.Sources.jsonl(s, out, docs.schema)
@@ -897,7 +875,7 @@ object ParityQueries {
     QueryDef("q_x_jsonl_quarantine",
       (s, d) => {
         val docs = t(s, d, "documents")
-        val out = tempRoot(jsonlRoots, s, d, "graft-jsonl-quarantine") + "/lines"
+        val out = scratch(s, d, "graft-jsonl-quarantine") + "/lines"
         if (!new java.io.File(out).exists) {
           val line = concat(lit("{\"doc_id\": "), col("doc_id"),
             lit(", \"lang\": \""), col("lang"),
@@ -928,7 +906,7 @@ object ParityQueries {
     QueryDef("q_x_orc_roundtrip",
       (s, d) => {
         val docs = t(s, d, "documents")
-        val out = tempRoot(jsonlRoots, s, d, "graft-orc") + "/docs_orc"
+        val out = scratch(s, d, "graft-orc") + "/docs_orc"
         if (!new java.io.File(out).exists)
           docs.write.mode("overwrite").orc(out)
         s.read.orc(out)
@@ -944,7 +922,7 @@ object ParityQueries {
     // and the hash would fail.
     QueryDef("q_s2_truncate_reload",
       (s, d) => {
-        val cat = new graft.catalog.Catalog(s, tempRoot(catalogRoots, s, d, "graft-cat"))
+        val cat = new graft.catalog.Catalog(s, scratch(s, d, "graft-cat"))
         if (!cat.exists("supplier_stage")) {
           cat.write("supplier_stage", t(s, d, "supplier"))
           cat.truncate("supplier_stage")
@@ -988,7 +966,7 @@ object ParityQueries {
     // nothing for unchanged keys. The row-level shape sinks replay.
     QueryDef("q_x_cdc_keyed",
       (s, d) => {
-        val cat = new graft.catalog.Catalog(s, tempRoot(cdcKeyedRoots, s, d, "graft-cdck"))
+        val cat = new graft.catalog.Catalog(s, scratch(s, d, "graft-cdck"))
         if (!cat.exists("orders_cdck")) {
           val o = t(s, d, "orders")
             .select(col("o_orderkey"), cents(col("o_totalprice")).as("rev_cents"))
@@ -1041,8 +1019,7 @@ object ParityQueries {
     // not a moving pointer.
     QueryDef("q_x_tag_pin",
       (s, d) => {
-        val cat = new graft.catalog.Catalog(s,
-          tempRoot(catalogRoots, s, d, "graft-cat"))
+        val cat = new graft.catalog.Catalog(s, scratch(s, d, "graft-cat"))
         if (!cat.exists("rel_orders")) {
           val o = t(s, d, "orders")
             .select(col("o_orderkey"), cents(col("o_totalprice")).as("cents"))
@@ -1127,8 +1104,7 @@ object ParityQueries {
     // change class from the predicates alone.
     QueryDef("q_x_change_feed",
       (s, d) => {
-        val cat = new graft.catalog.Catalog(s,
-          tempRoot(catalogRoots, s, d, "graft-cat"), keepVersions = 10)
+        val cat = new graft.catalog.Catalog(s, scratch(s, d, "graft-cat"), keepVersions = 10)
         if (!cat.exists("cdf_orders")) {
           val o = t(s, d, "orders")
             .select(col("o_orderkey"), cents(col("o_totalprice")).as("cents"))
@@ -1164,8 +1140,7 @@ object ParityQueries {
     // re-runs see the same row.
     QueryDef("q_x_vacuum",
       (s, d) => {
-        val cat = new graft.catalog.Catalog(s,
-          tempRoot(catalogRoots, s, d, "graft-cat"), keepVersions = 10)
+        val cat = new graft.catalog.Catalog(s, scratch(s, d, "graft-cat"), keepVersions = 10)
         if (!cat.exists("vac_orders")) (1 to 4).foreach { i =>
           cat.write("vac_orders", t(s, d, "orders")
             .filter(col("o_orderkey") % 10 < i * 2)
@@ -1207,7 +1182,7 @@ object ParityQueries {
     // batch, double count, key mixup) fails the hash.
     QueryDef("q_x_incremental_agg",
       (s, d) => {
-        val cat = new graft.catalog.Catalog(s, tempRoot(catalogRoots, s, d, "graft-cat"))
+        val cat = new graft.catalog.Catalog(s, scratch(s, d, "graft-cat"))
         if (!cat.exists("daily_rev")) (0 until 4).foreach { i =>
           graft.ops.IncrementalAgg.refresh(cat, "daily_rev",
             t(s, d, "orders").filter(col("o_orderkey") % 4 === i)
@@ -1248,7 +1223,7 @@ object ParityQueries {
     // re-derives the survivors from the source (NULL predicates survive).
     QueryDef("q_x_delete_where",
       (s, d) => {
-        val cat = new graft.catalog.Catalog(s, tempRoot(deleteRoots, s, d, "graft-del"))
+        val cat = new graft.catalog.Catalog(s, scratch(s, d, "graft-del"))
         if (!cat.exists("customers_gdpr")) {
           cat.write("customers_gdpr",
             t(s, d, "customer")
@@ -1274,7 +1249,7 @@ object ParityQueries {
     // tombstones composing on one table.
     QueryDef("q_x_delete_mor",
       (s, d) => {
-        val cat = new graft.catalog.Catalog(s, tempRoot(deleteRoots, s, d, "graft-del"))
+        val cat = new graft.catalog.Catalog(s, scratch(s, d, "graft-del"))
         if (!cat.exists("customers_mor")) {
           cat.write("customers_mor",
             t(s, d, "customer")
@@ -1304,7 +1279,7 @@ object ParityQueries {
     // matched keys rewrite; the rest carry by manifest reference.
     QueryDef("q_x_merge_upsert",
       (s, d) => {
-        val cat = new graft.catalog.Catalog(s, tempRoot(mergeRoots, s, d, "graft-mrg"))
+        val cat = new graft.catalog.Catalog(s, scratch(s, d, "graft-mrg"))
         if (!cat.exists("customers_merge")) {
           val base = t(s, d, "customer")
             .select(col("c_custkey"), col("c_mktsegment"),
@@ -1755,7 +1730,7 @@ object ParityQueries {
     // would throw (no such table / no such column) and fail the gate.
     QueryDef("q_f12_identifier_case",
       (s, d) => {
-        val cat = new graft.catalog.Catalog(s, tempRoot(catalogRoots, s, d, "graft-cat"))
+        val cat = new graft.catalog.Catalog(s, scratch(s, d, "graft-cat"))
         if (!cat.exists("Mixed_Case_Dim"))
           cat.write("MIXED_Case_Dim", t(s, d, "nation"))
         cat.read("mixed_case_dim")
@@ -1819,7 +1794,7 @@ object ParityQueries {
     // file-count mechanics are asserted in CatalogSpec.
     QueryDef("q_x_compact_roundtrip",
       (s, d) => {
-        val cat = new graft.catalog.Catalog(s, tempRoot(catalogRoots, s, d, "graft-cat"))
+        val cat = new graft.catalog.Catalog(s, scratch(s, d, "graft-cat"))
         if (!cat.exists("events_small_files")) {
           cat.write("events_small_files",
             events(s, d).select(col("event_id"), col("event_type"),
@@ -1842,7 +1817,7 @@ object ParityQueries {
     // oracle is the UNION of both batch shapes.
     QueryDef("q_x_schema_evolution",
       (s, d) => {
-        val cat = new graft.catalog.Catalog(s, tempRoot(catalogRoots, s, d, "graft-cat"))
+        val cat = new graft.catalog.Catalog(s, scratch(s, d, "graft-cat"))
         if (!cat.exists("orders_evolving")) {
           val o = t(s, d, "orders")
             .select(col("o_orderkey"), cents(col("o_totalprice")).as("rev_cents"))

@@ -1,5 +1,6 @@
 package graft.queries
 
+import java.nio.file.{Files, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -23,22 +24,52 @@ final case class QueryDef(
     oracle: Option[String]
 )
 
+/** Shared helpers of the gate queries, and their fixture store: everything
+  * a gate builds once per (session, data dir) and reuses on later calls —
+  * analyzed tables, fitted models, shared persisted frames, stored indexes
+  * and throwaway catalogs — goes through a [[Memo]] and, when it lands on
+  * disk, a [[scratch]] directory. Like the reference's staging tables, all
+  * of it is transient: memo entries of stopped sessions are dropped on
+  * access, and every scratch directory lives under one JVM-wide root that
+  * is deleted when the JVM exits. */
 object Q {
-  /** Lazy table registry: one analyzed relation per (session, path). The
-    * file listing + schema read otherwise repeats for every query (43
-    * queries × 2 bench runs — a measurable slice of the fixed per-query
-    * overhead). Plans stay lazy; nothing is materialized here. */
-  private val tableCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  /** One per-(session, data dir) memo. */
+  final class Memo[V] {
+    // one map per memo: builds nest (nbConfusion → nbScores → nbModel),
+    // and a nested computeIfAbsent on one shared map throws "Recursive update"
+    private val m = new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), V]()
 
-  /** Read one of the driver-generated parquet tables (TESTDATA.md). Entries
-    * for stopped sessions are dropped on access so the cache cannot retain
-    * DataFrames of dead sessions in a long-lived process (the bench/verify
-    * mains are single-session, so this is a one-pass no-op there). */
+    /** The value for (s, d), built by `build` on first use. */
+    def apply(s: SparkSession, d: String)(build: => V): V = {
+      m.keySet.removeIf(_._1.sparkContext.isStopped)
+      m.computeIfAbsent((s, d), _ => build)
+    }
+  }
+
+  /** This JVM's scratch root, deleted with everything under it at exit. */
+  lazy val scratchRoot: Path = {
+    val root = Files.createTempDirectory("graft-")
+    sys.addShutdownHook(scala.util.Try(scala.util.Using.resource(Files.walk(root))(
+      _.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(p => Files.deleteIfExists(p)))))
+    root
+  }
+
+  private val scratchDirs = new Memo[Path]
+
+  /** `family`'s directory under the scratch root of (s, d): stored-index
+    * gates write it once and read it thereafter. */
+  def scratch(s: SparkSession, d: String, family: String): String =
+    Files.createDirectories(scratchDirs(s, d)(Files.createTempDirectory(scratchRoot, "run"))
+      .resolve(family)).toString
+
+  private val tables = new Memo[DataFrame]
+
+  /** Read one of the generated parquet test tables (TESTDATA.md): one
+    * analyzed relation per (session, path), so the file listing and schema
+    * read do not repeat for every query. Plans stay lazy. */
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
-    tableCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    tableCache.computeIfAbsent((spark, s"$dir/$name.parquet"),
-      { case (s, p) => s.read.parquet(p) })
+    val path = s"$dir/$name.parquet"
+    tables(spark, path)(spark.read.parquet(path))
   }
 
   /** The `events` fixture has shipped with several `ts` precisions over time
@@ -60,17 +91,6 @@ object Q {
       case _ => unix_micros(col("ts").cast("timestamp"))
     }
     df.withColumn("ts_us", tsUs)
-  }
-
-  /** Per-(session, sfDir) temp directory for stored-index / stored-layout
-    * gates (write-once-read-many, like a real index); stopped-session
-    * entries evicted on access — one implementation for every such cache
-    * instead of a hand-rolled copy per query family. */
-  def tempRoot(cache: java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String],
-      s: SparkSession, d: String, prefix: String): String = {
-    cache.keySet.removeIf(_._1.sparkContext.isStopped)
-    cache.computeIfAbsent((s, d),
-      _ => java.nio.file.Files.createTempDirectory(prefix).toString)
   }
 
   /** Persist a shared, cached-per-session frame unless it is still cached

@@ -52,24 +52,12 @@ object RetrievalQueries {
     * flagged q_x_search_rrf paying ~1 s to re-derive what search_hybrid
     * had just built). The stored-index gates (indexed/incremental) are
     * deliberately NOT routed through it: they prove the catalog path. */
-  private val postingsFrames = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]()
+  private val postingsFrames = new Memo[org.apache.spark.sql.DataFrame]
 
   private def sharedPostings(s: org.apache.spark.sql.SparkSession, d: String)
-      : org.apache.spark.sql.DataFrame = {
-    postingsFrames.keySet.removeIf(_._1.sparkContext.isStopped)
-    Q.cached(postingsFrames.computeIfAbsent((s, d), _ =>
+      : org.apache.spark.sql.DataFrame =
+    Q.cached(postingsFrames(s, d)(
       graft.operators.TextIndex.postings(t(s, d, "documents"), "doc_id", "text")))
-  }
-
-  /** Per-(session, sfDir) roots for the stored postings indexes —
-    * write-once-read-many, like the IVF / LSH band indexes. */
-  private val textIndexRoots =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String), String]()
-
-  /** Per-(session, sfDir) roots for the stored POSITIONAL index. */
-  private val posIndexRoots =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String), String]()
 
   lazy val all: Seq[QueryDef] = Seq(
 
@@ -239,8 +227,7 @@ object RetrievalQueries {
     // not change one count.
     QueryDef("q_x_phrase_search_indexed",
       (s, d) => {
-        val cat = new graft.catalog.Catalog(s,
-          tempRoot(posIndexRoots, s, d, "graft-pos-index"))
+        val cat = new graft.catalog.Catalog(s, scratch(s, d, "graft-pos-index"))
         if (!cat.exists("pos_postings"))
           cat.writeSorted("pos_postings",
             graft.operators.TextIndex.positionalPostings(
@@ -275,8 +262,7 @@ object RetrievalQueries {
     // rank.
     QueryDef("q_x_text_search_indexed",
       (s, d) => {
-        val cat = new graft.catalog.Catalog(s,
-          tempRoot(textIndexRoots, s, d, "graft-text-index"))
+        val cat = new graft.catalog.Catalog(s, scratch(s, d, "graft-text-index"))
         if (!cat.exists("postings"))
           cat.writeSorted("postings",
             graft.operators.TextIndex.postings(t(s, d, "documents"), "doc_id", "text"),
@@ -372,8 +358,7 @@ object RetrievalQueries {
     // ONE living index instead of re-tokenizing the corpus per batch.
     QueryDef("q_x_text_index_incremental",
       (s, d) => {
-        val cat = new graft.catalog.Catalog(s,
-          tempRoot(textIndexRoots, s, d + "#incr", "graft-text-incr"))
+        val cat = new graft.catalog.Catalog(s, scratch(s, d, "graft-text-incr"))
         if (!cat.exists("postings")) {
           val docs = t(s, d, "documents")
           cat.write("postings", graft.operators.TextIndex.postings(

@@ -28,22 +28,13 @@ object VectorQueries {
   private val numPlanes = 8
   private val planes: Array[Array[Long]] = graft.operators.VectorSearch.planes(numPlanes, 64)
 
-  /** Per-(session, sfDir) roots for the q_x_ann_index stored IVF index —
-    * write-once-read-many, like a real retrieval index. */
-  private val ivfIndexRoots =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-
   /** Per-(session, sfDir) fitted k-means model — trained once, probed many,
     * like a production coarse quantizer (the first gate touching it pays
     * the fit; q_x_kmeans and q_x_ann_kmeans share it). */
-  private val kmeansModels =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), graft.operators.KMeans.Model]()
+  private val kmeansModels = new Memo[graft.operators.KMeans.Model]
 
-  private def kmeansModel(s: SparkSession, d: String): graft.operators.KMeans.Model = {
-    kmeansModels.keySet.removeIf(_._1.sparkContext.isStopped)
-    kmeansModels.computeIfAbsent((s, d),
-      _ => graft.operators.KMeans.fit(t(s, d, "embeddings"), k = 8, iters = 2))
-  }
+  private def kmeansModel(s: SparkSession, d: String): graft.operators.KMeans.Model =
+    kmeansModels(s, d)(graft.operators.KMeans.fit(t(s, d, "embeddings"), k = 8, iters = 2))
 
   /** Oracle shared by the inline and stored-index ANN probes (vec_id < 20
     * queried against the full corpus — the index must change nothing). */
@@ -168,20 +159,13 @@ object VectorQueries {
                  row_number() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS rank
           FROM p) WHERE rank <= 3"""
 
-  /** Per-(session, sfDir) roots for the q_x_ann_kmeans_stored model table. */
-  private val kmeansModelRoots =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-
   /** Per-(session, sfDir) kmeans‖-seeded model (fitParallel defaults:
     * k=8, iters=2, rounds=2) — the production init, oracle-gated. */
-  private val kmeansParallelModels =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), graft.operators.KMeans.Model]()
+  private val kmeansParallelModels = new Memo[graft.operators.KMeans.Model]
 
-  private def kmeansParallelModel(s: SparkSession, d: String): graft.operators.KMeans.Model = {
-    kmeansParallelModels.keySet.removeIf(_._1.sparkContext.isStopped)
-    kmeansParallelModels.computeIfAbsent((s, d),
-      _ => graft.operators.KMeans.fitParallel(t(s, d, "embeddings"), k = 8, iters = 2, rounds = 2))
-  }
+  private def kmeansParallelModel(s: SparkSession, d: String): graft.operators.KMeans.Model =
+    kmeansParallelModels(s, d)(
+      graft.operators.KMeans.fitParallel(t(s, d, "embeddings"), k = 8, iters = 2, rounds = 2))
 
   /** Full SQL replay of [[graft.operators.KMeans.fitParallel]] — the
     * deterministic kmeans‖ init IS engine-portable, end to end:
@@ -296,19 +280,11 @@ object VectorQueries {
 
   /** Per-(session, sfDir) fitted PQ codebooks (m=4 × 16-dim subspaces,
     * ksub=8, iters=2) — trained once, probed by both PQ gates. */
-  private val pqModels =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), graft.operators.ProductQuantizer.PQModel]()
+  private val pqModels = new Memo[graft.operators.ProductQuantizer.PQModel]
 
-  private def pqModel(s: SparkSession, d: String): graft.operators.ProductQuantizer.PQModel = {
-    pqModels.keySet.removeIf(_._1.sparkContext.isStopped)
-    pqModels.computeIfAbsent((s, d),
-      _ => graft.operators.ProductQuantizer.fit(
-        t(s, d, "embeddings"), m = 4, ksub = 8, iters = 2, dim = 64))
-  }
-
-  /** Per-(session, sfDir) roots for the q_x_ann_pq_stored codes + model. */
-  private val pqStoreRoots =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private def pqModel(s: SparkSession, d: String): graft.operators.ProductQuantizer.PQModel =
+    pqModels(s, d)(graft.operators.ProductQuantizer.fit(
+      t(s, d, "embeddings"), m = 4, ksub = 8, iters = 2, dim = 64))
 
   /** Per-(session, sfDir) MATERIALIZED code frames — the index tables of a
     * serving deployment, shared across the PQ/IVF-PQ probe gates the same
@@ -316,15 +292,11 @@ object VectorQueries {
     * encode argmins (the expensive step, and a large literal plan to
     * re-analyze) run once per session, every probe reads the
     * localCheckpointed codes. */
-  private val codeFrames =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String),
-      org.apache.spark.sql.DataFrame]()
+  private val codeFrames = new Memo[org.apache.spark.sql.DataFrame]
 
   private def codeFrame(s: SparkSession, d: String, kind: String)(
-      build: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    codeFrames.keySet.removeIf(_._1.sparkContext.isStopped)
-    codeFrames.computeIfAbsent((s, d, kind), _ => build.localCheckpoint())
-  }
+      build: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    codeFrames(s, s"$d#$kind")(build.localCheckpoint())
 
   private def pqCodes(s: SparkSession, d: String) =
     codeFrame(s, d, "pq")(graft.operators.ProductQuantizer.encode(
@@ -512,15 +484,11 @@ object VectorQueries {
 
   /** Per-(session, sfDir) residual PQ codebooks (trained on coarse-model
     * residuals; shares the cached coarse model). */
-  private val pqResidualModels =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), graft.operators.ProductQuantizer.PQModel]()
+  private val pqResidualModels = new Memo[graft.operators.ProductQuantizer.PQModel]
 
-  private def pqResidualModel(s: SparkSession, d: String): graft.operators.ProductQuantizer.PQModel = {
-    pqResidualModels.keySet.removeIf(_._1.sparkContext.isStopped)
-    pqResidualModels.computeIfAbsent((s, d),
-      _ => graft.operators.ProductQuantizer.fitResidual(
-        t(s, d, "embeddings"), kmeansModel(s, d), m = 4, ksub = 8, iters = 2, dim = 64))
-  }
+  private def pqResidualModel(s: SparkSession, d: String): graft.operators.ProductQuantizer.PQModel =
+    pqResidualModels(s, d)(graft.operators.ProductQuantizer.fitResidual(
+      t(s, d, "embeddings"), kmeansModel(s, d), m = 4, ksub = 8, iters = 2, dim = 64))
 
   /** Oracle for q_x_search_mmr: the greedy MMR loop unrolled as k−1 chained
     * CTE rounds (plain SQL — no recursive CTE needed because k is a small
@@ -569,16 +537,12 @@ object VectorQueries {
 
   /** Per-(session, sfDir) fitted PCA model (gram moments + dominant
     * direction): the three PCA gates share ONE corpus scan + power fit. */
-  private val pcaModels = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (graft.operators.Pca.GramStats, Array[Long])]()
+  private val pcaModels = new Memo[(graft.operators.Pca.GramStats, Array[Long])]
 
   private def pcaModel(s: SparkSession, d: String)
-      : (graft.operators.Pca.GramStats, Array[Long]) = {
-    pcaModels.keySet.removeIf(_._1.sparkContext.isStopped)
-    pcaModels.computeIfAbsent((s, d), _ => {
-      val g = graft.operators.Pca.gramStats(t(s, d, "embeddings"))
-      (g, graft.operators.Pca.principalDirection(graft.operators.Pca.covNumerator(g)))
-    })
+      : (graft.operators.Pca.GramStats, Array[Long]) = pcaModels(s, d) {
+    val g = graft.operators.Pca.gramStats(t(s, d, "embeddings"))
+    (g, graft.operators.Pca.principalDirection(graft.operators.Pca.covNumerator(g)))
   }
 
   /** Shared oracle CTEs: exact-integer moments (BIGINT gram — products stay
@@ -717,8 +681,7 @@ object VectorQueries {
     QueryDef("q_x_ann_pq_stored",
       (s, d) => {
         val pq = graft.operators.ProductQuantizer
-        val cat = new graft.catalog.Catalog(s,
-          tempRoot(pqStoreRoots, s, d, "graft-pq-store"))
+        val cat = new graft.catalog.Catalog(s, scratch(s, d, "graft-pq-store"))
         if (!cat.exists("pq_model")) {
           pq.saveModel(cat, "pq_model", s, pqModel(s, d))
           cat.write("pq_codes", pq.encode(t(s, d, "embeddings"), pqModel(s, d)))
@@ -954,8 +917,7 @@ object VectorQueries {
     QueryDef("q_x_ann_index",
       (s, d) => {
         val emb = t(s, d, "embeddings")
-        val cat = new graft.catalog.Catalog(s,
-          tempRoot(ivfIndexRoots, s, d, "graft-ivf-index"))
+        val cat = new graft.catalog.Catalog(s, scratch(s, d, "graft-ivf-index"))
         if (!cat.exists("ivf_index"))
           cat.writeSorted("ivf_index",
             graft.operators.VectorSearch.buildIvfIndex(emb, numPlanes, dim = 64),
@@ -974,8 +936,7 @@ object VectorQueries {
     QueryDef("q_x_ann_index_int8",
       (s, d) => {
         val emb = t(s, d, "embeddings")
-        val cat = new graft.catalog.Catalog(s,
-          tempRoot(ivfIndexRoots, s, d, "graft-ivf-index"))
+        val cat = new graft.catalog.Catalog(s, scratch(s, d, "graft-ivf-index"))
         if (!cat.exists("ivf_index_int8"))
           cat.writeSorted("ivf_index_int8",
             graft.operators.VectorSearch.buildIvfIndexInt8(emb, numPlanes, dim = 64),
@@ -1203,8 +1164,7 @@ object VectorQueries {
     // parquet changes nothing: same oracle as q_x_ann_kmeans.
     QueryDef("q_x_ann_kmeans_stored",
       (s, d) => {
-        val cat = new graft.catalog.Catalog(s,
-          tempRoot(kmeansModelRoots, s, d, "graft-kmeans-model"))
+        val cat = new graft.catalog.Catalog(s, scratch(s, d, "graft-kmeans-model"))
         if (!cat.exists("kmeans_model"))
           graft.operators.KMeans.saveModel(cat, "kmeans_model", s, kmeansModel(s, d))
         graft.operators.KMeans.ivfProbeTopK(

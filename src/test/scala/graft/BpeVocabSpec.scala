@@ -158,7 +158,7 @@ class BpeVocabSpec extends SparkSpec {
     val docs = Seq((1L, "low low low low low lower lower lowest lowest"))
       .toDF("doc_id", "text")
     val cat = new graft.catalog.Catalog(spark,
-      java.nio.file.Files.createTempDirectory("graft-bpe-merges").toString)
+      tempDir("graft-bpe-merges").toString)
     val merges = BpeVocab.learn(docs, 2)
     BpeVocab.saveMerges(cat, "merges", spark, merges)
     assert(BpeVocab.loadMerges(cat, "merges") == merges)

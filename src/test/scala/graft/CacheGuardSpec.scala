@@ -27,7 +27,7 @@ class CacheGuardSpec extends SparkSpec {
     def postingsCached = TextIndex.postings(docs, "doc_id", "text").storageLevel.useMemory
     assert(postingsCached)
     val cat = new graft.catalog.Catalog(spark,
-      java.nio.file.Files.createTempDirectory("graft-cg-pipe").toString)
+      tempDir("graft-cg-pipe").toString)
     val runner = new graft.run.PipelineRunner(spark, cat)
     val cfg = graft.run.RunConfig("customers", fixture("customers.csv"),
       java.sql.Date.valueOf("2024-01-01"))

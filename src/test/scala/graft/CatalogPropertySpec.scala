@@ -1,9 +1,7 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
-import org.scalatest.funsuite.AnyFunSuite
 import graft.catalog.Catalog
 
 /** Property-based catalog state machine: arbitrary sequences of
@@ -13,8 +11,7 @@ import graft.catalog.Catalog
   * prune) must never change WHAT a reader sees, only how it's stored.
   * (Plain ScalaCheck runner — the scalatest bridge artifact isn't among the
   * pinned deps.) */
-class CatalogPropertySpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
+class CatalogPropertySpec extends SparkSpec {
   import spark.implicits._
 
   sealed trait Op
@@ -33,7 +30,7 @@ class CatalogPropertySpec extends AnyFunSuite {
 
   test("write/append/truncate/compact sequences match the in-memory model") {
     val prop = Prop.forAllNoShrink(Gen.listOfN(8, opGen)) { ops =>
-      val cat = new Catalog(spark, Files.createTempDirectory("graft-prop").toString)
+      val cat = new Catalog(spark, tempDir("graft-prop").toString)
       // model: the multiset of visible rows (None = table does not exist)
       var model: Option[List[Long]] = None
       ops.foreach {

@@ -10,7 +10,7 @@ class CatalogSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshCatalog() =
-    new Catalog(spark, Files.createTempDirectory("graft-cat").toString)
+    new Catalog(spark, tempDir("graft-cat").toString)
 
   test("write then read round-trips; names are case-insensitive") {
     val cat = freshCatalog()
@@ -72,7 +72,7 @@ class CatalogSpec extends SparkSpec {
     import org.apache.spark.sql.functions.udf
     val cat = freshCatalog()
     cat.write("t", Seq(1).toDF("id"))
-    val gate = Files.createTempDirectory("graft-cas").resolve("b-committed")
+    val gate = tempDir("graft-cas").resolve("b-committed")
     val waitForGate = udf { (x: Int) =>
       val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
       while (!Files.exists(gate) && System.nanoTime() < deadline) Thread.sleep(20)
@@ -125,7 +125,7 @@ class CatalogSpec extends SparkSpec {
 
   test("expireVersions: keeps the window, deletes the rest, idempotent") {
     val cat = new Catalog(spark,
-      Files.createTempDirectory("graft-cat").toString, keepVersions = 10)
+      tempDir("graft-cat").toString, keepVersions = 10)
     (1 to 4).foreach(i => cat.write("t", Seq(i, i * 10).toDF("id")))
     assert(cat.versions("t") == Seq(0L, 1L, 2L, 3L))
     assert(cat.expireVersions("t", keepLast = 2) == Seq(0L, 1L))
@@ -140,7 +140,7 @@ class CatalogSpec extends SparkSpec {
 
   test("expireVersions: never deletes a directory a kept manifest carries") {
     val cat = new Catalog(spark,
-      Files.createTempDirectory("graft-cat").toString, keepVersions = 10)
+      tempDir("graft-cat").toString, keepVersions = 10)
     cat.write("t", (1 to 40).toDF("id").repartition(4))
     cat.deleteWhere("t", col("id") > 35) // v1 carries v0 files by reference
     assert(cat.versions("t") == Seq(0L, 1L))
@@ -260,7 +260,7 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("every version records the schema the parquet reader infers") {
-    val cat = new Catalog(spark, Files.createTempDirectory("graft-cat").toString,
+    val cat = new Catalog(spark, tempDir("graft-cat").toString,
       keepVersions = 10)
     def rows(ids: Seq[Int]) = ids.toDF("id").select(col("id"),
       col("id").cast("decimal(12,2)").as("amount"),
@@ -345,6 +345,18 @@ class CatalogSpec extends SparkSpec {
     // column ORDER alone is fine — normalized to the table's order
     cat.append("t", Seq(("b", 2L)).toDF("v", "id"))
     assert(rows(cat.read("t").orderBy("id")) == Seq(Seq(1L, "a"), Seq(2L, "b")))
+  }
+
+  test("append checks the current version's schema, also one another Catalog evolved") {
+    val root = tempDir("graft-cat").toString
+    val (a, b) = (new Catalog(spark, root), new Catalog(spark, root))
+    a.append("t", Seq((1, "a")).toDF("id", "s"))
+    b.appendEvolve("t", Seq((2, "b", 7)).toDF("id", "s", "extra"))
+    val e = intercept[IllegalArgumentException](
+      a.append("t", Seq((3, "c")).toDF("id", "s")))
+    assert(e.getMessage.contains("missing=extra"))
+    assert(rows(new Catalog(spark, root).read("t").orderBy("id")) ==
+      Seq(Seq(1, "a", null), Seq(2, "b", 7)))
   }
 
   test("history reports per-version file composition") {
@@ -619,7 +631,7 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("deleteWhereMor: tombstoned reads equal copy-on-write deletes; compaction pays the rewrite") {
-    val cat = new Catalog(spark, Files.createTempDirectory("graft-cat").toString)
+    val cat = new Catalog(spark, tempDir("graft-cat").toString)
     val rows = (1L to 40L).map(i => (i, if (i % 4 == 0) "kill" else "keep"))
     cat.write("t", rows.toDF("id", "tag"))
     val before = cat.currentVersionNumber("t").get
@@ -645,7 +657,7 @@ class CatalogSpec extends SparkSpec {
     assert(cat.deleteWhereMor("t", col("id") === 2L, "id") == 1L)
     assert(cat.readMor("t").select("id").as[Long].collect().toSet == expect - 1L - 2L)
     // no tombstones at all → readMor IS read
-    val cat2 = new Catalog(spark, Files.createTempDirectory("graft-cat").toString)
+    val cat2 = new Catalog(spark, tempDir("graft-cat").toString)
     cat2.write("u", Seq((1L, "a")).toDF("id", "v"))
     assert(cat2.readMor("u").count() == 1L)
   }

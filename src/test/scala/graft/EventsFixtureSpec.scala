@@ -27,7 +27,7 @@ class EventsFixtureSpec extends SparkSpec {
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
 
   test("Q.events yields identical ts_us for long-nanos, timestamp[us] and timestamp_ntz[us] fixtures") {
-    val root = java.nio.file.Files.createTempDirectory("events-precision").toString
+    val root = tempDir("events-precision").toString
     writeFixture(s"$root/nanos_long", ($"us" * 1000L).cast("long"))
     writeFixture(s"$root/ts_instant", timestamp_micros($"us"))
     writeFixture(s"$root/ts_ntz", timestamp_micros($"us").cast("timestamp_ntz"))

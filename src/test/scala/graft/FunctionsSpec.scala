@@ -508,7 +508,7 @@ class FunctionsSpec extends SparkSpec {
     val batch = Seq((21L, nearDup), (23L, "fresh new content words")).toDF("doc_id", "text")
     // build once, store in the catalog, query against the stored frame
     val cat = new graft.catalog.Catalog(spark,
-      java.nio.file.Files.createTempDirectory("graft-lsh-spec").toString)
+      tempDir("graft-lsh-spec").toString)
     cat.write("lsh_bands", TextDedup.buildBandIndex(corpus))
     val indexed = TextDedup.minhashLshIndexed(corpus, cat.read("lsh_bands"), batch, 0.5)
     // plan shape FIRST (pre-execution, so AQE prints one plan, not
@@ -927,7 +927,7 @@ class FunctionsSpec extends SparkSpec {
     val emb = (0L until 40L).map(i => (i, Seq.fill(16)(rnd.nextFloat() - 0.5f)))
       .toDF("vec_id", "embedding")
     val cat = new graft.catalog.Catalog(spark,
-      java.nio.file.Files.createTempDirectory("graft-ivf-spec").toString)
+      tempDir("graft-ivf-spec").toString)
     cat.writeSorted("ivf_index", VectorSearch.buildIvfIndex(emb, 4, dim = 16), 2, "bucket")
     val probed = VectorSearch.ivfProbeTopKIndexed(
       cat.read("ivf_index"), emb.filter(col("vec_id") < 5), 3, 4, dim = 16)
@@ -946,7 +946,7 @@ class FunctionsSpec extends SparkSpec {
     val emb = (0L until 60L).map(i => (i, Seq.fill(16)(rnd.nextFloat() - 0.5f)))
       .toDF("vec_id", "embedding")
     val cat = new graft.catalog.Catalog(spark,
-      java.nio.file.Files.createTempDirectory("graft-ivf8-spec").toString)
+      tempDir("graft-ivf8-spec").toString)
     cat.writeSorted("idx8", VectorSearch.buildIvfIndexInt8(emb, 4, dim = 16), 2, "bucket")
     val stored = cat.read("idx8")
     // storage claim: codes really are tinyint (1/8th the long payload)

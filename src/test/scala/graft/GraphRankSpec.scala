@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.operators.GraphRank
 
-class GraphRankSpec extends SparkSpec {
+class GraphRankSpec extends SparkSpec with JobCounting {
   import spark.implicits._
 
   private def ranks(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
@@ -138,6 +138,20 @@ class GraphRankSpec extends SparkSpec {
     // K4 has 4 triangles
     val k4 = (for (a <- 1L to 4L; b <- a + 1 to 4L) yield (a, b)).toDF("a", "b")
     assert(GraphRank.triangleStats(k4).as[(Long, Long, Long)].head() == ((4L, 6L, 4L)))
+  }
+
+  test("kCore: each round's edge count comes from its checkpoint job, not a recount") {
+    // K4 plus the chain 4-5-6: one input checkpoint and two peel rounds
+    val edges = ((for (a <- 1L to 4L; b <- a + 1 to 4L) yield (a, b)) ++
+      Seq((4L, 5L), (5L, 6L))).toDF("a", "b")
+    // kCore narrows its rounds from the session width: pin it, so the
+    // plan and its job count do not depend on the host's cores
+    val width = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    val (core, jobs) = try jobsDuring(GraphRank.kCore(edges, 3L, 10))
+      finally spark.conf.set("spark.sql.shuffle.partitions", width)
+    assert(jobs == 9) // 15 when each checkpoint was followed by a count()
+    assert(ranks(core) == Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L))
   }
 
   test("kCore: peels a dangling chain off a K4; brute-force parity; extra rounds identity") {

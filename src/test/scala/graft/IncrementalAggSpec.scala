@@ -8,7 +8,7 @@ class IncrementalAggSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshCat() = new Catalog(spark,
-    java.nio.file.Files.createTempDirectory("inc-agg-spec").toString)
+    tempDir("inc-agg-spec").toString)
 
   test("batch-grown aggregate equals a from-scratch recompute") {
     val cat = freshCat()

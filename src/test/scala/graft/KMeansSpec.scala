@@ -144,7 +144,7 @@ class KMeansSpec extends SparkSpec {
 
   test("model round-trips through the catalog bit-exactly; stored assign ≡ live assign") {
     val cat = new graft.catalog.Catalog(spark,
-      java.nio.file.Files.createTempDirectory("graft-km-model").toString)
+      tempDir("graft-km-model").toString)
     val m = KMeans.fit(blobs, k = 3, iters = 2)
     KMeans.saveModel(cat, "km", spark, m)
     val loaded = KMeans.loadModel(cat, "km")

@@ -58,7 +58,7 @@ class NaiveBayesSpec extends SparkSpec {
       .toDF("doc_id", "text", "lang")
     val model = NaiveBayes.train(docs, "lang")
     val total = NaiveBayes.confusionFromScores(NaiveBayes.scores(docs, model), gold(docs))
-      .agg(sum("n_docs")).head.getLong(0)
+      .agg(sum("n_docs")).head().getLong(0)
     assert(total == 3L)
   }
 

@@ -226,7 +226,7 @@ class NgramLmSpec extends SparkSpec {
     val v = Array.tabulate(64)(i => if (i == 0 || i == 32) 1.0f else -1.0f)
     val df = Seq((0L, v.toSeq)).toDF("vec_id", "embedding")
     val sig = df.select(VectorSearch.binarySignature("embedding", 64).as("s"))
-      .head.getSeq[Long](0)
+      .head().getSeq[Long](0)
     assert(sig == Seq(1L, 1L))
     // planted near-identical vector must Hamming-shortlist and re-rank #1
     val base = Array.tabulate(64)(i => math.sin(i + 1).toFloat)
@@ -275,7 +275,7 @@ class NgramLmSpec extends SparkSpec {
 
   test("lm model round-trips through the catalog with identical scores") {
     val cat = new graft.catalog.Catalog(spark,
-      java.nio.file.Files.createTempDirectory("graft-lm-spec").toString)
+      tempDir("graft-lm-spec").toString)
     val docs = Seq((0L, "a b a b c a"), (1L, "b c a b"), (2L, "q z q"))
       .toDF("doc_id", "text")
     val model = NgramLm.trainBigram(docs)
@@ -362,7 +362,7 @@ class NgramLmSpec extends SparkSpec {
     // num / sqrt(da·db), computed in plain Scala over the collected rows
     val df = ((1L to 80L).map(i => (i % 7, i * i % 31)) ++
       Seq((3L, 5L), (3L, 5L), (0L, 0L))).toDF("x", "y")
-    val got = Trend.spearman(df, "x", "y", "x", "y").head
+    val got = Trend.spearman(df, "x", "y", "x", "y").head()
     val xy = df.as[(Long, Long)].collect().toSeq
     def rank2(vs: Seq[Long]): Seq[BigInt] =
       vs.map(v => BigInt(2 * vs.count(_ < v) + vs.count(_ == v) + 1))
@@ -378,20 +378,20 @@ class NgramLmSpec extends SparkSpec {
 
   test("spearman: monotone nonlinearity scores 1, reversal -1, degenerate NULL") {
     val mono = (1L to 50L).map(i => (i, i * i)).toDF("x", "y")
-    val up = Trend.spearman(mono, "x", "y", "x", "y").head
+    val up = Trend.spearman(mono, "x", "y", "x", "y").head()
     assert(up.getAs[Double]("rho") == 1.0,
       "rank correlation must ignore the nonlinearity Pearson would shear")
     val rev = (1L to 50L).map(i => (i, -i * i)).toDF("x", "y")
-    assert(Trend.spearman(rev, "x", "y", "x", "y").head.getAs[Double]("rho") == -1.0)
+    assert(Trend.spearman(rev, "x", "y", "x", "y").head().getAs[Double]("rho") == -1.0)
     val const = (1L to 10L).map(i => (5L, i)).toDF("x", "y")
-    assert(Trend.spearman(const, "x", "y", "x", "y").head.isNullAt(3),
+    assert(Trend.spearman(const, "x", "y", "x", "y").head().isNullAt(3),
       "zero rank variance has no defined rho")
     // ties: average ranks, invariant under repartitioning
     val tied = Seq((1L, 1L), (1L, 2L), (2L, 2L), (2L, 3L), (3L, 3L), (3L, 1L))
       .toDF("x", "y")
-    val a = Trend.spearman(tied, "x", "y", "x", "y").head.getAs[Double]("rho")
+    val a = Trend.spearman(tied, "x", "y", "x", "y").head().getAs[Double]("rho")
     val b = Trend.spearman(tied.repartition(5), "x", "y", "x", "y")
-      .head.getAs[Double]("rho")
+      .head().getAs[Double]("rho")
     assert(a == b && a > -1.0 && a < 1.0)
   }
 

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Date
 import graft.catalog.Catalog
 import graft.io.Sources
@@ -14,7 +13,7 @@ class PipelineJobsSpec extends SparkSpec with JobCounting {
 
   private val d1 = Date.valueOf("2024-01-01")
   private def freshCatalog() =
-    new Catalog(spark, Files.createTempDirectory("graft-jobs").toString)
+    new Catalog(spark, tempDir("graft-jobs").toString)
 
   test("C1 parses the CSV once: a run of orders starts at most 3 jobs") {
     val cat = freshCatalog()

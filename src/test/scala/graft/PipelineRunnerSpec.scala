@@ -15,7 +15,7 @@ class PipelineRunnerSpec extends SparkSpec {
   private val d1 = Date.valueOf("2024-01-01")
 
   test("full pipeline: loads, dims, dates, fact") {
-    val cat = new Catalog(spark, Files.createTempDirectory("graft-run").toString)
+    val cat = new Catalog(spark, tempDir("graft-run").toString)
     val runner = new PipelineRunner(spark, cat)
     runner.run(RunConfig("customers", fixture("customers.csv"), d1))
     runner.run(RunConfig("products", fixture("products.csv"), d1))
@@ -35,7 +35,7 @@ class PipelineRunnerSpec extends SparkSpec {
   }
 
   test("dispatch: invalid table name rejected (validate_data.py:57-59)") {
-    val cat = new Catalog(spark, Files.createTempDirectory("graft-run").toString)
+    val cat = new Catalog(spark, tempDir("graft-run").toString)
     val runner = new PipelineRunner(spark, cat)
     val e = intercept[IllegalArgumentException](
       runner.run(RunConfig("Nope", fixture("customers.csv"), d1)))
@@ -43,7 +43,7 @@ class PipelineRunnerSpec extends SparkSpec {
   }
 
   test("validation failure aborts before any write (C1 fail-fast)") {
-    val cat = new Catalog(spark, Files.createTempDirectory("graft-run").toString)
+    val cat = new Catalog(spark, tempDir("graft-run").toString)
     val runner = new PipelineRunner(spark, cat)
     intercept[ValidationException](
       runner.run(RunConfig("customers", fixture("customers_nulls.csv"), d1)))
@@ -52,12 +52,12 @@ class PipelineRunnerSpec extends SparkSpec {
   }
 
   test("a failing day-2 load keeps day 1 current, leaves no version, names the columns") {
-    val cat = new Catalog(spark, Files.createTempDirectory("graft-run").toString)
+    val cat = new Catalog(spark, tempDir("graft-run").toString)
     val runner = new PipelineRunner(spark, cat)
     for (t <- Seq("customers", "products", "stores", "orders", "orderdetails"))
       runner.run(RunConfig(t, fixture(s"$t.csv"), d1))
     val d2 = Date.valueOf("2024-01-02")
-    val csvDir = Files.createTempDirectory("graft-day2")
+    val csvDir = tempDir("graft-day2")
     def csv(name: String, lines: String*): String =
       Files.writeString(csvDir.resolve(name), lines.mkString("", "\n", "\n")).toString
     val customerHeader = "CustomerID,FirstName,LastName,Email,Address,City,State,ZipCode"
@@ -88,7 +88,7 @@ class PipelineRunnerSpec extends SparkSpec {
   }
 
   test("second run versions the dimension (SCD2 through the runner)") {
-    val cat = new Catalog(spark, Files.createTempDirectory("graft-run").toString)
+    val cat = new Catalog(spark, tempDir("graft-run").toString)
     val runner = new PipelineRunner(spark, cat)
     runner.run(RunConfig("customers", fixture("customers.csv"), d1))
     runner.run(RunConfig("customers", fixture("customers_v2.csv"), Date.valueOf("2024-06-01")))
@@ -98,7 +98,7 @@ class PipelineRunnerSpec extends SparkSpec {
   }
 
   test("appendFact reproduces the reference's INSERT INTO accumulation (populate_fact.py:117)") {
-    val cat = new Catalog(spark, Files.createTempDirectory("graft-run").toString)
+    val cat = new Catalog(spark, tempDir("graft-run").toString)
     val runner = new PipelineRunner(spark, cat, appendFact = true)
     runner.run(RunConfig("customers", fixture("customers.csv"), d1))
     runner.run(RunConfig("products", fixture("products.csv"), d1))

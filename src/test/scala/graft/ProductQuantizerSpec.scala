@@ -104,7 +104,7 @@ class ProductQuantizerSpec extends SparkSpec {
 
   test("model round-trip through the catalog changes no code and no rank") {
     val model = PQ.fit(blobs, m = 2, ksub = 4, iters = 2, dim = 8)
-    val root = java.nio.file.Files.createTempDirectory("pq-spec").toString
+    val root = tempDir("pq-spec").toString
     val cat = new graft.catalog.Catalog(spark, root)
     PQ.saveModel(cat, "pq", spark, model)
     val loaded = PQ.loadModel(cat, "pq")

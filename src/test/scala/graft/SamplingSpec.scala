@@ -248,7 +248,7 @@ class SamplingSpec extends SparkSpec {
     assert(byPhase(1L).max <= byPhase(4L).min)
     // within each phase, the layout IS packSequences of that slice
     for (p <- 1L to 4L) {
-      val slice = docs.filter(col("difficulty").isin(byPhase(p).distinct: _*))
+      val slice = docs.filter(col("difficulty").isin(byPhase(p).distinct.toIndexedSeq: _*))
       val ref = Sampling.packSequences(slice, lit(10L), "doc_id", 64, 2)
         .select("doc_id", "shard", "cum_before", "seq_id", "offset")
         .as[(Long, Long, Long, Long, Long)].collect().toSet
@@ -311,9 +311,9 @@ class SamplingSpec extends SparkSpec {
     assert(math.abs(kept("big") - 1000L) <= 150, s"big: ${kept("big")}")
     // deterministic: identical rerun, identical selection
     val again = graft.operators.Sampling.temperatureSampleHalf(df, "src", "doc_id")
-      .agg(sum(col("doc_id"))).head.getLong(0)
+      .agg(sum(col("doc_id"))).head().getLong(0)
     val first = graft.operators.Sampling.temperatureSampleHalf(df, "src", "doc_id")
-      .agg(sum(col("doc_id"))).head.getLong(0)
+      .agg(sum(col("doc_id"))).head().getLong(0)
     assert(again == first)
     // NULL groups drop
     val withNull = Seq((1L, null.asInstanceOf[String]), (2L, "a")).toDF("doc_id", "src")
@@ -334,7 +334,7 @@ class SamplingSpec extends SparkSpec {
     assert(r.getAs[Long]("n_splits") == 2L)
     assert(r.getAs[String]("splits") == "test,train")
     assert(r.getAs[Long]("content_h") ==
-      df.select(graft.functions.Hashing.hash64(lit("dup text"))).head.getLong(0))
+      df.select(graft.functions.Hashing.hash64(lit("dup text"))).head().getLong(0))
   }
 
   test("weightedSystematic: ~k selected, heavy rows always in, zero weight never, partition-invariant") {
@@ -357,7 +357,7 @@ class SamplingSpec extends SparkSpec {
     // two-level prefix == flat cumsum: cum values are a permutation-free
     // exact prefix in (h, id) order, so max(cum) == total weight
     val cums = Sampling.weightedSystematic(df, "doc_id", "w", k = 1L)
-      .agg(max("cum")).head.getLong(0)
+      .agg(max("cum")).head().getLong(0)
     assert(cums == 13990L, s"grid stride k=1 keeps the last row; max cum = total, got $cums")
   }
 

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.catalog.Catalog
 import graft.operators.Skew
@@ -91,7 +90,7 @@ class ScaleToolingSpec extends SparkSpec {
   }
 
   test("bucketed tables join without a shuffle exchange") {
-    val wh = Files.createTempDirectory("graft-bucket").toString
+    val wh = tempDir("graft-bucket").toString
     val cat = new Catalog(spark, wh)
     val left = spark.range(10000).select(col("id").as("k"), (col("id") * 2).as("a"))
     val right = spark.range(10000).select(col("id").as("k"), (col("id") * 3).as("b"))

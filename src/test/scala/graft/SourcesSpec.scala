@@ -12,7 +12,7 @@ class SourcesSpec extends SparkSpec {
     .add("doc_id", LongType).add("text", StringType)
 
   private def writeFixture(lines: Seq[String]): String = {
-    val f = Files.createTempFile("graft-jsonl", ".jsonl")
+    val f = tempDir("graft-jsonl").resolve("t.jsonl")
     Files.writeString(f, lines.mkString("\n"))
     f.toString
   }
@@ -47,7 +47,7 @@ class SourcesSpec extends SparkSpec {
 
   test("jsonl reads gzip transparently (non-splittable — document, don't hide)") {
     val lines = Seq("""{"doc_id": 1, "text": "zipped"}""")
-    val f = Files.createTempFile("graft-jsonl", ".jsonl.gz")
+    val f = tempDir("graft-jsonl").resolve("t.jsonl.gz")
     val out = new java.util.zip.GZIPOutputStream(Files.newOutputStream(f))
     out.write(lines.mkString("\n").getBytes("UTF-8")); out.close()
     val df = Sources.jsonl(spark, f.toString, docSchema)
@@ -61,7 +61,7 @@ class SourcesSpec extends SparkSpec {
       (1L, Some("""quotes " and \ slashes, unicode é🙂"""), Some(1.5), Seq(1.0f, -2.25f)),
       (2L, None, None, Seq.empty[Float])
     ).toDF("doc_id", "text", "score", "vec")
-    val out = Files.createTempDirectory("graft-jsonl-w").toString + "/t"
+    val out = tempDir("graft-jsonl-w").toString + "/t"
     Sources.writeJsonl(df, out, 3, "doc_id")
     // bounded by the shard count (empty shards write no file at all —
     // no empty-file litter when keys are few)

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.streaming.EventStream
 
@@ -11,7 +10,7 @@ class StreamingSpec extends SparkSpec {
 
   /** Stage the nano-timestamp events fixture as a µs-timestamp stream dir. */
   private lazy val streamDir: String = {
-    val dir = Files.createTempDirectory("graft-stream").toString
+    val dir = tempDir("graft-stream").toString
     graft.queries.Q.events(spark, sf0001)
       .select(col("event_id"), timestamp_micros(col("ts_us")).as("ts"),
         col("user_id"), col("event_type"), col("value"), col("props"))
@@ -38,8 +37,8 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("readStream → transform → writeStream parquet sink round-trips") {
-    val outDir = Files.createTempDirectory("graft-sink").toString
-    val ckpt = Files.createTempDirectory("graft-ckpt").toString
+    val outDir = tempDir("graft-sink").toString
+    val ckpt = tempDir("graft-ckpt").toString
     val q = EventStream.hourlyByType(
         spark.readStream.schema(EventStream.schema).parquet(streamDir))
       .writeStream.outputMode("append")
@@ -59,7 +58,7 @@ class StreamingSpec extends SparkSpec {
 
   test("watermark finalizes windows: late events beyond the horizon are dropped") {
     import org.apache.spark.sql.types._
-    val dir = Files.createTempDirectory("graft-late").toString
+    val dir = tempDir("graft-late").toString
     val schema = EventStream.schema
     def batch(rows: Seq[(Long, String, Long, String, Double, String)]) = {
       import spark.implicits._
@@ -95,7 +94,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("out-of-order micro-batches within the watermark match batch counts exactly") {
-    val dir = Files.createTempDirectory("graft-ooo").toString
+    val dir = tempDir("graft-ooo").toString
     def append(rows: Seq[(Long, String)]): Unit =
       rows.map { case (id, ts) => (id, ts, 1L, "click", 1.0, "{}") }
         .toDF("event_id", "tss", "user_id", "event_type", "value", "props")
@@ -137,7 +136,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming count-min sketch matches the batch sketch across micro-batches") {
-    val dir = Files.createTempDirectory("graft-cms-stream").toString
+    val dir = tempDir("graft-cms-stream").toString
     def append(keys: Seq[String]): Unit =
       keys.toDF("k").coalesce(1).write.mode("append").parquet(dir)
     append((1 to 60).map(i => s"k${i % 7}"))
@@ -164,7 +163,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming anomaly scoring: live points flagged against broadcast batch stats") {
     import graft.operators.Anomaly
-    val dir = Files.createTempDirectory("graft-anomaly-stream").toString
+    val dir = tempDir("graft-anomaly-stream").toString
     // history: tight series around 100 per key; live batch carries a spike
     val history = ((1 to 20).map(i => ("clicks", i.toLong, 100L + (i % 2))))
       .toDF("k", "t", "v")
@@ -187,7 +186,7 @@ class StreamingSpec extends SparkSpec {
     // STREAMING DataFrame exactly as to a batch one — all three are
     // shuffle-free projections/filters, so the streaming planner accepts
     // them as-is and the rows match the batch twin.
-    val docsDir = Files.createTempDirectory("graft-docs-stream").toString
+    val docsDir = tempDir("graft-docs-stream").toString
     graft.queries.Q.t(spark, sf0001, "documents")
       .select("doc_id", "lang", "text").write.mode("overwrite").parquet(docsDir)
     def pipeline(df: org.apache.spark.sql.DataFrame) = {

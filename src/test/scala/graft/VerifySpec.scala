@@ -10,7 +10,7 @@ class VerifySpec extends SparkSpec {
   import spark.implicits._
 
   test("a throwing query lands as an err row, not an absence") {
-    val out = java.nio.file.Files.createTempDirectory("graft-verify").toString
+    val out = tempDir("graft-verify").toString
     val err = Verify.runOne(spark, "q_boom",
       (_, _) => throw new IllegalStateException("deliberate gate breakage"),
       sf0001, out)
@@ -21,7 +21,7 @@ class VerifySpec extends SparkSpec {
   }
 
   test("a working query writes its result and reports no error") {
-    val out = java.nio.file.Files.createTempDirectory("graft-verify").toString
+    val out = tempDir("graft-verify").toString
     val err = Verify.runOne(spark, "q_fine",
       (s, _) => { import s.implicits._; Seq((1L, "a")).toDF("id", "v") },
       sf0001, out)
@@ -30,7 +30,7 @@ class VerifySpec extends SparkSpec {
   }
 
   test("analysis-time failures (not just execution) also land as err rows") {
-    val out = java.nio.file.Files.createTempDirectory("graft-verify").toString
+    val out = tempDir("graft-verify").toString
     val err = Verify.runOne(spark, "q_analysis",
       (s, d) => graft.queries.Q.t(s, d, "customer").select(col("no_such_column")),
       sf0001, out)

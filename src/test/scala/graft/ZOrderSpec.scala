@@ -21,7 +21,7 @@ class ZOrderSpec extends SparkSpec {
 
   test("z-order layout prunes 2-D boxes where a linear sort cannot") {
     val grid = spark.range(64L * 64).select(($"id" % 64).as("x"), expr("id div 64").as("y"))
-    val base = java.nio.file.Files.createTempDirectory("graft-zorder").toString
+    val base = tempDir("graft-zorder").toString
     grid.repartitionByRange(16, $"x").sortWithinPartitions($"x")
       .write.parquet(s"$base/linear")
     // the layout Catalog.writeSorted gives a z-value column
