@@ -34,5 +34,11 @@ dev/run_main.sh graft.Smoke 2>/dev/null | grep smoke
 # versions, fact rows, revenue cents, zero unresolved keys); each exits
 # non-zero on a failed check
 python3 perfbench/run.py --mode selftest
-python3 perfbench/run.py --workload etl_daily --seconds 1 --trace 0 | tail -1
+etl=$(python3 perfbench/run.py --workload etl_daily --seconds 1 --trace 0 | tail -1)
+echo "$etl"
+# the catalog writes ZSTD parquet: the default seed's storage_amp is 0.70
+# (0.90 with Snappy versions), so a format that reverts fails here
+python3 -c 'import json, sys
+amp = json.loads(sys.argv[1])["metrics"]["storage_amp"]["value"]
+sys.exit(f"etl_daily storage_amp {amp:.3f} > 0.75: catalog versions are not ZSTD" if amp > 0.75 else 0)' "$etl"
 echo "FULL CHECK PASSED"

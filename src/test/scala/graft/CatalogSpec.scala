@@ -114,6 +114,79 @@ class CatalogSpec extends SparkSpec {
     assert(!Files.exists(lock), "commit must release the lock it held")
   }
 
+  test("a crashed flip's tmp pointer is ignored by readers and deleted by the next commit") {
+    val cat = freshCatalog()
+    cat.write("t", Seq(1).toDF("id"))
+    val tableDir = java.nio.file.Paths.get(cat.currentPath("t").get).getParent
+    def state() = (rows(cat.read("t")), cat.versions("t"), cat.history("t"))
+    val before = state()
+    // a writer that died between flipPointer's tmp write and its move
+    val tmp = tableDir.resolve("_CURRENT.tmp.v_7")
+    Files.writeString(tmp, "v_7")
+    assert(state() == before, "a tmp pointer must not change what readers see")
+    cat.write("t", Seq(2).toDF("id"))
+    assert(!Files.exists(tmp), "the next commit must delete the stale tmp pointer")
+    val (read, versions, history) = state()
+    assert(read == Seq(Seq(2)) && versions == Seq(0L, 1L))
+    assert(history.map(h => (h.version, h.isCurrent)) == Seq((0L, false), (1L, true)))
+  }
+
+  test("versions are ZSTD parquet with no _SUCCESS; Snappy versions and mixed chains still read") {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import scala.jdk.CollectionConverters._
+    def files(dir: java.nio.file.Path): Seq[java.nio.file.Path] =
+      scala.util.Using.resource(Files.list(dir))(_.iterator().asScala.toSeq)
+    def dataFiles(dir: java.nio.file.Path) =
+      files(dir).filter(_.getFileName.toString.endsWith(".parquet"))
+    // the codec of every column chunk, read from the parquet footers
+    def codecs(paths: Seq[java.nio.file.Path]): Set[String] = paths.flatMap { p =>
+      val in = HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(p.toUri), spark.sparkContext.hadoopConfiguration)
+      scala.util.Using.resource(ParquetFileReader.open(in)) { r =>
+        r.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala.map(_.getCodec.name))
+      }
+    }.toSet
+    val df = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v").repartition(2)
+
+    // 1-2: a fresh version is ZSTD throughout and holds only data files
+    // (with their checksum sidecars) and _SCHEMA
+    val cat = freshCatalog()
+    cat.write("t", df)
+    val v0 = java.nio.file.Paths.get(cat.currentPath("t").get)
+    assert(dataFiles(v0).nonEmpty && codecs(dataFiles(v0)) == Set("ZSTD"))
+    val names = files(v0).map(_.getFileName.toString)
+    assert(!names.exists(_.contains("_SUCCESS")), s"no _SUCCESS marker: $names")
+    assert(names.forall(n => n == "_SCHEMA" ||
+        (n.startsWith("part-") && n.endsWith(".parquet")) ||
+        (n.startsWith(".part-") && n.endsWith(".parquet.crc"))),
+      s"a version holds data files and _SCHEMA only: $names")
+
+    // 3: a table written before this format — Snappy, _SUCCESS, no _SCHEMA
+    val root = tempDir("graft-cat")
+    val old = root.resolve("old").resolve("v_0")
+    df.write.option("compression", "snappy").parquet(old.toString)
+    Files.writeString(root.resolve("old").resolve("_CURRENT"), "v_0")
+    assert(Files.exists(old.resolve("_SUCCESS")) && codecs(dataFiles(old)) == Set("SNAPPY"))
+    val legacy = new Catalog(spark, root.toString)
+    assert(legacy.read("old").as[(Long, String)].collect().sorted.toSeq ==
+      Seq((1L, "a"), (2L, "b"), (3L, "c")))
+
+    // 4: an append carries the Snappy files by reference next to new ZSTD
+    // files, and the mixed chain reads back every row
+    legacy.append("old", Seq((4L, "d")).toDF("id", "v"))
+    val v1 = java.nio.file.Paths.get(legacy.currentPath("old").get)
+    assert(Files.exists(v1.resolve("_MANIFEST")) && codecs(dataFiles(v1)) == Set("ZSTD"))
+    assert(legacy.read("old").as[(Long, String)].collect().sorted.toSeq ==
+      Seq((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d")))
+
+    // 5: compact rewrites the chain into ZSTD
+    legacy.compact("old", 1)
+    val v2 = java.nio.file.Paths.get(legacy.currentPath("old").get)
+    assert(!Files.exists(v2.resolve("_MANIFEST")) && codecs(dataFiles(v2)) == Set("ZSTD"))
+    assert(legacy.read("old").count() == 4L)
+  }
+
   test("old versions are pruned beyond keepVersions") {
     val cat = freshCatalog()
     (1 to 5).foreach(i => cat.write("t", Seq(i).toDF("id")))

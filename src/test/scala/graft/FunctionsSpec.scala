@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions._
 import graft.functions.{Hashing, Text}
 import graft.operators.{TextDedup, VectorSearch}
@@ -7,6 +11,20 @@ import graft.operators.{TextDedup, VectorSearch}
 /** Library-surface tests for the text/hashing/vector operator API. */
 class FunctionsSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Whether `df`'s physical plan, persisted inputs included, scans exactly
+    * the directory `dir`. Read off the scan nodes, not the plan string,
+    * which cuts a scan's location at `spark.sql.maxMetadataStringLength`
+    * characters. */
+  private def scansDir(df: DataFrame, dir: String): Boolean = {
+    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p.collect {
+      case s: FileSourceScanExec => Seq(s)
+      case m: InMemoryTableScanExec => scans(m.relation.cachedPlan)
+      case a: AdaptiveSparkPlanExec => scans(a.inputPlan)
+    }.flatten
+    scans(df.queryExecution.sparkPlan).exists(_.relation.location.rootPaths
+      .map(p => java.nio.file.Paths.get(p.toUri)) == Seq(java.nio.file.Paths.get(dir)))
+  }
 
   test("spanHashes expression ≡ the md5 HOF form on random/unicode/null tokens") {
     // the codegen'd one-pass span hasher must be BIT-identical to the SQL
@@ -516,7 +534,7 @@ class FunctionsSpec extends SparkSpec {
     // index scan and (b) the semi-join-pruned verify input — there is no
     // corpus tokenize/shingle/signature pipeline in the plan at all.
     val plan = indexed.queryExecution.executedPlan.toString
-    assert(plan.contains(cat.currentPath("lsh_bands").get),
+    assert(scansDir(indexed, cat.currentPath("lsh_bands").get),
       "indexed dedup must scan the stored band index")
     assert(plan.contains("LeftSemi"), "corpus verify side must be semi-join pruned")
     // signature computations: indexed (batch-only, printed at the persisted
@@ -932,8 +950,7 @@ class FunctionsSpec extends SparkSpec {
     val probed = VectorSearch.ivfProbeTopKIndexed(
       cat.read("ivf_index"), emb.filter(col("vec_id") < 5), 3, 4, dim = 16)
     // plan reads the stored index; only the query rows touch the raw embeddings
-    val plan = probed.queryExecution.executedPlan.toString
-    assert(plan.contains(cat.currentPath("ivf_index").get),
+    assert(scansDir(probed, cat.currentPath("ivf_index").get),
       "indexed probe must scan the stored IVF index")
     // identical to the inline probe over the same corpus
     val inline = VectorSearch.ivfProbeTopK(emb, col("vec_id") < 5, 3, 4, dim = 16)

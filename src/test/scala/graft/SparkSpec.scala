@@ -19,9 +19,7 @@ trait SparkSpec extends AnyFunSuite {
   def fixture(name: String): String =
     getClass.getResource(s"/fixtures/$name").getPath
   /** A fresh directory under the scratch root the gates use, deleted with
-    * it when the JVM exits. Named by a counter, not by a long random
-    * suffix: plan-shape specs look for a stored table's path in the plan
-    * string, which cuts a scan's location at 100 characters. */
+    * it when the JVM exits. */
   def tempDir(prefix: String): java.nio.file.Path =
     java.nio.file.Files.createDirectory(graft.queries.Q.scratchRoot
       .resolve(s"$prefix-${TestSpark.tempDirs.incrementAndGet()}"))
