@@ -18,9 +18,15 @@ for sf in sf0.001 sf0.01; do
   log=$(mktemp --suffix=.verify-stderr.log)
   dev/run_main.sh graft.Verify /root/testdata/$sf "$out" 2>"$log"
   python3 dev/check_oracles.py /root/testdata/$sf "$out"
-  # warning counts: repeated persists, single-partition windows
-  echo "$sf warnings: already-cached $(grep -c 'Asked to cache already cached data' "$log" || true)," \
+  # warning counts: repeated persists, single-partition windows; a plan
+  # persisted twice means a cache nobody owns, so any such warning fails
+  cached=$(grep -c 'Asked to cache already cached data' "$log" || true)
+  echo "$sf warnings: already-cached $cached," \
     "no-partition-windows $(grep -c 'No Partition Defined' "$log" || true) (log: $log)"
+  if [ "$cached" -gt 0 ]; then
+    echo "$sf Verify asked to cache already cached data $cached times" >&2
+    exit 1
+  fi
 done
 after=$(tmp_entries)
 if [ "$after" -gt "$before" ]; then

@@ -442,11 +442,13 @@ final class Catalog(spark: SparkSession, rootDir: String, keepVersions: Int = 2)
       .foreach(Files.deleteIfExists(_))
 
   /** Per-table commit lock: an atomically-created marker file guarding the
-    * verify+flip critical section (milliseconds — the Spark job runs
-    * OUTSIDE it). A holder that died mid-commit leaves a stale lock; locks
-    * older than [[StaleLockMs]] are broken, and acquisition gives up loudly
-    * after [[LockWaitMs]] rather than spinning forever. */
-  private val StaleLockMs = 60000L
+    * verify+flip+prune critical section (milliseconds — the Spark job runs
+    * OUTSIDE it). One bound, [[LockWaitMs]], serves both ways: a lock older
+    * than it has outlived any live holder, so it is broken (a holder that
+    * died mid-commit leaves one), and acquisition gives up loudly once it
+    * has waited that long on younger locks rather than spinning forever.
+    * A waiter's deadline never passes before the lock it found turns
+    * stale, so the first writer after a crash commits. */
   private val LockWaitMs = 10000L
   private def withCommitLock[T](name: String)(body: => T): T = {
     val lock = tableDir(name).resolve("_COMMIT_LOCK")
@@ -455,16 +457,18 @@ final class Catalog(spark: SparkSession, rootDir: String, keepVersions: Int = 2)
     while (!acquired) {
       try { Files.createFile(lock); acquired = true } catch {
         case _: java.nio.file.FileAlreadyExistsException =>
-          val age = try System.currentTimeMillis -
-            Files.getLastModifiedTime(lock).toMillis
+          // one clock read for both tests: past the deadline, a lock that
+          // was already there when this call started is also past stale
+          val now = System.currentTimeMillis
+          val age = try now - Files.getLastModifiedTime(lock).toMillis
           catch { case _: java.io.IOException => 0L } // holder just released
-          if (age > StaleLockMs) { try Files.deleteIfExists(lock) catch {
+          if (age > LockWaitMs) { try Files.deleteIfExists(lock) catch {
             case _: java.io.IOException => () } } // racing breakers: one wins
-          else if (System.currentTimeMillis > deadline)
+          else if (now > deadline)
             throw new java.util.ConcurrentModificationException(
-              s"catalog: commit lock on '$name' held for over ${LockWaitMs} ms " +
-                "— a concurrent commit is stuck or the host is pathologically " +
-                "slow; not flipping blind")
+              s"catalog: no turn at the commit lock on '$name' within " +
+                s"${LockWaitMs} ms — other commits kept taking it; not " +
+                "flipping blind")
           else Thread.sleep(20)
       }
     }

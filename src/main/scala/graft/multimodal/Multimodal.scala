@@ -43,7 +43,7 @@ object Multimodal {
       * arithmetic-only oracles never pay. Encoding here is plain byte
       * assembly + one BEST_SPEED deflate; the payload is bit-losslessly
       * the same raster, and the DECODE side (the half that proves codec
-      * reality) remains the genuine `ImageIO.read`. */
+      * reality) remains the JDK's ImageIO PNG reader. */
     private def writeGrayPng(pix: Array[Byte], w: Int, h: Int): Array[Byte] = {
       val bos = new java.io.ByteArrayOutputStream(64 + pix.length / 2)
       bos.write(Array[Byte](0x89.toByte, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a))
@@ -87,12 +87,6 @@ object Multimodal {
       writeGrayPng(pix, width, h)
     }
 
-    /** Full decode (not a header sniff). None when the payload is not a
-      * decodable image. */
-    def decode(png: Array[Byte]): Option[java.awt.image.BufferedImage] =
-      scala.util.Try(Option(javax.imageio.ImageIO.read(
-        new java.io.ByteArrayInputStream(png)))).toOption.flatten
-
     /** Fresh per-partition PNG reader for [[decodeWith]] — the per-row
       * `ImageIO.read` re-runs the format-sniffing registry scan and
       * allocates a new reader every call; a mapPartitions loop makes one
@@ -100,7 +94,9 @@ object Multimodal {
     def newPngReader(): javax.imageio.ImageReader =
       javax.imageio.ImageIO.getImageReadersByFormatName("png").next()
 
-    /** [[decode]] against a caller-owned (per-partition) PNG reader. */
+    /** Full decode (not a header sniff) against a caller-owned
+      * (per-partition) PNG reader. None when the payload is not a
+      * decodable image. */
     def decodeWith(reader: javax.imageio.ImageReader,
         png: Array[Byte]): Option[java.awt.image.BufferedImage] = {
       val iis = javax.imageio.ImageIO.createImageInputStream(

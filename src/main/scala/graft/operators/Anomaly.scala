@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import CacheGuard.PersistTrackedOps
 
 /** Metric anomaly detection over keyed integer series (event counts per
   * window, rows per batch, bytes per source) — the pipeline-health monitor
@@ -191,14 +190,10 @@ object Anomaly {
     * order-independent, so the statistic is bit-identical cross-engine
     * (exact while n_ref·n_cur < 2^63, i.e. ~3·10⁹ rows per side).
     *
-    * Scale shape: one value-keyed count of the union, then the TWO-LEVEL
-    * bucketed prefix sum (the [[Trend.spearman]] / Eval.cumBelow device —
-    * no corpus-sized window), a broadcast 1-row total, and a global max.
-    * The single-ordered-window oracle form is the 1-partition
-    * anti-pattern this shape exists to avoid. The per-value frame stays
-    * persisted because the returned lazy plan reads it twice; release
-    * via [[CacheGuard.releaseAll]] (distinct-value-sized — the
-    * Trend/TextDedup cache-lifetime contract). */
+    * Scale shape: one value-keyed count of the union, then a
+    * [[PrefixSum]] (inclusive: F(v) = P(x <= v)), a broadcast 1-row total,
+    * and a global max. The single-ordered-window oracle form is the
+    * 1-partition anti-pattern this shape exists to avoid. */
   def ksDrift(ref: DataFrame, cur: DataFrame, valueCol: String,
       bucketBits: Int = 20): DataFrame = {
     val u = ref.select(col(valueCol).cast("long").as("v"),
@@ -206,20 +201,8 @@ object Anomaly {
       .unionByName(cur.select(col(valueCol).cast("long").as("v"),
         lit(0L).as("ir"), lit(1L).as("ic")))
     val per = u.groupBy("v").agg(sum("ir").as("cr"), sum("ic").as("cc"))
-      .withColumn("b", shiftright(col("v"), bucketBits))
-      .persistTracked()
-    val wb = Window.orderBy("b").rowsBetween(Window.unboundedPreceding, -1)
-    // bucket-sized by construction (the two-level contract) → broadcast
-    val bp = broadcast(per.groupBy("b")
-      .agg(sum("cr").as("scr"), sum("cc").as("scc"))
-      .select(col("b"),
-        coalesce(sum("scr").over(wb), lit(0L)).as("bbr"),
-        coalesce(sum("scc").over(wb), lit(0L)).as("bbc")))
-    val ww = Window.partitionBy("b").orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, 0) // inclusive: F(v) = P(x ≤ v)
-    val cums = per.join(bp, Seq("b"))
-      .select((col("bbr") + sum("cr").over(ww)).as("cumr"),
-        (col("bbc") + sum("cc").over(ww)).as("cumc"))
+    val cums = PrefixSum.running(per.withColumn("b", shiftright(col("v"), bucketBits)),
+      Nil, "b", Seq(col("v")), "cr" -> "cumr", "cc" -> "cumc")
     val tot = broadcast(per.agg(sum("cr").as("nr"), sum("cc").as("nc")))
     cums.crossJoin(tot)
       .groupBy(col("nr").as("n_ref"), col("nc").as("n_cur"))

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import CacheGuard.PersistTrackedOps
 
@@ -27,54 +26,38 @@ import CacheGuard.PersistTrackedOps
   * == 100 TB shape ==
   * A global rank would need a corpus sort; instead scores collapse to the
   * per-(label, score)-DISTINCT frame (one hash agg — the only corpus-sized
-  * shuffle) and the cumulative "negatives strictly below" is a TWO-LEVEL
-  * prefix sum: scores bucket by their high bits (`shiftright(s, bucketBits)`
-  * — arithmetic shift = floor division, monotone in s), level 1 windows over
-  * per-label BUCKET totals (range/2^bits-bounded rows), level 2 windows
-  * WITHIN a bucket (≤ 2^bits distinct scores). No window partition is ever
-  * corpus-sized, unlike the single unpartitioned cumsum the DuckDB oracles
-  * use (same semantic, oracle-scale algorithm). Outputs are
+  * shuffle) and the cumulative "negatives strictly below" is a per-label
+  * [[PrefixSum]] over score buckets (`shiftright(s, bucketBits)` —
+  * arithmetic shift = floor division, monotone in s). No window partition
+  * is ever corpus-sized, unlike the single label-partitioned cumsum the
+  * DuckDB oracles use (same semantic, oracle-scale algorithm). Outputs are
   * label- / distinct-score-cardinality-sized.
   */
 object Eval {
 
   /** Per-(label, score) positive/negative counts plus exact cumulative
-    * counts STRICTLY BELOW the score, via the two-level bucketed prefix sum.
+    * counts STRICTLY BELOW the score, via a per-label [[PrefixSum]].
     * Input `scored`: (doc_id, label, score col); `gold`: (doc_id, gold).
     * A doc is positive for label L iff gold = L (one-vs-rest). */
   private[operators] def cumBelowPerLabel(scored: DataFrame, gold: DataFrame,
       scoreCol: String, bucketBits: Int): DataFrame = {
-    val j = scored
+    val perScore = scored
       .join(gold, Seq("doc_id"))
       .select(col("label"), col(scoreCol).cast("long").as("s"),
         when(col("gold") === col("label"), 1L).otherwise(0L).as("pos"))
-    // persisted: feeds the bucket-prefix branch AND the within-bucket
-    // branch (and prCurve's totals on top) — unpersisted, each branch
-    // replays the scorer's whole lineage (for the NB gates: the token
-    // explode + model joins). (label × distinct-score)-sized, the designed
-    // intermediate; session-lifetime cache contract as in TextDedup.
-    val perScore = j.groupBy("label", "s")
+      .groupBy("label", "s")
       .agg(sum("pos").as("np"), (count(lit(1)) - sum("pos")).as("nn"))
       .withColumn("b", shiftright(col("s"), bucketBits))
+      // persisted: both prefix-sum levels (and prCurve's totals) read it,
+      // and unpersisted each read replays the scorer's lineage — a warm
+      // q_x_auc at sf0.1 on 4 cores ran ~0.25 s slower without it.
+      // Released via [[CacheGuard.releaseAll]]: the returned plan is lazy.
       .persistTracked()
-    // level 1: per-label running totals over bucket aggregates (small frame)
-    val wb = Window.partitionBy("label").orderBy("b")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val bucketPrefix = perScore.groupBy("label", "b")
-      .agg(sum("np").as("bnp"), sum("nn").as("bnn"))
-      .select(col("label"), col("b"),
-        coalesce(sum("bnp").over(wb), lit(0L)).as("bucket_pos_below"),
-        coalesce(sum("bnn").over(wb), lit(0L)).as("bucket_neg_below"))
-    // level 2: within-bucket running totals (bounded by the bucket width)
-    val ww = Window.partitionBy("label", "b").orderBy("s")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    perScore
-      .withColumn("wp", coalesce(sum("np").over(ww), lit(0L)))
-      .withColumn("wn", coalesce(sum("nn").over(ww), lit(0L)))
-      .join(bucketPrefix, Seq("label", "b"))
+    PrefixSum.running(perScore, Seq("label"), "b", Seq(col("s")),
+        "np" -> "cum_pos", "nn" -> "cum_neg")
       .select(col("label"), col("s"), col("np"), col("nn"),
-        (col("bucket_pos_below") + col("wp")).as("pos_below"),
-        (col("bucket_neg_below") + col("wn")).as("neg_below"))
+        (col("cum_pos") - col("np")).as("pos_below"),
+        (col("cum_neg") - col("nn")).as("neg_below"))
   }
 
   /** One-vs-rest ROC-AUC per label, ties handled exactly (Mann–Whitney with

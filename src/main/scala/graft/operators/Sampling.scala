@@ -303,25 +303,14 @@ object Sampling {
     * inclusion-probability-∝-weight contract, not a bug. Zero-weight rows
     * are never selected. Returns the selected rows as (id, w, cum).
     *
-    * Scale: the exact prefix sum is TWO-LEVEL (per-hash-bucket totals, then
-    * within-bucket) — no corpus-sized window partition, the
-    * [[graft.operators.Eval]] cumBelow device on the sampling line. */
+    * Scale: the exact prefix sum is a [[PrefixSum]] over hash buckets —
+    * no corpus-sized window partition. */
   def weightedSystematic(df: DataFrame, idCol: String, weightCol: String,
       k: Long, bucketShift: Int = 44): DataFrame = {
     require(k > 0)
-    val base = df.select(col(idCol).as("id"),
-        col(weightCol).cast("long").as("w"))
-      .withColumn("h", Hashing.hash64(concat(lit("ws:"), col("id").cast("string"))))
-      .withColumn("b", expr(s"h div ${1L << bucketShift}"))
-    // level 1: running totals over per-bucket sums (bucket-cardinality rows)
-    val wb = Window.orderBy("b").rowsBetween(Window.unboundedPreceding, -1)
-    val bucketPrefix = base.groupBy("b").agg(sum("w").as("bw"))
-      .select(col("b"), coalesce(sum("bw").over(wb), lit(0L)).as("bucket_below"))
-    // level 2: within-bucket running totals in (h, id) order
-    val ww = Window.partitionBy("b").orderBy(col("h"), col("id"))
+    val base = hashLine(df, idCol, weightCol, "ws:", bucketShift)
     val tot = base.agg(sum("w").as("tot"))
-    base.join(bucketPrefix, Seq("b"))
-      .withColumn("cum", col("bucket_below") + sum("w").over(ww))
+    PrefixSum.running(base, Nil, "b", Seq(col("h"), col("id")), "w" -> "cum")
       .crossJoin(broadcast(tot))
       .withColumn("stride", expr(s"greatest(tot div $k, 1)"))
       .filter(expr("(cum div stride) > ((cum - w) div stride)"))
@@ -339,29 +328,26 @@ object Sampling {
     *
     * Determinism: order is (salted hash, id) — rerun/partitioning
     * invariant, and the same prefix-sum line as [[weightedSystematic]].
-    * Scale: the exact prefix sum is TWO-LEVEL (per-hash-bucket totals,
-    * then within-bucket) — no corpus-sized window partition anywhere; the
-    * manifest aggregate is shard-count-sized. */
+    * Scale: the exact prefix sum is a [[PrefixSum]] over hash buckets —
+    * no corpus-sized window partition anywhere; the manifest aggregate is
+    * shard-count-sized. */
   def shardPlan(df: DataFrame, idCol: String, tokenCol: String, budget: Long,
       bucketShift: Int = 44): DataFrame = {
     require(budget > 0)
-    val base = df.select(col(idCol).as("id"),
-        col(tokenCol).cast("long").as("w"))
-      .withColumn("h", Hashing.hash64(concat(lit("shard:"), col("id").cast("string"))))
-      .withColumn("b", expr(s"h div ${1L << bucketShift}"))
-    val wb = Window.orderBy("b").rowsBetween(Window.unboundedPreceding, -1)
-    val bucketPrefix = base.groupBy("b").agg(sum("w").as("bw"))
-      .select(col("b"), coalesce(sum("bw").over(wb), lit(0L)).as("bucket_below"))
-    // the bucket id is a PREFIX of the hash, so (b, h, id) order ≡ (h, id)
-    val ww = Window.partitionBy("b").orderBy(col("h"), col("id"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    base.join(bucketPrefix, Seq("b"))
-      .withColumn("cum_before",
-        col("bucket_below") + coalesce(sum("w").over(ww), lit(0L)))
-      .withColumn("shard", expr(s"cum_before div $budget"))
+    PrefixSum.running(hashLine(df, idCol, tokenCol, "shard:", bucketShift),
+        Nil, "b", Seq(col("h"), col("id")), "w" -> "cum")
+      .withColumn("shard", expr(s"(cum - w) div $budget"))
       .groupBy(col("shard"))
       .agg(count(lit(1)).as("n_docs"), sum(col("w")).as("n_tokens"),
         min(col("h")).as("first_hash"), max(col("h")).as("last_hash"),
         sum(expr("h % 1000000007")).as("checksum"))
   }
+
+  /** (id, w) laid on the line in (salted hash, id) order: `h` the salted
+    * hash and `b` its top bits, a monotone bucket of (h, id). */
+  private def hashLine(df: DataFrame, idCol: String, weightCol: String,
+      salt: String, bucketShift: Int): DataFrame =
+    df.select(col(idCol).as("id"), col(weightCol).cast("long").as("w"))
+      .withColumn("h", Hashing.hash64(concat(lit(salt), col("id").cast("string"))))
+      .withColumn("b", expr(s"h div ${1L << bucketShift}"))
 }

@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import CacheGuard.PersistTrackedOps
 
 /** Per-key sequence statistics over the event stream: exponentially-weighted
   * smoothing and least-squares trend. The monitoring layer a pipeline runs
@@ -272,47 +271,26 @@ object Trend {
     * (correlation is scale-invariant). No float enters until the final
     * division.
     *
-    * Scale: per column one distinct-value aggregate + the TWO-LEVEL
-    * bucketed prefix sum for below(v) (the [[Eval]] cumBelow device —
-    * `shiftright` bucketing is monotone for negatives too, no window is
-    * ever corpus-sized), then value-keyed joins back with no hint: the
-    * planner picks broadcast or shuffle per rank map against
+    * Scale: per column one distinct-value aggregate and a
+    * [[PrefixSum]] for below(v), then value-keyed joins back with no hint:
+    * the planner picks broadcast or shuffle per rank map against
     * autoBroadcastJoinThreshold, and AQE re-checks that choice with the
     * measured stage sizes.
     *
     * NOTE this function is EAGER at construction time: its one job is
     * [[correlation]]'s moment aggregate, so the result is a 1-row local
-    * frame. The rank-map inputs and the base frame are persisted because
-    * each is read more than once; release via [[CacheGuard.releaseAll]]
-    * (or session teardown) — same cache-lifetime contract as TextDedup's
-    * persisted fingerprints. */
+    * frame and nothing it reads stays cached. */
   def spearman(df: DataFrame, xCol: String, yCol: String,
       xName: String, yName: String, bucketBits: Int = 20): DataFrame = {
-    def avgRank2(d: DataFrame, c: String, out: String): DataFrame = {
-      // persisted: the per-value frame feeds both the bucket prefix and
-      // the within-bucket window
-      val per = d.groupBy(col(c).as("v")).agg(count(lit(1)).as("c"))
-        .withColumn("b", shiftright(col("v"), bucketBits))
-        .persistTracked()
-      val wb = Window.orderBy("b").rowsBetween(Window.unboundedPreceding, -1)
-      // bp is BUCKET-sized (≤ distinct/1, in practice a handful of rows —
-      // the two-level scheme already assumes it sorts on one partition),
-      // so it is always broadcast-safe.
-      val bp = broadcast(per.groupBy("b").agg(sum("c").as("bc"))
-        .select(col("b"), coalesce(sum("bc").over(wb), lit(0L)).as("bb")))
-      val ww = Window.partitionBy("b").orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      per.join(bp, Seq("b"))
-        .withColumn("below", col("bb") + coalesce(sum("c").over(ww), lit(0L)))
-        .select(col("v").as(c), (lit(2L) * col("below") + col("c") + 1L).as(out))
-    }
-    // persisted: the frame feeds both rank derivations AND the final join
-    // — unpersisted, the caller's upstream lineage (often a scored/
-    // aggregated frame) replays three times. 2-column row-sized cache;
-    // session-lifetime contract as in TextDedup.
+    // 2·rank = 2·below + c + 1 = 2·cum − c + 1, cum the inclusive count
+    def avgRank2(d: DataFrame, c: String, out: String): DataFrame =
+      PrefixSum.running(
+          d.groupBy(col(c).as("v")).agg(count(lit(1)).as("c"))
+            .withColumn("b", shiftright(col("v"), bucketBits)),
+          Nil, "b", Seq(col("v")), "c" -> "cum")
+        .select(col("v").as(c), (lit(2L) * col("cum") - col("c") + 1L).as(out))
     val base = df.select(col(xCol).cast("long").as("x"),
       col(yCol).cast("long").as("y"))
-      .persistTracked()
     val ranked = base.join(avgRank2(base, "x", "rx2"), "x")
       .join(avgRank2(base, "y", "ry2"), "y")
     correlation(ranked, Seq((col("rx2"), xName, col("ry2"), yName)))

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{CacheGuard, TextIndex, Trend}
+import graft.operators.{CacheGuard, NgramLm, TextIndex, Trend}
 
 class CacheGuardSpec extends SparkSpec {
   import spark.implicits._
@@ -9,14 +9,23 @@ class CacheGuardSpec extends SparkSpec {
     val docs = Seq((1L, "a b a c"), (2L, "b c d"), (3L, "a d d"))
       .toDF("doc_id", "text")
     TextIndex.tfIdfTopK(docs).count() // persists postings
-    val xy = Seq((1L, 10L), (2L, 30L), (3L, 20L), (4L, 40L)).toDF("x", "y")
-    Trend.spearman(xy, "x", "y", "x", "y").count() // persists rank maps + base
+    NgramLm.pmiCollocations(docs, minCount = 1).count() // persists pair + unigram counts
     val released = CacheGuard.releaseAll(spark)
-    assert(released >= 4, s"expected the four tracked frames, got $released")
+    assert(released >= 3, s"expected the three tracked frames, got $released")
     assert(CacheGuard.releaseAll(spark) == 0, "second release must find nothing")
     // operators still work after a release (fresh persists re-register)
     assert(TextIndex.tfIdfTopK(docs).count() > 0)
     assert(CacheGuard.releaseAll(spark) > 0)
+  }
+
+  test("spearman leaves nothing cached: its one job runs inside the call") {
+    val xy = ((1L to 40L).map(i => (i % 9, i * i % 13)) :+ ((3L, 5L))).toDF("x", "y")
+    val sc = spark.sparkContext
+    val (rdds, tracked) = (sc.getPersistentRDDs.keySet, CacheGuard.trackedCount(spark))
+    val rho = Trend.spearman(xy, "x", "y", "x", "y")
+    assert(sc.getPersistentRDDs.keySet == rdds, "spearman left a persisted frame behind")
+    assert(CacheGuard.trackedCount(spark) == tracked)
+    assert(rho.count() == 1L)
   }
 
   test("pipeline runs leave frames registered by other code cached") {

@@ -114,6 +114,20 @@ class CatalogSpec extends SparkSpec {
     assert(!Files.exists(lock), "commit must release the lock it held")
   }
 
+  test("the first writer after a crash commits: a lock older than the wait bound is stale") {
+    val cat = freshCatalog()
+    cat.write("t", Seq(1).toDF("id"))
+    val lock = java.nio.file.Paths.get(cat.currentPath("t").get)
+      .getParent.resolve("_COMMIT_LOCK")
+    // a holder that died mid-commit 45 s ago: past the 10 s wait bound
+    Files.createFile(lock)
+    Files.setLastModifiedTime(lock,
+      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis - 45000))
+    cat.write("t", Seq(2).toDF("id"))
+    assert(rows(cat.read("t")).flatten == Seq(2))
+    assert(!Files.exists(lock), "commit must release the lock it held")
+  }
+
   test("a crashed flip's tmp pointer is ignored by readers and deleted by the next commit") {
     val cat = freshCatalog()
     cat.write("t", Seq(1).toDF("id"))

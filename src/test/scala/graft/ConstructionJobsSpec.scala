@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{GraphRank, QualityFilter, TextIndex}
+import graft.operators.{Anomaly, Eval, GraphRank, QualityFilter, Sampling, TextIndex, Trend}
 
 /** Operators that leave their size decisions (broadcast or not, exchange
   * width) to AQE build their plans without starting a Spark job: only an
@@ -46,5 +46,30 @@ class ConstructionJobsSpec extends SparkSpec with JobCounting {
     val (df, jobs) = jobsDuring(GraphRank.labelPropagation(edges, 4))
     assert(jobs == 0)
     assert(df.count() == 6L)
+  }
+
+  test("prefix-sum operators: construction starts no job; spearman starts only its own") {
+    val v = (1L to 30L).toDF("v")
+    val scored = Seq((1L, "p", 9L), (2L, "p", 5L), (3L, "p", 1L))
+      .toDF("doc_id", "label", "score_micro")
+    val gold = Seq((1L, "p"), (2L, "n"), (3L, "p")).toDF("doc_id", "gold")
+    val docs = (1L to 30L).map(i => (i, i % 5)).toDF("doc_id", "w")
+    val lazyBuilds = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "ksDrift" -> (() => Anomaly.ksDrift(v, v.filter($"v" > 10), "v")),
+      "aucPerLabel" -> (() => Eval.aucPerLabel(scored, gold)),
+      "prCurvePerLabel" -> (() => Eval.prCurvePerLabel(scored, gold)),
+      "weightedSystematic" -> (() => Sampling.weightedSystematic(docs, "doc_id", "w", 5L)),
+      "shardPlan" -> (() => Sampling.shardPlan(docs, "doc_id", "w", 20L)))
+    for ((name, build) <- lazyBuilds) {
+      val (df, jobs) = jobsDuring(build())
+      assert(jobs == 0, s"$name started $jobs jobs while building")
+      assert(df.count() > 0, name)
+    }
+    // spearman is eager: its result is the local frame of its one moment
+    // aggregate, whose jobs (one per AQE query stage) share one execution
+    val xy = v.select($"v".as("x"), ($"v" % 7).as("y"))
+    val (rho, executions) = executionsDuring(Trend.spearman(xy, "x", "y", "x", "y"))
+    assert(executions == 1, s"spearman ran $executions actions")
+    assert(rho.count() == 1L)
   }
 }

@@ -14,7 +14,7 @@ class MultimodalSpec extends SparkSpec {
     val bytes = Array[Byte](0, 1, 127, -128, -1, 64, 65, 66, 67, 7, 8, 9, 10, 11, 12)
     val png = PngCodec.encodeGray(bytes, width = 3)
     // Full decode returns the exact unsigned byte values (gray8 lossless).
-    val img = PngCodec.decode(png).get
+    val img = PngCodec.decodeWith(PngCodec.newPngReader(), png).get
     assert(img.getWidth == 3 && img.getHeight == 5)
     assert(PngCodec.grayPixels(img).toSeq == bytes.map(_ & 0xff).toSeq)
   }
