@@ -23,6 +23,7 @@ for sf in sf0.001 sf0.01; do
   cached=$(grep -c 'Asked to cache already cached data' "$log" || true)
   echo "$sf warnings: already-cached $cached," \
     "no-partition-windows $(grep -c 'No Partition Defined' "$log" || true) (log: $log)"
+  grep '\[verify\] persisted RDDs at exit' "$log" | sed "s/^/$sf /"
   if [ "$cached" -gt 0 ]; then
     echo "$sf Verify asked to cache already cached data $cached times" >&2
     exit 1

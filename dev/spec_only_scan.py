@@ -18,7 +18,6 @@ KEEP = {
     "dropTag": "Catalog: the crash-state spec (ROADMAP item 4) needs it",
     "learnDistributed": "BpeVocab: BpePropertySpec's reference learner",
     "inertia": "KMeans: KMeansSpec measures fitParallel with it",
-    "trackedCount": "CacheGuard: private[graft] probe the specs read",
 }
 ENTRY = {"main", "apply", "unapply"}  # entry points and sugar-called
 

@@ -84,11 +84,9 @@ object Bench {
       val times = Seq(run(), run())
       val all = if (times.map(_._1).max > 3 * times.map(_._1).min &&
         times.map(_._1).max > 0.5) times :+ run() else times
-      // Each run persists its own intermediate frames (shingles,
-      // fingerprints, candidate pairs) and no run unpersists — across
-      // ~200 executions that accretes hundreds of cached RDDs and the GC
-      // pressure bleeds into later queries' timings. Drop them while they
-      // are dead weight; session-catalog tables, on-disk indexes, and
+      // Drop the Q.cached fixtures this gate persisted, so every gate
+      // starts from the same cache state: its first run builds the
+      // fixtures it reads. Session-catalog tables, on-disk indexes, and
       // analyzed-plan caches are untouched.
       spark.catalog.clearCache()
       val ok = all.forall(_._2)

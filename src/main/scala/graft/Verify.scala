@@ -65,6 +65,10 @@ object Verify {
       errors.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
     if (errors.nonEmpty)
       System.err.println(s"[verify] ${errors.size} queries FAILED: ${errors.keys.mkString(", ")}")
+    // what the run leaves cached: the Q.cached fixtures and the blocks of
+    // local checkpoints the ContextCleaner has not freed yet
+    System.err.println(
+      s"[verify] persisted RDDs at exit: ${spark.sparkContext.getPersistentRDDs.size}")
     spark.stop()
   }
 }

@@ -247,19 +247,20 @@ object BpeVocab {
     val merges = Seq.newBuilder[Merge]
     var step = 0
     var done = false
-    while (step < steps && !done) {
-      topPair(syms, step + 1) match {
-        case Some(m) =>
-          merges += m
-          val next = syms.select(applyMerge(col("sym"), m).as("sym"), col("freq")).persist(lvl)
-          next.count() // materialize before dropping the parent from cache
-          syms.unpersist()
-          syms = next
-        case None => done = true
+    try {
+      while (step < steps && !done) {
+        topPair(syms, step + 1) match {
+          case Some(m) =>
+            merges += m
+            val parent = syms
+            syms = syms.select(applyMerge(col("sym"), m).as("sym"), col("freq")).persist(lvl)
+            // materialize before dropping the parent from cache
+            try syms.count() finally parent.unpersist()
+          case None => done = true
+        }
+        step += 1
       }
-      step += 1
-    }
-    syms.unpersist()
+    } finally syms.unpersist()
     merges.result()
   }
 

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import CacheGuard.PersistTrackedOps
 
 /** Threshold-free classifier evaluation over EXACT INTEGER scores — ROC-AUC
   * (tie-aware Mann–Whitney) and the precision/recall curve, one-vs-rest per
@@ -48,11 +47,6 @@ object Eval {
       .groupBy("label", "s")
       .agg(sum("pos").as("np"), (count(lit(1)) - sum("pos")).as("nn"))
       .withColumn("b", shiftright(col("s"), bucketBits))
-      // persisted: both prefix-sum levels (and prCurve's totals) read it,
-      // and unpersisted each read replays the scorer's lineage — a warm
-      // q_x_auc at sf0.1 on 4 cores ran ~0.25 s slower without it.
-      // Released via [[CacheGuard.releaseAll]]: the returned plan is lazy.
-      .persistTracked()
     PrefixSum.running(perScore, Seq("label"), "b", Seq(col("s")),
         "np" -> "cum_pos", "nn" -> "cum_neg")
       .select(col("label"), col("s"), col("np"), col("nn"),

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
-import CacheGuard.PersistTrackedOps
 
 /** PageRank-style link centrality over an edge list — the graph-quality
   * signal of large-scale pretraining data curation (host/URL authority from
@@ -73,17 +72,11 @@ object GraphRank {
     * acceptable for ranking; eliminate them via [[undirected]]. */
   def pageRank(edges: DataFrame, iters: Int = 3, dampNum: Int = 85): DataFrame = {
     require(iters >= 0 && dampNum >= 0 && dampNum <= 100)
-    // materialize the (often distinct-heavy) edge build ONCE,
-    // pre-partitioned on the join key: the checkpointed layout is reused by
-    // EVERY iteration's rank join, so the edge list — the only
-    // data-proportional frame — never crosses the wire again (the Pregel
-    // static-edge-partitioning shape). Same localCheckpoint device as
-    // TextDedup.clusters' rounds.
-    // persist (not localCheckpoint): the cached plan KEEPS its
-    // hashpartitioning(src) metadata, so every iteration's shuffled-hash
-    // join sees the edge side already laid out and only moves ranks — a
-    // checkpoint would erase the partitioning and re-exchange the edges
-    // per iteration (verified in the physical plan).
+    // The edge list, laid out on the join key, is read by every iteration:
+    // one eager local checkpoint (one build job) materializes it, and its
+    // blocks live as long as the returned plan. Recomputing it per
+    // iteration instead made q_x_pagerank's first call at sf0.1 on local[4]
+    // 8.0 → 13.7 s.
     // NO measured-width pass here (r12): the r11 snapshot measured the
     // edge count through a standalone persist+count of the scan — a full
     // extra materialization of the O(E) frame per call — and then used the
@@ -94,8 +87,7 @@ object GraphRank {
     // hits 3.18 vs 6.95 — the probe pass costs more than a narrow width
     // ever saves, and at scale AQE coalesces the loop exchanges anyway.
     val e = edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst")).repartition(col("src"))
-      .persistTracked()
+      col("dst").cast("long").as("dst")).repartition(col("src")).localCheckpoint()
     val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
     // (node, outdeg) carrier: node-cardinality, referenced by every
     // iteration level — truncate it too, or each level re-runs its shuffles.
@@ -148,13 +140,10 @@ object GraphRank {
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame, iters: Int = 3,
       dampNum: Int = 85): DataFrame = {
     require(iters >= 0 && dampNum >= 0 && dampNum <= 100)
-    // one edge materialization, pre-partitioned on the join key and
-    // persisted WITH its partitioning metadata (see pageRank — the
-    // static-edge-layout Pregel shape; no measured-width probe, same
-    // rationale as pageRank)
+    // the edge list laid out on the join key and checkpointed once (see
+    // pageRank; no measured-width probe, same rationale as pageRank)
     val e = edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst")).repartition(col("src"))
-      .persistTracked()
+      col("dst").cast("long").as("dst")).repartition(col("src")).localCheckpoint()
     val sd = seeds.select(col("node").cast("long").as("node")).distinct()
       .withColumn("is_seed", lit(1L))
     val ns = sd.agg(count(lit(1)).as("n_seeds"))
@@ -245,7 +234,6 @@ object GraphRank {
     val grp = memberships.select(col(groupCol).cast("long").as("g"),
         col(itemCol).cast("long").as("i"))
       .groupBy(col("g")).agg(array_sort(collect_set(col("i"))).as("items"))
-      .persistTracked()
     val nGroups = grp.agg(count(lit(1)).as("n_groups"))
     val itemCounts = grp.select(explode(col("items")).as("i"))
       .groupBy(col("i")).agg(count(lit(1)).as("n_i"))
@@ -294,20 +282,15 @@ object GraphRank {
     * Per round: one edge⋈label equi-join (label side is node-sized) + a
     * (node, label)-keyed count + a node-keyed struct-min argmax — O(E)
     * per round, the rounds chained lazily. The expanded edge set is laid
-    * out once on the join key (the [[pageRank]] static layout); every
+    * out on the join key (the [[pageRank]] layout); every
     * other exchange runs at the session width and AQE coalesces it, so
     * construction runs no job. Input: one-directional undirected edges
     * (a < b); output (node, community). */
   def labelPropagation(edges: DataFrame, rounds: Int): DataFrame = {
-    // static-edge layout, same device as pageRank: persist (NOT
-    // localCheckpoint — it drops the partitioning metadata) the expanded
-    // edge set pre-partitioned on the join key, so every round's
-    // edge⋈label join sees the edge side already laid out and only the
-    // node-sized label frame crosses the wire (one exchange per round on
-    // the rank/label side, zero on the O(E) side).
+    // the expanded edge set laid out on the join key, as in pageRank
     val u0 = edges.select(col("a").cast("long").as("src"), col("b").cast("long").as("dst"))
       .union(edges.select(col("b").cast("long").as("src"), col("a").cast("long").as("dst")))
-    val und = u0.repartition(col("src")).persistTracked()
+    val und = u0.repartition(col("src"))
     var labels = und.select(col("src").as("n")).distinct()
       .select(col("n"), col("n").as("community"))
     (1 to rounds).foreach { r =>
@@ -390,36 +373,37 @@ object GraphRank {
     var maps = List.empty[DataFrame] // deepest level first
     var lvl = 0
     var done = false
-    while (!done && lvl < rounds) {
-      val und = e.select(col("a").as("src"), col("b").as("dst"))
-        .union(e.select(col("b").as("src"), col("a").as("dst")))
-      val withSelf = und.union(und.select(col("src"), col("src").as("dst")))
-      // propagate #1, label-join-free: component = min over neighbors+self
-      var l = withSelf.groupBy(col("dst").as("n"))
-        .agg(min(col("src")).as("component"))
-      for (_ <- 2 to PropagatesPerLevel)
-        l = withSelf.join(l.withColumnRenamed("n", "src"), Seq("src"))
-          .groupBy(col("dst").as("n"))
-          .agg(min(col("component")).as("component"))
-      // LAZY checkpoints: the level map and the contracted edge set cache
-      // on first computation, so the level's ONLY action is the emptiness
-      // probe below — one driver round-trip per level instead of three
-      // (eager checkpoints at ~0.4 s of scheduling each dominated the
-      // whole operator on gate-scale graphs).
-      val lc = l.localCheckpoint(eager = false)
-      maps ::= lc
-      e = e.join(lc.select(col("n").as("a"), col("component").as("la")), Seq("a"))
-        .join(lc.select(col("n").as("b"), col("component").as("lb")), Seq("b"))
-        .select(least(col("la"), col("lb")).as("a"),
-          greatest(col("la"), col("lb")).as("b"))
-        .filter(col("a") =!= col("b"))
-        .distinct()
-        .localCheckpoint(eager = false)
-      // convergence probe (count materializes the lazy checkpoint)
-      done = e.count() == 0L
-      lvl += 1
-    }
-    inputE.unpersist(false)
+    try {
+      while (!done && lvl < rounds) {
+        val und = e.select(col("a").as("src"), col("b").as("dst"))
+          .union(e.select(col("b").as("src"), col("a").as("dst")))
+        val withSelf = und.union(und.select(col("src"), col("src").as("dst")))
+        // propagate #1, label-join-free: component = min over neighbors+self
+        var l = withSelf.groupBy(col("dst").as("n"))
+          .agg(min(col("src")).as("component"))
+        for (_ <- 2 to PropagatesPerLevel)
+          l = withSelf.join(l.withColumnRenamed("n", "src"), Seq("src"))
+            .groupBy(col("dst").as("n"))
+            .agg(min(col("component")).as("component"))
+        // LAZY checkpoints: the level map and the contracted edge set cache
+        // on first computation, so the level's ONLY action is the emptiness
+        // probe below — one driver round-trip per level instead of three
+        // (eager checkpoints at ~0.4 s of scheduling each dominated the
+        // whole operator on gate-scale graphs).
+        val lc = l.localCheckpoint(eager = false)
+        maps ::= lc
+        e = e.join(lc.select(col("n").as("a"), col("component").as("la")), Seq("a"))
+          .join(lc.select(col("n").as("b"), col("component").as("lb")), Seq("b"))
+          .select(least(col("la"), col("lb")).as("a"),
+            greatest(col("la"), col("lb")).as("b"))
+          .filter(col("a") =!= col("b"))
+          .distinct()
+          .localCheckpoint(eager = false)
+        // convergence probe (count materializes the lazy checkpoint)
+        done = e.count() == 0L
+        lvl += 1
+      }
+    } finally inputE.unpersist(false)
     // resolve: compose the level maps shallowest→deepest. A representative
     // that had no surviving inter-cluster edge is absent from deeper maps
     // and keeps its label (left join + coalesce).
@@ -461,9 +445,7 @@ object GraphRank {
       rounds: Int): DataFrame = {
     val lbl = oldLabels.select(col("n").cast("long").as("n"),
         col("component").cast("long").as("component"))
-      .persistTracked()
     val e = newEdges.select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val contracted = e
       .join(lbl.select(col("n").as("a"), col("component").as("la")), Seq("a"), "left")
       .join(lbl.select(col("n").as("b"), col("component").as("lb")), Seq("b"), "left")
@@ -473,9 +455,7 @@ object GraphRank {
       .select(least(col("x"), col("y")).as("a"),
         greatest(col("x"), col("y")).as("b"))
       .distinct()
-      // referenced 4x by connectedComponents' self-looped edge build —
-      // persist so the map joins run once (the q_x_er_resolve lesson)
-      .persistTracked()
+    // connectedComponents persists, and releases, its own copy of its input
     val merged = connectedComponents(contracted, rounds)
       .select(col("n").as("component"), col("component").as("root"))
     val newNodes = e.select(col("a").as("n")).union(e.select(col("b").as("n")))
@@ -500,8 +480,8 @@ object GraphRank {
     * gate is exact whether or not the frontier has drained (same contract
     * as [[connectedComponents]]).
     *
-    * Scale shape: the static expanded edge set persists pre-partitioned on
-    * the join key; each round exchanges only the node-sized distance frame
+    * Scale shape: the static expanded edge set is laid out on the join
+    * key; each round exchanges only the node-sized distance frame
     * (shuffle-hash join + dst-keyed min, then a node-keyed union-min
     * merge). Distances are monotone non-increasing, so a production
     * variant may additionally restrict the propagate side to last round's
@@ -523,12 +503,13 @@ object GraphRank {
     val selfLoops = und.select(col("src")).union(seedN.select(col("n").as("src")))
       .distinct()
       .select(col("src"), col("src").as("dst"), lit(0L).as("w"))
-    // static layout on the join key (no measured-width probe: see
-    // pageRank — the probe double-cached the O(E) frame and its
-    // pre-aggregate repartition dropped the min's partial phase)
+    // layout on the join key, checkpointed once as in pageRank (no
+    // measured-width probe: see pageRank — the probe double-cached the
+    // O(E) frame and its pre-aggregate repartition dropped the min's
+    // partial phase)
     val withSelf = und.union(selfLoops)
       .repartition(col("src"))
-      .persistTracked()
+      .localCheckpoint()
     var dist = seedN.select(col("n"), lit(0L).as("dist"))
     (1 to rounds).foreach { r =>
       dist = withSelf.join(
@@ -623,21 +604,21 @@ object GraphRank {
     * maxDegree < 9.2e9.
     *
     * Per iteration: two node-sized score frames shuffle to the two
-    * statically-persisted edge layouts (src-partitioned for the authority
+    * edge layouts (src-partitioned for the authority
     * half-step, dst-partitioned for the hub half-step) — the edge list
     * itself never re-exchanges, the [[pageRank]] Pregel device doubled.
     * Returns (node, hub_fp, auth_fp) at scale 1e9. */
   def hits(edges: DataFrame, iters: Int = 2): DataFrame = {
     require(iters >= 1)
-    // static layouts on both half-step join keys (no measured-width probe:
+    // layouts on both half-step join keys, each checkpointed once as in
+    // pageRank (no measured-width probe:
     // see pageRank — the probe's extra materialization of the O(E) frame
     // cost 2.2× at local[32] sf0.1, and the sub-session width it measured
     // suppressed the half-steps' map-side partial aggregation: this graph
     // lands at w=30 of 32, r11's 6.95 s vs 3.18 s for this shape)
     val eSrc = edges.select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst")).repartition(col("src"))
-      .persistTracked()
-    val eDst = eSrc.repartition(col("dst")).persistTracked()
+        col("dst").cast("long").as("dst")).repartition(col("src")).localCheckpoint()
+    val eDst = eSrc.repartition(col("dst")).localCheckpoint()
     val nodes = eSrc.select(col("src").as("node"))
       .union(eSrc.select(col("dst").as("node"))).distinct().localCheckpoint()
     val n = nodes.agg(count(lit(1)).as("n_nodes"))
@@ -698,11 +679,7 @@ object GraphRank {
     * Construction runs no job. Returns one row
     * (n_nodes, n_edges, n_triangles). */
   def triangleStats(edges: DataFrame): DataFrame = {
-    // the edge list feeds five subtrees (both wedge sides, the closing
-    // probe, the node census, the edge count) — persist it once;
-    // released via CacheGuard.releaseAll (edge-sized, spills)
     val e = edges.select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
-      .persistTracked()
     val wedges = e.as("e1").join(e.as("e2"), col("e1.b") === col("e2.a"))
       .select(col("e1.a").as("wa"), col("e1.b").as("wb"), col("e2.b").as("wc"))
     val tris = wedges.join(e.as("e3"),
@@ -731,7 +708,6 @@ object GraphRank {
     * tail before the degree joins. */
   def neighborJaccard(edges: DataFrame, minCommon: Long = 1L): DataFrame = {
     val und = undirected(edges)
-      .persistTracked()
     val common = und.select(col("dst").as("w"), col("src").as("a"))
       .join(und.select(col("dst").as("w"), col("src").as("b")), Seq("w"))
       .filter(col("a") < col("b"))
@@ -757,25 +733,18 @@ object GraphRank {
     * dropping it is the standard mitigation), and `deg_a`/`deg_b` stay
     * the TRUE degrees, so `jac_fp` is the hub-discounted similarity. The
     * oracle replays the identical cap, so the gate is exact; the uncapped
-    * [[neighborJaccard]] remains the small-graph form. The und/deg/centers
-    * frames stay persisted because the returned lazy plan reads each more
-    * than once; release via [[CacheGuard.releaseAll]] (edge-/node-sized —
-    * the Trend/TextDedup cache-lifetime contract). */
+    * [[neighborJaccard]] remains the small-graph form. */
   def neighborJaccardCapped(edges: DataFrame, maxDeg: Long,
       minCommon: Long = 1L): DataFrame = {
-    val und = undirected(edges)
-      .persistTracked()
-    // node-sized and referenced 3× (center filter + both degree
-    // join-backs); persisted so the capped form doesn't re-aggregate und
-    // per reference
+    // und feeds deg and both wedge sides, deg three joins: one eager
+    // checkpoint each, whose blocks live as long as the returned plan
+    val und = undirected(edges).localCheckpoint()
     val deg = und.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
-      .persistTracked()
-    // cap applied BEFORE the wedge join: only low-degree centers fan out.
-    // Persisted: both sides of the wedge self-join read this frame.
+      .localCheckpoint()
+    // cap applied BEFORE the wedge join: only low-degree centers fan out
     val centers = und.join(
         deg.filter(col("deg") <= maxDeg).select(col("node").as("dst")),
         Seq("dst"), "left_semi")
-      .persistTracked()
     val common = centers.select(col("dst").as("w"), col("src").as("a"))
       .join(centers.select(col("dst").as("w"), col("src").as("b")), Seq("w"))
       .filter(col("a") < col("b"))

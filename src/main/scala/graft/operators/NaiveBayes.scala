@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.Text
-import CacheGuard.PersistTrackedOps
 
 /** Multinomial Naive Bayes text classification — the model-based curation
   * classifier tier: public large-corpus pipelines gate documents with a
@@ -89,12 +88,9 @@ object NaiveBayes {
     * score = prior + n_tokens·floor + Σ_{tokens seen by the class} f·(lp−floor). */
   def scores(docs: DataFrame, model: NbModel,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    // persisted: both the length aggregate and the seen-token join read
-    // this frame — unpersisted, each replays the token explode + count
-    // over the corpus. Session-lifetime cache contract as in TextDedup.
+    // read by both the length aggregate and the seen-token join
     val f = docTokens(docs, idCol, textCol)
       .groupBy("doc_id", "tok").agg(count(lit(1)).as("f"))
-      .persistTracked()
     val nTok = f.groupBy("doc_id").agg(sum("f").as("n_tokens"))
     val seen = f.join(model.tokenProbs, Seq("tok"))
       .join(model.labels.select(col("label"), col("floor_micro")), Seq("label"))

@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.Text
-import CacheGuard.PersistTrackedOps
 
 /** N-gram language-model scoring for corpus curation — the model-based
   * quality tier that runs AFTER the heuristic batteries ([[QualityFilter]]):
@@ -234,18 +233,16 @@ object NgramLm {
     * (last_token, NULL) sentinel struct to each document's zipped pair
     * array lets a single (w1, w2)-keyed count serve as BOTH tables:
     * rows with w2 ≠ NULL are the bigram counts, and grouping the whole
-    * (pair-vocab-sized, persisted) frame by w1 reconstructs exact unigram
-    * occurrence counts. The totals Nt/Nb are 1-row sums over that same
-    * persisted frame (Nt = Nb + #docs, since each doc contributes one
-    * sentinel). The two vocab-sized unigram join sides carry no hint:
-    * AQE broadcasts them when their measured stages fit
-    * autoBroadcastJoinThreshold and keeps token-keyed shuffles for a
-    * web-scale vocabulary. The returned plan's cached input
-    * (pair-vocab-sized, not corpus-sized) releases via
-    * [[CacheGuard.releaseAll]]. */
+    * (pair-vocab-sized) frame by w1 reconstructs exact unigram occurrence
+    * counts. The totals Nt/Nb are 1-row sums over that same frame
+    * (Nt = Nb + #docs, since each doc contributes one sentinel), joined in
+    * as a one-row broadcast side; construction runs the one job that
+    * checkpoints the pair counts. The two
+    * vocab-sized unigram join sides carry no hint: AQE broadcasts them
+    * when their measured stages fit autoBroadcastJoinThreshold and keeps
+    * token-keyed shuffles for a web-scale vocabulary. */
   def pmiCollocations(docs: DataFrame, minCount: Long = 5, k: Int = 50,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val toks = Text.tokens(col(textCol))
     val n = greatest(size(toks) - 1, lit(0))
     val pairs = zip_with(slice(toks, lit(1), n), slice(toks, lit(2), n),
@@ -254,22 +251,22 @@ object NgramLm {
       element_at(toks, -1).as("w1"), lit(null).cast("string").as("w2"))))
     val counts = docs.select(explode(withLast).as("p"))
       .groupBy(col("p.w1").as("w1"), col("p.w2").as("w2"))
-      .agg(count(lit(1)).as("n_pair")).persistTracked(lvl)
+      .agg(count(lit(1)).as("n_pair"))
+      .localCheckpoint() // read four times below; its blocks live with the plan
     val c1 = counts.groupBy(col("w1").as("tok"))
-      .agg(sum(col("n_pair")).as("c")).persistTracked(lvl)
-    // totals ride the already-persisted aggregates: one 1-row job each,
-    // instead of extra corpus-tokenizing count() jobs
-    val nTok = c1.agg(coalesce(sum(col("c")), lit(0L))).head().getLong(0)
-    val nBig = counts.filter(col("w2").isNotNull)
-      .agg(coalesce(sum(col("n_pair")), lit(0L))).head().getLong(0)
+      .agg(sum(col("n_pair")).as("c"))
+    val totals = c1.agg(coalesce(sum(col("c")), lit(0L)).as("__nt"))
+      .crossJoin(counts.filter(col("w2").isNotNull)
+        .agg(coalesce(sum(col("n_pair")), lit(0L)).as("__nb")))
     def side(name: String, as: String) = c1.select(col("tok").as(name), col("c").as(as))
     TopK.perGroup(counts
         .filter(col("w2").isNotNull && col("n_pair") >= minCount)
         .join(side("w1", "c1"), Seq("w1"))
         .join(side("w2", "c2"), Seq("w2"))
+        .crossJoin(broadcast(totals))
         .withColumn("pmi_micro", round(log(
-            (col("n_pair").cast("double") * nTok * nTok) /
-            (lit(nBig.toDouble) * col("c1") * col("c2"))) * MicroScale, 0)
+            (col("n_pair").cast("double") * col("__nt") * col("__nt")) /
+            (col("__nb").cast("double") * col("c1") * col("c2"))) * MicroScale, 0)
           .cast("long")),
       Nil, Seq(col("pmi_micro").desc, col("w1"), col("w2")), k)
       .select(col("w1"), col("w2"), col("n_pair"), col("pmi_micro"), col("rank"))

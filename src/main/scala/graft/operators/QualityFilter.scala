@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.Text
-import CacheGuard.PersistTrackedOps
 
 /** Document quality scoring + filtering — the standard pre-training corpus
   * gate (length bounds, alphabetic ratio, stopword density). Pure map-side
@@ -211,7 +210,7 @@ object QualityFilter {
     * arbitrary tie-splitting is not reproducible). NULL metrics bin NULL.
     *
     * Cut derivation: the value histogram is a parallel hash aggregate
-    * (persisted: the cumulative rank and the total both read it); ranks
+    * (the cumulative rank and the total both read it); ranks
     * come from a cumulative sum over that value-CARDINALITY-sized frame
     * on one partition (the [[winsorize]] silhouette — the same one-task
     * sort of the distinct values that `percentile`'s reducer does); and
@@ -225,7 +224,7 @@ object QualityFilter {
     import org.apache.spark.sql.expressions.Window
     val m = col(metricCol)
     val hist = df.filter(m.isNotNull).groupBy(m.as("__v"))
-      .agg(count(lit(1)).as("__c")).persistTracked()
+      .agg(count(lit(1)).as("__c"))
     // The explicit pmod key is constant-valued but non-foldable,
     // documenting that one partition is the DESIGN here and silencing
     // WindowExec's unbounded-frame warning. Exact integer cumsum.

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import CacheGuard.PersistTrackedOps
 
 /** Fuzzy record linkage by deletion-neighborhood blocking (the FastSS
   * device, Bocek et al. 2007): two strings within edit distance 1 MUST
@@ -58,14 +57,10 @@ object RecordLinkage {
     // pair arises from exactly one unordered name pair, so no distinct is
     // needed after expansion.
     val base = records.select(col(idCol).cast("long").as("id"), col(keyCol).as("key"))
-    // persisted for the three references below (dup branch + two expansion
-    // joins); session-lifetime cache contract like the other persisted
-    // leaves — the caller's terminal action is what materializes the
-    // result, so there is no safe in-function unpersist point.
+    // read three times below (dup branch + two expansion joins)
     val groups = base.groupBy(col("key"))
       .agg(collect_list(col("id")).as("ids"), min(col("id")).as("rid"),
         count(lit(1)).as("m"))
-      .persistTracked()
     // (a) exact-duplicate pairs: all id pairs inside one key group. Group
     // size = the key's duplication count — the usual hot-key caveat; a
     // key duplicated millions of times needs an upstream cap, same as any

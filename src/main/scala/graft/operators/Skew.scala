@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import CacheGuard.PersistTrackedOps
 
 /** Skew mitigation for big-big equi-joins (SCALE.md).
   *
@@ -78,12 +77,8 @@ object Skew {
     val width = 1L << widthBits
     val it = df.select(col(key).cast("string").as("k"))
     val sk = cmsSketch(df, key, depth, widthBits)
-    // one key-cardinality aggregate feeds top-N, the probe, AND the total
-    // (nt = Σn) — without the persist, `top`'s scan+agg lineage would run
-    // once per consumer (it feeds the probe join and the final select) and
-    // the total would scan the input a third time
+    // one key-cardinality aggregate feeds top-N and the total (nt = Σn)
     val tru = it.groupBy("k").agg(count(lit(1)).as("n"))
-      .persistTracked()
     val top = TopK.perGroup(tru, Nil, Seq(col("n").desc, col("k")), topN)
       .localCheckpoint() // topN rows, eager — cuts the sort lineage for both consumers
     val est = cmsBuckets(top.select(col("k")), depth, width)

@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.Text
-import CacheGuard.PersistTrackedOps
 
 /** Document deduplication operators — the library surface behind the
   * q_x_dedup_* gate queries. Input contract: a DataFrame with an id column
@@ -15,13 +14,10 @@ import CacheGuard.PersistTrackedOps
   * per-bucket work is bucket², with AQE handling skewed buckets. Exact
   * verification (Jaccard / Hamming) runs only on candidates.
   *
-  * Persist lifecycle: the near-dup operators persist (MEMORY_AND_DISK) the
-  * intermediate frame each composition reads from 2+ join branches, and the
-  * returned plan keeps depending on it — so entries live until the session
-  * ends or the caller runs `spark.catalog.clearCache()`. Right for the
-  * run-and-exit job/bench shape; a long-lived service looping dedup over
-  * many corpora should materialize the shingle/fingerprint frame to a table
-  * (e.g. `Catalog.write`) instead and manage its lifetime explicitly.
+  * No operator here leaves a frame cached: a frame read from 2+ join
+  * branches is recomputed per branch. A long-lived service looping dedup
+  * over many corpora should materialize the shingle/fingerprint frame to a
+  * table (e.g. `Catalog.write`) and manage its lifetime explicitly.
   */
 object TextDedup {
 
@@ -178,11 +174,7 @@ object TextDedup {
     * never touching the shingle sets again: the sketch workflow for
     * "how much does source A overlap source B" across a 100 TB corpus. */
   def corpusOverlap(docs: DataFrame, groupCol: String, numHashes: Int = 16): DataFrame = {
-    // persisted: the tiny (one row per group) signature frame feeds both
-    // sides of the pair join — without it the full corpus aggregate runs
-    // twice (see the persist-lifecycle note in the object doc)
     val sigs = groupSignatures(docs, groupCol, numHashes)
-      .persistTracked()
     val a = sigs.select(col(groupCol).as("g1"), col("sig").as("s1"))
     val b = sigs.select(col(groupCol).as("g2"), col("sig").as("s2"))
     a.join(b, col("g1") < col("g2"))
@@ -200,10 +192,6 @@ object TextDedup {
   val DefaultMaxPrefixBucket = 1024
 
   /** Prefix-blocked n-gram Jaccard near-dup pairs (id1 < id2, jac ≥ t).
-    * The shingled frame is persisted: it feeds both sides of the blocking
-    * self-join, and without it the tokenize→shingle pipeline executes twice
-    * over the corpus (and four more times when [[clusters]] composes on
-    * top).
     *
     * Buckets larger than `maxBucket` divert through banded MinHash
     * ([[bandFrame]]): candidate volume inside an oversized bucket becomes
@@ -231,19 +219,17 @@ object TextDedup {
   def ngramCandidates(docs: DataFrame, maxBucket: Int = DefaultMaxPrefixBucket,
       numHashes: Int = 16, numBands: Int = 8): DataFrame = {
     val s = shingled(docs).select(col("doc_id"), col("sh"), col("pfx"))
-      .persistTracked()
-    // Bucket census over the persisted frame: one cheap aggregate whose
-    // result is prefix-cardinality sized; broadcast to both branch filters.
+    // Bucket census: one cheap aggregate whose result is prefix-cardinality
+    // sized; broadcast to both branch filters.
     val bigRaw = s.groupBy(col("pfx")).agg(count(lit(1)).as("n"))
       .filter(col("n") > maxBucket).select(col("pfx"))
-      .persistTracked()
     def pairsOf(frame: DataFrame): DataFrame = frame
       .select(col("doc_id").as("id1"), col("sh").as("sh1"), col("pfx"))
       .join(frame.select(col("doc_id").as("id2"), col("sh").as("sh2"), col("pfx")), Seq("pfx"))
       .filter(col("id1") < col("id2"))
       .select(col("id1"), col("id2"), col("sh1"), col("sh2"))
-    // The common case has NO oversized bucket: branch on the (tiny,
-    // persisted) census once, so a healthy corpus pays zero extra stages
+    // The common case has NO oversized bucket: branch on the (tiny)
+    // census once, so a healthy corpus pays zero extra stages
     // for the guard — the band subplan exists only when it has work.
     if (bigRaw.isEmpty) return pairsOf(s)
     val big = broadcast(bigRaw)
@@ -265,15 +251,9 @@ object TextDedup {
   /** MinHash signatures + banded LSH candidates + exact-Jaccard verify.
     * One md5 per shingle; the k permutations are affine maps mod 2^31-1
     * (operands bounded so the arithmetic never overflows a long).
-    *
-    * Two single-scan guarantees for the corpus-scale path:
-    *  - the tokenize→shingle→md5 pipeline runs ONCE: the shingled frame is
-    *    persisted (memory-and-disk) and shared by the signature stage and the
-    *    verify join — without it the whole pipeline re-executes for each
-    *    consumer (two full corpus scans at 100 TB);
-    *  - all k signature minima come from ONE pass over the shingle-hash
-    *    array via the codegen'd [[graft.expressions.MinHashSignatures]],
-    *    not k interpreted `array_min(transform(...))` re-traversals. */
+    * All k signature minima come from ONE pass over the shingle-hash array
+    * via the codegen'd [[graft.expressions.MinHashSignatures]], not k
+    * interpreted `array_min(transform(...))` re-traversals. */
   private val MinHashPrime = 2147483647L
   private def aCoeffs(numHashes: Int): Seq[Long] = (0 until numHashes).map(j => 2L * j + 3)
   private def bCoeffs(numHashes: Int): Seq[Long] = (0 until numHashes).map(j => 101L * j + 7)
@@ -306,19 +286,16 @@ object TextDedup {
         count(lit(1)).as("n_docs"))
   }
 
-  /** Persisted (doc_id, sh, hs) frame: shingles plus one 60-bit md5 hash
-    * per shingle reduced mod the Mersenne prime. Persisted because every
-    * MinHash composition reads it at least twice (signatures + verify);
-    * TRIMMED to exactly the columns those consumers need — toks/pfx would
-    * roughly double the cached footprint for nothing. At extreme corpus
-    * scale the same role is played by a materialized temp table (or just
-    * the (doc_id, band) index, re-deriving shingles for the candidate-only
-    * verify); MEMORY_AND_DISK keeps the single-job case simple. */
+  /** (doc_id, sh, hs) frame: shingles plus one 60-bit md5 hash per shingle
+    * reduced mod the Mersenne prime, TRIMMED to exactly the columns the
+    * MinHash compositions read (signatures + verify). At extreme corpus
+    * scale a materialized temp table plays this role (or just the
+    * (doc_id, band) index, re-deriving shingles for the candidate-only
+    * verify). */
   private def hashedShingles(docs: DataFrame): DataFrame =
     shingled(docs)
       .withColumn("hs", shingleHashes)
       .select(col("doc_id"), col("sh"), col("hs"))
-      .persistTracked()
 
   /** (doc_id, band) pairs: all `numHashes` signature minima in one codegen'd
     * pass ([[graft.expressions.MinHashSignatures]]), concatenated into
@@ -373,7 +350,9 @@ object TextDedup {
     * between. */
   def containmentPairs(docs: DataFrame, threshold: Double = 0.8,
       numHashes: Int = 16, numBands: Int = 8): DataFrame = {
-    val base = hashedShingles(docs)
+    // the band join and both verify joins read the shingle frame: one eager
+    // checkpoint, whose blocks live as long as the returned plan
+    val base = hashedShingles(docs).localCheckpoint()
     val bands = bandFrame(base, numHashes, numBands)
     val cands = bands.select(col("doc_id").as("id1"), col("band"))
       .join(bands.select(col("doc_id").as("id2"), col("band")), Seq("band"))
@@ -403,7 +382,7 @@ object TextDedup {
     * identical on both engines if it ever happened. */
   def containmentPairsHashed(docs: DataFrame, threshold: Double = 0.8,
       numHashes: Int = 16, numBands: Int = 8): DataFrame = {
-    val base = hashedShingles(docs)
+    val base = hashedShingles(docs).localCheckpoint() // as in containmentPairs
     val bands = bandFrame(base, numHashes, numBands)
     val cands = bands.select(col("doc_id").as("id1"), col("band"))
       .join(bands.select(col("doc_id").as("id2"), col("band")), Seq("band"))
@@ -432,8 +411,8 @@ object TextDedup {
     * and a bad hash family or band layout shows up as estimates
     * detaching from truth. Everything is exact integer arithmetic —
     * the audit itself is engine-replayable, not a rows-only contract.
-    * Same id-sized band shuffle as [[minhashLsh]]; the verify joins ride
-    * the persisted shingle frame. */
+    * Same id-sized band shuffle as [[minhashLsh]]; the verify joins read
+    * the same shingle frame. */
   def minhashErrorAudit(docs: DataFrame, numHashes: Int = 16,
       numBands: Int = 8): DataFrame = {
     val base = hashedShingles(docs)
@@ -511,13 +490,10 @@ object TextDedup {
   def minhashLshIndexed(corpus: DataFrame, bandIndex: DataFrame, batch: DataFrame,
       threshold: Double = 0.5, numHashes: Int = 16, numBands: Int = 8): DataFrame = {
     val bBase = hashedShingles(batch)
-    // persisted: the candidate pairs feed BOTH the corpus semi-join and the
-    // verify join — without it the band join + distinct runs twice
     val cands = bandFrame(bBase, numHashes, numBands)
       .select(col("doc_id").as("batch_id"), col("band"))
       .join(bandIndex.select(col("doc_id").as("corpus_id"), col("band")), Seq("band"))
       .select(col("batch_id"), col("corpus_id")).distinct()
-      .persistTracked()
     val candCorpus = corpus.join(
       cands.select(col("corpus_id").as("doc_id")).distinct(), Seq("doc_id"), "left_semi")
     val sh2 = shingled(candCorpus).select(col("doc_id").as("corpus_id"), col("sh").as("sh2"))
@@ -667,12 +643,11 @@ object TextDedup {
     * probabilistic, as in any banded LSH), then exact popcount verify.
     * The hamming filter runs per band BEFORE the cross-band distinct, so the
     * final distinct shuffles only surviving near-dup pairs, not every
-    * candidate. The fingerprint frame is persisted — it feeds 2×4 join
-    * branches, and each would otherwise re-run the token explode + vote
-    * aggregate over the corpus. */
+    * candidate. */
   def simhashNearDups(docs: DataFrame, maxHamming: Int = 11): DataFrame = {
-    val f = simhash(docs)
-      .persistTracked()
+    // both sides of every band join read the fingerprints: one eager
+    // checkpoint, whose blocks live as long as the returned plan
+    val f = simhash(docs).localCheckpoint()
     val mask = (1L << BandBits) - 1
     val perBand = (0 until SimHashBands).map { b =>
       val keyed = f.withColumn("bk", expr(s"shiftright(simhash, ${BandBits * b}) & $mask"))

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import CacheGuard.PersistTrackedOps
 
 /** Full-text retrieval over a document corpus: inverted index (postings +
   * document frequencies) and term-at-a-time scoring.
@@ -153,25 +152,21 @@ object TextIndex {
     * SOURCE (`idf_micro = round(ln(N/df)·10⁶)` — the [[NgramLm]] device),
     * so every score is the exact integer `tf·idf_micro` and the per-doc
     * top-k ordering (score desc, term) is bit-identical cross-engine.
-    * Shape: ONE persisted postings aggregate (it feeds both the scored
-    * side and the df aggregate — unpersisted, the corpus tokenizes
-    * twice), a term-keyed df join-back with no hint (AQE broadcasts the
+    * Shape: ONE postings aggregate (it feeds both the scored side and the
+    * df aggregate), a term-keyed df join-back with no hint (AQE broadcasts the
     * vocab-sized side when its measured stage fits
     * autoBroadcastJoinThreshold and keeps the term-keyed shuffle for a
     * web-scale vocabulary), a 1-row N broadcast, and a per-DOC window —
     * partitions are document-sized, never corpus-sized. Construction
-    * runs no job; the cached postings release via
-    * [[CacheGuard.releaseAll]].
+    * runs no job, and nothing is left cached.
     *
     * `prebuilt`: a postings frame already derived from `docs` (the shared
     * serving index — same slot as ProductQuantizer's `encoded`); when
-    * given, its cache lifecycle belongs to the caller and the corpus is
-    * never re-tokenized here. */
+    * given, the corpus is never re-tokenized here. */
   def tfIdfTopK(docs: DataFrame, k: Int = 5,
       idCol: String = "doc_id", textCol: String = "text",
       prebuilt: Option[DataFrame] = None): DataFrame = {
-    val post = prebuilt.getOrElse(postings(docs, idCol, textCol)
-      .persistTracked(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val post = prebuilt.getOrElse(postings(docs, idCol, textCol))
     val n = docs.agg(count(lit(1)).as("n_docs"))
     val scored = post
       .join(docFrequencies(post), Seq("term"))
@@ -318,8 +313,9 @@ object TextIndex {
     * tfNorm = tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl)), with the
     * per-(term,doc) contribution QUANTIZED to an integer micro score:
     * contrib = round(idf·tfNorm·1e6). One filtered postings scan + two
-    * broadcast-sized joins (term stats, doc lengths) + one hash-agg + a
-    * global [[TopK]]. Everything feeding the round is either an exact
+    * broadcast-sized joins (term stats, doc lengths) + a one-row corpus
+    * stats broadcast + one hash-agg + a global [[TopK]]; construction runs
+    * no job. Everything feeding the round is either an exact
     * integer (tf, df, dl, N) or one deterministic IEEE chain over them
     * (avgdl = Σdl/N is a single exact division; +,·,/ are
     * bit-deterministic cross-engine — only libm `ln` carries the usual
@@ -332,31 +328,21 @@ object TextIndex {
     * returns zero hits with the same schema. */
   def searchBM25Micro(post: DataFrame, queryTerms: Seq[String], k: Int,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    // Persisted because it feeds BOTH the eager stats action and the final
-    // ranking join — unpersisted, each consumer replays the whole postings
-    // build (tokenize + explode + two aggregates). Lifecycle contract as in
-    // [[graft.operators.TextDedup]]: entries live until session end /
-    // clearCache(); a long-lived service looping searches should
-    // materialize postings to a table and search the stored index instead
-    // (searchBM25MicroIndexed-style), which skips this frame entirely.
     val lens = docLengths(post)
-      .persistTracked()
-    val stats = lens.agg(count(lit(1)).as("n"), sum(col("dl")).as("sdl")).head()
-    if (stats.isNullAt(1))
-      return post.select(col("doc_id")).limit(0)
-        .withColumn("n_terms", lit(0L)).withColumn("score_micro", lit(0L))
-        .withColumn("rank", lit(0L))
-    val n = stats.getLong(0)
-    val avgdl = stats.getLong(1).toDouble / n
+    // N and Σdl ride a one-row broadcast side
+    val stats = lens.agg(count(lit(1)).as("__n"), sum(col("dl")).as("__sdl"))
+    val n = col("__n").cast("double")
+    val avgdl = col("__sdl").cast("double") / n
     val terms = queryTerms.distinct
     val matched = post.filter(col("term").isin(terms: _*))
     val dfs = matched.groupBy("term").agg(count(lit(1)).as("df"))
-    val idf = log(lit(1.0) + (lit(n.toDouble) - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
+    val idf = log(lit(1.0) + (n - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
     val tfNorm = (col("tf") * lit(k1 + 1)) /
-      (col("tf") + lit(k1) * (lit(1 - b) + lit(b) * col("dl") / lit(avgdl)))
+      (col("tf") + lit(k1) * (lit(1 - b) + lit(b) * col("dl") / avgdl))
     TopK.perGroup(matched
         .join(dfs, "term")
         .join(lens, "doc_id")
+        .crossJoin(broadcast(stats))
         .groupBy("doc_id")
         .agg(count(lit(1)).as("n_terms"),
           sum(round(idf * tfNorm * lit(1000000.0), 0).cast("long")).as("score_micro")),

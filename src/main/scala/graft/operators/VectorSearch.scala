@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.Hashing
-import CacheGuard.PersistTrackedOps
 
 /** Similarity search over embedding columns (`array<float>`).
   *
@@ -181,31 +180,32 @@ object VectorSearch {
       .withColumn("psim", cosine("pdp", "an", "bn"))
       .select(col("qid"), col("a_nid"), col("b_nid"), col("psim"))
       .persist()
-    val slim = cands.select(col("qid"), col("nid"), col("sim"))
-    var picked = TopK.perGroup(slim, Seq(col("qid")), Seq(col("sim").desc, col("nid")), 1)
-      .select(col("qid"), col("nid"), lit(1L).as("pick"), col("sim"))
-    for (i <- 2 to k) {
-      val sel = broadcast(picked.select(col("qid").as("s_qid"), col("nid").as("s_nid")))
-      // max similarity of each unpicked candidate to the picked set
-      val red = pair
-        .join(sel, pair("qid") === sel("s_qid") && pair("b_nid") === sel("s_nid"))
-        .groupBy(col("qid"), col("a_nid"))
-        .agg(max(col("psim")).as("max_sel_sim"))
-      val next = TopK.perGroup(slim
-          .join(sel, slim("qid") === sel("s_qid") && slim("nid") === sel("s_nid"),
-            "left_anti")
-          .join(red, slim("qid") === red("qid") && slim("nid") === red("a_nid"))
-          .drop(red("qid")).drop("a_nid")
-          .withColumn("mmr",
-            lit(lambda) * col("sim") - lit(1.0 - lambda) * col("max_sel_sim")),
-          Seq(col("qid")), Seq(col("mmr").desc, col("nid")), 1)
-        .select(col("qid"), col("nid"), lit(i.toLong).as("pick"), col("sim"))
-      // Q·k rows total: localCheckpoint keeps the loop's lineage flat so
-      // round i doesn't re-run rounds 1..i−1's joins.
-      picked = picked.unionByName(next).localCheckpoint()
-    }
-    cands.unpersist(); pair.unpersist()
-    picked
+    try {
+      val slim = cands.select(col("qid"), col("nid"), col("sim"))
+      var picked = TopK.perGroup(slim, Seq(col("qid")), Seq(col("sim").desc, col("nid")), 1)
+        .select(col("qid"), col("nid"), lit(1L).as("pick"), col("sim"))
+      for (i <- 2 to k) {
+        val sel = broadcast(picked.select(col("qid").as("s_qid"), col("nid").as("s_nid")))
+        // max similarity of each unpicked candidate to the picked set
+        val red = pair
+          .join(sel, pair("qid") === sel("s_qid") && pair("b_nid") === sel("s_nid"))
+          .groupBy(col("qid"), col("a_nid"))
+          .agg(max(col("psim")).as("max_sel_sim"))
+        val next = TopK.perGroup(slim
+            .join(sel, slim("qid") === sel("s_qid") && slim("nid") === sel("s_nid"),
+              "left_anti")
+            .join(red, slim("qid") === red("qid") && slim("nid") === red("a_nid"))
+            .drop(red("qid")).drop("a_nid")
+            .withColumn("mmr",
+              lit(lambda) * col("sim") - lit(1.0 - lambda) * col("max_sel_sim")),
+            Seq(col("qid")), Seq(col("mmr").desc, col("nid")), 1)
+          .select(col("qid"), col("nid"), lit(i.toLong).as("pick"), col("sim"))
+        // Q·k rows total: localCheckpoint keeps the loop's lineage flat so
+        // round i doesn't re-run rounds 1..i−1's joins.
+        picked = picked.unionByName(next).localCheckpoint()
+      }
+      picked
+    } finally { cands.unpersist(); pair.unpersist() }
   }
 
   /** Deterministic pseudo-random hyperplanes (ints in [-1000, 1000]) derived
@@ -284,7 +284,6 @@ object VectorSearch {
       .withColumn("dp", dot("qv", "cv"))
       .withColumn("sim", cosine("dp", "qn", "cn"))
       .select(col("qid"), col("nid"), col("sim"))
-      .persistTracked()
     def best(band: Column) =
       TopK.perGroup(pairs.filter(band), Seq(col("qid")), Seq(col("sim").desc, col("nid")), 1)
     val pos = best(col("sim") >= posThr)
@@ -437,11 +436,10 @@ object VectorSearch {
   /** Embedding-cosine near-dup pairs within LSH buckets (sim ≥ threshold). */
   def nearDuplicates(emb: DataFrame, threshold: Double = 0.8, numPlanes: Int = 8,
       dim: Int = -1): DataFrame = {
-    // both sides of the self-join read the same quantize + numPlanes-dot
-    // bucketing — persist it once instead of re-deriving per side
-    // (released via CacheGuard.releaseAll; corpus-row-sized, spills to disk)
+    // both sides of the self-join read the bucketing: one eager checkpoint,
+    // whose blocks live as long as the returned plan
     val e = lshBuckets(emb, numPlanes, if (dim > 0) dim else probeDim(emb))
-      .persistTracked()
+      .localCheckpoint()
     val a = e.select(col("vec_id").as("id1"), col("q").as("q1"), col("nn").as("n1"), col("bucket"))
     val b = e.select(col("vec_id").as("id2"), col("q").as("q2"), col("nn").as("n2"), col("bucket"))
     a.join(b, Seq("bucket")).filter(col("id1") < col("id2"))
@@ -463,9 +461,8 @@ object VectorSearch {
     * identically. Output is bin-cardinality-sized. */
   def similarityHistogram(emb: DataFrame, numPlanes: Int = 8, dim: Int = -1,
       scale: Int = 20): DataFrame = {
-    // same self-join device as nearDuplicates: one persisted bucketing
     val e = lshBuckets(emb, numPlanes, if (dim > 0) dim else probeDim(emb))
-      .persistTracked()
+      .localCheckpoint() // as in nearDuplicates
     val a = e.select(col("vec_id").as("id1"), col("q").as("q1"), col("nn").as("n1"), col("bucket"))
     val b = e.select(col("vec_id").as("id2"), col("q").as("q2"), col("nn").as("n2"), col("bucket"))
     a.join(b, Seq("bucket")).filter(col("id1") < col("id2"))

@@ -439,15 +439,11 @@ object GraphQueries {
     // form — no block² compare, no driver graph state.
     QueryDef("q_x_er_resolve",
       (s, d) => {
-        // persist the verified pairs: connectedComponents' self-looped
-        // edge build references its input 4× (two direction unions + the
-        // self-loop distinct) — cached coPurchase edges absorb that for
-        // the other graph gates, but this leaf is a full FastSS pipeline
-        // (measured 4.7 → ~2 s at sf0.1 with the persist)
+        // connectedComponents persists, and releases, its own copy of the
+        // pairs, and nothing reads them after it returns
         val pairs = graft.operators.RecordLinkage.editNeighborPairs(
             t(s, d, "supplier"), "s_suppkey", "s_name")
           .select(col("id1").as("a"), col("id2").as("b"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val comp = graft.operators.GraphRank.connectedComponents(pairs, rounds = 8)
         val sizes = comp.groupBy(col("component"))
           .agg(count(lit(1)).as("n_members"))

@@ -93,13 +93,13 @@ object Q {
     df.withColumn("ts_us", tsUs)
   }
 
-  /** Persist a shared, cached-per-session frame unless it is still cached
-    * ([[graft.operators.CacheGuard.persistIfAbsent]]): Bench
-    * `clearCache()`s between queries, so each access re-persists. The frame
-    * is not registered with CacheGuard, so `releaseAll` leaves it cached.
+  /** Persist a shared, cached-per-session frame unless its plan is still
+    * cached: Bench `clearCache()`s between queries, so each access
+    * re-persists, and a plan already cached is never persisted twice.
     * Returns `df`. */
   def cached(df: DataFrame): DataFrame = {
-    graft.operators.CacheGuard.persistIfAbsent(df)
+    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     df
   }
 

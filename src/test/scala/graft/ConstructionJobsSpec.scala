@@ -1,6 +1,7 @@
 package graft
 
-import graft.operators.{Anomaly, Eval, GraphRank, QualityFilter, Sampling, TextIndex, Trend}
+import graft.operators.{Anomaly, Eval, GraphRank, NgramLm, QualityFilter, Sampling, TextDedup,
+  TextIndex, Trend, VectorSearch}
 
 /** Operators that leave their size decisions (broadcast or not, exchange
   * width) to AQE build their plans without starting a Spark job: only an
@@ -71,5 +72,33 @@ class ConstructionJobsSpec extends SparkSpec with JobCounting {
     val (rho, executions) = executionsDuring(Trend.spearman(xy, "x", "y", "x", "y"))
     assert(executions == 1, s"spearman ran $executions actions")
     assert(rho.count() == 1L)
+  }
+
+  test("checkpointing operators: construction runs one action per eager checkpoint") {
+    val directed = edges.select($"a".as("src"), $"b".as("dst"))
+    val docs = Seq((1L, "the cat sat on the mat today"), (2L, "the cat sat on the mat"),
+      (3L, "a dog ran in the park")).toDF("doc_id", "text")
+    val emb = (0 until 12).map(i => (i.toLong, (0 until 8).map(j => ((i * 37 + j * 11) % 19 - 9) / 10.0f)))
+      .toDF("vec_id", "embedding")
+    // (operator, its eager checkpoints): each is one action, and pageRank,
+    // personalizedPageRank and hits also checkpoint their node carrier
+    val builds = Seq[(String, Int, () => org.apache.spark.sql.DataFrame)](
+      ("pageRank", 2, () => GraphRank.pageRank(directed, 2)),
+      ("personalizedPageRank", 2,
+        () => GraphRank.personalizedPageRank(directed, Seq(1L).toDF("node"), 2)),
+      ("hits", 3, () => GraphRank.hits(directed, 1)),
+      ("bfsHops", 1, () => GraphRank.bfsHops(edges, Seq(1L).toDF("n"), 2)),
+      ("neighborJaccardCapped", 2, () => GraphRank.neighborJaccardCapped(directed, 3L)),
+      ("containmentPairs", 1, () => TextDedup.containmentPairs(docs)),
+      ("containmentPairsHashed", 1, () => TextDedup.containmentPairsHashed(docs)),
+      ("simhashNearDups", 1, () => TextDedup.simhashNearDups(docs)),
+      ("nearDuplicates", 1, () => VectorSearch.nearDuplicates(emb, 0.5, 2, 8)),
+      ("similarityHistogram", 1, () => VectorSearch.similarityHistogram(emb, 2, 8)),
+      ("pmiCollocations", 1, () => NgramLm.pmiCollocations(docs, minCount = 1)))
+    for ((name, checkpoints, build) <- builds) {
+      val (df, executions) = executionsDuring(build())
+      assert(executions == checkpoints, s"$name ran $executions actions while building")
+      assert(df.count() >= 0L, name)
+    }
   }
 }
