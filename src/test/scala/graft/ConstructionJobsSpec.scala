@@ -74,19 +74,21 @@ class ConstructionJobsSpec extends SparkSpec with JobCounting {
     assert(rho.count() == 1L)
   }
 
-  test("checkpointing operators: construction runs one action per eager checkpoint") {
+  test("checkpointing operators: construction runs one action per checkpoint it takes") {
     val directed = edges.select($"a".as("src"), $"b".as("dst"))
     val docs = Seq((1L, "the cat sat on the mat today"), (2L, "the cat sat on the mat"),
       (3L, "a dog ran in the park")).toDF("doc_id", "text")
     val emb = (0 until 12).map(i => (i.toLong, (0 until 8).map(j => ((i * 37 + j * 11) % 19 - 9) / 10.0f)))
       .toDF("vec_id", "embedding")
-    // (operator, its eager checkpoints): each is one action, and pageRank,
-    // personalizedPageRank and hits also checkpoint their node carrier
+    // (operator, its build actions): each eager checkpoint is one, and
+    // pageRank, personalizedPageRank and hits also checkpoint their node
+    // carrier; under AQE each of hits' two lazy per-iteration checkpoints
+    // runs its shuffle stages when taken, one action each
     val builds = Seq[(String, Int, () => org.apache.spark.sql.DataFrame)](
       ("pageRank", 2, () => GraphRank.pageRank(directed, 2)),
       ("personalizedPageRank", 2,
         () => GraphRank.personalizedPageRank(directed, Seq(1L).toDF("node"), 2)),
-      ("hits", 3, () => GraphRank.hits(directed, 1)),
+      ("hits", 5, () => GraphRank.hits(directed, 1)),
       ("bfsHops", 1, () => GraphRank.bfsHops(edges, Seq(1L).toDF("n"), 2)),
       ("neighborJaccardCapped", 2, () => GraphRank.neighborJaccardCapped(directed, 3L)),
       ("containmentPairs", 1, () => TextDedup.containmentPairs(docs)),

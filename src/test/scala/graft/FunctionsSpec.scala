@@ -522,8 +522,13 @@ class FunctionsSpec extends SparkSpec {
   test("persisted band index: same pairs, corpus contributes no signature work") {
     val base = (1 to 30).map(i => s"tok$i").mkString(" ")
     val nearDup = (1 to 28).map(i => s"tok$i").mkString(" ") + " tokX tokY"
-    val corpus = Seq((10L, base), (30L, "something else entirely here")).toDF("doc_id", "text")
-    val batch = Seq((21L, nearDup), (23L, "fresh new content words")).toDF("doc_id", "text")
+    // RDD-backed, not local Seqs: the optimizer would fold the signature
+    // pipeline over a local relation into literals, and the plan-shape
+    // check below counts signature computations in the plan
+    val corpus = spark.sparkContext.parallelize(
+      Seq((10L, base), (30L, "something else entirely here"))).toDF("doc_id", "text")
+    val batch = spark.sparkContext.parallelize(
+      Seq((21L, nearDup), (23L, "fresh new content words"))).toDF("doc_id", "text")
     // build once, store in the catalog, query against the stored frame
     val cat = new graft.catalog.Catalog(spark,
       tempDir("graft-lsh-spec").toString)
@@ -537,9 +542,8 @@ class FunctionsSpec extends SparkSpec {
     assert(scansDir(indexed, cat.currentPath("lsh_bands").get),
       "indexed dedup must scan the stored band index")
     assert(plan.contains("LeftSemi"), "corpus verify side must be semi-join pruned")
-    // signature computations: indexed (batch-only, printed at the persisted
-    // candidate frame's two consumers) must not exceed the incremental path
-    // (batch + corpus)
+    // signature computations: indexed (batch-only) must not exceed the
+    // incremental path (batch + corpus)
     val incPlan = TextDedup.minhashLshIncremental(corpus, batch, 0.5)
       .queryExecution.executedPlan.toString
     def sigs(p: String) = "minhash_sigs".r.findAllIn(p).size
