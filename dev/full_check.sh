@@ -1,6 +1,7 @@
 #!/bin/bash
 # Full local replica of the round gates:
 # spec-only scan → compile → tests → verify+oracle at sf0.001 and sf0.01
+# → the cross-JVM verify+oracle sweep at sf0.001
 # → bench at sf0.1 → smoke → perfbench selftest and one etl_daily run.
 # Every main runs on graft.Session: local[SPARK_GRAFT_CPUS or host cores],
 # AQE on, so the bench below times the config that ships.
@@ -34,6 +35,11 @@ if [ "$after" -gt "$before" ]; then
   echo "Verify left $((after - before)) /tmp/graft-* entries behind" >&2
   exit 1
 fi
+# the same gate with separate executor JVMs (dev/verify_cluster.sh's
+# default master: two 2-core, 2 GB workers)
+out=$(mktemp -d)
+SPARK_DRIVER_MEM=${SPARK_DRIVER_MEM:-3g} dev/verify_cluster.sh /root/testdata/sf0.001 "$out" 2>/dev/null
+python3 dev/check_oracles.py /root/testdata/sf0.001 "$out"
 dev/run_main.sh graft.Bench 2>/dev/null | tail -1   # sf0.1, the shipped session
 dev/run_main.sh graft.Smoke 2>/dev/null | grep smoke
 # perfbench: the frozen gates exist and keep their fingerprints, and one

@@ -13,9 +13,9 @@ import pathlib, re, sys
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 KEEP = {
-    "rollback": "Catalog: the crash-state spec (ROADMAP item 4) needs it",
-    "history": "Catalog: the crash-state spec (ROADMAP item 4) needs it",
-    "dropTag": "Catalog: the crash-state spec (ROADMAP item 4) needs it",
+    "rollback": "Catalog: the crash-state spec (ROADMAP item 6) needs it",
+    "history": "Catalog: the crash-state spec (ROADMAP item 6) needs it",
+    "dropTag": "Catalog: the crash-state spec (ROADMAP item 6) needs it",
     "learnDistributed": "BpeVocab: BpePropertySpec's reference learner",
     "inertia": "KMeans: KMeansSpec measures fitParallel with it",
 }

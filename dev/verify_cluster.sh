@@ -9,5 +9,5 @@ export SPARK_HOME=${SPARK_HOME:-/opt/spark}
 # the trimmed distribution has no launcher/target build dirs to sniff the
 # Scala version from — pin it so worker JVMs can assemble their classpath
 export SPARK_SCALA_VERSION=${SPARK_SCALA_VERSION:-2.13}
-export SPARK_GRAFT_MASTER=${SPARK_GRAFT_MASTER:-local-cluster[2,8,8192]}
+export SPARK_GRAFT_MASTER=${SPARK_GRAFT_MASTER:-local-cluster[2,2,2048]}
 exec dev/run_main.sh graft.Verify "$@"

@@ -430,13 +430,9 @@ object KMeans {
       .select(col(idCol).as("vec_id"), VectorSearch.quantize(embCol).as("q"))
       .withColumn("nn", VectorSearch.dot("q", "q"))
       .withColumn("cluster", clusterExpr(model))
-    val a = e.select(col("vec_id").as("id1"), col("q").as("q1"),
-      col("nn").as("n1"), col("cluster"))
-    val b = e.select(col("vec_id").as("id2"), col("q").as("q2"),
-      col("nn").as("n2"), col("cluster"))
-    a.join(b, Seq("cluster")).filter(col("id1") < col("id2"))
+    Pairs.within(e, "cluster", "vec_id", "q", "nn")
       .withColumn("dp", VectorSearch.dot("q1", "q2"))
-      .withColumn("sim", VectorSearch.cosine("dp", "n1", "n2"))
+      .withColumn("sim", VectorSearch.cosine("dp", "nn1", "nn2"))
       .filter(col("sim") >= threshold)
       .select(col("id1"), col("id2"), col("sim"))
   }

@@ -10,7 +10,7 @@ import graft.functions.Text
   *
   * Scale invariant shared by all near-dup variants: candidate pairs come
   * from EQUALITY joins on blocking keys (prefix, MinHash band, SimHash
-  * half), never from a cross join — shuffle volume is O(docs × keys) and
+  * band), never from a cross join — shuffle volume is O(docs × keys) and
   * per-bucket work is bucket², with AQE handling skewed buckets. Exact
   * verification (Jaccard / Hamming) runs only on candidates.
   *
@@ -223,29 +223,14 @@ object TextDedup {
     // sized; broadcast to both branch filters.
     val bigRaw = s.groupBy(col("pfx")).agg(count(lit(1)).as("n"))
       .filter(col("n") > maxBucket).select(col("pfx"))
-    def pairsOf(frame: DataFrame): DataFrame = frame
-      .select(col("doc_id").as("id1"), col("sh").as("sh1"), col("pfx"))
-      .join(frame.select(col("doc_id").as("id2"), col("sh").as("sh2"), col("pfx")), Seq("pfx"))
-      .filter(col("id1") < col("id2"))
-      .select(col("id1"), col("id2"), col("sh1"), col("sh2"))
-    // The common case has NO oversized bucket: branch on the (tiny)
-    // census once, so a healthy corpus pays zero extra stages
-    // for the guard — the band subplan exists only when it has work.
-    if (bigRaw.isEmpty) return pairsOf(s)
+    // With no oversized bucket, skip the band branch: always building it made
+    // the sf0.1 first call slower in 5 of 6 pairs (ngram +0.44 s, clusters +0.77 s).
+    if (bigRaw.isEmpty) return Pairs.within(s, "pfx", "doc_id", "sh")
     val big = broadcast(bigRaw)
-    val prefixPairs = pairsOf(s.join(big, Seq("pfx"), "left_anti"))
-    val diverted = s.join(big, Seq("pfx"), "left_semi")
-      .withColumn("hs", shingleHashes)
-      .select(col("doc_id"), col("sh"), col("hs"))
-    val bands = bandFrame(diverted.select(col("doc_id"), col("hs")), numHashes, numBands)
-    val bandPairs = bands.select(col("doc_id").as("id1"), col("band"))
-      .join(bands.select(col("doc_id").as("id2"), col("band")), Seq("band"))
-      .filter(col("id1") < col("id2"))
-      .select(col("id1"), col("id2")).distinct()
-      .join(diverted.select(col("doc_id").as("id1"), col("sh").as("sh1")), Seq("id1"))
-      .join(diverted.select(col("doc_id").as("id2"), col("sh").as("sh2")), Seq("id2"))
-      .select(col("id1"), col("id2"), col("sh1"), col("sh2"))
-    prefixPairs.unionByName(bandPairs)
+    val prefixPairs = Pairs.within(s.join(big, Seq("pfx"), "left_anti"), "pfx", "doc_id", "sh")
+    val diverted = s.join(big, Seq("pfx"), "left_semi").withColumn("hs", shingleHashes)
+    prefixPairs.unionByName(
+      withSides(bandCandidates(diverted, numHashes, numBands), diverted, "sh"))
   }
 
   /** MinHash signatures + banded LSH candidates + exact-Jaccard verify.
@@ -314,22 +299,25 @@ object TextDedup {
     sigs.select(col("doc_id"), explode(array(bandKeys: _*)).as("band"))
   }
 
+  /** Candidate pairs (id1 < id2) that share a MinHash band, each once. A
+    * doc has `numBands` band rows, so nothing rides the band join (see
+    * [[Pairs.within]]); the verify step re-joins its payload with
+    * [[withSides]]. */
+  private def bandCandidates(base: DataFrame, numHashes: Int, numBands: Int): DataFrame =
+    Pairs.within(bandFrame(base, numHashes, numBands), "band", "doc_id").distinct()
+
+  /** `pairs` plus each column `c` of `side` (keyed by doc_id) as `c1` for
+    * id1 and `c2` for id2. */
+  private def withSides(pairs: DataFrame, side: DataFrame, cols: String*): DataFrame = {
+    def one(n: Int) =
+      side.select(col("doc_id").as(s"id$n") +: cols.map(c => col(c).as(s"$c$n")): _*)
+    pairs.join(one(1), Seq("id1")).join(one(2), Seq("id2"))
+  }
+
   def minhashLsh(docs: DataFrame, threshold: Double = 0.5,
       numHashes: Int = 16, numBands: Int = 8): DataFrame = {
     val base = hashedShingles(docs)
-    // Candidate formation carries ONLY (id, band): the shingle arrays would
-    // otherwise ride through the explode→join→distinct shuffle (measured 10×
-    // slowdown at bench scale; at 100 TB the band shuffle must be id-sized).
-    // Shingles are joined back just for the verify step.
-    val bands = bandFrame(base, numHashes, numBands)
-    val cands = bands.select(col("doc_id").as("id1"), col("band"))
-      .join(bands.select(col("doc_id").as("id2"), col("band")), Seq("band"))
-      .filter(col("id1") < col("id2"))
-      .select(col("id1"), col("id2")).distinct()
-    val shd = base.select(col("doc_id"), col("sh"))
-    cands
-      .join(shd.select(col("doc_id").as("id1"), col("sh").as("sh1")), Seq("id1"))
-      .join(shd.select(col("doc_id").as("id2"), col("sh").as("sh2")), Seq("id2"))
+    withSides(bandCandidates(base, numHashes, numBands), base, "sh")
       .withColumn("jaccard", Text.jaccard("sh1", "sh2"))
       .filter(col("jaccard") >= threshold)
       .select(col("id1"), col("id2"), col("jaccard"))
@@ -353,15 +341,7 @@ object TextDedup {
     // the band join and both verify joins read the shingle frame: one eager
     // checkpoint, whose blocks live as long as the returned plan
     val base = hashedShingles(docs).localCheckpoint()
-    val bands = bandFrame(base, numHashes, numBands)
-    val cands = bands.select(col("doc_id").as("id1"), col("band"))
-      .join(bands.select(col("doc_id").as("id2"), col("band")), Seq("band"))
-      .filter(col("id1") < col("id2"))
-      .select(col("id1"), col("id2")).distinct()
-    val shd = base.select(col("doc_id"), col("sh"))
-    cands
-      .join(shd.select(col("doc_id").as("id1"), col("sh").as("sh1")), Seq("id1"))
-      .join(shd.select(col("doc_id").as("id2"), col("sh").as("sh2")), Seq("id2"))
+    withSides(bandCandidates(base, numHashes, numBands), base, "sh")
       .filter(size(col("sh1")) > 0 && size(col("sh2")) > 0)
       .withColumn("c12", Text.containment("sh1", "sh2"))
       .withColumn("c21", Text.containment("sh2", "sh1"))
@@ -383,16 +363,8 @@ object TextDedup {
   def containmentPairsHashed(docs: DataFrame, threshold: Double = 0.8,
       numHashes: Int = 16, numBands: Int = 8): DataFrame = {
     val base = hashedShingles(docs).localCheckpoint() // as in containmentPairs
-    val bands = bandFrame(base, numHashes, numBands)
-    val cands = bands.select(col("doc_id").as("id1"), col("band"))
-      .join(bands.select(col("doc_id").as("id2"), col("band")), Seq("band"))
-      .filter(col("id1") < col("id2"))
-      .select(col("id1"), col("id2")).distinct()
-    val hsd = base.select(col("doc_id"),
-      array_distinct(shingleHashes60).as("h"))
-    cands
-      .join(hsd.select(col("doc_id").as("id1"), col("h").as("h1")), Seq("id1"))
-      .join(hsd.select(col("doc_id").as("id2"), col("h").as("h2")), Seq("id2"))
+    withSides(bandCandidates(base, numHashes, numBands),
+        base.select(col("doc_id"), array_distinct(shingleHashes60).as("h")), "h")
       .filter(size(col("h1")) > 0 && size(col("h2")) > 0)
       .withColumn("c12", Text.containment("h1", "h2"))
       .withColumn("c21", Text.containment("h2", "h1"))
@@ -416,20 +388,10 @@ object TextDedup {
   def minhashErrorAudit(docs: DataFrame, numHashes: Int = 16,
       numBands: Int = 8): DataFrame = {
     val base = hashedShingles(docs)
-    val bands = bandFrame(base, numHashes, numBands)
-    val cands = bands.select(col("doc_id").as("id1"), col("band"))
-      .join(bands.select(col("doc_id").as("id2"), col("band")), Seq("band"))
-      .filter(col("id1") < col("id2"))
-      .select(col("id1"), col("id2")).distinct()
-    val withSigs = base.withColumn("sigs",
-        graft.expressions.MinHashSignatures(col("hs"),
-          aCoeffs(numHashes), bCoeffs(numHashes), MinHashPrime))
-      .select(col("doc_id"), col("sh"), col("sigs"))
-    cands
-      .join(withSigs.select(col("doc_id").as("id1"), col("sh").as("sh1"),
-        col("sigs").as("sg1")), Seq("id1"))
-      .join(withSigs.select(col("doc_id").as("id2"), col("sh").as("sh2"),
-        col("sigs").as("sg2")), Seq("id2"))
+    val withSigs = base.withColumn("sg",
+      graft.expressions.MinHashSignatures(col("hs"),
+        aCoeffs(numHashes), bCoeffs(numHashes), MinHashPrime))
+    withSides(bandCandidates(base, numHashes, numBands), withSigs, "sh", "sg")
       .withColumn("n_match_sig",
         expr("size(filter(zip_with(sg1, sg2, (x, y) -> x = y), b -> b))").cast("long"))
       .withColumn("n_inter", expr("size(array_intersect(sh1, sh2))").cast("long"))
@@ -557,6 +519,9 @@ object TextDedup {
     * a handful of rounds suffices at any corpus size.
     */
   def clusters(pairs: DataFrame, maxIters: Int = 10): DataFrame = {
+    // Own loop, not GraphRank.connectedComponents: that took 26 build jobs, not 15,
+    // and a 1.3 s slower sf0.1 first call on q_x_dedup_clusters (5 pairs).
+
     // Undirected edge list, both directions. localCheckpoint (not cache):
     // the frame is re-read every round, and checkpointing cuts its plan off
     // from the upstream pair pipeline once materialized.
@@ -641,24 +606,24 @@ object TextDedup {
   /** SimHash near-dup pairs: block on any of 4 15-bit bands (a pair with
     * ≤ 3 differing bits is GUARANTEED to share a band; beyond that recall is
     * probabilistic, as in any banded LSH), then exact popcount verify.
-    * The hamming filter runs per band BEFORE the cross-band distinct, so the
-    * final distinct shuffles only surviving near-dup pairs, not every
-    * candidate. */
+    * Each fingerprint explodes into its 4 band keys `(band << 15) | slice`
+    * (the band index keeps equal slices at different positions apart), so
+    * one self-join reads the fingerprints once per side; the hamming filter
+    * runs before the distinct, which then shuffles only surviving pairs. */
   def simhashNearDups(docs: DataFrame, maxHamming: Int = 11): DataFrame = {
-    // both sides of every band join read the fingerprints: one eager
-    // checkpoint, whose blocks live as long as the returned plan
-    val f = simhash(docs).localCheckpoint()
     val mask = (1L << BandBits) - 1
-    val perBand = (0 until SimHashBands).map { b =>
-      val keyed = f.withColumn("bk", expr(s"shiftright(simhash, ${BandBits * b}) & $mask"))
-      keyed.select(col("doc_id").as("id1"), col("simhash").as("f1"), col("bk"))
-        .join(keyed.select(col("doc_id").as("id2"), col("simhash").as("f2"), col("bk")), Seq("bk"))
-        .filter(col("id1") < col("id2"))
-        .withColumn("hamming", expr("bit_count(f1 ^ f2)").cast("long"))
-        .filter(col("hamming") <= maxHamming)
-        .select(col("id1"), col("id2"), col("hamming"))
-    }
-    perBand.reduce(_ unionByName _).distinct()
+    val bandKeys = (0 until SimHashBands).map(b =>
+      lit(b.toLong << BandBits).bitwiseOR(shiftright(col("simhash"), BandBits * b).bitwiseAND(mask)))
+    // both sides of the band join read the fingerprints: one eager checkpoint,
+    // whose blocks live as long as the returned plan (dropping it made the
+    // sf0.1 first call 0.2 s slower, 6 of 6 pairs)
+    val keyed = simhash(docs).localCheckpoint().select(col("doc_id"), col("simhash"),
+      explode(array(bandKeys: _*)).as("bk"))
+    Pairs.within(keyed, "bk", "doc_id", "simhash")
+      .select(col("id1"), col("id2"),
+        expr("bit_count(simhash1 ^ simhash2)").cast("long").as("hamming"))
+      .filter(col("hamming") <= maxHamming)
+      .distinct()
   }
 
   /** Boilerplate-paragraph removal by DOCUMENT FREQUENCY (the

@@ -440,11 +440,9 @@ object VectorSearch {
     // whose blocks live as long as the returned plan
     val e = lshBuckets(emb, numPlanes, if (dim > 0) dim else probeDim(emb))
       .localCheckpoint()
-    val a = e.select(col("vec_id").as("id1"), col("q").as("q1"), col("nn").as("n1"), col("bucket"))
-    val b = e.select(col("vec_id").as("id2"), col("q").as("q2"), col("nn").as("n2"), col("bucket"))
-    a.join(b, Seq("bucket")).filter(col("id1") < col("id2"))
+    Pairs.within(e, "bucket", "vec_id", "q", "nn")
       .withColumn("dp", dot("q1", "q2"))
-      .withColumn("sim", cosine("dp", "n1", "n2"))
+      .withColumn("sim", cosine("dp", "nn1", "nn2"))
       .filter(col("sim") >= threshold)
       .select(col("id1"), col("id2"), col("sim"))
   }
@@ -463,11 +461,9 @@ object VectorSearch {
       scale: Int = 20): DataFrame = {
     val e = lshBuckets(emb, numPlanes, if (dim > 0) dim else probeDim(emb))
       .localCheckpoint() // as in nearDuplicates
-    val a = e.select(col("vec_id").as("id1"), col("q").as("q1"), col("nn").as("n1"), col("bucket"))
-    val b = e.select(col("vec_id").as("id2"), col("q").as("q2"), col("nn").as("n2"), col("bucket"))
-    a.join(b, Seq("bucket")).filter(col("id1") < col("id2"))
+    Pairs.within(e, "bucket", "vec_id", "q", "nn")
       .withColumn("dp", dot("q1", "q2"))
-      .withColumn("sim", cosine("dp", "n1", "n2"))
+      .withColumn("sim", cosine("dp", "nn1", "nn2"))
       .withColumn("bin", floor(col("sim") * scale).cast("long"))
       .groupBy(col("bin"))
       .agg(count(lit(1)).as("n_pairs"), min(col("sim")).as("min_sim"),

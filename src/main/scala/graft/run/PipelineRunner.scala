@@ -23,8 +23,7 @@ import graft.ops._
 final case class RunConfig(
     tableName: String,
     csvPath: String,                 // replaces s3://{bucket}/{key}
-    runDate: Date,
-    params: Map[String, String] = Map.empty
+    runDate: Date
 )
 
 /** @param appendFact fact-table rerun semantics. The reference's

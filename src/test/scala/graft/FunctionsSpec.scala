@@ -634,6 +634,30 @@ class FunctionsSpec extends SparkSpec {
     assert(!pairs.exists(p => p.contains(3L)))
   }
 
+  test("simhashNearDups: candidates are exactly the pairs agreeing on a band at the same position") {
+    // 300 docs from a 24-word vocabulary: overlapping token sets share
+    // bands, and equal slices at DIFFERENT band positions occur too, which
+    // a key without its band index would pair
+    val rnd = new scala.util.Random(20)
+    val docs = (1L to 300L).map(i =>
+      (i, Seq.fill(4 + rnd.nextInt(6))(s"w${rnd.nextInt(24)}").mkString(" ")))
+      .toDF("doc_id", "text")
+    val fp = TextDedup.simhash(docs).as[(Long, Long)].collect().toSeq
+    def band(f: Long, b: Int) = (f >>> (15 * b)) & 0x7fffL
+    val expected = (for {
+      (a, fa) <- fp; (b, fb) <- fp
+      if a < b && (0 until 4).exists(k => band(fa, k) == band(fb, k))
+    } yield Seq(a, b, java.lang.Long.bitCount(fa ^ fb).toLong)).sortBy(p => (p(0), p(1)))
+    assert(expected.nonEmpty)
+    // every candidate passes a 60-bit hamming bound
+    val out = TextDedup.simhashNearDups(docs, maxHamming = 60)
+    assert(rows(out.orderBy("id1", "id2")) == expected)
+    // one band-key join reads the fingerprints; no per-band union
+    val plan = out.queryExecution.sparkPlan
+    assert(plan.collect { case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j }.size == 1)
+    assert(plan.collect { case u: org.apache.spark.sql.execution.UnionExec => u }.isEmpty)
+  }
+
   test("as-of join: latest at-or-before match, ties to right side, null when none") {
     val left = Seq((100L, 7L, 50L, 1.0), (101L, 7L, 20L, 2.0), (102L, 8L, 10L, 3.0))
       .toDF("event_id", "user_id", "tus", "value")
